@@ -16,7 +16,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBui
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sink.{ChunkStore, ManifestTableFormat}
@@ -38,28 +38,20 @@ import graft.sink.{ChunkStore, ManifestTableFormat}
   *
   * The catalog is a METADATA layer only: `loadTable` resolves a store
   * directory (one table per `warehouse/<name>`) to its live data-file
-  * set — the manifest log's snapshot for log-committed tables, the
-  * partition tree for parquet layouts — and hands the actual scan to
+  * set — the manifest log's snapshot — and hands the actual scan to
   * Spark's own parquet DataSourceV2 ([[ParquetTable]]). Everything
   * the built-in read path does (vectorized decode, filter pushdown,
-  * partition pruning over `document_url=`/`doc_bucket=` directories,
   * column pruning, file-splitting at `maxPartitionBytes`) applies
   * unchanged — which is the point: at 100 TB the catalog contributes
   * file LISTS, never a bespoke reader.
   *
-  * Semantics per layout:
-  *  - manifest format (`_log` present): reads are snapshot-isolated
-  *    (the file list is pinned at resolution), `VERSION AS OF n` maps
-  *    to the log replay at version n, INSERT appends through the
-  *    log's commit protocol.
-  *  - per-document layout: root-path scan; `document_url` is the Hive
-  *    partition column, so url predicates prune directories. INSERT
-  *    appends through the store.
-  *  - bucketed layout: root-path scan with `doc_bucket` visible as
-  *    the partition column (it is part of the physical schema).
-  *    INSERT routes through the store's append, which derives the
-  *    bucket from the document url — a caller-supplied `doc_bucket`
-  *    is ignored and recomputed, so SQL writes cannot mis-bucket.
+  * Every chunk table is a manifest table (`_log` present): reads are
+  * snapshot-isolated (the file list is pinned at resolution),
+  * `VERSION AS OF n` maps to the log replay at version n, INSERT
+  * appends through the log's commit protocol. Layout-managed z-order
+  * tables (`_hulls`/`_keybloom` sidecars, no log) resolve read-only.
+  * A directory the retired parquet engine wrote refuses with its
+  * migration ([[ChunkStore.requireManifestLayout]]).
   *
   * Row-level DML is first-class SQL on manifest tables (planned by
   * `graft.plans.GraftDmlStrategy` onto the log's copy-on-write
@@ -114,7 +106,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     fs.listStatus(root).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_graft_layout")) ||
+      // retired-engine stores stay listed: naming one refuses loudly
+      // with its migration instead of vanishing
+      .filter(p => fs.exists(new Path(p, ChunkStore.parquetLayoutMarker)) ||
         fs.exists(new Path(p, "_log")) ||
         fs.exists(new Path(p, "_hulls")) ||
         fs.exists(new Path(p, "_keybloom")))
@@ -142,24 +136,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(new Path(dir, "_log")))
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: TIMESTAMP AS OF needs the " +
-          "manifest table format (plain parquet layouts keep no history)")
-    val store = new ChunkStore(spark, dir,
-      format = ManifestTableFormat.factory)
-    val mtf = new ManifestTableFormat(spark, dir, store.schema)
+          "manifest table format (layout-managed tables keep no history)")
+    val mtf = new ManifestTableFormat(spark, dir,
+      new ChunkStore(spark, dir).schema)
     resolve(ident, asOf = Some(mtf.versionAtTimestamp(timestamp / 1000L)))
-  }
-
-  private def layoutTag(dir: String): Option[String] = {
-    val p = new Path(dir, "_graft_layout")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](64)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      Some(buf.toString("UTF-8"))
-    } finally in.close()
   }
 
   private def resolve(ident: Identifier, asOf: Option[Long],
@@ -168,8 +148,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(new Path(dir))) throw new NoSuchTableException(ident)
     val fullName = s"$catalogName.${ident.name()}"
     if (fs.exists(new Path(dir, "_log"))) {
-      val store = new ChunkStore(spark, dir,
-        format = ManifestTableFormat.factory)
+      val store = new ChunkStore(spark, dir)
       branchName.foreach { b =>
         if (!fs.exists(new Path(dir, s"_log/branches/$b")))
           throw new NoSuchTableException(ident)
@@ -277,60 +256,36 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           if (frozen) None
           else Some(inf =>
             new graft.streaming.GraftStreamingWrite(spark, dir, inf)))
-    } else layoutTag(dir) match {
-      case Some(tag) =>
+    } else {
+      ChunkStore.requireManifestLayout(spark, dir)
+      // a Layout-managed table: flat parquet with `_hulls` and/or
+      // `_keybloom` sidecars (z-order family). Readable by name;
+      // selective predicates prune to the file subset the sidecars
+      // admit (the SQL twin of Layout.prunedScan/prunedScanByKey).
+      if (fs.exists(new Path(dir, "_hulls")) ||
+          fs.exists(new Path(dir, "_keybloom"))) {
         if (asOf.isDefined) throw new UnsupportedOperationException(
-          s"$fullName: VERSION AS OF needs the manifest table format " +
-            "(plain parquet layouts keep no version history)")
-        val store = tag match {
-          case "per-document" => new ChunkStore(spark, dir)
-          case t if t.startsWith("buckets=") =>
-            new ChunkStore(spark, dir,
-              buckets = Some(t.stripPrefix("buckets=").toInt))
-          case other => throw new IllegalStateException(
-            s"unknown layout tag '$other' at $dir")
-        }
-        val schema =
-          if (tag == "per-document") store.schema
-          else StructType(store.schema.fields :+
-            StructField("doc_bucket", IntegerType))
-        new GraftTable(fullName, spark, schema, Seq(dir),
-          // INSERT hash-routes through the store on BOTH layouts: the
-          // bucketed append derives doc_bucket from the url itself, so
-          // a caller-supplied bucket value is ignored and recomputed —
-          // mis-bucketed rows are impossible by construction
-          insert = Some(store.append),
-          deleteDocs = Some(store.delete(_: Seq[String])))
-      case None =>
-        // a Layout-managed table: flat parquet with `_hulls` and/or
-        // `_keybloom` sidecars (z-order family). Readable by name;
-        // selective predicates prune to the file subset the sidecars
-        // admit (the SQL twin of Layout.prunedScan/prunedScanByKey).
-        if (fs.exists(new Path(dir, "_hulls")) ||
-            fs.exists(new Path(dir, "_keybloom"))) {
-          if (asOf.isDefined) throw new UnsupportedOperationException(
-            s"$fullName: VERSION AS OF needs the manifest table format")
-          new GraftTable(fullName, spark,
-            spark.read.parquet(dir).schema, Seq(dir),
-            insert = None, sidecarDir = Some(dir))
-        } else throw new NoSuchTableException(ident)
+          s"$fullName: VERSION AS OF needs the manifest table format")
+        new GraftTable(fullName, spark,
+          spark.read.parquet(dir).schema, Seq(dir),
+          insert = None, sidecarDir = Some(dir))
+      } else throw new NoSuchTableException(ident)
     }
   }
 
-  /** CREATE TABLE / CTAS. Manifest-format tables
-    * (`TBLPROPERTIES ('format'='manifest')`) accept ANY top-level DDL
-    * schema — the creation-time schema persists as the table's base
-    * schema sidecar and all DML/time-travel/CDF machinery applies to
-    * it; the `document_url` fast lanes (bloom stats, keyed
-    * upsert/delete, point reads) exist exactly when the schema carries
-    * a STRING `document_url` column. `PARTITIONED BY` (identity
-    * transforms only) also needs the manifest format: partition
-    * columns become stats-clustered write columns — every write
-    * clusters rows by them, so the per-file min/max stats prune
-    * partition predicates to a strict file subset (Hive pruning as
-    * data skipping, no directory-per-value tree). Parquet layouts
-    * (per-document / bucketed) keep the fixed chunk schema and refuse
-    * both loudly — never silently.
+  /** CREATE TABLE / CTAS: every table is a manifest table and accepts
+    * ANY top-level DDL schema — the creation-time schema persists as
+    * the table's base schema sidecar and all DML/time-travel/CDF
+    * machinery applies to it; the `document_url` fast lanes (bloom
+    * stats, keyed upsert/delete, point reads) exist exactly when the
+    * schema carries a STRING `document_url` column. `PARTITIONED BY`
+    * (identity transforms only) makes partition columns
+    * stats-clustered write columns — every write clusters rows by
+    * them, so the per-file min/max stats prune partition predicates
+    * to a strict file subset (Hive pruning as data skipping, no
+    * directory-per-value tree). `TBLPROPERTIES ('format'='manifest')`
+    * is accepted; any other `format`, or the retired `buckets`
+    * property, refuses loudly — never silently.
     */
   override def createTable(
       ident: Identifier,
@@ -338,7 +293,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val dir = tableDir(ident)
-    val manifest = properties.asScala.get("format").contains("manifest")
+    val props = properties.asScala
+    if (props.get("format").exists(_ != "manifest") ||
+        props.contains("buckets"))
+      throw new UnsupportedOperationException(
+        s"$catalogName.${ident.name()}: graft tables are manifest " +
+          "tables — TBLPROPERTIES 'format' accepts only 'manifest' and " +
+          "'buckets' is not supported (got " +
+          props.view.filterKeys(k => k == "format" || k == "buckets")
+            .map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
     val partCols: Seq[String] = partitions.toSeq.map { t =>
       if (t.name != "identity" || t.references.length != 1 ||
           t.references.head.fieldNames.length != 1)
@@ -347,38 +310,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             s"columns are supported, got $t")
       t.references.head.fieldNames.head
     }
-    if (partCols.nonEmpty && !manifest)
-      throw new UnsupportedOperationException(
-        s"$catalogName.${ident.name()}: PARTITIONED BY needs the " +
-          "manifest table format — add TBLPROPERTIES " +
-          "('format'='manifest') (parquet chunk layouts have a fixed " +
-          "physical partitioning)")
-    if (manifest) {
-      val store =
-        new ChunkStore(spark, dir, format = ManifestTableFormat.factory)
-      // the empty LOG is the empty manifest table (ensure()'s hive
-      // bootstrap would stamp the wrong layout for this format)
-      fs.mkdirs(new Path(dir, "_log"))
-      val chunkShape =
-        store.schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
-      val custom = schema.nonEmpty &&
-        schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq !=
-          chunkShape
-      if (custom || partCols.nonEmpty)
-        new ManifestTableFormat(spark, dir, store.schema)
-          .initializeTable(if (custom) Some(schema) else None, partCols)
-    } else {
-      val store = properties.asScala.get("buckets") match {
-        case Some(n) => new ChunkStore(spark, dir, buckets = Some(n.toInt))
-        case None => new ChunkStore(spark, dir)
-      }
-      require(schema.isEmpty ||
-          schema.fieldNames.toSeq == store.schema.fieldNames.toSeq,
-        s"parquet-layout graft tables have the fixed chunk schema " +
-          s"${store.schema.simpleString}; got ${schema.simpleString}. " +
-          "For an arbitrary schema use TBLPROPERTIES ('format'='manifest')")
-      store.ensure()
-    }
+    val chunkSchema = new ChunkStore(spark, dir).schema
+    val custom = schema.nonEmpty &&
+      schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq !=
+        chunkSchema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
+    // the empty LOG is the empty manifest table
+    new ManifestTableFormat(spark, dir, chunkSchema)
+      .initializeTable(if (custom) Some(schema) else None, partCols)
     loadTable(ident)
   }
 
@@ -389,7 +327,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * physical name keeps data files and per-file stats valid; a
     * dropped name can be re-added because the re-add allocates a
     * fresh physical name). Everything else — type changes, NOT NULL,
-    * nested/positioned adds, non-manifest layouts — refuses loudly: a
+    * nested/positioned adds, layout-managed tables — refuses loudly: a
     * 100 TB table must never be silently committed to a full rewrite
     * by a DDL statement.
     */
@@ -398,9 +336,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(new Path(dir, "_log")))
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: ALTER TABLE needs the manifest " +
-          "table format (plain parquet layouts have a fixed schema)")
-    val store = new ChunkStore(spark, dir,
-      format = ManifestTableFormat.factory)
+          "table format (layout-managed tables have a fixed schema)")
+    val store = new ChunkStore(spark, dir)
     val mtf = new ManifestTableFormat(spark, dir, store.schema)
     changes.foreach {
       case add: TableChange.AddColumn =>
@@ -456,29 +393,24 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // DML grammar lacks — MERGE by key, store maintenance — reachable
   // as `CALL <catalog>.<proc>(...)`) ---------------------------------
 
-  /** The store behind `tableName`, whichever layout is on disk. */
+  /** The store behind `tableName`; procedures run on manifest tables
+    * only (a layout-managed table has no log to commit to).
+    */
   private def storeFor(tableName: String): ChunkStore = {
     val dir = s"$warehouse/$tableName"
-    val ident = Identifier.of(Array.empty, tableName)
-    if (!fs.exists(new Path(dir))) throw new NoSuchTableException(ident)
-    if (fs.exists(new Path(dir, "_log")))
-      new ChunkStore(spark, dir, format = ManifestTableFormat.factory)
-    else layoutTag(dir) match {
-      case Some("per-document") => new ChunkStore(spark, dir)
-      case Some(t) if t.startsWith("buckets=") =>
-        new ChunkStore(spark, dir,
-          buckets = Some(t.stripPrefix("buckets=").toInt))
-      case _ => throw new NoSuchTableException(ident)
-    }
-  }
-
-  private def manifestFor(tableName: String): ManifestTableFormat = {
-    val dir = s"$warehouse/$tableName"
+    if (!fs.exists(new Path(dir)))
+      throw new NoSuchTableException(Identifier.of(Array.empty, tableName))
+    ChunkStore.requireManifestLayout(spark, dir)
     if (!fs.exists(new Path(dir, "_log")))
       throw new UnsupportedOperationException(
         s"$catalogName.$tableName is not a manifest-format table — " +
-          "checkpoint/vacuum operate on the commit log")
-    new ManifestTableFormat(spark, dir, storeFor(tableName).schema)
+          "procedures operate on the commit log")
+    new ChunkStore(spark, dir)
+  }
+
+  private def manifestFor(tableName: String): ManifestTableFormat = {
+    val store = storeFor(tableName)
+    new ManifestTableFormat(spark, store.path, store.schema)
   }
 
   private def procedure(
@@ -574,15 +506,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "column of <source>")(args => {
       // frame-native: the url set never collects to the driver — a
       // delete keyed by a large source table stays a Spark anti-join
-      // all the way down (TableFormat.delete(DataFrame))
+      // all the way down (ChunkStore.delete(DataFrame))
       val src = spark.table(args(1))
       storeFor(args(0)).delete(src.select(
         org.apache.spark.sql.functions.col(src.columns.head)
           .cast("string").as("document_url")))
     }),
     procedure("compact", Seq("table"),
-      "A21 maintenance: rewrite small files (staged swap / " +
-        "log-committed per layout)")(args =>
+      "A21 maintenance: rewrite small files into target-size files " +
+        "in one log commit")(args =>
       storeFor(args(0)).compact()),
     rowProcedure("compact_where", Seq("table", "predicate"),
       "predicate-scoped OPTIMIZE for manifest tables: bin-pack only " +
@@ -1152,15 +1084,14 @@ private[graft] class GraftTable(
     * `graft.plans.GraftDmlStrategy` to the manifest format's
     * copy-on-write rewrite. Only the head snapshot of a
     * manifest-format table is updatable — frozen time-travel reads
-    * and plain parquet layouts refuse with the reason.
+    * and layout-managed tables refuse with the reason.
     */
   override def updateWhere(
       condition: Option[org.apache.spark.sql.Column],
       set: Seq[(String, org.apache.spark.sql.Column)]): Unit =
     updateRows.getOrElse(throw new UnsupportedOperationException(
       s"$tableName does not support SQL UPDATE (time-travel reads are " +
-        "frozen history; per-document/bucketed/layout tables are " +
-        "document-keyed — use the store API or CALL merge_into)"))(
+        "frozen history; layout-managed tables are read-only)"))(
       condition, set)
 
   /** Row-level DELETE hook: predicates beyond the url-keyed
@@ -1170,8 +1101,8 @@ private[graft] class GraftTable(
       condition: org.apache.spark.sql.Column): Unit =
     deleteRows.getOrElse(throw new UnsupportedOperationException(
       s"$tableName: row-level DELETE supports only the manifest " +
-        "table format's head snapshot (document-keyed layouts delete " +
-        "whole documents by document_url; time travel is frozen)"))(
+        "table format's head snapshot (time travel is frozen; " +
+        "layout-managed tables are read-only)"))(
       condition)
 
   /** SQL MERGE INTO hook ([[GraftUpdatable]]). */
@@ -1184,8 +1115,8 @@ private[graft] class GraftTable(
       urlProbe: Option[DataFrame]): Unit =
     mergeHook.getOrElse(throw new UnsupportedOperationException(
       s"$tableName: MERGE INTO supports only the manifest table " +
-        "format's head snapshot — document-keyed layouts upsert " +
-        "whole documents (CALL merge_into); time travel is frozen"))(
+        "format's head snapshot (time travel is frozen; " +
+        "layout-managed tables are read-only)"))(
       source, onCond, matched, notMatched, notMatchedBySource, urlProbe)
 
   /** `DELETE FROM <cat>.<table> WHERE …` maps to the store's A20
@@ -1237,15 +1168,15 @@ private[graft] class GraftTable(
 
   /** `TRUNCATE TABLE` on manifest tables: one atomic rm-all commit,
     * reversible via time travel / CALL restore until vacuum — so the
-    * DROP-TABLE-instead refusal now applies only to layouts with no
-    * history to fall back on.
+    * DROP-TABLE-instead refusal applies only to handles with no
+    * writable history (time travel, layout-managed tables).
     */
   override def truncateTable(): Boolean = truncateHook match {
     case Some(run) => run(); true
     case None => throw new UnsupportedOperationException(
       s"$tableName: TRUNCATE/unqualified DELETE is refused on " +
-        "non-manifest layouts (no history to restore from) — wipe " +
-        "via DROP TABLE or the store API, explicitly")
+        "time-travel and layout-managed tables — wipe via DROP TABLE " +
+        "or the store API, explicitly")
   }
 
   private lazy val delegate = ParquetTable(
@@ -1314,9 +1245,9 @@ private[graft] class GraftTable(
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val doInsert = insert.getOrElse(throw new UnsupportedOperationException(
-      s"$tableName is read-only through SQL (bucketed stores hash-route " +
-        "writes through the ChunkStore API; time-travel reads are " +
-        "frozen history)"))
+      s"$tableName is read-only through SQL (time-travel reads are " +
+        "frozen history; layout-managed tables are written by " +
+        "graft.ops.Layout)"))
     // INSERT OVERWRITE arrives as the TRUNCATE write mode (the V1
     // fallback always calls insert(df, false); the mode lives in the
     // builder) — manifest tables map it to one atomic rm-all+add
@@ -1337,8 +1268,7 @@ private[graft] class GraftTable(
                 overwriteHook.getOrElse(
                   throw new UnsupportedOperationException(
                     s"$tableName: INSERT OVERWRITE needs the manifest " +
-                      "table format (document-keyed layouts replace " +
-                      "via upsert/MERGE)"))(data)
+                      "table format's head snapshot"))(data)
               else doInsert(data)
             }
           }

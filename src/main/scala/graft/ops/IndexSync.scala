@@ -241,8 +241,7 @@ object IndexSync {
   private def spanOf(
       spark: SparkSession, tablePath: String, indexPath: String)
       : (ManifestTableFormat, Long, Long) = {
-    val store = new ChunkStore(spark, tablePath,
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, tablePath)
     val mtf = new ManifestTableFormat(spark, tablePath, store.schema)
     val head = mtf.version
     val from = lastSynced(spark, indexPath)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) data layout — the multi-dimensional sibling of
-  * the single-key layouts in [[graft.sink.ChunkStore]] (SURVEY §2.1 A21:
+  * the chunk store's single-key file pruning (SURVEY §2.1 A21:
   * the reference provisions its store's index/layout once at bootstrap,
   * `AzureCosmosDB/.../CosmosDBClientWrapper.cs:119-144`; a columnar lake
   * expresses the same idea as file/row-group clustering).
@@ -398,7 +398,7 @@ object Layout {
     * (every file "unknown" AND the manifest-rendered selection also
     * listed → rows doubled).
     */
-  private[graft] def readSet(spark: SparkSession, path: String,
+  private def readSet(spark: SparkSession, path: String,
       manifestFiles: Seq[String], selected: Seq[String]): Seq[String] = {
     val known = manifestFiles.toSet
     val sel = selected.toSet

@@ -130,8 +130,7 @@ object IncrementalAgg {
     val fs = new Path(aggPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(aggPath, "_log"))) return None
-    val store = new ChunkStore(spark, aggPath,
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, aggPath)
     val mtf = new ManifestTableFormat(spark, aggPath, store.schema)
     mtf.streamTransactions.collectFirst {
       case (app, _) if app.startsWith("graft-incr-agg:") =>
@@ -206,8 +205,7 @@ object IncrementalAgg {
         s"incremental agg at $aggPath: duplicate $kind column(s): ${
           dups.mkString(", ")}")
     }
-    val srcStore = new ChunkStore(spark, srcPath,
-      format = ManifestTableFormat.factory)
+    val srcStore = new ChunkStore(spark, srcPath)
     val srcMtf = new ManifestTableFormat(spark, srcPath, srcStore.schema)
     val srcSchema = srcMtf.currentSchema
     def fieldOf(n: String): StructField = srcSchema.fields
@@ -253,8 +251,7 @@ object IncrementalAgg {
 
     val fs = new Path(aggPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aggStore = new ChunkStore(spark, aggPath,
-      format = ManifestTableFormat.factory)
+    val aggStore = new ChunkStore(spark, aggPath)
     val aggMtf = new ManifestTableFormat(spark, aggPath, aggStore.schema)
     if (!fs.exists(new Path(aggPath, "_log")))
       aggMtf.initializeTable(Some(aggSchema), Nil)

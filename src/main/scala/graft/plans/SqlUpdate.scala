@@ -32,10 +32,10 @@ import graft.catalog.GraftUpdatable
   * rewrite of only those files, rm+add in one atomic log commit).
   *
   * DELETE keeps its fast lane: predicates the document-keyed
-  * `SupportsDelete` surface can serve (`document_url` equality/IN —
-  * metadata-only on the per-document layout, bloom-pruned on the
-  * manifest) fall through to Spark's built-in `DeleteFromTableExec`;
-  * only predicates that path refuses route to the row-level rewrite.
+  * `SupportsDelete` surface can serve (`document_url` equality/IN,
+  * bloom-pruned on the manifest) fall through to Spark's built-in
+  * `DeleteFromTableExec`; only predicates that path refuses route to
+  * the row-level rewrite.
   * Unqualified DELETE still refuses loudly — a full wipe must be an
   * explicit DROP TABLE or store call, never a typo'd DELETE.
   *
@@ -62,8 +62,7 @@ object GraftDmlStrategy extends SparkStrategy with PredicateHelper {
 
   /** True when the built-in `SupportsDelete` path will serve this
     * DELETE — a conjunction of `document_url` equality/IN terms, the
-    * document-keyed fast lane (metadata-only on the per-document
-    * layout, bloom-pruned on the manifest). Mirrors
+    * document-keyed fast lane (bloom-pruned on the manifest). Mirrors
     * `GraftTable.urlSet`'s filter acceptance on raw expressions; then
     * we must NOT claim it.
     */

@@ -375,8 +375,7 @@ object LlmOpsQueries {
         .createTempDirectory("graft-isync-gate").toString
       val tbl = s"$base/t"
       val idx = s"$base/ix"
-      val store = new ChunkStore(s, tbl,
-        format = ManifestTableFormat.factory)
+      val store = new ChunkStore(s, tbl)
       val mtf = new ManifestTableFormat(s, tbl, store.schema)
       store.upsert(rowsOf(e.filter(col("vec_id") < 200), flip = false))
       VectorIndex.buildIvfPq(prepare(store.read()), idx, "vid", "v",

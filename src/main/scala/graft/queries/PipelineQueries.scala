@@ -497,8 +497,7 @@ object PipelineQueries {
         .createTempDirectory("graft-iagg").toString
       val src = s"$wh/chunks"
       val agg = s"$wh/chunks_by_page"
-      val store = new graft.sink.ChunkStore(s, src,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, src)
       val docs = Tables(s, dir, "documents")
       store.append(docs.select(
         when(col("doc_id") % 11 === 0, lit(null))
@@ -522,8 +521,7 @@ object PipelineQueries {
       store.deleteWhere(col("page_number") === 3)
       graft.pipeline.IncrementalAgg.catchUp(s, src, agg,
         Seq("page_number"), Seq("chunk_id"))
-      new graft.sink.ChunkStore(s, agg,
-          format = graft.sink.ManifestTableFormat.factory).read()
+      new graft.sink.ChunkStore(s, agg).read()
         .select(col("page_number"), col("cnt"),
           col("sum_chunk_id"), col("nn_chunk_id"))
         .orderBy("page_number")
@@ -570,8 +568,7 @@ object PipelineQueries {
         .createTempDirectory("graft-iaggmm").toString
       val src = s"$wh/chunks"
       val agg = s"$wh/chunks_by_page"
-      val store = new graft.sink.ChunkStore(s, src,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, src)
       val docs = Tables(s, dir, "documents")
       store.append(docs.select(
         when(col("doc_id") % 11 === 0, lit(null))
@@ -596,8 +593,7 @@ object PipelineQueries {
       store.deleteWhere(
         col("chunk_id") >= 450 || col("chunk_id") <= 100)
       sync() // endangered-group bounded recompute
-      new graft.sink.ChunkStore(s, agg,
-          format = graft.sink.ManifestTableFormat.factory).read()
+      new graft.sink.ChunkStore(s, agg).read()
         .select(col("page_number"), col("cnt"),
           col("sum_chunk_id"), col("nn_chunk_id"),
           col("min_chunk_id"), col("max_chunk_id"))

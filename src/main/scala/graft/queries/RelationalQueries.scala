@@ -736,9 +736,9 @@ object RelationalQueries {
         .orderBy("doc_id")
     },
 
-    // C37b: the same upsert-LWW semantics run THROUGH the manifest
-    // table format (the log-committed MERGE implementation behind the
-    // TableFormat seam): ingest v1 of every document, re-merge v2 of
+    // C37b: the same upsert-LWW semantics run THROUGH the chunk
+    // store's manifest log (its log-committed MERGE): ingest v1 of
+    // every document, re-merge v2 of
     // the evens (copy-on-write rewrite found from log metadata),
     // DELETE FROM every 17th, then read the snapshot back. The oracle
     // recomputes the final state relationally, so merge/delete/read
@@ -752,8 +752,7 @@ object RelationalQueries {
         |ORDER BY document_url""".stripMargin) { (s, dir) =>
       val path =
         s"/tmp/graft-manifest-${dir.replaceAll("[^A-Za-z0-9.]", "_")}/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(
         lit(0).as("chunk_id"),
         col("chunk_text"),
@@ -798,8 +797,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqlcat").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(
         lit(0).as("chunk_id"), col("chunk_text"),
         array(lit(0f)).as("embedding"), lit(0).as("page_number"),
@@ -833,8 +831,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqltt").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(
         lit(0).as("chunk_id"), col("chunk_text"),
         array(lit(0f)).as("embedding"), lit(0).as("page_number"),
@@ -879,8 +876,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-cdf").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(
         lit(0).as("chunk_id"), col("chunk_text"),
         array(lit(0f)).as("embedding"), lit(0).as("page_number"),
@@ -924,8 +920,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqlupd").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -956,8 +951,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqlevo").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -985,8 +979,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqldel").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -1020,8 +1013,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-sqlmrg").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -1070,8 +1062,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-skip").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       def part(m: Int, base: Int) = docs
         .filter(col("doc_id") % 3 === m)
@@ -1152,8 +1143,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-zcmp").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.append(docs.select(
         (col("doc_id") / 50).cast("int").as("chunk_id"),
@@ -1187,8 +1177,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-drop").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -1220,8 +1209,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-ow").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       store.upsert(docs.select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
@@ -1349,8 +1337,7 @@ object RelationalQueries {
         |FROM documents ORDER BY document_url""".stripMargin) { (s, dir) =>
       val wh = java.nio.file.Files
         .createTempDirectory("graft-ren").toString
-      val store = new graft.sink.ChunkStore(s, s"$wh/chunks",
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, s"$wh/chunks")
       store.upsert(t(s, dir, "documents").select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
         array(lit(0f)).as("embedding"),
@@ -1387,8 +1374,7 @@ object RelationalQueries {
         |ORDER BY document_url""".stripMargin) { (s, dir) =>
       val wh = java.nio.file.Files
         .createTempDirectory("graft-clone").toString
-      val store = new graft.sink.ChunkStore(s, s"$wh/chunks",
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, s"$wh/chunks")
       store.upsert(t(s, dir, "documents").select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
         array(lit(0f)).as("embedding"),
@@ -1443,8 +1429,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-branch").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       store.append(t(s, dir, "documents").select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
         array(lit(0f)).as("embedding"),
@@ -1499,8 +1484,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-dvgate").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       store.append(t(s, dir, "documents").select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
         array(lit(0f)).as("embedding"),
@@ -1540,8 +1524,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-dvup").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       store.append(t(s, dir, "documents").select(
         lit(0).as("chunk_id"), col("text").as("chunk_text"),
         array(lit(0f)).as("embedding"),
@@ -1581,8 +1564,7 @@ object RelationalQueries {
       val wh = java.nio.file.Files
         .createTempDirectory("graft-mdel").toString
       val path = s"$wh/chunks"
-      val store = new graft.sink.ChunkStore(s, path,
-        format = graft.sink.ManifestTableFormat.factory)
+      val store = new graft.sink.ChunkStore(s, path)
       val docs = t(s, dir, "documents")
       def decade(m: Int, base: Int) = docs
         .filter(col("doc_id") % 2 === m)

@@ -109,30 +109,29 @@ object VectorQueries {
         .orderBy(col("vec_id"))
     },
 
-    // B5b: the layout family paying off on the ENGINE'S OWN chunk
-    // store — a bucketed ChunkStore ingests the documents table, a
-    // `_keybloom` manifest is built (maintenance cadence), and a
-    // multi-document read consults it to read only the bloom-
-    // surviving file subset. The result must equal a plain filter
+    // B5b: point-read pruning paying off on the ENGINE'S OWN chunk
+    // store — a ChunkStore ingests the documents table, and a
+    // multi-document read consults the per-file `document_url` bloom
+    // and min/max the manifest log records, reading only the files
+    // that may hold a probed url. The result must equal a plain filter
     // over the source table exactly — including an absent probe url
     // returning nothing (bloom false positives widen the file list;
-    // the exact url filter keeps rows identical). PipelineSpec pins
-    // that the read touches strictly fewer files than the store holds
-    // and that a manifest staled by a later upsert stays sound.
+    // the residual semi-join keeps rows identical). ManifestFormatSpec
+    // pins that the read touches a strict file subset.
     "b5b_store_pruned_lookup" -> QueryDef(
       """SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS document_url,
         |       text AS chunk_text
         |FROM documents WHERE doc_id IN (3, 7)
         |ORDER BY document_url""".stripMargin) { (s, dir) =>
-      val path = s"/tmp/graft-storekey-${dir.replaceAll("[^A-Za-z0-9.]", "_")}/chunks"
-      val store = new graft.sink.ChunkStore(s, path, buckets = Some(8))
+      val path = java.nio.file.Files
+        .createTempDirectory("graft-storekey").toString + "/chunks"
+      val store = new graft.sink.ChunkStore(s, path)
       store.upsert(Tables(s, dir, "documents")
         .select(lit(0).as("chunk_id"),
           col("text").as("chunk_text"),
           array(lit(0f)).as("embedding"),
           lit(0).as("page_number"),
           concat(lit("doc://"), col("doc_id")).as("document_url")))
-      store.buildKeyManifest()
       store.readDocuments(Seq("doc://3", "doc://7", "doc://absent"))
         .select("document_url", "chunk_text")
         .orderBy("document_url")

@@ -1,65 +1,47 @@
 package graft.sink
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The canonical chunk table (SURVEY §1.1 item 4; FIXTURES §2) and its
-  * sink semantics:
+  * sink semantics, every write one commit on the table's manifest log
+  * ([[ManifestTableFormat]], the single-log model of the Delta
+  * protocol):
   *
-  *  - A19/A21 ensure-schema bootstrap (`ensure()`),
-  *  - A17 idempotent keyed upsert — emulated on plain Parquet as
-  *    dynamic partition overwrite by `document_url`: semantically equal
-  *    to the reference's MERGE for whole-document re-ingest, which is
-  *    its only upsert scenario (chunk ids are per-document ordinals,
-  *    AzureCosmosDB/.../CosmosDBClientWrapper.cs:48). On a Delta/
-  *    Iceberg-capable cluster this becomes `MERGE INTO` in
-  *    `foreachBatch` — same call site, different writer.
+  *  - A19/A21 ensure-schema bootstrap (`ensure()` creates the empty
+  *    log),
+  *  - A17 idempotent keyed upsert — one atomic commit replaces every
+  *    document present in the batch and leaves the rest in place: the
+  *    reference's per-item atomic upsert
+  *    (`AzureCosmosDB/.../CosmosDBClientWrapper.cs:36-72`) at document
+  *    granularity, since chunk ids are per-document ordinals (:48),
   *  - A18 append mode (the SQL variant's non-idempotent INSERT path),
-  *  - A20 delete — completed here (the reference left it a TODO stub).
+  *  - A20 delete — completed here (the reference left it a TODO stub),
+  *  - row-level UPDATE / DELETE / MERGE INTO for the SQL surface.
   *
-  * Two layouts, same API:
+  * Readers are snapshot-isolated and concurrent writers resolve by
+  * file-level conflict checks in the log. Point reads prune to the
+  * files whose logged `document_url` bloom and min/max admit the
+  * probed urls.
   *
-  *  - `buckets = None` (default): one Hive partition per
-  *    `document_url`, mirroring the Cosmos partition key
-  *    (`CosmosDBClientWrapper.cs:132`). Single-partition point lookups
-  *    (B5), surgical per-document upsert/delete, and a metadata-only
-  *    document catalog (`listDocumentUrls` reads directory names).
-  *    Right up to ~10^5-10^6 documents, after which per-document
-  *    directories become a small-files/metastore bomb.
-  *  - `buckets = Some(n)`: documents hash (`xxhash64 % n`) into n
-  *    stable `doc_bucket` partitions — bounded file/directory counts
-  *    at any corpus size. Upsert and delete become read-merge-write of
-  *    ONLY the affected buckets (the documented MERGE fallback),
-  *    staged to a temp directory and swapped in per bucket; point
-  *    lookups prune to one bucket because the bucket id of a literal
-  *    url constant-folds.
+  * `format` builds the log handle: the main log by default; branch
+  * handles ([[ManifestTableFormat.branchFactory]]) and instrumented
+  * subclasses pass their own.
   */
 final class ChunkStore(
     val spark: SparkSession,
     val path: String,
-    buckets: Option[Int] = None,
-    format: ChunkStore => TableFormat = _.parquetMergeEmulation) {
+    format: ChunkStore => ManifestTableFormat = ManifestTableFormat.factory) {
 
-  /** The [[TableFormat]] behind the three MERGE-shaped operations.
-    * Defaults to [[parquetMergeEmulation]]; pass a different factory
-    * to drop in a transactional format (Delta/Iceberg `MERGE INTO`)
-    * without touching any caller.
+  /** The log handle every operation routes through. Built on first
+    * use, after [[ChunkStore.requireManifestLayout]] has refused a
+    * directory the retired parquet engine wrote.
     */
-  private lazy val fmt: TableFormat = format(this)
-
-  /** The built-in parquet MERGE emulation — the behavior this store
-    * has always had, now behind the [[TableFormat]] seam.
-    */
-  def parquetMergeEmulation: TableFormat = new TableFormat {
-    def merge(rows: DataFrame): Unit = upsertParquet(rows)
-    def delete(documentUrls: Seq[String]): Unit =
-      deleteParquet(documentUrls)
-    override def delete(urls: DataFrame): Unit =
-      deleteParquetFrame(urls)
-    def compact(): Unit = compactParquet()
+  private lazy val fmt: ManifestTableFormat = {
+    ChunkStore.requireManifestLayout(spark, path)
+    format(this)
   }
 
   val schema: StructType = StructType(Seq(
@@ -69,189 +51,25 @@ final class ChunkStore(
     StructField("page_number", IntegerType),
     StructField("document_url", StringType)))
 
-  private val bucketCol = "doc_bucket"
-
-  // Bucketed data files carry a parquet-native bloom filter on
-  // document_url: the reader's row-group filtering (parquet-mr,
-  // applied by Spark's pushed EqualTo/In predicates) then skips row
-  // groups inside the files that survive partition pruning and the
-  // `_keybloom` FILE pruning — the third and finest pruning level,
-  // paid once at write time (~12 KB per row group at the expected
-  // NDV below). Per-document layout skips it: there document_url is
-  // the partition column and never lands in a data file.
-  private val bloomOpts = Seq(
-    "parquet.bloom.filter.enabled#document_url" -> "true",
-    "parquet.bloom.filter.expected.ndv#document_url" -> "10000")
-
-  private def withBloom(
-      w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
-      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    bloomOpts.foldLeft(w) { case (x, (k, v)) => x.option(k, v) }
-
-  private def bucketOf(url: Column): Column =
-    pmod(xxhash64(url), lit(buckets.getOrElse(1).toLong)).cast("int")
-
-  private def fs = new Path(path)
+  def exists: Boolean = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    .exists(new Path(path))
 
-  def exists: Boolean = fs.exists(new Path(path))
-
-  /** True when the document catalog is a pure metadata operation
-    * (per-document PARQUET layout, where partition directory names
-    * are the urls). Bucketed stores and log-committed formats answer
-    * the catalog with a (column-pruned) scan — streaming delete
-    * detection must poll those on a maintenance cadence, not per
-    * micro-batch.
-    */
-  def hasMetadataCatalog: Boolean = buckets.isEmpty && fmt.read().isEmpty
-
-  // ---- layout metadata: the bucket count is part of the on-disk
-  // format. Reopening a store with a different `buckets` would hash
-  // documents into different partitions and silently corrupt
-  // upsert/delete/point-lookup, so the layout is stamped at bootstrap
-  // and validated once per instance on first access.
-  private val layoutPath = new Path(path, "_graft_layout")
-  private def layoutTag: String =
-    buckets.fold("per-document")(n => s"buckets=$n")
-  @volatile private var layoutChecked = false
-
-  private def writeLayoutTag(): Unit = {
-    val out = fs.create(layoutPath, true)
-    try out.write(layoutTag.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def checkLayout(): Unit = if (!layoutChecked) {
-    // only cache a verdict once a tag was actually verified or written
-    // — an instance opened before the store exists must re-check later
-    if (exists && fs.exists(layoutPath)) {
-      val in = fs.open(layoutPath)
-      val onDisk = try {
-        // loop to EOF: a single read() may legally return short
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      require(onDisk == layoutTag,
-        s"chunk store at $path was written with layout '$onDisk' but opened " +
-          s"with '$layoutTag' — bucket counts are part of the on-disk format")
-      layoutChecked = true
-    } else if (exists) {
-      // pre-stamp legacy store: before adopting the opener's layout,
-      // check the partition directory names agree with it (they encode
-      // the partition column); a different bucket COUNT on a legacy
-      // bucketed store is not detectable from names alone
-      val expectPrefix = buckets.fold("document_url=")(_ => s"$bucketCol=")
-      val partDirs = fs.listStatus(new Path(path)).toSeq
-        .filter(_.isDirectory).map(_.getPath.getName).filter(_.contains("="))
-      require(partDirs.forall(_.startsWith(expectPrefix)),
-        s"chunk store at $path has partition directories " +
-          s"${partDirs.take(3).mkString(", ")}... that do not match the " +
-          s"opened layout '$layoutTag'")
-      writeLayoutTag()
-      layoutChecked = true
-    }
-  }
-
-  private def emptyFrame(s: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-
-  /** A19/A21: bootstrap an empty partitioned table if absent. */
-  def ensure(): Unit = {
-    checkLayout()
-    if (!exists) {
-      buckets match {
-        case None =>
-          emptyFrame(schema).write.partitionBy("document_url").parquet(path)
-        case Some(_) =>
-          emptyFrame(schema).withColumn(bucketCol, lit(0))
-            .write.partitionBy(bucketCol).parquet(path)
-      }
-      writeLayoutTag()
-    }
-  }
-
-  private def normalized(chunks: DataFrame): DataFrame =
-    chunks.select("chunk_id", "chunk_text", "embedding", "page_number",
-      "document_url")
-
-  /** Raw read including the physical partition column (bucketed). */
-  private def rawRead(): DataFrame = {
-    val s = buckets.fold(schema)(_ => schema.add(bucketCol, IntegerType))
-    if (exists) spark.read.schema(s).parquet(path) else emptyFrame(s)
-  }
+  /** A19/A21: bootstrap the empty table — its empty log — if absent. */
+  def ensure(): Unit = fmt.initializeTable(None, Nil)
 
   /** A17: idempotent upsert — replaces exactly the documents present
     * in `chunks`, leaves everything else in place.
-    *
-    * Per-document layout: dynamic partition overwrite (touched
-    * partitions only). Bucketed layout: read-merge-write of the
-    * affected buckets — existing rows of other documents in those
-    * buckets are retained, then the bucket directories are atomically
-    * swapped. The collected url list is bounded by the documents in
-    * this upsert batch.
     */
   def upsert(chunks: DataFrame): Unit = fmt.merge(chunks)
 
-  private def upsertParquet(chunks: DataFrame): Unit = buckets match {
-    case None =>
-      ensure()
-      // per-writer option, NOT spark.conf.set: a session-level set would
-      // leak dynamic-overwrite semantics into every later write on the
-      // session (judge round-2 finding)
-      normalized(chunks).write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("document_url").parquet(path)
-    case Some(_) =>
-      ensure()
-      val incoming = normalized(chunks)
-        .withColumn(bucketCol, bucketOf(col("document_url")))
-        .persist() // upstream may embed; evaluate the pipeline once
-      try {
-        // only the bucket-id list is collected (≤ bucket count —
-        // needed as literals for partition pruning); the url set stays
-        // distributed as a broadcast anti-join so a 10^5-document batch
-        // doesn't build a 10^5-term In expression (Catalyst
-        // planner/codegen blowup, SCALE.md §3)
-        val ids = incoming.select(bucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (ids.nonEmpty) {
-          val urls = incoming.select("document_url").distinct()
-          val keep = rawRead()
-            .filter(col(bucketCol).isin(ids: _*))
-            .join(broadcast(urls), Seq("document_url"), "left_anti")
-          rewriteBuckets(ids, keep.unionByName(incoming))
-        }
-      } finally incoming.unpersist()
-  }
-
   /** A18: append-only insert (re-processing duplicates, as in the
-    * reference's SQL variant).
+    * reference's SQL variant). Columns added by ALTER TABLE pass
+    * through; the log conforms the frame to the current schema.
     */
-  def append(chunks: DataFrame): Unit =
-    // the format sees the RAW frame: a schema-evolving format keeps
-    // evolved columns the caller carries (and conforms internally);
-    // only the fixed-schema parquet fallback normalizes to base
-    if (!fmt.append(chunks)) {
-      ensure()
-      buckets match {
-        case None =>
-          normalized(chunks).write.mode(SaveMode.Append)
-            .partitionBy("document_url").parquet(path)
-        case Some(_) =>
-          withBloom(normalized(chunks)
-            .withColumn(bucketCol, bucketOf(col("document_url")))
-            .write.mode(SaveMode.Append)).partitionBy(bucketCol).parquet(path)
-      }
-    }
+  def append(chunks: DataFrame): Unit = fmt.append(chunks)
 
-  /** A20 (completed): drop all chunks of the given documents.
-    * Per-document layout: remove their partition directories (pure
-    * metadata). Bucketed layout: rewrite the affected buckets without
-    * the deleted documents.
-    */
+  /** A20 (completed): drop all chunks of the given documents. */
   def delete(documentUrls: Seq[String]): Unit = fmt.delete(documentUrls)
 
   /** Frame-native A20: the url set flows as a Spark frame end-to-end
@@ -261,33 +79,20 @@ final class ChunkStore(
     */
   def delete(urls: DataFrame): Unit = fmt.delete(urls)
 
-  /** Row-level SQL UPDATE (`UPDATE t SET … WHERE …`), a capability of
-    * the manifest table format only — the parquet emulations' unit of
-    * atomicity is the whole document, not the row. Routes to the
-    * format's copy-on-write rewrite; refuses loudly on layouts that
-    * cannot do it transactionally.
+  /** Row-level SQL UPDATE (`UPDATE t SET … WHERE …`): one
+    * copy-on-write commit of the affected files.
     */
   def update(
       condition: Option[Column], set: Seq[(String, Column)]): Unit =
-    if (!fmt.update(condition, set))
-      throw new UnsupportedOperationException(
-        s"store at $path: UPDATE needs the manifest table format " +
-          "(per-document/bucketed parquet layouts are document-keyed; " +
-          "use upsert() for whole-document replace)")
+    fmt.update(condition, set)
 
-  /** Row-level SQL DELETE by arbitrary predicate — manifest format
-    * only; url-keyed deletes route through [[delete]] (bloom-pruned,
-    * no pre-scan).
+  /** Row-level SQL DELETE by arbitrary predicate; url-keyed deletes
+    * route through [[delete]] (bloom-pruned, no pre-scan).
     */
-  def deleteWhere(condition: Column): Unit =
-    if (!fmt.deleteWhere(condition))
-      throw new UnsupportedOperationException(
-        s"store at $path: row-level DELETE needs the manifest table " +
-          "format (parquet layouts delete whole documents by url)")
+  def deleteWhere(condition: Column): Unit = fmt.deleteWhere(condition)
 
-  /** SQL `MERGE INTO` with the full WHEN-clause algebra — manifest
-    * format only (one atomic copy-on-write commit); document-keyed
-    * layouts upsert whole documents via [[upsert]].
+  /** SQL `MERGE INTO` with the full WHEN-clause algebra — one atomic
+    * copy-on-write commit.
     */
   def mergeInto(
       source: DataFrame,
@@ -295,438 +100,72 @@ final class ChunkStore(
       matched: Seq[GraftMergeAction],
       notMatched: Seq[GraftMergeAction],
       notMatchedBySource: Seq[GraftMergeAction],
-      urlProbe: Option[DataFrame]): Unit = fmt match {
-    case m: ManifestTableFormat =>
-      m.mergeInto(source, onCond, matched, notMatched,
-        notMatchedBySource, urlProbe)
-    case _ => throw new UnsupportedOperationException(
-      s"store at $path: MERGE INTO needs the manifest table format " +
-        "(document-keyed layouts upsert whole documents — use " +
-        "upsert()/CALL merge_into)")
-  }
+      urlProbe: Option[DataFrame]): Unit =
+    fmt.mergeInto(source, onCond, matched, notMatched,
+      notMatchedBySource, urlProbe)
 
-  private def deleteParquetFrame(urls: DataFrame): Unit = {
-    val u = urls.select(col("document_url").cast("string")
-      .as("document_url")).distinct()
-    buckets match {
-      case None =>
-        checkLayout()
-        // partition-directory removal is inherently a driver-side
-        // metadata call per document; stream the url frame so driver
-        // HEAP stays O(batch) while the fs does O(deleted) renames —
-        // the same envelope as the listing side (StreamedNames)
-        val f = fs
-        val it = u.toLocalIterator()
-        while (it.hasNext) {
-          val dir = new Path(path, "document_url=" +
-            ExternalCatalogUtils.escapePathName(it.next().getString(0)))
-          if (f.exists(dir)) f.delete(dir, true)
-        }
-      case Some(_) =>
-        checkLayout()
-        if (exists) {
-          val probe = u.persist()
-          try {
-            // affected buckets: bounded by the bucket count, not the
-            // url count — the only thing collected
-            val ids = probe.select(bucketOf(col("document_url")))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            if (ids.nonEmpty) {
-              // no broadcast hint: a table-keyed delete set may be
-              // large; AQE picks broadcast when it is small
-              val keep = rawRead()
-                .filter(col(bucketCol).isin(ids: _*))
-                .join(probe, Seq("document_url"), "left_anti")
-              rewriteBuckets(ids, keep)
-            }
-          } finally probe.unpersist()
-        }
-    }
-  }
-
-  private def deleteParquet(documentUrls: Seq[String]): Unit =
-    buckets match {
-    case None =>
-      checkLayout()
-      val f = fs
-      documentUrls.foreach { url =>
-        val dir = new Path(path,
-          "document_url=" + ExternalCatalogUtils.escapePathName(url))
-        if (f.exists(dir)) f.delete(dir, true)
-      }
-    case Some(_) =>
-      checkLayout()
-      if (documentUrls.nonEmpty && exists) {
-        import spark.implicits._
-        val urls = documentUrls.toDF("document_url")
-        val ids = urls.select(bucketOf(col("document_url"))).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // anti-join, not isin: a mass delete (e.g. delete detection)
-        // may carry tens of thousands of urls — as an In literal list
-        // that is a Catalyst expression-size trap
-        val keep = rawRead()
-          .filter(col(bucketCol).isin(ids: _*))
-          .join(broadcast(urls), Seq("document_url"), "left_anti")
-        rewriteBuckets(ids, keep)
-      }
-  }
-
-  // ---- single-writer contract (bucketed layout). The reference's
-  // store gives per-item atomic upsert; a plain-file bucket rewrite
-  // cannot, so concurrent upsert/delete on the SAME store is excluded
-  // by an atomic-create lock file instead: two interleaved
-  // read-merge-write cycles could otherwise each read pre-write state
-  // and the second swap would silently drop the first batch — which
-  // is why the lock wraps the WHOLE rewrite including the staged
-  // write (the store read executes inside it), not just the renames.
-  // The lock carries writer + timestamp for diagnosis; a crash leaves
-  // it behind by design (fail-closed), and `recoverStaging()` is the
-  // documented operator action that heals interrupted swaps AND
-  // clears the stale lock — after a lock-age check so it cannot be
-  // pointed at a live writer.
-  private val lockPath = new Path(path, "_graft_writer_lock")
-
-  private def withWriterLock[T](body: => T): T = {
-    val f = fs
-    val created =
-      try {
-        val out = f.create(lockPath, false)
-        try out.write(
-          (s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName} " +
-            s"${System.currentTimeMillis()}").getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        // some filesystems signal an existing file with a plain
-        // IOException — only read that as "locked" when the lock is
-        // actually there; anything else is a real I/O failure
-        case e: java.io.IOException =>
-          if (f.exists(lockPath)) false else throw e
-      }
-    if (!created) throw new IllegalStateException(
-      s"chunk store at $path is locked by another writer ($lockPath " +
-        "exists). Bucketed upsert/delete is single-writer; if the " +
-        "previous writer crashed, run recoverStaging() to heal " +
-        "interrupted swaps and release the stale lock.")
-    try body finally f.delete(lockPath, false)
-  }
-
-  /** Stage `out` (which must contain only rows of `ids` buckets) to a
-    * temp directory, then swap each affected bucket directory in. A
-    * bucket absent from `out` (everything deleted) is simply removed.
-    *
-    * Failure safety: the live bucket is renamed aside (not deleted)
-    * before the staged copy swaps in, a failed rename restores it and
-    * throws, and the staging directory is only removed after every
-    * swap succeeded — on error it survives on disk and
-    * [[recoverStaging]] can restore any bucket that was staged aside.
-    * Concurrent writers are excluded by [[withWriterLock]].
+  /** Maintenance compaction: the small files that append / streaming
+    * ingest accumulates rewrite into target-size files in one commit —
+    * same rows, fewer files.
     */
-  private def rewriteBuckets(ids: Seq[Int], out: DataFrame): Unit = {
-    val tmp = new Path(path + ".staging-" + java.util.UUID.randomUUID())
-    withWriterLock {
-      // the staged write MATERIALIZES the read-merge plan (rawRead of
-      // live buckets) — it must run under the lock or a concurrent
-      // writer's committed rows could be read-before, merged-without,
-      // and swapped away
-      withBloom(out.write).partitionBy(bucketCol).parquet(tmp.toString)
-      val f = fs
-      ids.foreach { b =>
-        val dst = new Path(path, s"$bucketCol=$b")
-        val src = new Path(tmp, s"$bucketCol=$b")
-        val aside = new Path(tmp, s"$bucketCol=$b.replaced")
-        val hadDst = f.exists(dst)
-        if (hadDst && !f.rename(dst, aside))
-          throw new java.io.IOException(
-            s"cannot stage out live bucket $b at $dst (staging kept at $tmp)")
-        if (f.exists(src) && !f.rename(src, dst)) {
-          if (hadDst) f.rename(aside, dst) // restore the original
-          throw new java.io.IOException(
-            s"failed to swap bucket $b into $dst (staging kept at $tmp)")
-        }
-      }
-      f.delete(tmp, true)
-    }
-  }
+  def compact(): Unit = fmt.compact()
 
-  /** Crash recovery for the bucketed layout: heal the on-disk state
-    * after a writer died mid-[[rewriteBuckets]]. For every surviving
-    * staging directory, any bucket that was renamed aside
-    * (`doc_bucket=N.replaced`) but whose live directory is missing is
-    * restored — the pre-crash content, never a half-written mix —
-    * then the staging directory and any stale writer lock are
-    * removed. Idempotent; a no-op on a healthy store. Returns the
-    * restored bucket ids.
-    *
-    * Live-writer guard: a writer holds the lock for its WHOLE rewrite
-    * (staging write + swaps), so a lock younger than `minLockAgeMs`
-    * means the writer may still be running — recovery refuses rather
-    * than deleting an active swap out from under it. A crashed
-    * writer's lock only gets older; retry once it crosses the
-    * threshold (or pass 0 when the writer is known dead).
+  /** The document catalog, collected. Bounded by the document count —
+    * callers at catalog scale use [[documentCatalog]].
     */
-  def recoverStaging(minLockAgeMs: Long = 10 * 60 * 1000L): Seq[Int] = {
-    val f = fs
-    if (f.exists(lockPath)) {
-      val age = System.currentTimeMillis() -
-        f.getFileStatus(lockPath).getModificationTime
-      require(age >= minLockAgeMs,
-        s"chunk store at $path has a writer lock only ${age} ms old " +
-          s"(< $minLockAgeMs): the writer may still be running — " +
-          "recovery would destroy its in-flight swap. Retry once the " +
-          "lock is stale, or pass minLockAgeMs=0 if the writer is " +
-          "known dead.")
-    }
-    val parent = new Path(path).getParent
-    val name = new Path(path).getName
-    val staged =
-      if (parent == null || !f.exists(parent)) Seq.empty
-      else f.listStatus(parent).toSeq.filter { st =>
-        st.isDirectory && st.getPath.getName.startsWith(name + ".staging-")
-      }
-    val restored = staged.flatMap { st =>
-      val asides = f.listStatus(st.getPath).toSeq.filter(
-        _.getPath.getName.endsWith(".replaced"))
-      val healed = asides.flatMap { a =>
-        val bucketDir = a.getPath.getName.stripSuffix(".replaced")
-        val dst = new Path(path, bucketDir)
-        if (!f.exists(dst) && f.rename(a.getPath, dst))
-          Some(bucketDir.stripPrefix(s"$bucketCol=").toInt)
-        else None
-      }
-      f.delete(st.getPath, true)
-      healed
-    }
-    if (f.exists(lockPath)) f.delete(lockPath, false)
-    restored
-  }
+  def listDocumentUrls(): Seq[String] =
+    documentCatalog().collect().map(_.getString(0)).toSeq
 
-  /** Maintenance compaction: collapse the small files that append /
-    * streaming-batch ingest accumulates (one file set per micro-batch)
-    * into ~one file per partition. Same rows, same layout, fewer
-    * files — at 100 TB it is file-open overhead, not bytes, that
-    * degrades scans of an append-heavy store, and this is the
-    * maintenance-cadence answer (the chunk-table sibling of
-    * `StreamingDedup.compact`).
-    *
-    * Bucketed layout: a [[rewriteBuckets]] cycle over the present
-    * buckets (writer-locked, staged, per-bucket swap with the
-    * existing crash recovery) whose output is repartitioned to ~one
-    * task per bucket. Per-document layout: the compacted store is
-    * fully written to `<path>.compacting`, then swapped in — the
-    * only manual-recovery window is between the two renames (same
-    * protocol and caveat as the signature store's compaction).
+  /** The document catalog as a DataFrame: a distinct over the live
+    * `document_url` column (the log is the catalog of record) — no
+    * driver collect at any catalog size. Delete detection anti-joins
+    * against it.
     */
-  def compact(): Unit = {
-    fmt.compact()
-    // a store that opted into the `_keybloom` manifest keeps it fresh
-    // automatically: compaction rewrote the file set, and this is the
-    // documented maintenance point (a stale manifest stays SOUND — the
-    // refresh just restores the pruning win over the new files)
-    if (buckets.nonEmpty && hasKeyManifest)
-      graft.ops.Layout.writeKeyManifest(spark, path, "document_url")
-  }
+  def documentCatalog(): DataFrame = read().select("document_url").distinct()
 
-  private def compactParquet(): Unit = {
-    checkLayout()
-    if (!exists) return
-    buckets match {
-      case Some(n) =>
-        val ids = rawRead().select(bucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (ids.nonEmpty)
-          rewriteBuckets(ids,
-            rawRead().repartition(math.max(1, math.min(n, ids.size)),
-              col(bucketCol)))
-      case None =>
-        val f = fs
-        val tmp = new Path(path + ".compacting")
-        if (f.exists(tmp)) f.delete(tmp, true)
-        withWriterLock {
-          read().repartition(col("document_url"))
-            .write.partitionBy("document_url").parquet(tmp.toString)
-          val out = f.create(new Path(tmp, "_graft_layout"), true)
-          try out.write(layoutTag.getBytes("UTF-8")) finally out.close()
-          // marker-protocol swap (StagedSwap): an interrupted swap is
-          // detectable and recovers to one complete generation
-          StagedSwap.swap(f, new Path(path), tmp)
-        }
-    }
-  }
-
-  /** The document catalog. Per-document layout: a pure metadata
-    * operation — partition directory names ARE the urls (no data
-    * scan, no shuffle; this is what streaming delete detection polls
-    * every micro-batch). Bucketed layout: distinct over the store —
-    * callers at that scale should poll on a maintenance cadence, not
-    * per batch.
+  /** Multi-document read, pruned to the files whose logged url stats
+    * may hold a probed url; a residual semi-join keeps the result
+    * identical to a full scan-and-filter.
     */
-  def listDocumentUrls(): Seq[String] = buckets match {
-    case None if fmt.read().isEmpty =>
-      checkLayout()
-      if (!exists) Nil
-      else fs.listStatus(new Path(path)).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("document_url="))
-        .map(n => ExternalCatalogUtils
-          .unescapePathName(n.stripPrefix("document_url=")))
-    case _ =>
-      // bucketed layout, or a format that owns the live set (its log
-      // is the catalog of record): distinct over the format's read
-      read().select("document_url").distinct()
-        .collect().map(_.getString(0)).toSeq
-  }
+  def readDocuments(urls: Seq[String]): DataFrame =
+    if (urls.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else fmt.readDocuments(urls)
 
-  /** The document catalog as a DataFrame — the scalable form of
-    * [[listDocumentUrls]] (delete detection's anti-join side).
-    * Bucketed/manifest stores answer straight from a distinct over
-    * the store — no driver collect at ANY catalog size. The
-    * per-document layout streams its partition-directory names
-    * through a disk-backed frame ([[StreamedNames]]), so driver heap
-    * stays O(batch) rather than O(catalog) there too. The spool dir is
-    * per-store and wiped on each call — repeated per-micro-batch calls
-    * hold at most ONE catalog copy on disk, not one per batch (callers
-    * consume the previous frame before asking for the next, which the
-    * ingest loop's sequential batches guarantee).
-    */
-  private lazy val catalogSpoolDir =
-    java.nio.file.Files.createTempDirectory("graft-catalog-spool")
-
-  def documentCatalog(): DataFrame = buckets match {
-    case None if fmt.read().isEmpty =>
-      checkLayout()
-      if (!exists)
-        emptyFrame(StructType(Seq(StructField("document_url", StringType))))
-      else {
-        val it = fs.listStatusIterator(new Path(path))
-        val names = new Iterator[String] {
-          private var pending: Option[String] = None
-          private def advance(): Unit =
-            while (pending.isEmpty && it.hasNext) {
-              val st = it.next()
-              val n = st.getPath.getName
-              if (st.isDirectory && n.startsWith("document_url="))
-                pending = Some(ExternalCatalogUtils
-                  .unescapePathName(n.stripPrefix("document_url=")))
-            }
-          def hasNext: Boolean = { advance(); pending.nonEmpty }
-          def next(): String = {
-            advance()
-            val v = pending.get; pending = None; v
-          }
-        }
-        StreamedNames.toFrame(spark, "document_url", names,
-          reuseDir = Some(catalogSpoolDir))._1
-      }
-    case _ => read().select("document_url").distinct()
-  }
-
-  // ---- B5 + B11c on the store's own table: the bucketed layout
-  // prunes a point lookup to ONE bucket directory, but a hot bucket
-  // accumulates many files (one set per upsert/append batch) and the
-  // scan reads them all. A per-file `_keybloom` manifest on
-  // `document_url` (the same sidecar the z-order layout family uses,
-  // ops.Layout.writeKeyManifest) lets point/multi-document reads
-  // prune to the FILE subset that can contain the probed urls —
-  // evaluated as a Spark job, never a driver loop.
-  private def keyManifestPath = new Path(path, "_keybloom")
-
-  /** True when a `_keybloom` manifest is present (bucketed layout). */
-  def hasKeyManifest: Boolean = exists && fs.exists(keyManifestPath)
-
-  /** Maintenance: build/refresh the per-file `_keybloom` manifest on
-    * `document_url`. Run it after [[compact]] (or on the same cadence)
-    * — file-count rows of fixed-size bitsets, KB-to-MB-scale at any
-    * corpus size. A STALE manifest is sound by construction: reads
-    * derive their file set from the scan-time listing, so a file the
-    * manifest doesn't know (written since the build) is always read
-    * and a file it knows but that no longer exists simply isn't in
-    * the listing — the failure direction is "read more", never "drop
-    * rows". Per-document layout refuses: partition directories
-    * already prune point reads to one directory.
-    */
-  def buildKeyManifest(): Unit = {
-    require(buckets.nonEmpty,
-      "buildKeyManifest is for the bucketed layout; the per-document " +
-        "layout's partition directories already prune point reads")
-    checkLayout()
-    if (exists)
-      graft.ops.Layout.writeKeyManifest(spark, path, "document_url")
-  }
-
-  /** Multi-document read. Per-document layout: partition-pruned scan
-    * (directory names are the urls). Bucketed layout: bucket-pruned
-    * scan, narrowed to the `_keybloom`-surviving FILE subset when a
-    * manifest is present — bloom false positives only widen the file
-    * list; the exact url filter keeps the result identical to a full
-    * scan-and-filter either way.
-    */
-  def readDocuments(urls: Seq[String]): DataFrame = {
-    if (urls.isEmpty) return emptyFrame(schema)
-    fmt.readDocuments(urls) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    checkLayout()
-    if (!exists) return emptyFrame(schema)
-    buckets match {
-      case None =>
-        read().filter(col("document_url").isin(urls: _*))
-      case Some(_) if hasKeyManifest =>
-        import spark.implicits._
-        val probe = urls.toDF("document_url")
-        val known = spark.read.parquet(s"$path/_keybloom")
-          .select("file").collect().map(_.getString(0)).toSeq
-        val selected =
-          graft.ops.Layout.selectFilesByKey(spark, path, probe)
-        val files = graft.ops.Layout.readSet(spark, path, known, selected)
-        val base =
-          if (files.isEmpty) emptyFrame(schema)
-          else spark.read.schema(schema).parquet(files: _*)
-        base.filter(col("document_url").isin(urls: _*))
-      case Some(_) =>
-        // OR of constant-folding bucket-id equalities — each term
-        // folds to a literal comparison on the partition column, so
-        // the scan prunes to the probed buckets
-        rawRead()
-          .filter(urls.map(u => col(bucketCol) === bucketOf(lit(u)))
-            .reduce(_ || _) && col("document_url").isin(urls: _*))
-          .drop(bucketCol)
-    }
-  }
-
-  /** B5: single-document read — prunes to one partition in both
-    * layouts (the bucket id of a literal url constant-folds into a
-    * partition filter), and to the bloom-surviving file subset when a
-    * [[buildKeyManifest]] manifest is present.
-    */
+  /** B5: single-document read — the same file pruning. */
   def readDocument(url: String): DataFrame = fmt.readDocuments(Seq(url))
-    .getOrElse { { checkLayout(); buckets } match {
-      case None =>
-        read().filter(col("document_url") === url)
-      case Some(_) if hasKeyManifest =>
-        readDocuments(Seq(url))
-      case Some(_) =>
-        rawRead()
-          .filter(col(bucketCol) === bucketOf(lit(url)) &&
-            col("document_url") === url)
-          .drop(bucketCol)
-    } }
 
-  def read(): DataFrame = fmt.read().getOrElse {
-    checkLayout()
-    if (exists) {
-      buckets match {
-        case None => spark.read.schema(schema).parquet(path)
-        case Some(_) => rawRead().drop(bucketCol)
-      }
-    } else emptyFrame(schema)
-  }
+  def read(): DataFrame = fmt.read()
 }
 
 object ChunkStore {
+
+  /** The marker the retired parquet engine stamped at a store's root
+    * (`per-document` or `buckets=<n>`).
+    */
+  private[graft] val parquetLayoutMarker = "_graft_layout"
+
+  /** Refuses a directory the retired parquet engine wrote: it holds
+    * `_graft_layout` but no manifest log. Opening it as a log table
+    * would hide its rows (they are in no log entry), and the first
+    * write would commit a log beside them. A directory with a log is
+    * a manifest table whatever else it holds.
+    */
+  def requireManifestLayout(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(root, parquetLayoutMarker)
+    if (!fs.exists(new Path(root, "_log")) && fs.exists(marker)) {
+      val in = fs.open(marker)
+      val layout =
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      throw new IllegalStateException(
+        s"chunk store at $path was written by the retired parquet " +
+          s"engine (layout '$layout') and has no manifest log. Migrate " +
+          s"it: read the rows with spark.read.parquet(\"$path\"), then " +
+          "upsert them into a new ChunkStore at another path")
+    }
+  }
 
   /** Cosmos id parity: the reference emits chunk ids as
     * invariant-culture decimal STRINGS

@@ -8,11 +8,11 @@ import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 import graft.ops.Layout
 import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe}
 
-/** A manifest-committing [[TableFormat]] — the Delta/Iceberg commit
-  * model in miniature, implemented on plain parquet + one numbered
-  * JSON-lines log (SURVEY A17's "MERGE INTO" mapping,
-  * `AzureCosmosDB/.../CosmosDBClientWrapper.cs:36-72`, without the
-  * external dependency the sandbox lacks):
+/** The manifest-committing table format behind [[ChunkStore]] — the
+  * Delta/Iceberg commit model in miniature, implemented on plain
+  * parquet + one numbered JSON-lines log (SURVEY A17's "MERGE INTO"
+  * mapping, `AzureCosmosDB/.../CosmosDBClientWrapper.cs:36-72`,
+  * without the external dependency the sandbox lacks):
   *
   *  - **The log is the table.** `_log/<version>.json` entries list
   *    `add`/`rm` file actions; the live file set is the replay of all
@@ -52,9 +52,7 @@ import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe}
   *    winner removed none of this writer's inputs, the commit retries
   *    under the next version as-is; if it did, the staged files are
   *    abandoned and the whole merge re-runs against the new snapshot.
-  *    Concurrent writers on disjoint files both land — the
-  *    writer-lock file the parquet emulation needs does not exist
-  *    here.
+  *    Concurrent writers on disjoint files both land.
   *  - **Readers are snapshot-isolated.** [[read]] plans against the
   *    file list of the snapshot current at call time; `rm` never
   *    deletes bytes, so a concurrent commit cannot change or break a
@@ -150,9 +148,9 @@ import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe}
   *    `_partition.cols` (creation-time identity); `<v>.ndv.json`
   *    (ANALYZE's HLL sketches — newest wins, older ones vacuum).
   *
-  * Use with the per-document-free layout only (`buckets = None` and
-  * this format — the log supersedes hive partitioning):
-  * `new ChunkStore(spark, path, format = ManifestTableFormat.factory)`.
+  * [[ChunkStore]] builds one per store through
+  * [[ManifestTableFormat.factory]] (its default), so
+  * `new ChunkStore(spark, path)` is a manifest table.
   */
 class ManifestTableFormat(
     spark: SparkSession,
@@ -169,7 +167,7 @@ class ManifestTableFormat(
       * metadata publish. Branch handles refuse DDL, vacuum, and
       * branch administration (those run on the main handle).
       */
-    val branch: Option[String] = None) extends TableFormat {
+    val branch: Option[String] = None) {
 
   require(bloomBits % 64 == 0, s"bloomBits must be a multiple of 64: $bloomBits")
   branch.foreach(b => require(ManifestTableFormat.validBranchName(b),
@@ -1962,9 +1960,9 @@ class ManifestTableFormat(
     */
   protected def onRewrite(df: DataFrame): DataFrame = df
 
-  // ---- TableFormat -------------------------------------------------
+  // ---- the document-keyed operations ChunkStore routes here ---------
 
-  override def merge(rows: DataFrame): Unit = {
+  def merge(rows: DataFrame): Unit = {
     requireUrlKey("keyed upsert (merge by document_url)")
     // conform up-front (prunes pipeline working columns before the
     // persist; null-fills evolved columns the caller doesn't carry),
@@ -1986,7 +1984,7 @@ class ManifestTableFormat(
     } finally incoming.unpersist()
   }
 
-  override def delete(documentUrls: Seq[String]): Unit = {
+  def delete(documentUrls: Seq[String]): Unit = {
     if (documentUrls.isEmpty) return
     import spark.implicits._
     delete(documentUrls.distinct.toDF("document_url"))
@@ -2001,7 +1999,7 @@ class ManifestTableFormat(
     * churn-scale by contract (they must also fit the per-file bloom
     * probe), and the hint is that contract's documented memory bound.
     */
-  override def delete(urls: DataFrame): Unit = {
+  def delete(urls: DataFrame): Unit = {
     requireUrlKey("document-keyed delete")
     if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
       deleteDocumentsDv(urls)
@@ -2360,11 +2358,10 @@ class ManifestTableFormat(
     * implication — `DELETE WHERE ts < cutoff` on a time-clustered
     * table) are rm'd without being read or rewritten.
     */
-  override def deleteWhere(
-      condition: org.apache.spark.sql.Column): Boolean = {
+  def deleteWhere(condition: org.apache.spark.sql.Column): Unit = {
     if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
       deleteWhereDv(condition)
-      return true
+      return
     }
     var provable = Set.empty[String]
     commitCycle(
@@ -2390,7 +2387,6 @@ class ManifestTableFormat(
         readLive(snap, files.filterNot(provable))
           .filter(!coalesce(condition, lit(false))))
     lastMetadataOnlyFiles = provable.size.toLong
-    true
   }
 
   /** MERGE-ON-READ row-level DELETE (protocol v6 deletion vectors):
@@ -3032,13 +3028,13 @@ class ManifestTableFormat(
     * file-level conflict check. `condition = None` (no WHERE) rewrites
     * the whole live set — the full-table UPDATE SQL permits.
     */
-  override def update(
+  def update(
       condition: Option[org.apache.spark.sql.Column],
-      set: Seq[(String, org.apache.spark.sql.Column)]): Boolean = {
+      set: Seq[(String, org.apache.spark.sql.Column)]): Unit = {
     validateUpdate(set)
     if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
       updateDv(condition, set)
-      return true
+      return
     }
     val cond = condition.getOrElse(lit(true))
     commitCycle(
@@ -3063,7 +3059,6 @@ class ManifestTableFormat(
         }
         src.select(projected: _*)
       })
-    true
   }
 
   private def validateUpdate(
@@ -3191,7 +3186,7 @@ class ManifestTableFormat(
     (0L, 0L) // unreachable
   }
 
-  override def compact(): Unit =
+  def compact(): Unit =
     compact(ManifestTableFormat.defaultTargetFileBytes)
 
   /** A21 maintenance with explicit file-size targeting: the live set
@@ -3419,7 +3414,7 @@ class ManifestTableFormat(
   /** A18 append, log-committed: new files only, no removes — so a
     * lost commit race can never conflict and simply recommits.
     */
-  override def append(rows: DataFrame): Boolean = {
+  def append(rows: DataFrame): Unit = {
     // no isEmpty precheck: it evaluated the incoming query once just
     // to decide whether to run it again (measured ~2x the write cost
     // on computed sources). writeData detects an empty batch from its
@@ -3428,7 +3423,6 @@ class ManifestTableFormat(
     // behavior, one evaluation of `rows`.
     commitCycle(_ => Seq.empty,
       (snap, _) => conform(rows, snap.tableSchema))
-    true
   }
 
   /** SQL `TRUNCATE TABLE`: remove every live file in one atomic
@@ -3680,28 +3674,27 @@ class ManifestTableFormat(
     false // unreachable
   }
 
-  override def read(): Option[DataFrame] = {
+  def read(): DataFrame = {
     val snap = snapshot()
-    Some(readFilesDv(liveWithDv(snap), snap.tableSchema))
+    readFilesDv(liveWithDv(snap), snap.tableSchema)
   }
 
   /** Point/multi-document reads prune to the files whose stats MAY
     * hold a probed url (bloom + min/max from log metadata — no data
-    * read beyond the surviving files, the manifest twin of the
-    * bucketed layout's `_keybloom` pruning). Probabilistic in the
+    * read beyond the surviving files). Probabilistic in the
     * cheap direction only: a false positive reads one extra file; the
     * residual semi-join keeps the result identical to a full
     * scan-and-filter.
     */
-  override def readDocuments(urls: Seq[String]): Option[DataFrame] = {
+  def readDocuments(urls: Seq[String]): DataFrame = {
     requireUrlKey("document point read")
     import spark.implicits._
     val probe = urls.distinct.toDF("document_url")
     val snap = snapshot()
     val files = affectedFiles(snap, probe)
-    Some(readLive(snap, files)
+    readLive(snap, files)
       .join(broadcast(probe), Seq("document_url"), "left_semi")
-      .select(snap.tableSchema.fieldNames.map(col).toIndexedSeq: _*))
+      .select(snap.tableSchema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** The surviving commit history, oldest first — one row per
@@ -3808,7 +3801,7 @@ class ManifestTableFormat(
           s"analyze: no column '$c' in ${schemaNow.fieldNames
             .mkString(", ")}")).name
     }
-    val df = read().getOrElse(emptyFrame(schemaNow))
+    val df = read()
     val sketches = df.agg(
       org.apache.spark.sql.functions.hll_sketch_agg(col(resolved.head), 12)
         .as(resolved.head),
@@ -5220,13 +5213,10 @@ object ManifestTableFormat {
     */
   val defaultTargetFileBytes: Long = 128L << 20
 
-  /** Constructor-ready factory:
-    * `new ChunkStore(spark, path, format = ManifestTableFormat.factory)`.
-    * Pair with `buckets = None` — the log supersedes hive
-    * partitioning (the store's bucket machinery never engages because
-    * every MERGE-shaped call and read routes through the format).
+  /** [[ChunkStore]]'s default `format`: the handle on the store's
+    * main log.
     */
-  def factory: ChunkStore => TableFormat = s =>
+  def factory: ChunkStore => ManifestTableFormat = s =>
     new ManifestTableFormat(s.spark, s.path, s.schema)
 
   /** [[factory]] pinned to a BRANCH: reads and commits go to the
@@ -5235,7 +5225,7 @@ object ManifestTableFormat {
     * [[ManifestTableFormat!.createBranch]] /
     * [[ManifestTableFormat!.fastForward]]).
     */
-  def branchFactory(branch: String): ChunkStore => TableFormat = s =>
+  def branchFactory(branch: String): ChunkStore => ManifestTableFormat = s =>
     new ManifestTableFormat(s.spark, s.path, s.schema,
       branch = Some(branch))
 

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The ONE staged-swap protocol behind every whole-directory rewrite
   * in this engine (layout recluster, index compaction, signature-store
-  * compaction, per-document chunk-store compaction): materialize the
+  * compaction): materialize the
   * replacement COMPLETELY at a staging path, then swap it into the
   * live path under a persistent intent marker.
   *

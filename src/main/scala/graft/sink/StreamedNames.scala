@@ -9,20 +9,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * parquet table the returned frame reads, so driver heap stays
   * O(batch) however long the iterator runs. This is the bridge from
   * the metadata APIs that only exist as driver iterators (Hadoop
-  * `RemoteIterator` listings, partition-directory names) into the
+  * `RemoteIterator` listings) into the
   * engine's anti-join paths — the alternative, `createDataset` of a
   * collected Seq, pins the whole listing in a driver `LocalRelation`.
   *
   * Disk lifetime is the CALLER's to bound — a long-running streaming
-  * job calls these per micro-batch, so leaving every spool behind for
-  * the JVM lifetime accumulates one listing copy per batch. Two
-  * disciplines, per call site:
-  *  - [[spool]] returns a handle; `close()` it in a `finally` once the
-  *    consuming job (anti-join, collect) has materialized.
-  *  - [[toFrame]] with `reuseDir` wipes and refills ONE caller-owned
-  *    dir per call, so repeated calls hold at most one copy on disk
-  *    (safe when the previous frame is fully consumed before the next
-  *    call — the per-batch cadence of the ingest loop).
+  * job calls this per micro-batch, so leaving every spool behind for
+  * the JVM lifetime would accumulate one listing copy per batch:
+  * [[spool]] returns a handle; `close()` it in a `finally` once the
+  * consuming job (anti-join, collect) has materialized.
   */
 private[graft] object StreamedNames {
 
@@ -30,18 +25,15 @@ private[graft] object StreamedNames {
     * The frame is unreadable after close — consume first.
     */
   final case class Spool(df: DataFrame, count: Long, dir: JPath) {
-    def close(): Unit = wipe(dir, removeRoot = true)
+    def close(): Unit =
+      if (Files.exists(dir)) {
+        val s = Files.walk(dir)
+        try {
+          s.sorted(java.util.Comparator.reverseOrder[JPath]())
+            .forEach(p => Files.deleteIfExists(p))
+        } finally s.close()
+      }
   }
-
-  private def wipe(dir: JPath, removeRoot: Boolean): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try {
-        s.sorted(java.util.Comparator.reverseOrder[JPath]())
-          .filter(p => removeRoot || p != dir)
-          .forEach(p => Files.deleteIfExists(p))
-      } finally s.close()
-    }
 
   /** Stream `names` into a disk-backed frame with column `colName`,
     * returning a [[Spool]] the caller must `close()` after consuming.
@@ -54,26 +46,6 @@ private[graft] object StreamedNames {
     val dir = Files.createTempDirectory("graft-streamed-names")
     val (df, n) = fill(spark, colName, names, batch, dir)
     Spool(df, n, dir)
-  }
-
-  /** Stream `names` into a disk-backed frame with column `colName`.
-    * Returns the frame and the total count (counted while streaming —
-    * no extra job for callers that gate on emptiness). With
-    * `reuseDir`, the dir is wiped and refilled — at most one copy on
-    * disk across repeated calls; without it the spool lives until JVM
-    * exit (prefer [[spool]] + close for one-shot use).
-    */
-  def toFrame(
-      spark: SparkSession,
-      colName: String,
-      names: Iterator[String],
-      batch: Int = 1 << 16,
-      reuseDir: Option[JPath] = None): (DataFrame, Long) = {
-    val dir = reuseDir match {
-      case Some(d) => wipe(d, removeRoot = false); Files.createDirectories(d)
-      case None => Files.createTempDirectory("graft-streamed-names")
-    }
-    fill(spark, colName, names, batch, dir)
   }
 
   private def fill(

@@ -232,8 +232,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // seam) — answer with the base chunk schema; reads of the missing
     // path still fail at scan time
     if (!exists(path))
-      new ChunkStore(spark, path, format = ManifestTableFormat.factory)
-        .schema
+      new ChunkStore(spark, path).schema
     else {
       val mtf = mtfFor(path, branchOf(options))
       asOf(options, mtf).fold(mtf.currentSchema)(mtf.schemaAtVersion)

@@ -116,8 +116,7 @@ private final class GraftChangeFeedStream(
   private def spark = SparkSession.active
 
   private def mtf = {
-    val store = new graft.sink.ChunkStore(spark, tablePath,
-      format = ManifestTableFormat.factory)
+    val store = new graft.sink.ChunkStore(spark, tablePath)
     new ManifestTableFormat(spark, tablePath, store.schema)
   }
 

@@ -26,8 +26,7 @@ object AutoOptimizeBench {
     val wh = java.nio.file.Files
       .createTempDirectory("graft-aob").toString
     val tbl = s"$wh/t"
-    val store = new ChunkStore(spark, tbl,
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, tbl)
     val docs = graft.Tables(spark, sfDir, "documents")
 
     val t0 = System.nanoTime()

@@ -38,8 +38,7 @@ object DvReadBench {
     val wh = java.nio.file.Files
       .createTempDirectory("graft-dvbench").toString
     val tbl = s"$wh/t"
-    val store = new ChunkStore(spark, tbl,
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, tbl)
     val docs = graft.Tables(spark, sfDir, "documents")
       .crossJoin(spark.range(rep).select(col("id").cast("int").as("r")))
     // several appends → a multi-file table (pruning/union shapes real)

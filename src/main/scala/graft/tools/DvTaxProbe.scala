@@ -26,8 +26,7 @@ object DvTaxProbe {
     val wh = java.nio.file.Files
       .createTempDirectory("graft-dvprobe").toString
     val tbl = s"$wh/t"
-    val store = new ChunkStore(spark, tbl,
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, tbl)
     val docs = graft.Tables(spark, sfDir, "documents")
       .crossJoin(spark.range(rep).select(col("id").cast("int").as("r")))
     (0 until 8).foreach { k =>

@@ -64,8 +64,7 @@ object ManifestRaceProbe {
             "document_url")
       mode match {
         case "api" =>
-          val store = new ChunkStore(spark, path,
-            format = ManifestTableFormat.factory)
+          val store = new ChunkStore(spark, path)
           for (b <- 1 to batches) store.upsert(batchDf(b))
         case "sql-insert" =>
           spark.conf.set("spark.sql.catalog.graftrace",

@@ -62,7 +62,7 @@ object Probe {
       import spark.implicits._
       val dir = java.nio.file.Files
         .createTempDirectory("graft-probe-cdf").toString + "/t"
-      new ChunkStore(spark, dir, format = ManifestTableFormat.factory)
+      new ChunkStore(spark, dir)
         .upsert(Seq((0, "probe", Seq(1f, 2f), 1, "doc://p"))
           .toDF("chunk_id", "chunk_text", "embedding", "page_number",
             "document_url"))
@@ -81,8 +81,7 @@ object Probe {
       import spark.implicits._
       val wh = java.nio.file.Files
         .createTempDirectory("graft-probe-skip").toString
-      val store = new ChunkStore(spark, s"$wh/t",
-        format = ManifestTableFormat.factory)
+      val store = new ChunkStore(spark, s"$wh/t")
       def batch(ids: Range, page: Int) =
         ids.map(i => (0, s"t-$i", Seq(1f), page, f"doc://$i%04d"))
           .toDF("chunk_id", "chunk_text", "embedding", "page_number",

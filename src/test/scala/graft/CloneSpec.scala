@@ -115,16 +115,15 @@ class CloneSpec extends SparkSpec {
 
   test("clone refusals: existing target, non-manifest source") {
     val (cat, wh) = freshCatalog()
-    val store = new ChunkStore(spark, s"$wh/t",
-      format = ManifestTableFormat.factory)
+    val store = new ChunkStore(spark, s"$wh/t")
     store.append(rows(0 until 5, "a"))
     spark.sql(s"CALL $cat.clone('t', 't2')")
     val dup = intercept[Exception](
       spark.sql(s"CALL $cat.clone('t', 't2')"))
     assert(dup.getMessage.contains("refuses to overwrite"),
       s"wrong refusal: ${dup.getMessage}")
-    // per-document layout (no _log) is not cloneable
-    new ChunkStore(spark, s"$wh/plain").upsert(rows(0 until 5, "p"))
+    // a plain parquet directory (no _log) is not cloneable
+    rows(0 until 5, "p").write.parquet(s"$wh/plain")
     val notManifest = intercept[Exception](
       spark.sql(s"CALL $cat.clone('plain', 'p2')"))
     assert(notManifest.getMessage.contains("manifest"),

@@ -211,7 +211,7 @@ class DeletionVectorSpec extends SparkSpec {
     // page_number < 25 covers EXACTLY the first decade's files: stats
     // prove the full match — the commit must be rm-only (no new data
     // files, no DV objects)
-    assert(mtf.deleteWhere(col("page_number") < 25))
+    mtf.deleteWhere(col("page_number") < 25)
     val after = mtf.liveFiles.toSet
     assert(after.subsetOf(before),
       s"metadata-only delete must write nothing: new files ${after -- before}")

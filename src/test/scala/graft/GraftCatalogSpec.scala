@@ -153,51 +153,6 @@ class GraftCatalogSpec extends SparkSpec
       .collect().map(_.getString(0)).toSeq == Seq("v2-7"))
   }
 
-  test("per-document layout: partition-pruned SQL reads and INSERT") {
-    val (cat, wh) = freshCatalog()
-    val store = new ChunkStore(spark, s"$wh/docs")
-    store.ensure()
-    store.upsert(chunkRows(1 to 10, "t-"))
-    assert(spark.sql(s"SELECT * FROM $cat.docs").count() == 10)
-    // document_url is the Hive partition column: an equality predicate
-    // must reach the scan as a partition filter
-    val pruned = spark.sql(s"SELECT chunk_text FROM $cat.docs " +
-      "WHERE document_url = 'doc://0004'")
-    assert(pruned.collect().map(_.getString(0)).toSeq == Seq("t-4"))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(document_url"),
-      plan.take(2000))
-    spark.sql(s"INSERT INTO $cat.docs VALUES " +
-      "(1, 'ins', array(3.0F), 2, 'doc://0004')")
-    assert(spark.sql(s"SELECT * FROM $cat.docs " +
-      "WHERE document_url = 'doc://0004'").count() == 2)
-  }
-
-  test("bucketed layout: doc_bucket visible; INSERT hash-routes and " +
-      "ignores a caller-supplied (possibly wrong) bucket") {
-    import org.apache.spark.sql.functions.xxhash64
-    val (cat, wh) = freshCatalog()
-    val store = new ChunkStore(spark, s"$wh/big", buckets = Some(4))
-    store.upsert(chunkRows(1 to 10, "t-"))
-    val df = spark.sql(s"SELECT * FROM $cat.big")
-    assert(df.columns.contains("doc_bucket"))
-    assert(df.count() == 10)
-    // INSERT with a DELIBERATELY wrong doc_bucket (99): the store
-    // derives the real bucket from the url — mis-bucketing impossible
-    spark.sql(s"INSERT INTO $cat.big VALUES " +
-      "(0, 'x', array(1.0F), 1, 'doc://x', 99)")
-    val expected = spark.range(1)
-      .select(org.apache.spark.sql.functions
-        .pmod(xxhash64(org.apache.spark.sql.functions.lit("doc://x")),
-          org.apache.spark.sql.functions.lit(4L)).cast("int"))
-      .collect().head.getInt(0)
-    val landed = spark.sql(s"SELECT doc_bucket FROM $cat.big " +
-      "WHERE document_url = 'doc://x'").collect().map(_.getInt(0)).toSeq
-    assert(landed == Seq(expected), s"landed $landed != $expected")
-    // the point lookup still prunes to the derived bucket's partition
-    assert(store.readDocuments(Seq("doc://x")).count() == 1)
-  }
-
   test("CALL merge_into / delete_documents: MERGE semantics through SQL") {
     val (cat, wh) = freshCatalog()
     val store = new ChunkStore(spark, s"$wh/chunks",
@@ -225,7 +180,7 @@ class GraftCatalogSpec extends SparkSpec
     store.upsert(chunkRows(1 to 500, "v1-"))
     // the delete key set is a 100k-row TABLE (mostly absent urls) —
     // the procedure must push it down as a frame (an url collect here
-    // would be O(source) driver memory; the TableFormat frame path
+    // would be O(source) driver memory; the store's frame path
     // anti-joins instead, pinned by ManifestFormatSpec's plan test)
     spark.range(1, 100001)
       .select(format_string("doc://%04d", col("id")).as("u"))
@@ -260,7 +215,7 @@ class GraftCatalogSpec extends SparkSpec
     }
     assert(e2.getMessage != null)
     assert(store.read().count() == 16)
-    // per-document layout: same surface
+    // a second table (ensure() bootstraps its empty log): same surface
     val store2 = new ChunkStore(spark, s"$wh/docs")
     store2.ensure()
     store2.upsert(chunkRows(1 to 5, "d-"))
@@ -345,12 +300,6 @@ class GraftCatalogSpec extends SparkSpec
       .count() == 10)
     spark.sql(s"CALL $cat.compact('chunks')")
     assert(store.read().count() == 10)
-    // maintenance procs refuse on a non-manifest table
-    new ChunkStore(spark, s"$wh/docs").ensure()
-    val e = intercept[Exception] {
-      spark.sql(s"CALL $cat.vacuum('docs')")
-    }
-    assert(e.getMessage.contains("manifest"))
   }
 
   test("CREATE TABLE with format=manifest bootstraps an empty log-committed table") {
@@ -475,7 +424,8 @@ class GraftCatalogSpec extends SparkSpec
     val e1 = intercept[UnsupportedOperationException] {
       spark.sql(s"CREATE TABLE $cat.p1 (chunk_id INT, " +
         "chunk_text STRING, embedding ARRAY<FLOAT>, page_number INT, " +
-        "document_url STRING) PARTITIONED BY (document_url)")
+        "document_url STRING) PARTITIONED BY (document_url) " +
+        "TBLPROPERTIES ('format'='parquet')")
     }
     assert(e1.getMessage.contains("manifest"))
     val e2 = intercept[UnsupportedOperationException] {
@@ -506,9 +456,57 @@ class GraftCatalogSpec extends SparkSpec
     spark.sql(s"INSERT INTO $cat.fresh VALUES " +
       "(0, 'x', array(1.0F), 1, 'doc://x')")
     assert(spark.sql(s"SELECT * FROM $cat.fresh").count() == 1)
+    // no TBLPROPERTIES makes a manifest table: the insert committed
+    assert(Files.exists(java.nio.file.Paths.get(wh, "fresh", "_log")))
+    assert(spark.sql(s"SELECT * FROM $cat.fresh VERSION AS OF 0")
+      .count() == 1)
     spark.sql(s"DROP TABLE $cat.fresh")
     assert(!spark.sql(s"SHOW TABLES IN $cat")
       .select("tableName").collect().map(_.getString(0)).contains("fresh"))
+    // 'format'='manifest' stays accepted; any other format, or a
+    // buckets property, refuses with one message and creates nothing
+    spark.sql(s"CREATE TABLE $cat.m (chunk_id INT, chunk_text STRING, " +
+      "embedding ARRAY<FLOAT>, page_number INT, document_url STRING) " +
+      "TBLPROPERTIES ('format'='manifest')")
+    assert(spark.sql(s"SELECT * FROM $cat.m").count() == 0)
+    Seq("('format'='parquet')", "('buckets'='4')",
+        "('format'='manifest', 'buckets'='4')").foreach { props =>
+      val e = intercept[UnsupportedOperationException] {
+        spark.sql(s"CREATE TABLE $cat.bad (chunk_id INT, " +
+          "chunk_text STRING, embedding ARRAY<FLOAT>, page_number INT, " +
+          s"document_url STRING) TBLPROPERTIES $props")
+      }
+      assert(e.getMessage.contains("graft tables are manifest tables"),
+        e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(wh, "bad")), props)
+    }
+  }
+
+  test("a directory the retired parquet engine wrote refuses loudly " +
+      "with its migration") {
+    val (cat, wh) = freshCatalog()
+    val dir = s"$wh/old"
+    chunkRows(1 to 3, "p-").write.parquet(dir)
+    Files.write(java.nio.file.Paths.get(dir, "_graft_layout"),
+      "buckets=4".getBytes("UTF-8"))
+    def refusal(e: Throwable): Unit = {
+      assert(e.getMessage.contains("layout 'buckets=4'"), e.getMessage)
+      assert(e.getMessage.contains(s"spark.read.parquet(\"$dir\")"),
+        e.getMessage)
+    }
+    val store = new ChunkStore(spark, dir)
+    refusal(intercept[IllegalStateException](store.read()))
+    refusal(intercept[IllegalStateException](
+      store.upsert(chunkRows(4 to 4, "n-"))))
+    // nothing was written beside the old files
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "_log")))
+    // the catalog resolves the same directory through the same check
+    refusal(intercept[IllegalStateException](
+      spark.sql(s"SELECT * FROM $cat.old").collect()))
+    // the documented migration works
+    val moved = new ChunkStore(spark, s"$wh/new")
+    moved.upsert(spark.read.parquet(dir))
+    assert(moved.read().count() == 3)
   }
 
   test("CALL sync_index advances a vector index to the table head") {
@@ -652,14 +650,6 @@ class GraftCatalogSpec extends SparkSpec
         s"document_url IN (SELECT document_url FROM $cat.chunks)")
     }
     assert(e.getMessage.contains("subquery"))
-    // a per-document layout table refuses with the reason
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
-    val e2 = intercept[UnsupportedOperationException] {
-      spark.sql(s"UPDATE $cat.plain SET chunk_text = 'x' " +
-        "WHERE document_url = 'doc://0001'")
-    }
-    assert(e2.getMessage.contains("UPDATE"), e2.getMessage)
   }
 
   test("ALTER TABLE ADD COLUMN evolves the schema; the rest refuses") {
@@ -691,12 +681,6 @@ class GraftCatalogSpec extends SparkSpec
       assert(spark.table(s"$cat.chunks").columns.toSeq ==
         Seq("chunk_id", "chunk_text", "embedding", "page_number",
           "document_url", "lang"), ddl)
-    }
-    // per-document layout: no evolution path
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
-    intercept[UnsupportedOperationException] {
-      spark.sql(s"ALTER TABLE $cat.plain ADD COLUMN lang STRING")
     }
   }
 
@@ -831,14 +815,6 @@ class GraftCatalogSpec extends SparkSpec
     spark.sql(s"INSERT INTO $cat.chunks VALUES " +
       "(0, 'c', array(1.0F), 3, 'doc://c')")
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 3)
-    // document-keyed layouts refuse (no TRUNCATE capability)
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
-    intercept[Exception] {
-      spark.sql(s"INSERT OVERWRITE $cat.plain VALUES " +
-        "(0, 'x', array(1.0F), 1, 'doc://x')")
-    }
-    assert(spark.sql(s"SELECT * FROM $cat.plain").count() == 3)
   }
 
   test("TRUNCATE TABLE and CALL restore: reversible wipes, history " +
@@ -884,12 +860,6 @@ class GraftCatalogSpec extends SparkSpec
     assert(e.getMessage != null)
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 10,
       "a failed restore must not have committed anything")
-
-    // non-manifest layouts keep refusing TRUNCATE
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
-    intercept[Exception] { spark.sql(s"TRUNCATE TABLE $cat.plain") }
-    assert(spark.sql(s"SELECT * FROM $cat.plain").count() == 3)
   }
 
   test("CALL add_constraint: CHECK enforced on every write path; " +
@@ -1015,12 +985,6 @@ class GraftCatalogSpec extends SparkSpec
       spark.sql(s"DELETE FROM $cat.chunks")
     }
     assert(e.getMessage.contains("explicit"), e.getMessage)
-    // per-document layout: non-url predicates still refuse
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
-    intercept[UnsupportedOperationException] {
-      spark.sql(s"DELETE FROM $cat.plain WHERE chunk_text = 'p-1'")
-    }
   }
 
   test("SQL MERGE INTO: the full WHEN-clause algebra in one commit") {
@@ -1074,15 +1038,6 @@ class GraftCatalogSpec extends SparkSpec
         "WHEN MATCHED THEN UPDATE SET t.chunk_text = s.chunk_text")
     }
     assert(e.getMessage.contains("more than one source"), e.getMessage)
-    // document-keyed layouts refuse with the CALL alternative
-    val pd = new ChunkStore(spark, s"$wh/plain2")
-    pd.upsert(chunkRows(1 to 2, "p-"))
-    val e2 = intercept[UnsupportedOperationException] {
-      spark.sql(s"MERGE INTO $cat.plain2 t USING dup_src s " +
-        "ON t.document_url = s.document_url " +
-        "WHEN MATCHED THEN UPDATE SET t.chunk_text = s.chunk_text")
-    }
-    assert(e2.getMessage.contains("merge_into"), e2.getMessage)
   }
 
   test("CALL history / vacuum_retain: the operational log surface") {

@@ -85,8 +85,7 @@ class GraftDataSourceSpec extends SparkSpec
 
   test("non-manifest paths refuse with the parquet pointer") {
     val dir = Files.createTempDirectory("graft-dsp").toString + "/plain"
-    val pd = new ChunkStore(spark, dir)
-    pd.upsert(chunkRows(0 until 3, "p-", 0).repartition(1))
+    chunkRows(0 until 3, "p-", 0).repartition(1).write.parquet(dir)
     val e = intercept[Exception] {
       spark.read.format("graft").load(dir).collect()
     }

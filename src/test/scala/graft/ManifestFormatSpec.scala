@@ -7,19 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sink.{ChunkStore, ManifestTableFormat}
 
-/** The manifest format must pass the full MERGE-shaped contract
-  * through the seam, unchanged.
-  */
-class ManifestTableFormatContractSpec extends TableFormatContract {
-  def layoutName = "manifest/log-committed"
-  def makeStore(dir: String) =
-    new ChunkStore(spark, dir, format = ManifestTableFormat.factory)
-}
-
-/** The properties the log-commit model adds OVER the parquet
-  * emulation: snapshot-isolated readers, optimistic concurrent
-  * writers (no writer-lock file), crash-leftover invisibility, and
-  * vacuum.
+/** The properties of the log-commit model: snapshot-isolated
+  * readers, optimistic concurrent writers (no writer-lock file),
+  * crash-leftover invisibility, and vacuum.
   */
 class ManifestFormatSpec extends SparkSpec {
 

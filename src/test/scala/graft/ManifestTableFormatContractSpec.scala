@@ -3,21 +3,19 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.sink.ChunkStore
 
-/** The [[graft.sink.TableFormat]] semantic contract, written against
-  * the seam (every call goes through `ChunkStore`'s public API, which
-  * routes through the pluggable format): ANY implementation — the
-  * default parquet MERGE emulation tested here in both layouts, or a
-  * Delta/Iceberg `MERGE INTO` drop-in — must pass these unchanged.
+/** The chunk store's document-keyed contract, written against its
+  * public API: idempotent whole-document upsert, whole-document
+  * delete in both forms, and compaction that keeps rows and
+  * writability.
   */
-abstract class TableFormatContract extends SparkSpec {
+class ManifestTableFormatContractSpec extends SparkSpec {
 
-  /** Build a store at `dir` with the format under test. */
-  def makeStore(dir: String): ChunkStore
-  def layoutName: String
+  private val layoutName = "manifest/log-committed"
+
+  private def makeStore(dir: String) = new ChunkStore(spark, dir)
 
   private def chunksOf(url: String, texts: String*): DataFrame = {
     import spark.implicits._
@@ -94,52 +92,5 @@ abstract class TableFormatContract extends SparkSpec {
     assert(state(store) == before)
     store.upsert(chunksOf("doc://5", "t5"))
     assert(state(store).size == 5)
-  }
-}
-
-class ParquetPerDocumentFormatSpec extends TableFormatContract {
-  def layoutName = "parquet/per-document"
-  def makeStore(dir: String) = new ChunkStore(spark, dir)
-}
-
-class ParquetBucketedFormatSpec extends TableFormatContract {
-  def layoutName = "parquet/bucketed"
-  def makeStore(dir: String) = new ChunkStore(spark, dir, buckets = Some(4))
-}
-
-/** The seam itself: a custom format wired through the constructor
-  * receives every MERGE-shaped call — proof a Delta/Iceberg
-  * implementation drops in without touching callers.
-  */
-class TableFormatSeamSpec extends SparkSpec {
-  test("a custom TableFormat receives upsert/delete/compact calls") {
-    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
-    val dir = Files.createTempDirectory("graft-tfc-seam").toString + "/t"
-    val store = new ChunkStore(spark, dir,
-      format = s => new graft.sink.TableFormat {
-        private val parquet = s.parquetMergeEmulation
-        def merge(rows: DataFrame): Unit = {
-          calls += "merge"; parquet.merge(rows)
-        }
-        def delete(urls: Seq[String]): Unit = {
-          calls += s"delete:${urls.size}"; parquet.delete(urls)
-        }
-        def compact(): Unit = { calls += "compact"; parquet.compact() }
-      })
-    import spark.implicits._
-    store.upsert(Seq((0, "x", Seq(1f), 1, "doc://a"))
-      .toDF("chunk_id", "chunk_text", "embedding", "page_number",
-        "document_url"))
-    store.delete(Seq("doc://a"))
-    store.compact()
-    assert(calls.toSeq == Seq("merge", "delete:1", "compact"))
-    assert(store.read().count() == 0)
-    // a format WITHOUT a native frame path still serves frame deletes:
-    // the trait's default bridges to the Seq form in bounded batches
-    store.upsert(Seq((0, "y", Seq(1f), 1, "doc://b"))
-      .toDF("chunk_id", "chunk_text", "embedding", "page_number",
-        "document_url"))
-    store.delete(Seq("doc://b").toDF("document_url"))
-    assert(calls.last == "delete:1" && store.read().count() == 0)
   }
 }

@@ -295,197 +295,27 @@ class PipelineSpec extends SparkSpec {
     assert(top.head.getDouble(1) == 0.0)
   }
 
-  test("bucketed store: upsert idempotent, LWW, delete, catalog (A17/A20)") {
-    val dir = Files.createTempDirectory("graft-store-b").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    val docs = Tables(spark, sf(), "documents").limit(20)
-    val chunks = IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16))
-
-    store.upsert(chunks)
-    val n1 = store.read().count()
-    assert(n1 > 0)
-    store.upsert(chunks) // idempotent re-ingest
-    assert(store.read().count() == n1)
-    assert(store.listDocumentUrls().sorted ==
-      (0 until 20).map(i => s"doc://$i").sorted)
-
-    // last-writer-wins on a single re-ingested document: its chunks
-    // are replaced, every other document in the same bucket survives
-    import org.apache.spark.sql.functions._
-    val edited = IngestPipeline.ingestDocumentsTable(
-      spark, docs.filter(col("doc_id") === 3)
-        .withColumn("text", lit("short replacement text")),
-      DeterministicEmbedder(16))
-    store.upsert(edited)
-    val d3 = store.read().filter(col("document_url") === "doc://3")
-      .select("chunk_text").collect().map(_.getString(0)).toSeq
-    assert(d3 == Seq("short replacement text"))
-    assert(store.read().select("document_url").distinct().count() == 20)
-
-    store.delete(Seq("doc://3", "doc://7"))
-    assert(store.read().select("document_url").distinct().count() == 18)
-    assert(store.read()
-      .filter(col("document_url").isin("doc://3", "doc://7")).count() == 0)
-  }
-
-  test("bucketed store: point lookup prunes to one bucket partition (B5)") {
-    val dir = Files.createTempDirectory("graft-store-b2").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(8))
-    val docs = Tables(spark, sf(), "documents").limit(20)
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16)))
-    val q = store.readDocument("doc://5")
-    assert(q.count() >= 1)
-    val scan = q.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!scan.contains("PartitionFilters: []"),
-      s"expected bucket partition filter in: $scan")
-  }
-
-  test("bucketed store: _keybloom manifest prunes reads to a file subset (B11c on the store)") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-store-kb").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    val docs = Tables(spark, sf(), "documents").limit(24)
-    val ingested = IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16))
-    // several append batches → several file sets per bucket, the
-    // append-heavy state the manifest exists to prune
-    store.upsert(ingested)
-    store.append(ingested.filter(col("document_url") === "doc://1"))
-    store.append(ingested.filter(col("document_url") === "doc://2"))
-    store.buildKeyManifest()
-    assert(store.hasKeyManifest)
-
-    val probe = Seq("doc://5", "doc://absent")
-    val pruned = store.readDocuments(probe)
-    val expected = store.read()
-      .filter(col("document_url").isin(probe: _*))
-    assert(pruned.orderBy("document_url", "chunk_id").collect().toSeq ==
-      expected.orderBy("document_url", "chunk_id").collect().toSeq)
-    // the payoff: strictly fewer files than the full store holds
-    assert(pruned.inputFiles.length < store.read().inputFiles.length,
-      s"pruned read touched ${pruned.inputFiles.length} of " +
-        s"${store.read().inputFiles.length} files")
-    // single-document path routes through the manifest too
-    assert(store.readDocument("doc://5").count() == expected
-      .filter(col("document_url") === "doc://5").count())
-  }
-
-  test("bucketed store: data files carry a parquet-native bloom on document_url") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-store-pqb").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(2))
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, Tables(spark, sf(), "documents").limit(10),
-      DeterministicEmbedder(16)))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = p.getFileSystem(conf)
-    val it = f.listFiles(p, true)
-    var checked = 0
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf))
-        try {
-          import scala.jdk.CollectionConverters._
-          val cols = reader.getRowGroups.get(0).getColumns
-          val urlCol = cols.asScala
-            .find(_.getPath.toDotString == "document_url").get
-          assert(urlCol.getBloomFilterOffset > 0,
-            s"no bloom filter in ${st.getPath.getName}")
-          checked += 1
-        } finally reader.close()
-      }
-    }
-    assert(checked > 0)
-    // and the pushed equality predicate still answers correctly
-    assert(store.readDocument("doc://3").count() >= 1)
-  }
-
-  test("bucketed store: a stale _keybloom manifest is sound (reads widen, never drop)") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-store-kb2").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    val docs = Tables(spark, sf(), "documents").limit(12)
-    val ingested = IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16))
-    store.upsert(ingested.filter(col("document_url") =!= "doc://3"))
-    store.buildKeyManifest()
-    // staling writes AFTER the manifest: a brand-new document, and a
-    // rewrite of existing buckets (upsert) that renames their files
-    store.upsert(ingested)
-    // the new document's files are unknown to the manifest → always
-    // read; nothing the store holds may be dropped
-    val got = store.readDocuments(Seq("doc://3", "doc://0"))
-      .select("document_url").distinct().collect().map(_.getString(0)).toSet
-    assert(got == Set("doc://3", "doc://0"))
-    // deletes after the manifest: no ghost rows (files are gone from
-    // the scan-time listing, manifest entries for them are ignored)
-    store.delete(Seq("doc://0"))
-    assert(store.readDocuments(Seq("doc://0")).count() == 0)
-  }
-
-  test("per-document store: readDocuments prunes partitions, no manifest needed") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-store-kb3").toString + "/chunks"
-    val store = new ChunkStore(spark, dir)
-    val docs = Tables(spark, sf(), "documents").limit(6)
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16)))
-    val q = store.readDocuments(Seq("doc://1", "doc://4"))
-    assert(q.select("document_url").distinct().count() == 2)
-    val scan = q.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!scan.contains("PartitionFilters: []"),
-      s"expected partition filters in: $scan")
-    intercept[IllegalArgumentException](store.buildKeyManifest())
-  }
-
   test("compact: fewer files, identical rows, store still writable") {
-    import org.apache.spark.sql.functions._
-    def parquetFiles(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = f.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
-    // bucketed: 3 append batches accumulate file sets per bucket
     val dir = Files.createTempDirectory("graft-store-c").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(2))
+    val store = new ChunkStore(spark, dir)
     val docs = Tables(spark, sf(), "documents").limit(12)
     val chunks = IngestPipeline.ingestDocumentsTable(
       spark, docs, DeterministicEmbedder(16))
+    // 3 append batches accumulate one file set each
     (0 until 3).foreach(_ => store.append(chunks))
     val before = store.read().orderBy("document_url", "chunk_id",
       "chunk_text").collect()
-    val filesBefore = parquetFiles(dir)
+    val filesBefore = store.read().inputFiles.length
     store.compact()
-    assert(parquetFiles(dir) < filesBefore,
-      s"expected fewer files than $filesBefore")
-    assert(parquetFiles(dir) <= 2) // ~one per bucket
+    val filesAfter = store.read().inputFiles.length
+    assert(filesAfter < filesBefore,
+      s"expected fewer files than $filesBefore, got $filesAfter")
     val after = store.read().orderBy("document_url", "chunk_id",
       "chunk_text").collect()
     assert(after.toSeq == before.toSeq)
-    store.upsert(chunks) // still writable; layout tag survived
-    assert(store.read().select("document_url").distinct().count() == 12)
-
-    // per-document layout: same contract through the swap protocol
-    val dir2 = Files.createTempDirectory("graft-store-c2").toString + "/chunks"
-    val store2 = new ChunkStore(spark, dir2)
-    (0 until 3).foreach(_ => store2.append(chunks))
-    val before2 = store2.read().count()
-    val filesBefore2 = parquetFiles(dir2)
-    store2.compact()
-    assert(parquetFiles(dir2) < filesBefore2)
-    assert(store2.read().count() == before2)
-    assert(store2.listDocumentUrls().size == 12) // catalog intact
+    store.upsert(chunks) // still writable
+    assert(store.read().count() == chunks.count())
+    assert(store.listDocumentUrls().size == 12)
   }
 
   test("Cosmos id parity: string ids render as invariant decimals") {
@@ -500,104 +330,6 @@ class PipelineSpec extends SparkSpec {
     val rows = withId.select("chunk_id", "id").collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getString(1) == r.getInt(0).toString))
-  }
-
-  test("reopening a store with a different bucket layout is rejected") {
-    val dir = Files.createTempDirectory("graft-store-l").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, Tables(spark, sf(), "documents").limit(3),
-      DeterministicEmbedder(16)))
-    val wrong = new ChunkStore(spark, dir, buckets = Some(8))
-    val e = intercept[IllegalArgumentException](wrong.read())
-    assert(e.getMessage.contains("buckets=4"))
-    val alsoWrong = new ChunkStore(spark, dir) // per-document reopen
-    intercept[IllegalArgumentException](alsoWrong.listDocumentUrls())
-    // the correct layout still opens
-    assert(new ChunkStore(spark, dir, buckets = Some(4)).read().count() > 0)
-  }
-
-  test("bucketed store: writer lock excludes a concurrent rewrite") {
-    val dir = Files.createTempDirectory("graft-store-lk").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    val chunks = IngestPipeline.ingestDocumentsTable(
-      spark, Tables(spark, sf(), "documents").limit(5),
-      DeterministicEmbedder(16))
-    store.upsert(chunks)
-    // simulate another writer mid-swap: its lock file is present
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_writer_lock"), false)
-      .close()
-    val e = intercept[IllegalStateException](store.upsert(chunks))
-    assert(e.getMessage.contains("locked by another writer"))
-    // a fresh lock refuses recovery (the writer may be live)...
-    intercept[IllegalArgumentException](store.recoverStaging())
-    // ...but a known-dead writer's lock clears with minLockAgeMs=0
-    store.recoverStaging(minLockAgeMs = 0L)
-    store.upsert(chunks)
-    assert(store.read().count() == chunks.count())
-  }
-
-  test("bucketed store: recoverStaging restores a bucket lost mid-swap") {
-    val dir = Files.createTempDirectory("graft-store-cr").toString + "/chunks"
-    val store = new ChunkStore(spark, dir, buckets = Some(4))
-    val chunks = IngestPipeline.ingestDocumentsTable(
-      spark, Tables(spark, sf(), "documents").limit(20),
-      DeterministicEmbedder(16))
-    store.upsert(chunks)
-    val before = store.read().orderBy("document_url", "chunk_id").collect()
-
-    // manufacture the worst-case interrupted swap: the writer renamed a
-    // live bucket aside into its staging dir and died before swapping
-    // the replacement in (live bucket GONE, content only in staging)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveBuckets = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("doc_bucket="))
-    assert(liveBuckets.nonEmpty)
-    val victim = liveBuckets.head.getPath
-    val staging = new org.apache.hadoop.fs.Path(dir + ".staging-test")
-    fs.mkdirs(staging)
-    assert(fs.rename(victim,
-      new org.apache.hadoop.fs.Path(staging, victim.getName + ".replaced")))
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_writer_lock"), false)
-      .close() // the dead writer's lock
-    assert(store.read().count() < before.length) // bucket really lost
-
-    val restored = store.recoverStaging(minLockAgeMs = 0L)
-    assert(restored ==
-      Seq(victim.getName.stripPrefix("doc_bucket=").toInt))
-    val after = store.read().orderBy("document_url", "chunk_id").collect()
-    assert(after.toSeq == before.toSeq) // bit-identical store content
-    assert(!fs.exists(staging))
-    // idempotent on a healthy store
-    assert(store.recoverStaging(minLockAgeMs = 0L).isEmpty)
-  }
-
-  test("per-document store catalog lists urls without a data scan") {
-    val dir = Files.createTempDirectory("graft-store-c").toString + "/chunks"
-    val store = new ChunkStore(spark, dir)
-    val docs = Tables(spark, sf(), "documents").limit(7)
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16)))
-    assert(store.listDocumentUrls().sorted ==
-      (0 until 7).map(i => s"doc://$i").sorted)
-  }
-
-  test("point lookup on the store prunes to one partition (B5)") {
-    val dir = Files.createTempDirectory("graft-store2").toString + "/chunks"
-    val store = new ChunkStore(spark, dir)
-    val docs = Tables(spark, sf(), "documents").limit(5)
-    store.upsert(IngestPipeline.ingestDocumentsTable(
-      spark, docs, DeterministicEmbedder(16)))
-    val q = store.read().filter(org.apache.spark.sql.functions
-      .col("document_url") === "doc://0")
-    assert(q.count() >= 1)
-    // partition pruning: the physical scan should read 1 of 5 partitions
-    val scan = q.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!scan.contains("PartitionFilters: []"),
-      s"expected partition filters in: $scan")
   }
 }
 

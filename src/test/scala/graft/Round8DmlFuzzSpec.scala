@@ -529,7 +529,7 @@ class Round8DmlFuzzSpec extends SparkSpec {
         rows.map(r => allCols.map(c =>
           r.get(c).flatMap(Option(_)).fold("NULL")(_.toString)))
           .sortBy(_.mkString("|"))
-      val got = mtf.read().get.collect().toIndexedSeq.map(r =>
+      val got = mtf.read().collect().toIndexedSeq.map(r =>
         allCols.map(c => c -> r.get(r.fieldIndex(c))).toMap)
       assert(canon(got) == canon(model.values.toSeq),
         s"seed $seed key-less final state diverged")

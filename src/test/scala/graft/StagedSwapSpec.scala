@@ -126,30 +126,4 @@ class StagedSwapSpec extends SparkSpec {
       StagedSwap.swap(fs, new Path(live), new Path(live + ".absent"))
     }
   }
-
-  test("an interrupted ChunkStore per-document compact recovers to one " +
-      "complete generation through the same protocol") {
-    import graft.sink.ChunkStore
-    val dir = Files.createTempDirectory("graft-swap-store").toString + "/c"
-    val store = new ChunkStore(spark, dir)
-    import spark.implicits._
-    val chunks = Seq(
-      (0, "alpha", Seq(1f, 2f), 1, "doc://a"),
-      (0, "beta", Seq(3f, 4f), 1, "doc://b"))
-      .toDF("chunk_id", "chunk_text", "embedding", "page_number",
-        "document_url")
-    store.upsert(chunks)
-    val before = store.read().collect().map(_.toSeq).toSet
-    // simulate a compact that crashed right after writing the marker:
-    // a fully-staged rewrite exists, nothing moved yet
-    val staged = dir + ".compacting"
-    store.read().repartition(col("document_url"))
-      .write.partitionBy("document_url").parquet(staged)
-    writeMarker(dir, staged, dir + ".replaced-x")
-    assert(StagedSwap.recover(fs, new Path(dir)) == "rolled-back")
-    assert(store.read().collect().map(_.toSeq).toSet == before)
-    // and a fresh compact on the healed store succeeds end-to-end
-    store.compact()
-    assert(store.read().collect().map(_.toSeq).toSet == before)
-  }
 }

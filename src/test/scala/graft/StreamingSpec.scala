@@ -51,6 +51,22 @@ class StreamingSpec extends SparkSpec {
     assert(urls.length == 1 && urls.head.endsWith("a.txt"))
   }
 
+  test("start on an empty input bootstraps the empty manifest log") {
+    val in = Files.createTempDirectory("graft-stream-empty-in")
+    val storeDir = Files.createTempDirectory("graft-stream-empty-store")
+      .toString + "/chunks"
+    val ckpt = Files.createTempDirectory("graft-stream-empty-ckpt")
+    val store = new ChunkStore(spark, storeDir)
+    StreamingIngest.start(spark, in.toString, store,
+      DeterministicEmbedder(16), StubAnalyzeExtractor(),
+      IngestPipeline.Config(), checkpointDir = ckpt.toString)
+      .awaitTermination(60000)
+    val root = java.nio.file.Paths.get(storeDir)
+    assert(Files.isDirectory(root.resolve("_log")))
+    assert(!Files.exists(root.resolve("_graft_layout")))
+    assert(store.read().count() == 0)
+  }
+
   test("poison document quarantines per micro-batch; the batch commits") {
     val in = Files.createTempDirectory("graft-quarantine-in")
     val storeDir = Files.createTempDirectory("graft-quarantine-store")
@@ -119,7 +135,7 @@ class StreamingSpec extends SparkSpec {
     assert(n1 > 0 &&
       store.read().select("document_url").distinct().count() == 2)
     // re-ingest of unchanged input: the log-committed merge is
-    // idempotent like the parquet emulation
+    // idempotent
     StreamingIngest.processBatch(spark, batch(), in.toString, store,
       DeterministicEmbedder(16), StubAnalyzeExtractor(),
       IngestPipeline.Config())

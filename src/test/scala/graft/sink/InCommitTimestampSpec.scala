@@ -186,6 +186,6 @@ class InCommitTimestampSpec extends SparkSpec {
     assert(mtf.versionAtTimestamp(4500L) == 0L)
     assert(mtf.versionAtTimestamp(7000L) == 1L)
     // reads still work on the stripped (pre-v8-shaped) log
-    assert(mtf.read().get.count() == 6)
+    assert(mtf.read().count() == 6)
   }
 }

@@ -59,8 +59,8 @@ class ManifestInternalsSpec extends SparkSpec {
     assert(mtf.preScanCandidates(snap,
       length(col("chunk_text")) > 2).size == 3)
     // and the full UPDATE through the pruned pre-scan stays correct
-    assert(mtf.update(Some(col("page_number") > 20),
-      Seq("chunk_text" -> lit("upd"))))
+    mtf.update(Some(col("page_number") > 20),
+      Seq("chunk_text" -> lit("upd")))
     assert(store.read().filter(col("chunk_text") === "upd").count() == 10)
     assert(store.read().count() == 30)
   }
@@ -101,11 +101,11 @@ class ManifestInternalsSpec extends SparkSpec {
     // a fresh reader on the v1 log: full read, point read, and the
     // point read prunes to ONE file via the synthesized stats
     val reader = new ManifestTableFormat(spark, path, store.schema)
-    assert(reader.read().get.count() == 100)
+    assert(reader.read().count() == 100)
     val snap = reader.snapshot()
     assert(snap.base.values.forall(_.bits.exists(_ != 0L)),
       "v1 parse must synthesize non-empty bloom stats")
-    val one = reader.readDocuments(Seq("doc://00007")).get
+    val one = reader.readDocuments(Seq("doc://00007"))
     assert(one.count() == 1)
     assert(one.inputFiles.length == 1,
       s"v1 stats must prune to one file, read ${one.inputFiles.length}")
@@ -279,14 +279,14 @@ class ManifestInternalsSpec extends SparkSpec {
     writeLogFile(new Path(path, f"_log/${snap.version}%012d.checkpoint.json"),
       lines)
     val reader = new ManifestTableFormat(spark, path, store.schema)
-    assert(reader.read().get.count() == 30)
+    assert(reader.read().count() == 30)
     // further commits + a new checkpoint → parquet takes over
     store.upsert(chunkRows(31 to 35, "c-"))
     reader.checkpoint()
     val s2 = new ManifestTableFormat(spark, path, store.schema).snapshot()
     assert(s2.ckptParquet.nonEmpty && s2.base.isEmpty)
-    assert(reader.read().get.count() == 35)
+    assert(reader.read().count() == 35)
     reader.vacuum()
-    assert(reader.read().get.count() == 35)
+    assert(reader.read().count() == 35)
   }
 }
