@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.functions.GraftFunctions
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Session factory: one place for the scale-aware defaults.
   *
@@ -48,36 +48,21 @@ object GraftSession {
   def getOrCreate(master: String = "local[32]"): SparkSession =
     install(builder(master).getOrCreate())
 
-  /** Register graft functions and optimizer rules on an externally
-    * created session (idempotent).
+  /** Register graft functions, optimizer rules and the DML strategy
+    * ([[GraftExtensions]]'s lists) on an externally created session
+    * (idempotent). Rules land in the `extraOptimizations` seat, which
+    * runs after scan pushdown; sessions built via [[builder]] also get
+    * the early extension seat, where the same rules have already fired.
     */
   def install(spark: SparkSession): SparkSession = {
-    GraftFunctions.register(spark)
-    graft.functions.VectorAggregates.register(spark)
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(graft.plans.PrenormalizeCosine))
-      spark.experimental.extraOptimizations =
-        extra :+ graft.plans.PrenormalizeCosine
-    // DV columnar read on externally-created sessions: this seat runs
-    // after scan pushdown, so the rule matches the already-built scan
-    // relation (still vectorized + codegen'd; sessions built via
-    // GraftSession.builder get the early extension seat instead, and
-    // the substitution there is a no-op here by idempotence)
-    val extraMc = spark.experimental.extraOptimizations
-    if (!extraMc.contains(graft.plans.MetadataFilteredCount))
-      spark.experimental.extraOptimizations =
-        extraMc :+ graft.plans.MetadataFilteredCount
-    val extra2 = spark.experimental.extraOptimizations
-    if (!extra2.contains(graft.plans.DvColumnarRead))
-      spark.experimental.extraOptimizations =
-        extra2 :+ graft.plans.DvColumnarRead
-    // SQL UPDATE on graft catalog tables: extra strategies run before
-    // the built-ins, claiming UpdateTable before BasicOperators
-    // rejects it (see graft.plans.GraftDmlStrategy)
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(graft.plans.GraftDmlStrategy))
-      spark.experimental.extraStrategies =
-        strategies :+ graft.plans.GraftDmlStrategy
+    GraftExtensions.functions.foreach { case (name, b) =>
+      Bridge.registerFunction(spark, name, b)
+    }
+    val exp = spark.experimental
+    exp.extraOptimizations ++=
+      GraftExtensions.optimizerRules.filterNot(exp.extraOptimizations.contains)
+    exp.extraStrategies ++=
+      GraftExtensions.strategies.filterNot(exp.extraStrategies.contains)
     spark
   }
 }

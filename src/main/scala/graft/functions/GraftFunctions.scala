@@ -139,9 +139,8 @@ object GraftFunctions {
       b(es)
     })
 
-  /** Every graft SQL function: name → expression builder. Single
-    * source of truth for session-level registration ([[register]])
-    * and the [[graft.GraftExtensions]] injection path.
+  /** Every graft scalar SQL function: name → expression builder
+    * (registered through [[graft.GraftExtensions.functions]]).
     */
   val builders: Seq[(String,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
@@ -168,10 +167,4 @@ object GraftFunctions {
       es => Q8CosineDistance(es(0), es(1), es(2), es(3))),
     fn("bpe_encode", 2)(es => BpeEncode(es(0), es(1))),
     fn("bow_embed", 2)(es => BowEmbed(es(0), es(1))))
-
-  /** Register all graft SQL functions on the given session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      Bridge.registerFunction(spark, name, b)
-    }
 }

@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Typed UDAF surface (SURVEY §2.5): `vector_avg` — the per-group
   * embedding centroid. An `Aggregator` with a fixed-size mutable
@@ -102,9 +104,8 @@ object VectorAggregates {
   /** Column form: `minhash_agg(minhash_signature(text, k, n))`. */
   def minhash_agg(c: Column): Column = minhashAggUdaf(c)
 
-  /** SQL registration (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("vector_avg", vectorAvgUdaf)
-    spark.udf.register("minhash_agg", minhashAggUdaf)
-  }
+  /** SQL builders, registered through [[graft.GraftExtensions.functions]]. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "vector_avg" -> Bridge.aggregatorBuilder(vectorAvgUdaf.withName("vector_avg")),
+    "minhash_agg" -> Bridge.aggregatorBuilder(minhashAggUdaf.withName("minhash_agg")))
 }

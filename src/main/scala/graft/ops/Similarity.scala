@@ -22,41 +22,24 @@ import graft.functions.GraftFunctions.{cosine_distance, dot_product}
 object Similarity {
 
   /** Bounded top-k per probe over `(probe_id, nn_id, dist)` rows —
-    * EXACTLY the window form `row_number().over(partitionBy(probe_id)
-    * .orderBy(dist, nn_id)) <= k`, computed as the map-side-combining
-    * `topk_agg` (D16) instead: each partition reduces a probe to ≤ k
-    * pairs BEFORE the exchange, so the shuffle carries
-    * k × probes × partitions pairs and no per-probe sort of the full
-    * candidate set ever runs (guide §2.3 "aggregate before you
-    * shuffle").
-    *
-    * Tie-order equivalence: `topk_agg` keeps the k best under
-    * (score DESC, id ASC); with score = -dist that is (dist ASC,
-    * nn_id ASC) — the window's exact order. Double negation is a
-    * sign-bit flip, so the re-emitted `-score` is bit-identical to the
-    * input dist. OperatorPropertySpec pins the aggregate ≡ window
-    * equivalence; the d3/b2/b10 gates hash-pin the call sites.
+    * the k first under `ORDER BY dist ASC NULLS LAST, nn_id ASC`, for
+    * long and string ids alike, computed as the map-side-combining
+    * `topk_agg` (D16): each partition reduces a probe to ≤ k pairs
+    * BEFORE the exchange, so the shuffle carries k × probes ×
+    * partitions pairs and no per-probe sort of the full candidate set
+    * ever runs (guide §2.3 "aggregate before you shuffle"). The
+    * emitted dist is the input value, bit for bit. TopKOrderSpec pins
+    * the aggregate ≡ window equivalence; the d3/b2/b10 gates hash-pin
+    * the call sites.
     */
   private def topKPerProbe(scored: DataFrame, k: Int): DataFrame = {
     import graft.functions.TopKAggregate.topk_agg
-    // topk_agg's id slot is a LONG (fixed-size buffer); non-long ids
-    // (e.g. IndexSync's content-addressed string vids) keep the
-    // window form — decided by SCHEMA at plan-build time, and both
-    // forms produce the identical row set (the spec pins it)
-    if (scored.schema("nn_id").dataType !=
-        org.apache.spark.sql.types.LongType)
-      scored
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("dist"), col("nn_id"))))
-        .filter(col("rn") <= k)
-        .drop("rn")
-    else
-      scored
-        .groupBy(col("probe_id"))
-        .agg(topk_agg(k)(-col("dist"), col("nn_id")).as("tk"))
-        .select(col("probe_id"), explode(col("tk")).as("s"))
-        .select(col("probe_id"), col("s.id").as("nn_id"),
-          (-col("s.score")).as("dist"))
+    scored
+      .groupBy(col("probe_id"))
+      .agg(topk_agg(k)(col("dist"), col("nn_id")).as("tk"))
+      .select(col("probe_id"), explode(col("tk")).as("s"))
+      .select(col("probe_id"), col("s.id").as("nn_id"),
+        col("s.key").as("dist"))
   }
 
   /** D3/B2: exact k-NN join — for every probe row, the k nearest base
@@ -259,16 +242,7 @@ object Similarity {
     val cents = ivfCentroids(base, idCol, vecCol, nlist, seed)
     val b = base.select(col(idCol).as("nn_id"), col(vecCol).as("bv"),
       nearestCentroid(col(vecCol), cents).as("cell"))
-    // nprobe nearest cells per probe: rank the centroid distances
-    val probeCells = probes
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pv"),
-        posexplode(array(cents.map(c =>
-          cosine_distance(col(vecCol), typedlit(c))): _*))
-          .as(Seq("cell", "cd")))
-      .withColumn("cr", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("cr") <= nprobe)
-      .select(col("probe_id"), col("pv"), col("cell"))
+    val probeCells = ivfProbeCells(probes, idCol, vecCol, nprobe, cents)
     topKPerProbe(
       b.join(broadcast(probeCells), "cell")
         .select(col("probe_id"), col("nn_id"),
@@ -353,16 +327,9 @@ object Similarity {
     else assigned.select(col("nn_id"), col("cell"), codes)
   }
 
-  /** The IVF-PQ search stage over an already-indexed base — shared
-    * between the transient [[ivfPqAnnJoin]] and the prebuilt-index
-    * path ([[VectorIndex.queryIvfPq]]) so both produce identical
-    * results. `indexed` carries `(nn_id, cell, pq)`; `floats` carries
-    * `(nn_id, bvx)` and is scanned only by the candidate-bounded
-    * rerank join.
-    */
   /** The nprobe nearest cells per probe, carrying the probe's
-    * residual — shared by the transient and prebuilt-index IVF-PQ
-    * paths (identical expressions ⇒ identical results).
+    * residual — shared by the transient and prebuilt-index IVF and
+    * IVF-PQ paths (identical expressions ⇒ identical results).
     */
   private[graft] def ivfProbeCells(
       probes: DataFrame,
@@ -381,6 +348,13 @@ object Similarity {
       .select(col("probe_id"), col("pv"), col("cell"),
         ivfResidual(cents)(col("pv"), col("cell")).as("pres"))
 
+  /** The IVF-PQ search stage over an already-indexed base — shared
+    * between the transient [[ivfPqAnnJoin]] and the prebuilt-index
+    * path ([[VectorIndex.queryIvfPq]]) so both produce identical
+    * results. `indexed` carries `(nn_id, cell, pq)`; `floats` carries
+    * `(nn_id, bvx)` and is scanned only by the candidate-bounded
+    * rerank join.
+    */
   private[graft] def ivfPqSearch(
       indexed: DataFrame,
       floats: DataFrame,
@@ -485,14 +459,11 @@ object Similarity {
         round(cosine_distance(col("bv"), col("pv")), 6).as("dist"))
       .filter(col("dist") >= minDist)
       .groupBy("anchor_id")
-      // score = -dist: topk_agg's (score DESC, id ASC) order is then
-      // exactly the window form's (dist ASC, neg_id ASC)
-      .agg(topk_agg(k)(-col("dist"), col("neg_id")).as("tk"))
+      .agg(topk_agg(k)(col("dist"), col("neg_id")).as("tk"))
       .select(col("anchor_id"), posexplode(col("tk")))
       .select(col("anchor_id"),
         (col("pos") + 1).cast("long").as("rnk"),
-        col("col.id").as("neg_id"),
-        (-col("col.score")).as("dist"))
+        col("col.id").as("neg_id"), col("col.key").as("dist"))
   }
 
   /** D6: embedding-cosine near-duplicate pairs within a distance

@@ -395,12 +395,13 @@ object CorpusQueries {
         .orderBy("doc_id")
     },
 
-    // D16: bounded top-k per group via the `topk_agg` Aggregator —
+    // D16: bounded top-k per group via the `topk_agg` aggregate —
     // semantics identical to the window row_number() form (the oracle),
     // but the physical shape is a map-side-combined aggregate: each
     // partition reduces a group to ≤ k pairs before the exchange, so
     // no full per-group sort ever runs (the window form shuffles and
-    // sorts every row).
+    // sorts every row). topk_agg keeps the SMALLEST keys, so DESC is
+    // the negated key (nulls stay last, as DESC places them).
     "d16_topk_per_group" -> QueryDef(
       """SELECT source, rnk, doc_id, n_chars FROM (
         |  SELECT source, doc_id, n_chars,
@@ -410,12 +411,12 @@ object CorpusQueries {
         |WHERE rnk <= 3 ORDER BY source, rnk""".stripMargin) { (s, dir) =>
       Tables(s, dir, "documents")
         .groupBy("source")
-        .agg(topk_agg(3)(col("n_chars").cast("double"), col("doc_id")).as("tk"))
+        .agg(topk_agg(3)(-col("n_chars"), col("doc_id")).as("tk"))
         .select(col("source"), posexplode(col("tk")))
         .select(col("source"),
           (col("pos") + 1).cast("long").as("rnk"),
           col("col.id").as("doc_id"),
-          col("col.score").cast("long").as("n_chars"))
+          (-col("col.key")).cast("long").as("n_chars"))
         .orderBy("source", "rnk")
     },
 

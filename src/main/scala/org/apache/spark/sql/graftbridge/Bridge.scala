@@ -21,7 +21,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * a live session, so a silently-changed internal fails the suite,
   * not a user query.
   *
-  * PUBLIC-EQUIVALENT AUDIT (round 12, per-method): none of the five
+  * PUBLIC-EQUIVALENT AUDIT (round 12, per-method): none of the
   * entry points has a public replacement in Spark 4.1 —
   * `column`/`expression` (ColumnNode ↔ Catalyst) have no public
   * bridge by design of the Connect split; `ofRows` (LogicalPlan →
@@ -32,7 +32,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `registerFunction` needs the session `FunctionRegistry` because
   * `spark.udf.register` takes typed closures, not Expression
   * builders, and `SparkSessionExtensions.injectFunction` only works
-  * at session BUILD time, not on an externally-created session. The
+  * at session BUILD time, not on an externally-created session;
+  * `aggregatorBuilder` exists because both registries take builders
+  * and a typed UDAF has no public one. The
   * canary keeps each pinned with a user-shaped call; re-audit on any
   * Spark upgrade.
   */
@@ -103,6 +105,23 @@ object Bridge {
     val qe = df.queryExecution
     classic.internalCreateDataFrame(
       qe.toRdd.map(_.copy()), df.schema, isStreaming = false)
+  }
+
+  /** The SQL expression builder of a typed UDAF (`functions.udaf(...)`),
+    * for registries that take builders — the function registry and
+    * `SparkSessionExtensions.injectFunction` — where `spark.udf.register`
+    * needs a live session.
+    * Internal API: `UserDefinedAggregator` (private[sql]) and
+    * `ScalaAggregator.apply`, the pair `spark.udf.register` uses.
+    * Break mode: either going away → compile error; a semantics change
+    * → the extension-only session test (StreamingSpec) fails running
+    * `vector_avg` in SQL.
+    */
+  def aggregatorBuilder(udaf: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = {
+    val u = udaf.asInstanceOf[
+      org.apache.spark.sql.expressions.UserDefinedAggregator[Any, Any, Any]]
+    es => org.apache.spark.sql.execution.aggregate.ScalaAggregator(u, es)
   }
 
   /** Register a builder for `name` on an existing session (post-hoc; no

@@ -815,6 +815,19 @@ class GraftCatalogSpec extends SparkSpec
     spark.sql(s"INSERT INTO $cat.chunks VALUES " +
       "(0, 'c', array(1.0F), 3, 'doc://c')")
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 3)
+
+    // a layout-managed z-order table is read-only: INSERT OVERWRITE
+    // refuses loudly and leaves its rows alone
+    val zt = spark.range(0, 40).select(col("id"),
+      (col("id") % 4).as("x"), (col("id") / 4).as("y"))
+    graft.ops.Layout.zorderWriteAuto(zt, Seq("x", "y"), s"$wh/zt",
+      numFiles = 2)
+    graft.ops.Layout.writeManifest(spark, s"$wh/zt", Seq("x", "y"))
+    val e = intercept[Exception] {
+      spark.sql(s"INSERT OVERWRITE $cat.zt VALUES (0, 0, 0)")
+    }
+    assert(e.getMessage.contains("zt"), e.getMessage)
+    assert(spark.sql(s"SELECT * FROM $cat.zt").count() == 40)
   }
 
   test("TRUNCATE TABLE and CALL restore: reversible wipes, history " +

@@ -424,6 +424,24 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
+  test("IVF-PQ over string ids: both top-k stages are partial topk_agg") {
+    // ids like the ingest path's "url#chunk": the coarse and the rerank
+    // top-k both combine map-side (the one window left ranks each
+    // probe's nlist centroid distances, on the probe side)
+    import org.apache.spark.sql.functions._
+    val emb = Tables(spark, sf(), "embeddings")
+      .select(concat(lit("doc#"), col("vec_id")).as("id"), col("embedding"))
+    val path = java.nio.file.Files.createTempDirectory("ivfpq-str").toString
+    graft.ops.VectorIndex.buildIvfPq(emb, path, "id", "embedding", nlist = 4)
+    val p = planString(graft.ops.VectorIndex.queryIvfPq(spark, path,
+      emb.limit(3), k = 5, nprobe = 2, rerankPerProbe = 20))
+      .split("== Initial Plan ==").head
+    assert("partial_topk_agg".r.findAllIn(p).length == 2, p.take(4000))
+    val windowOrders = "windowspecdefinition\\(probe_id#\\d+L?, (\\w+)#".r
+      .findAllMatchIn(p).map(_.group(1)).toSet
+    assert(windowOrders == Set("cd"), p.take(4000))
+  }
+
   test("b9: late interaction is two map-side aggregates + top-k, no window") {
     val p = planString(q("b9_late_interaction"))
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))

@@ -625,6 +625,27 @@ class StreamingSpec extends SparkSpec {
     assert(n > 0.9 && n < 1.1)
   }
 
+  test("spark.sql.extensions alone registers the whole function surface") {
+    // no GraftSession.install: the typed aggregates must come from the
+    // extension's registration list like every other function
+    val s2 = org.apache.spark.sql.graftbridge.TestSessions
+      .withExtensionsConf(spark, "graft.GraftExtensions")
+    try {
+      s2.createDataFrame(Seq((1, Seq(1f, 3f)), (1, Seq(3f, 5f))))
+        .toDF("g", "v").createOrReplaceTempView("ext_only_in")
+      val r = s2.sql("SELECT vector_avg(v) AS c, " +
+        "minhash_agg(array(CAST(g AS BIGINT))) AS m, " +
+        "round(vector_norm(first(v)), 3) AS n FROM ext_only_in GROUP BY g")
+        .head()
+      assert(r.getSeq[Double](0) == Seq(2.0, 4.0))
+      assert(r.getSeq[Long](1) == Seq(1L))
+      assert(r.getDouble(2) == 3.162)
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("streaming tumbling window aggregation with watermark (C33)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

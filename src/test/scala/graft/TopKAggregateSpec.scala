@@ -8,12 +8,13 @@ import graft.functions.TopKAggregate.topk_agg
 
 class TopKAggregateSpec extends SparkSpec {
 
+  // topk_agg keeps the smallest keys: score DESC is the negated score
   private def viaAgg(df: DataFrame, k: Int): DataFrame =
     df.groupBy("g")
-      .agg(topk_agg(k)(col("s").cast("double"), col("id")).as("tk"))
+      .agg(topk_agg(k)(-col("s").cast("double"), col("id")).as("tk"))
       .select(col("g"), posexplode(col("tk")))
       .select(col("g"), (col("pos") + 1).as("rnk"),
-        col("col.id").as("id"), col("col.score").as("s"))
+        col("col.id").as("id"), (-col("col.key")).as("s"))
 
   private def viaWindow(df: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("g").orderBy(desc("s"), asc("id"))

@@ -14,4 +14,19 @@ object TestSessions {
   /** A vanilla (extension-free) session sharing `spark`'s context. */
   def vanilla(spark: SparkSession): SparkSession =
     new org.apache.spark.sql.classic.SparkSession(spark.sparkContext)
+
+  /** A session over `spark`'s context whose only wiring is the
+    * `spark.sql.extensions` class list: Spark's own loader reads it
+    * from the context's conf, set here for the one construction.
+    */
+  def withExtensionsConf(spark: SparkSession, classes: String)
+      : SparkSession = {
+    val conf = spark.sparkContext.conf
+    val key = "spark.sql.extensions"
+    val prev = conf.getOption(key)
+    conf.set(key, classes)
+    try new org.apache.spark.sql.classic.SparkSession(spark.sparkContext,
+      new java.util.HashMap[String, String]())
+    finally prev.fold(conf.remove(key))(conf.set(key, _))
+  }
 }

@@ -41,17 +41,18 @@ for name, sql in sorted(oracle.items()):
         e = [tuple(r[i] for i in ei) for r in exp]
         g = [tuple(r[i] for i in gi) for r in got]
         # repr-compare: the driver hashes stringified values, so -0.0
-        # vs 0.0 (or 1.0 vs 1) must FAIL here too, although == hides it
-        if [tuple(map(repr, r)) for r in e] == [tuple(map(repr, r)) for r in g]:
+        # vs 0.0 (or 1.0 vs 1) must FAIL here too, although == hides it;
+        # the row printer uses the same comparison
+        er = [tuple(map(repr, r)) for r in e]
+        gr = [tuple(map(repr, r)) for r in g]
+        if er == gr:
             print(f"ok   {name} ({len(e)} rows)")
             ok += 1
         else:
             print(f"FAIL {name}: {len(g)} rows vs {len(e)} expected")
-            for i, (a, b) in enumerate(zip(e, g)):
-                if a != b:
-                    print(f"  row {i}: oracle={a} got={b}")
-                    if i > 3:
-                        break
+            diffs = [i for i, (a, b) in enumerate(zip(er, gr)) if a != b]
+            for i in diffs[:5]:
+                print(f"  row {i}: oracle={e[i]} got={g[i]}")
             fail += 1
     except Exception as ex:
         print(f"ERR  {name}: {ex}")
