@@ -50,7 +50,8 @@ object GraftSession {
 
   /** Register graft functions, optimizer rules and the DML strategy
     * ([[GraftExtensions]]'s lists) on an externally created session
-    * (idempotent). Rules land in the `extraOptimizations` seat, which
+    * (idempotent: names already bound to our builders, rules and
+    * strategies already present are skipped). Rules land in the `extraOptimizations` seat, which
     * runs after scan pushdown; sessions built via [[builder]] also get
     * the early extension seat, where the same rules have already fired.
     */

@@ -126,130 +126,61 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // read-only here: branch WRITES go through the Scala branch
     // handle (ManifestTableFormat.branchFactory), publish via
     // CALL fast_forward.
-    if (version.matches("\\d+")) resolve(ident, asOf = Some(version.toLong))
+    if (version.matches("\\d+"))
+      resolve(ident, asOf = Some(_ => version.toLong))
     else resolve(ident, asOf = None, branchName = Some(version))
 
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     // Spark hands TIMESTAMP AS OF as MICROS since epoch; commit times
     // are the log entries' mtimes (millis) — the Delta convention
-    val dir = tableDir(ident)
-    if (!fs.exists(new Path(dir, "_log")))
+    if (!fs.exists(new Path(tableDir(ident), "_log")))
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: TIMESTAMP AS OF needs the " +
           "manifest table format (layout-managed tables keep no history)")
-    val mtf = new ManifestTableFormat(spark, dir,
-      new ChunkStore(spark, dir).schema)
-    resolve(ident, asOf = Some(mtf.versionAtTimestamp(timestamp / 1000L)))
+    resolve(ident, asOf = Some(_.versionAtTimestamp(timestamp / 1000L)))
   }
 
-  private def resolve(ident: Identifier, asOf: Option[Long],
+  /** `asOf` picks the time-travel version off the table's handle. */
+  private def resolve(ident: Identifier,
+      asOf: Option[ManifestTableFormat => Long],
       branchName: Option[String] = None): Table = {
     val dir = tableDir(ident)
     if (!fs.exists(new Path(dir))) throw new NoSuchTableException(ident)
     val fullName = s"$catalogName.${ident.name()}"
     if (fs.exists(new Path(dir, "_log"))) {
-      val store = new ChunkStore(spark, dir)
       branchName.foreach { b =>
         if (!fs.exists(new Path(dir, s"_log/branches/$b")))
           throw new NoSuchTableException(ident)
       }
-      val mtf = new ManifestTableFormat(spark, dir, store.schema,
+      val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema,
         branch = branchName)
       // a branch head read is frozen THROUGH THIS SURFACE (the audit
       // view); branch writes go through the Scala branch handle
       val frozen = asOf.isDefined || branchName.isDefined
-      val filesDv = asOf.fold(mtf.liveFilesWithDv)(mtf.filesWithDvAtVersion)
-      val files = filesDv.map(_._1)
-      val hasDv = filesDv.exists(_._2.isDefined)
-      // effective schema AT the resolved version: ADD COLUMNs apply
-      // from their commit on; a pre-ALTER time travel shows the old
-      // shape (the Delta/Iceberg schema-tracking convention)
-      val tblSchema = asOf.fold(mtf.currentSchema)(mtf.schemaAtVersion)
-      new GraftTable(fullName, spark, tblSchema, files,
+      // files, deletion vectors and the effective schema AT the
+      // resolved version (a pre-ALTER time travel shows the old shape)
+      val pinned = mtf.pinScan(asOf.map(_(mtf)))
+      new GraftTable(fullName, spark, pinned.schema, pinned.files,
         // time-travel reads are frozen history: never writable
-        insert = if (frozen) None else Some(store.append),
+        insert = if (frozen) None else Some(mtf.append),
         // url-keyed whole-document DELETE only when the table has the
         // key column; key-less tables route DELETE to the row-level
         // predicate path instead
         deleteDocs =
           if (frozen || !mtf.hasUrlKey) None
-          else Some(store.delete(_: Seq[String])),
+          else Some(mtf.delete(_: Seq[String])),
         updateRows =
-          if (frozen) None else Some(store.update),
+          if (frozen) None else Some(mtf.update),
         deleteRows =
-          if (frozen) None else Some(store.deleteWhere),
+          if (frozen) None else Some(mtf.deleteWhere),
         mergeHook =
-          if (frozen) None else Some(store.mergeInto),
-        // file skipping off the log's own per-file stats — sound for
-        // time-travel reads too (a pre-stats or vacuumed-away file
-        // simply fails open and is read). A DELETION-VECTOR snapshot
-        // routes through dvInfo instead: graft.plans.DvColumnarRead
-        // substitutes the vectorized parquet + position-anti-join
-        // plan (with its own stats skipping); rule-less sessions
-        // keep the exact V1 fallback
-        statsPruner =
-          if (hasDv) None else Some(mtf.pruneFilesForScan(files, _)),
+          if (frozen) None else Some(mtf.mergeInto(_, _, _, _, _, _)),
         overwriteHook =
           if (frozen) None else Some(mtf.overwrite),
         truncateHook =
           if (frozen) None else Some(() => mtf.truncate()),
-        dvInfo =
-          if (hasDv) {
-            val pinnedDv = filesDv.collect {
-              case (f, Some(dv)) => f -> dv.card }.toMap
-            Some(graft.plans.DvScanInfo(
-              filesDv, tblSchema, mtf.readPinned(_, tblSchema),
-              mtf.pruneFilesForScan(files, _),
-              // TopN/LIMIT pair pruning: immutable per-file stats
-              // from the head frame, dvCard from the PINNED refs
-              ranges = Some(phys =>
-                mtf.fileColumnRanges(files, phys).map(_.map(r =>
-                  r.copy(dvCard = pinnedDv.getOrElse(r.file, 0L))))),
-              liveRows = Some(() =>
-                mtf.fileTotalRowCounts(files).map(_.map {
-                  case (f, n) => f -> (n - pinnedDv.getOrElse(f, 0L))
-                }))))
-          } else None,
-        // numRows for the planned file list, answered from the log —
-        // the CBO's row estimate next to FileScan's byte estimate
-        rowsOf = Some(mtf.rowCountOf),
-        // LIMIT/TopN trimming and log-answered aggregates consult the
-        // HEAD stats frame — sound only when the scanned list IS the
-        // head's (a pinned old version's files may since have gained
-        // deletion vectors, skewing live counts): time travel keeps
-        // the hooks off and fails open to the plain scan
-        perFileRows =
-          if (asOf.isDefined) None else Some(mtf.fileRowCounts),
-        perFileRanges =
-          if (asOf.isDefined) None else Some(mtf.fileColumnRanges),
-        // string MIN/MAX from the log (protocol v7 exact markers)
-        perFileStrBounds =
-          if (asOf.isDefined) None else Some(mtf.stringMinMax),
-        // metadata COUNT(*) on a DV'd HEAD snapshot (pinned versions
-        // must not count from head stats). Live count = immutable
-        // total rows − the DV cardinalities PINNED AT RESOLUTION, so
-        // a DV delete landing between resolution and execution cannot
-        // make count(*) on a held DataFrame disagree with collect()
-        // on the same handle.
-        dvLiveRows =
-          if (asOf.isDefined || !hasDv) None
-          else {
-            val pinnedDvCard = filesDv.flatMap(_._2).map(_.card).sum
-            Some(() => mtf.totalRowsOf(files).map(_ - pinnedDvCard))
-          },
-        // filtered metadata COUNT: files + DV cardinalities pinned at
-        // resolution; all other stats consulted are immutable per
-        // file, so the lane is exact even for time-travel handles
-        metaCounts = {
-          val pinnedDv = filesDv.collect {
-            case (f, Some(dv)) => f -> dv.card }.toMap
-          Some((probes, targets) =>
-            mtf.filteredAggregates(files, pinnedDv, probes, targets))
-        },
-        // ANALYZE-recorded NDV estimates -> the scan's DSv2 column
-        // statistics (CBO distinct counts); estimates, never exact
-        colNdv = Some(() =>
-          mtf.ndvInfo.map(_._2).getOrElse(Map.empty)),
+        // every read-side stats lane, and which of them this pin gets
+        pinned = Some(pinned),
         // DSv2 STREAMING_WRITE (df.writeStream.toTable) — head
         // snapshots only; time travel is frozen history
         streamWrite =
@@ -310,7 +241,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             s"columns are supported, got $t")
       t.references.head.fieldNames.head
     }
-    val chunkSchema = new ChunkStore(spark, dir).schema
+    val chunkSchema = ChunkStore.schema
     val custom = schema.nonEmpty &&
       schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq !=
         chunkSchema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
@@ -337,8 +268,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: ALTER TABLE needs the manifest " +
           "table format (layout-managed tables have a fixed schema)")
-    val store = new ChunkStore(spark, dir)
-    val mtf = new ManifestTableFormat(spark, dir, store.schema)
+    val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema)
     changes.foreach {
       case add: TableChange.AddColumn =>
         if (add.fieldNames().length != 1)
@@ -393,10 +323,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // DML grammar lacks — MERGE by key, store maintenance — reachable
   // as `CALL <catalog>.<proc>(...)`) ---------------------------------
 
-  /** The store behind `tableName`; procedures run on manifest tables
+  /** The log handle of `tableName`; procedures run on manifest tables
     * only (a layout-managed table has no log to commit to).
     */
-  private def storeFor(tableName: String): ChunkStore = {
+  private def manifestFor(tableName: String): ManifestTableFormat = {
     val dir = s"$warehouse/$tableName"
     if (!fs.exists(new Path(dir)))
       throw new NoSuchTableException(Identifier.of(Array.empty, tableName))
@@ -405,12 +335,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new UnsupportedOperationException(
         s"$catalogName.$tableName is not a manifest-format table — " +
           "procedures operate on the commit log")
-    new ChunkStore(spark, dir)
-  }
-
-  private def manifestFor(tableName: String): ManifestTableFormat = {
-    val store = storeFor(tableName)
-    new ManifestTableFormat(spark, store.path, store.schema)
+    new ManifestTableFormat(spark, dir, ChunkStore.schema)
   }
 
   private def procedure(
@@ -500,22 +425,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       "A17 keyed upsert: MERGE the rows of <source> (any view/table " +
         "name the session resolves) into <table> by document_url — " +
         "last writer wins per document")(args =>
-      storeFor(args(0)).upsert(spark.table(args(1)))),
+      manifestFor(args(0)).merge(spark.table(args(1)))),
     procedure("delete_documents", Seq("table", "source"),
       "A20 delete: drop every document whose url appears in the first " +
         "column of <source>")(args => {
       // frame-native: the url set never collects to the driver — a
       // delete keyed by a large source table stays a Spark anti-join
-      // all the way down (ChunkStore.delete(DataFrame))
+      // all the way down (ManifestTableFormat.delete(DataFrame))
       val src = spark.table(args(1))
-      storeFor(args(0)).delete(src.select(
+      manifestFor(args(0)).delete(src.select(
         org.apache.spark.sql.functions.col(src.columns.head)
           .cast("string").as("document_url")))
     }),
     procedure("compact", Seq("table"),
       "A21 maintenance: rewrite small files into target-size files " +
         "in one log commit")(args =>
-      storeFor(args(0)).compact()),
+      manifestFor(args(0)).compact()),
     rowProcedure("compact_where", Seq("table", "predicate"),
       "predicate-scoped OPTIMIZE for manifest tables: bin-pack only " +
         "the small files whose stats overlap <predicate> (a SQL " +
@@ -1054,28 +979,17 @@ private[graft] class GraftTable(
         Seq[graft.sink.GraftMergeAction],
         Seq[graft.sink.GraftMergeAction],
         Option[DataFrame]) => Unit] = None,
-    statsPruner: Option[
-      Seq[graft.sink.ManifestTableFormat.StatsProbe] =>
-        Option[Seq[String]]] = None,
     overwriteHook: Option[DataFrame => Unit] = None,
     truncateHook: Option[() => Unit] = None,
-    dvInfo: Option[graft.plans.DvScanInfo] = None,
-    rowsOf: Option[Seq[String] => Option[Long]] = None,
-    perFileRows: Option[Seq[String] => Option[Map[String, Long]]] = None,
-    perFileRanges: Option[(Seq[String], String) =>
-      Option[Seq[graft.sink.ManifestTableFormat.FileRange]]] = None,
-    perFileStrBounds: Option[(Seq[String], String) =>
-      Option[(Option[String], Option[String])]] = None,
+    /** The pinned manifest snapshot the scan builders and the optimizer
+      * rules ([[graft.plans.MetadataFilteredCount]], [[graft.plans
+      * .DvColumnarRead]]) read; `None` on layout-managed tables.
+      */
+    private[graft] val pinned: Option[graft.sink.PinnedScan] = None,
     streamWrite: Option[
       org.apache.spark.sql.connector.write.LogicalWriteInfo =>
         org.apache.spark.sql.connector.write.streaming.StreamingWrite] =
-      None,
-    dvLiveRows: Option[() => Option[Long]] = None,
-    metaCounts: Option[
-      (Seq[graft.sink.ManifestTableFormat.ExactProbe],
-        Seq[graft.sink.ManifestTableFormat.MetaAgg]) =>
-          Option[Seq[Any]]] = None,
-    colNdv: Option[() => Map[String, Long]] = None)
+      None)
     extends Table
     with SupportsRead with SupportsWrite with GraftUpdatable
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -1193,25 +1107,9 @@ private[graft] class GraftTable(
       overwriteHook.map(_ => TableCapability.TRUNCATE) ++
       streamWrite.map(_ => TableCapability.STREAMING_WRITE)).asJava
 
-  /** The DV-substitution hook [[graft.plans.DvColumnarRead]] reads —
-    * defined exactly when this table pins a DELETION-VECTOR snapshot.
-    */
-  private[graft] def dvScanInfo: Option[graft.plans.DvScanInfo] = dvInfo
-
-  /** The filtered metadata-aggregate hook ([[graft.plans
-    * .MetadataFilteredCount]]): probes + COUNT/MIN/MAX targets →
-    * log-answered internal values, boundary files scanned inside.
-    * Resolution-pinned file list and DV cardinalities — exact for
-    * this handle's snapshot.
-    */
-  private[graft] def metaCountsOf: Option[
-    (Seq[graft.sink.ManifestTableFormat.ExactProbe],
-      Seq[graft.sink.ManifestTableFormat.MetaAgg]) =>
-        Option[Seq[Any]]] = metaCounts
-
   override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = dvInfo match {
-    case Some(info) =>
+      options: CaseInsensitiveStringMap): ScanBuilder = pinned match {
+    case Some(p) if p.hasDv =>
       // DELETION-VECTOR snapshot: rows are parquet files MINUS the
       // referenced position deletes — not a plain file scan. On a
       // graft-installed session this ScanBuilder is never planned:
@@ -1222,24 +1120,20 @@ private[graft] class GraftTable(
       // DV-aware frame) keeps results exact on sessions without the
       // rule; filters stay above the relation, nothing claimed
       // pushed. DV-free tables never take this branch.
-      new DvV1ScanBuilder(tableSchema, () => info.read(info.pairs),
-        dvLiveRows)
+      new DvV1ScanBuilder(p)
+    case Some(p) =>
+      // manifest-native data skipping: the log's per-file stats (url
+      // bloom + per-column min/max) shrink the pinned file list from
+      // the pushed predicates before parquet plans the read
+      new org.apache.spark.sql.graftbridge.ManifestStatsScanBuilder(
+        spark, tableName, p, options)
     case None => sidecarDir match {
-    case Some(dir) =>
-      // sidecar-aware scan: `_hulls`/`_keybloom` shrink the file list
-      // from the pushed predicates before parquet plans the read
-      new org.apache.spark.sql.graftbridge.SidecarPrunedScanBuilder(
-        spark, tableName, dir, tableSchema, options)
-    case None => statsPruner match {
-      case Some(pruner) =>
-        // manifest-native data skipping: the log's per-file stats
-        // (url bloom + per-column min/max) shrink the pinned file
-        // list from the pushed predicates before parquet plans
-        new org.apache.spark.sql.graftbridge.ManifestStatsScanBuilder(
-          spark, tableName, tableSchema, paths, options, pruner, rowsOf,
-          perFileRows, perFileRanges, perFileStrBounds, colNdv)
+      case Some(dir) =>
+        // sidecar-aware scan: `_hulls`/`_keybloom` shrink the file
+        // list from the pushed predicates before parquet plans the read
+        new org.apache.spark.sql.graftbridge.SidecarPrunedScanBuilder(
+          spark, tableName, dir, tableSchema, options)
       case None => delegate.newScanBuilder(options)
-    }
     }
   }
 
@@ -1327,10 +1221,7 @@ private[graft] class GraftTable(
   * reclaims the fast path). The same public seam the JDBC connector
   * reads through.
   */
-private[graft] class DvV1ScanBuilder(
-    scanSchema: StructType,
-    reader: () => DataFrame,
-    liveRows: Option[() => Option[Long]] = None)
+private[graft] class DvV1ScanBuilder(pinned: graft.sink.PinnedScan)
     extends org.apache.spark.sql.connector.read.ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
@@ -1341,20 +1232,20 @@ private[graft] class DvV1ScanBuilder(
   // would need the DELETED rows' values/null-ness, which the vector
   // does not record); any filter keeps the normal read path (this
   // builder pushes no predicates, so Spark never offers a filtered
-  // aggregate here). The hook is None on time-travel handles — a
-  // pinned version's counts must not come from head stats.
+  // aggregate here). Time-travel pins get no count
+  // ([[graft.sink.PinnedScan.liveCount]]).
   private var cachedCount: Option[Option[Long]] = None
   private var pushedCount: Option[Long] = None
 
   private def countOf(): Option[Long] = {
-    if (cachedCount.isEmpty) cachedCount = Some(liveRows.flatMap(_()))
+    if (cachedCount.isEmpty) cachedCount = Some(pinned.liveCount)
     cachedCount.get
   }
 
   private def countStarOnly(
       agg: org.apache.spark.sql.connector.expressions.aggregate
         .Aggregation): Boolean =
-    liveRows.isDefined && agg.groupByExpressions().isEmpty &&
+    agg.groupByExpressions().isEmpty &&
       agg.aggregateExpressions().nonEmpty &&
       agg.aggregateExpressions().forall(_.isInstanceOf[
         org.apache.spark.sql.connector.expressions.aggregate.CountStar])
@@ -1389,7 +1280,7 @@ private[graft] class DvV1ScanBuilder(
       }
     }
     new org.apache.spark.sql.connector.read.V1Scan {
-      override def readSchema(): StructType = scanSchema
+      override def readSchema(): StructType = pinned.schema
       override def toV1TableScan[
           T <: org.apache.spark.sql.sources.BaseRelation
             with org.apache.spark.sql.sources.TableScan](
@@ -1397,10 +1288,10 @@ private[graft] class DvV1ScanBuilder(
         (new org.apache.spark.sql.sources.BaseRelation
             with org.apache.spark.sql.sources.TableScan {
           override def sqlContext: org.apache.spark.sql.SQLContext = context
-          override def schema: StructType = scanSchema
+          override def schema: StructType = pinned.schema
           override def buildScan()
               : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-            reader().rdd
+            pinned.read(pinned.pairs).rdd
         }).asInstanceOf[T]
     }
   }

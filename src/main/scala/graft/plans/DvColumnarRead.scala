@@ -1,44 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.sink.{ManifestTableFormat, StatsProbes}
-
-/** Everything the optimizer needs to serve a DELETION-VECTOR snapshot
-  * through Spark's own vectorized parquet path instead of the DSv2 V1
-  * row fallback: the pinned (file, dv) list, the table's logical
-  * schema, the DV-aware reader ([[ManifestTableFormat.readPinned]] —
-  * clean files scan untouched, DV'd files anti-join their position
-  * sidecars on `_metadata.row_index`), and the log-stats file pruner.
-  */
-final case class DvScanInfo(
-    pairs: Seq[(String, Option[ManifestTableFormat.DvRef])],
-    schema: StructType,
-    read: Seq[(String, Option[ManifestTableFormat.DvRef])] => DataFrame,
-    pruner: Seq[ManifestTableFormat.StatsProbe] => Option[Seq[String]],
-    /** Per-file column ranges for the pinned pair list (physical
-      * column name), with `dvCard` taken from the PINNED DvRefs —
-      * the TopN pair-pruning gauge. None = stats unavailable.
-      */
-    ranges: Option[String =>
-      Option[Seq[ManifestTableFormat.FileRange]]] = None,
-    /** Per-file LIVE row counts (total − pinned DV cardinality) for
-      * the pinned pair list — the bare-LIMIT pair-pruning gauge.
-      */
-    liveRows: Option[() => Option[Map[String, Long]]] = None)
+import graft.sink.{ManifestTableFormat, PinnedScan, StatsProbes}
 
 /** Kills the DELETION-VECTOR read tax: a DV'd manifest snapshot loaded
   * through the DSv2 seam would otherwise read via the `V1Scan`
   * fallback — `RowDataSourceScan`, per-row `Row` conversion, no
   * vectorized parquet reader, no pushdown, no file skipping. This rule
   * replaces the relation AT THE LOGICAL LEVEL with the equivalent
-  * declarative plan:
+  * declarative plan, built from the table's [[PinnedScan]] (its
+  * DV-aware reader, file pruner and per-file stats lanes):
   *
   * {{{
   *   clean files        → vectorized parquet scan
@@ -75,8 +51,9 @@ final case class DvScanInfo(
   */
 object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def infoOf(t: Table): Option[DvScanInfo] = t match {
-    case g: graft.catalog.GraftTable => g.dvScanInfo
+  /** The table's pin when it carries deletion vectors. */
+  private def dvPinOf(t: Table): Option[PinnedScan] = t match {
+    case g: graft.catalog.GraftTable => g.pinned.filter(_.hasDv)
     case _ => None
   }
 
@@ -157,19 +134,11 @@ object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
       limitSubstitute(n, inner)
         .map(ni => gl.copy(child = ll.copy(child = ni)))
         .getOrElse(gl.mapChildren(rewrite))
-    case f @ Filter(cond, r: DataSourceV2Relation) =>
-      infoOf(r.table)
-        .flatMap(substitute(r.output, _, splitConjunctivePredicates(cond)))
+    case f @ Filter(cond, DvRel(out, pin)) =>
+      substitute(out, pin, pin.pairs, splitConjunctivePredicates(cond))
         .map(Filter(cond, _)).getOrElse(f)
-    case r: DataSourceV2Relation =>
-      infoOf(r.table).flatMap(substitute(r.output, _, Nil)).getOrElse(r)
-    case f @ Filter(cond, s: DataSourceV2ScanRelation) =>
-      infoOf(s.relation.table)
-        .flatMap(substitute(s.output, _, splitConjunctivePredicates(cond)))
-        .map(Filter(cond, _)).getOrElse(f)
-    case s: DataSourceV2ScanRelation =>
-      infoOf(s.relation.table)
-        .flatMap(substitute(s.output, _, Nil)).getOrElse(s)
+    case DvRel(out, pin) =>
+      substitute(out, pin, pin.pairs, Nil).getOrElse(plan)
     case other => other.mapChildren(rewrite)
   }
 
@@ -192,19 +161,19 @@ object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
     // column pruning interposes a (often empty) Project under the
     // count — transparent for a row-count
     case p: Project => isDvRelation(p.child)
-    case r: DataSourceV2Relation => infoOf(r.table).isDefined
-    case s: DataSourceV2ScanRelation => infoOf(s.relation.table).isDefined
+    case r: DataSourceV2Relation => dvPinOf(r.table).isDefined
+    case s: DataSourceV2ScanRelation => dvPinOf(s.relation.table).isDefined
     case _ => false
   }
 
   /** Both relation shapes with a DV table behind them. */
   private object DvRel {
-    def unapply(p: LogicalPlan): Option[(Seq[Attribute], DvScanInfo)] =
+    def unapply(p: LogicalPlan): Option[(Seq[Attribute], PinnedScan)] =
       p match {
         case r: DataSourceV2Relation =>
-          infoOf(r.table).map((r.output, _))
+          dvPinOf(r.table).map((r.output, _))
         case s: DataSourceV2ScanRelation =>
-          infoOf(s.relation.table).map((s.output, _))
+          dvPinOf(s.relation.table).map((s.output, _))
         case _ => None
       }
   }
@@ -223,29 +192,25 @@ object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
           .AttributeReference]) =>
       topNSubstitute(limit, orders, p.child)
         .map(c => p.copy(child = c))
-    case DvRel(out, info) if limit > 0 =>
+    case DvRel(out, pin) if limit > 0 =>
       import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, NullsFirst}
       for {
-        rangesHook <- info.ranges
         head <- orders.headOption
         att <- head.child match {
           case a: AttributeReference => Some(a)
           case _ => None
         }
         if out.exists(_.exprId == att.exprId)
-        field <- info.schema.fields.find(
-          _.name.equalsIgnoreCase(att.name))
-        if StatsProbes.statsOrderedKind(field.dataType) &&
-          !field.dataType.isInstanceOf[
-            org.apache.spark.sql.types.BooleanType]
-        rs <- rangesHook(ManifestTableFormat.physicalName(field))
+        (phys, dt) <- pin.typeOf(att.name)
+        if StatsProbes.statsOrderedKind(dt) &&
+          !dt.isInstanceOf[org.apache.spark.sql.types.BooleanType]
+        rs <- pin.ranges(pin.files, phys)
         if rs.nonEmpty
         keep <- ManifestTableFormat.topNKeepFiles(rs, limit,
           asc = head.direction == Ascending,
           nullsFirst = head.nullOrdering == NullsFirst)
-        if keep.size < info.pairs.size
-        sub <- substitute(out,
-          info.copy(pairs = info.pairs.filter(p => keep(p._1))), Nil)
+        if keep.size < pin.pairs.size
+        sub <- substitute(out, pin, pin.pairs.filter(p => keep(p._1)), Nil)
       } yield sub
     case _ => None
   }
@@ -257,50 +222,48 @@ object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
           .AttributeReference]) =>
       limitSubstitute(limit, p.child).map(c => p.copy(child = c))
-    case DvRel(out, info) if limit > 0 =>
+    case DvRel(out, pin) if limit > 0 =>
       for {
-        liveHook <- info.liveRows
-        counts <- liveHook()
-        if info.pairs.forall(p => counts.contains(p._1))
+        counts <- pin.liveRows(pin.files)
+        if pin.pairs.forall(p => counts.contains(p._1))
         kept = {
           var acc = 0L
-          info.pairs.takeWhile { p =>
+          pin.pairs.takeWhile { p =>
             val take = acc < limit
             acc += counts(p._1)
             take
           }
         }
-        if kept.size < info.pairs.size
-        sub <- substitute(out, info.copy(pairs = kept), Nil)
+        if kept.size < pin.pairs.size
+        sub <- substitute(out, pin, kept, Nil)
       } yield sub
     case _ => None
   }
 
-  /** The DV-aware logical plan, output-aliased to the relation's own
-    * attribute ids — or None when anything is off (missing column,
-    * reader failure), leaving the exact V1 fallback in place.
+  /** The DV-aware logical plan over `pairs` (a subset of the pin's),
+    * output-aliased to the relation's own attribute ids — or None when
+    * anything is off (missing column, reader failure), leaving the
+    * exact V1 fallback in place.
     */
   private def substitute(
       out: Seq[Attribute],
-      info: DvScanInfo,
+      pin: PinnedScan,
+      candidates: Seq[(String, Option[ManifestTableFormat.DvRef])],
       conjuncts: Seq[Expression]): Option[LogicalPlan] =
     try {
-      val typeOf: String => Option[(String, DataType)] = n =>
-        info.schema.fields.find(_.name.equalsIgnoreCase(n))
-          .map(f => (ManifestTableFormat.physicalName(f), f.dataType))
-      val probes = StatsProbes.extract(conjuncts, typeOf)
+      val probes = StatsProbes.extract(conjuncts, pin.typeOf)
       val pairs =
-        if (probes.isEmpty) info.pairs
-        else info.pruner(probes).fold(info.pairs) { keep =>
+        if (probes.isEmpty) candidates
+        else pin.prune(probes).fold(candidates) { keep =>
           val k = keep.toSet
-          info.pairs.filter(p => k(p._1))
+          candidates.filter(p => k(p._1))
         }
       // the reader's plan is ANALYZED, not optimized — fold its
       // broadcast() hints into join-hint form here, because the
       // optimizer's own EliminateResolvedHint (Finish Analysis) has
       // already run by the time this rule substitutes
       val child = org.apache.spark.sql.catalyst.optimizer
-        .EliminateResolvedHint(info.read(pairs).queryExecution.analyzed)
+        .EliminateResolvedHint(pin.read(pairs).queryExecution.analyzed)
       val byName = child.output.map(a => a.name.toLowerCase -> a).toMap
       if (!out.forall(a => byName.contains(a.name.toLowerCase))) None
       else Some(Project(out.map { a =>

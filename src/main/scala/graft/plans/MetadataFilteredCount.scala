@@ -7,8 +7,6 @@ import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.types.DataType
-
 import graft.sink.{ManifestTableFormat, StatsProbes}
 
 /** FILTERED metadata aggregates: `SELECT count(*) [, count(col),
@@ -45,10 +43,10 @@ import graft.sink.{ManifestTableFormat, StatsProbes}
   * losslessly to an exact probe ([[StatsProbes.extractExact]] —
   * fail-closed by construction); and the table hook itself refuses on
   * DV'd boundary files, missing stats, or an over-large boundary
-  * (see [[ManifestTableFormat!.filteredCounts]]). The hook's file
-  * list and DV cardinalities are pinned at table resolution, so the
-  * folded count agrees with `collect()` on the same handle under any
-  * concurrent churn.
+  * (see [[ManifestTableFormat!.filteredAggregates]]). The table's
+  * [[graft.sink.PinnedScan]] fixes the file list and DV cardinalities
+  * at resolution, so the folded count agrees with `collect()` on the
+  * same handle under any concurrent churn.
   */
 object MetadataFilteredCount extends Rule[LogicalPlan]
     with PredicateHelper {
@@ -79,13 +77,10 @@ object MetadataFilteredCount extends Rule[LogicalPlan]
           if fs.nonEmpty && fs.forall(_.deterministic) => (fs, g, out)
       case _ => return None
     }
-    val hook = table.metaCountsOf.getOrElse(return None)
+    val pin = table.pinned.getOrElse(return None)
     val relIds = relOutput.map(a => a.exprId -> a.name).toMap
-    def typeOf(n: String): Option[(String, DataType)] =
-      table.schema().fields.find(_.name.equalsIgnoreCase(n))
-        .map(f => (ManifestTableFormat.physicalName(f), f.dataType))
     def physOf(att: Attribute): Option[String] =
-      relIds.get(att.exprId).flatMap(typeOf).map(_._1)
+      relIds.get(att.exprId).flatMap(pin.typeOf).map(_._1)
     // every output expression must be a plain COUNT/MIN/MAX (no
     // DISTINCT, no FILTER clause) over a literal (count-star) or a
     // relation attribute
@@ -106,10 +101,10 @@ object MetadataFilteredCount extends Rule[LogicalPlan]
           ManifestTableFormat.MetaMax(physOf(att).getOrElse(return None))
         case _ => return None
       }
-    val probes = StatsProbes.extractExact(filters, typeOf)
+    val probes = StatsProbes.extractExact(filters, pin.typeOf)
       .getOrElse(return None)
     if (probes.isEmpty) return None
-    val values = hook(probes, targets).getOrElse(return None)
+    val values = pin.metaAggregates(probes, targets).getOrElse(return None)
     Some(LocalRelation(
       a.aggregateExpressions.map(_.toAttribute),
       Seq(new GenericInternalRow(

@@ -44,12 +44,7 @@ final class ChunkStore(
     format(this)
   }
 
-  val schema: StructType = StructType(Seq(
-    StructField("chunk_id", IntegerType),
-    StructField("chunk_text", StringType),
-    StructField("embedding", ArrayType(FloatType, containsNull = false)),
-    StructField("page_number", IntegerType),
-    StructField("document_url", StringType)))
+  val schema: StructType = ChunkStore.schema
 
   def exists: Boolean = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -139,6 +134,16 @@ final class ChunkStore(
 }
 
 object ChunkStore {
+
+  /** The canonical chunk table's schema — every store's, and the base
+    * schema of a manifest table created without a DDL schema.
+    */
+  val schema: StructType = StructType(Seq(
+    StructField("chunk_id", IntegerType),
+    StructField("chunk_text", StringType),
+    StructField("embedding", ArrayType(FloatType, containsNull = false)),
+    StructField("page_number", IntegerType),
+    StructField("document_url", StringType)))
 
   /** The marker the retired parquet engine stamped at a store's root
     * (`per-document` or `buckets=<n>`).

@@ -2638,10 +2638,13 @@ class ManifestTableFormat(
     }
   }
 
-  // ---- exact-probe proof predicates over the stats frame ----------
-  // Shared by the metadata-only DELETE lane (fullMatchFiles) and the
-  // filtered log-answered COUNT lane (filteredCounts). All proofs are
-  // FAIL-CLOSED: an absent/invalid stat coalesces to "not proven".
+  // ---- stats-frame column slots and exact-probe proofs ------------
+  // `statVal`/`nullsOf` read one column's slot of a stats-frame row
+  // (null when unrecorded); scan pruning opens nulls, the proofs
+  // below close them. The proofs are shared by the metadata-only
+  // DELETE lane (fullMatchFiles) and the filtered log-answered
+  // aggregates (filteredAggregates), and are FAIL-CLOSED: an
+  // absent/invalid stat coalesces to "not proven".
 
   private def statVal(arr: String, name: String): Column = {
     val pos = array_position(col("cs_names"), name).cast("int")
@@ -2757,7 +2760,8 @@ class ManifestTableFormat(
     * cardinalities (empty map = none). All other stats consulted
     * (rows, per-column bounds/null counts) are immutable for a file's
     * life, so answering from the HEAD stats frame is exact even for a
-    * pinned older file list — the same carve-out as `dvLiveRows`.
+    * pinned older file list — the same carve-out as
+    * [[PinnedScan.liveCount]].
     */
   def filteredAggregates(
       files: Seq[String],
@@ -2825,15 +2829,8 @@ class ManifestTableFormat(
 
     // encoded-space extrema: numeric kinds as BigDecimal on the
     // canonical grid, strings compared in UTF8String (binary) order
-    val strOrd = Ordering.comparatorToOrdering(
-      new java.util.Comparator[String] {
-        def compare(a: String, b: String): Int =
-          org.apache.spark.unsafe.types.UTF8String.fromString(a)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String
-              .fromString(b))
-      })
     def less(c: String, a: Any, b: Any): Boolean =
-      if (isStr(c)) strOrd.lt(a.asInstanceOf[String], b.asInstanceOf[String])
+      if (isStr(c)) ManifestTableFormat.utf8Order.lt(a.asInstanceOf[String], b.asInstanceOf[String])
       else a.asInstanceOf[BigDecimal] < b.asInstanceOf[BigDecimal]
 
     var provenStar = 0L
@@ -4041,290 +4038,77 @@ class ManifestTableFormat(
   /** The current committed version (−1 before the first commit). */
   def version: Long = snapshot().version
 
-  /** Live data files of the current snapshot (absolute paths, sorted)
-    * — the file-set handle the SQL catalog builds its scans from.
+  /** Live data files of the current snapshot (absolute paths,
+    * sorted).
     */
   def liveFiles: Seq[String] = liveNames(snapshot())
 
-  /** Live-row count of exactly `files`, answered from the log's
-    * per-file stats alone (physical rows minus deletion-vector
-    * cardinality) — the `numRows` a planned scan can report to the
-    * optimizer. `None` when any of the files predates row stats
-    * (fail-honest, like [[tableStats]]). One narrow metadata job,
-    * bounded by the pinned list the caller already holds.
+  /** Pins one snapshot for a SQL scan — the head, or version `asOf`
+    * — taking the (file, deletion vector) pairs and the schema from
+    * the same log listing. The [[PinnedScan]] owns every planner-time
+    * stats lane of the resolved table.
     */
-  /** Per-file `(total rows, null count, lo, hi, dvCard)` for one
-    * NUMERIC-KIND column (physical name) — the TopN file-pruning
-    * gauge: `ORDER BY ts LIMIT k` can drop every file whose range
-    * provably sorts after k other rows. Values decode on the same
-    * canonical grid the stats were written in (epoch micros/days for
-    * time kinds, plain decimal otherwise). DV'd files are ADMITTED
-    * with their cardinality recorded: [[ManifestTableFormat
-    * .topNKeepFiles]] uses live lower bounds, while the log-answered
-    * aggregate lanes refuse any `dvCard != 0` themselves (their
-    * counts/extrema would include deleted rows). `None` — the
-    * caller's fail-open — unless EVERY asked file has an exact row
-    * count and either a VALID lo/hi slot or a provably all-null
-    * column (nulls == rows); unparseable bounds (NaN/Infinity) also
-    * disqualify.
-    */
-  /** Checkpoint-less planner fast lane: the per-file stats for
-    * `files` straight from the driver-held snapshot tail — `None`
-    * when a parquet checkpoint exists (callers then run their narrow
-    * frame job as before) or when any asked name is not live (the
-    * frame path would fail the caller open too; falling through just
-    * spends one job reaching the same answer). The planner-time
-    * providers below each fire per QUERY PLANNING pass, so skipping
-    * their Spark jobs on tail-only tables is a per-query win, not a
-    * per-commit one.
-    */
-  private def tailStatsOf(snap: Snapshot, files: Seq[String])
-      : Option[Seq[FileStats]] =
-    if (snap.ckptParquet.nonEmpty) None
-    else {
-      val got = files.flatMap(snap.base.get)
-      if (got.size == files.size) Some(got) else None
+  def pinScan(asOf: Option[Long] = None): PinnedScan = {
+    val (pairs, s) = asOf match {
+      case None =>
+        val snap = snapshot()
+        (liveWithDv(snap), snap.tableSchema)
+      case Some(v) => stateAtVersion(v)
     }
-
-  def fileColumnRanges(files: Seq[String], physCol: String)
-      : Option[Seq[ManifestTableFormat.FileRange]] = {
-    if (files.isEmpty) return Some(Seq.empty)
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      val out = Seq.newBuilder[ManifestTableFormat.FileRange]
-      files.zip(sts).foreach { case (f, st) =>
-        val rows = st.rows.getOrElse(return None)
-        val c = st.cols.find(_.name == physCol).getOrElse(return None)
-        val dvCard = st.dv.map(_.card).getOrElse(0L)
-        if (c.lo.isDefined && c.hi.isDefined) {
-          val lo = scala.util.Try(BigDecimal(c.lo.get)).toOption
-          val hi = scala.util.Try(BigDecimal(c.hi.get)).toOption
-          if (lo.isEmpty || hi.isEmpty) return None
-          out += ManifestTableFormat.FileRange(
-            f, rows, c.nulls, lo, hi, dvCard)
-        } else if (c.nulls == rows)
-          out += ManifestTableFormat.FileRange(
-            f, rows, c.nulls, None, None, dvCard)
-        else return None
-      }
-      return Some(out.result())
-    }
-    import spark.implicits._
-    val p = array_position(col("cs_names"), physCol).cast("int")
-    val got = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .select(col("file"), col("rows"), col("dv_card"),
-        when(p > 0, element_at(col("cs_valid"), p)).as("v"),
-        when(p > 0, element_at(col("cs_lo"), p)).as("lo"),
-        when(p > 0, element_at(col("cs_hi"), p)).as("hi"),
-        when(p > 0, element_at(col("cs_nn"), p)).as("nn"))
-      .collect()
-    if (got.length != files.size) return None
-    val out = Seq.newBuilder[ManifestTableFormat.FileRange]
-    got.foreach { r =>
-      if (r.isNullAt(1) || r.isNullAt(6)) return None
-      val dvCard = if (r.isNullAt(2)) 0L else r.getLong(2)
-      val rows = r.getLong(1)
-      val nulls = r.getLong(6)
-      val valid = !r.isNullAt(3) && r.getInt(3) == 1
-      if (valid && !r.isNullAt(4) && !r.isNullAt(5)) {
-        val lo = scala.util.Try(BigDecimal(r.getString(4))).toOption
-        val hi = scala.util.Try(BigDecimal(r.getString(5))).toOption
-        if (lo.isEmpty || hi.isEmpty) return None
-        out += ManifestTableFormat.FileRange(
-          r.getString(0), rows, nulls, lo, hi, dvCard)
-      } else if (nulls == rows) {
-        // all-null column: no bounds to record, and none needed
-        out += ManifestTableFormat.FileRange(
-          r.getString(0), rows, nulls, None, None, dvCard)
-      } else return None
-    }
-    Some(out.result())
+    new PinnedScan(this, pairs, s, timeTravel = asOf.isDefined)
   }
 
-  /** STRING MIN/MAX from the log — servable only because protocol v7
-    * records a per-column exact-bounds marker at stats-write time
-    * (the writer KNOWS whether truncation happened; stored string
-    * bounds without the marker may be truncation-adjusted and cannot
-    * answer an extremum). `None` — fail-open to the scan — unless
-    * every asked file has stats with the marker set (or is provably
-    * all-null on the column) and carries no deletion vector (deleted
-    * rows could hold the recorded extremum). Extrema compare in
-    * UTF8String (binary UTF-8) order — Spark's own string ordering;
-    * Java String order differs on supplementary characters.
-    * `Some((None, None))` = every row NULL → NULL extrema.
+  /** One file's planner-time stats: its recorded row count, the
+    * head's deletion-vector cardinality, and one column's stats.
     */
-  def stringMinMax(files: Seq[String], physCol: String)
-      : Option[(Option[String], Option[String])] = {
-    if (files.isEmpty) return Some((None, None))
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      val ord0 = Ordering.comparatorToOrdering(
-        new java.util.Comparator[String] {
-          def compare(a: String, b: String): Int =
-            org.apache.spark.unsafe.types.UTF8String.fromString(a)
-              .compareTo(org.apache.spark.unsafe.types.UTF8String
-                .fromString(b))
-        })
-      var lo: Option[String] = None
-      var hi: Option[String] = None
-      sts.foreach { st =>
-        val rows = st.rows.getOrElse(return None)
-        if (st.dv.map(_.card).getOrElse(0L) != 0L) return None
-        val c = st.cols.find(_.name == physCol).getOrElse(return None)
-        if (c.lo.isDefined && c.hi.isDefined) {
-          if (!c.exact) return None
-          if (lo.forall(ord0.gt(_, c.lo.get))) lo = c.lo
-          if (hi.forall(ord0.lt(_, c.hi.get))) hi = c.hi
-        } else if (c.nulls != rows) return None
-      }
-      return Some((lo, hi))
-    }
-    import spark.implicits._
-    val p = array_position(col("cs_names"), physCol).cast("int")
-    val got = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .select(col("file"), col("rows"), col("dv_card"),
-        when(p > 0, element_at(col("cs_valid"), p)).as("v"),
-        when(p > 0, element_at(col("cs_lo"), p)).as("lo"),
-        when(p > 0, element_at(col("cs_hi"), p)).as("hi"),
-        when(p > 0, element_at(col("cs_nn"), p)).as("nn"),
-        when(p > 0, element_at(col("cs_exact"), p)).as("ex"))
-      .collect()
-    if (got.length != files.size) return None
-    val ord = Ordering.comparatorToOrdering(
-      new java.util.Comparator[String] {
-        def compare(a: String, b: String): Int =
-          org.apache.spark.unsafe.types.UTF8String.fromString(a)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String
-              .fromString(b))
-      })
-    var lo: Option[String] = None
-    var hi: Option[String] = None
-    got.foreach { r =>
-      if (r.isNullAt(1) || r.isNullAt(6)) return None
-      if (!r.isNullAt(2) && r.getLong(2) != 0L) return None
-      val rows = r.getLong(1)
-      val nulls = r.getLong(6)
-      val valid = !r.isNullAt(3) && r.getInt(3) == 1
-      if (valid && !r.isNullAt(4) && !r.isNullAt(5)) {
-        if (r.isNullAt(7) || r.getInt(7) != 1) return None // not exact
-        val l = r.getString(4); val h = r.getString(5)
-        if (lo.forall(ord.gt(_, l))) lo = Some(l)
-        if (hi.forall(ord.lt(_, h))) hi = Some(h)
-      } else if (nulls != rows) return None // bounds missing, not all-null
-    }
-    Some((lo, hi))
-  }
+  private[sink] final case class FileStat(
+      file: String, rows: Option[Long], dvCard: Long, col: Option[ColStats])
 
-  /** Per-file LIVE row counts (rows − DV cardinality) for `files`,
-    * answered from the log's stats frame in one narrow job — `None`
-    * unless EVERY asked file has an exact recorded count (fail-open:
-    * a pre-stats file, a vacuumed name, a foreign path all disable
-    * the caller's optimization rather than skew it). The LIMIT
-    * pushdown's gauge: `SELECT … LIMIT n` on a 10⁷-file table plans
-    * the smallest file prefix covering n rows instead of listing
-    * every live file into the scan.
+  /** The per-file stats lookup behind every [[PinnedScan]] lane, in
+    * `files` order; `physCol` names the one column whose stats to
+    * carry. A checkpoint-less snapshot answers from the driver-held
+    * tail without a Spark job — the lanes fire on every planning
+    * pass, so this is a per-query saving. With a parquet checkpoint
+    * it is one narrow stats-frame projection (file, rows, dv_card and
+    * the column's slots). `None` when any asked file has no stats row
+    * (vacuumed, foreign): every lane fails open on it.
     */
-  def fileRowCounts(files: Seq[String]): Option[Map[String, Long]] = {
-    if (files.isEmpty) return Some(Map.empty)
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      return if (sts.forall(_.rows.isDefined))
-        Some(files.zip(sts).map { case (f, st) =>
-          f -> (st.rows.get - st.dv.map(_.card).getOrElse(0L)) }.toMap)
-      else None
+  private[sink] def statsLookup(files: Seq[String], physCol: Option[String])
+      : Option[Seq[FileStat]] = {
+    if (files.isEmpty) return Some(Nil)
+    val snap = snapshot()
+    val got: Map[String, FileStat] = snap.ckptParquet match {
+      case None =>
+        files.flatMap(f => snap.base.get(f).map(st => f -> FileStat(f,
+          st.rows, st.dv.fold(0L)(_.card),
+          physCol.flatMap(c => st.cols.find(_.name == c))))).toMap
+      case Some(_) =>
+        import spark.implicits._
+        val slots = physCol.toSeq.flatMap { c =>
+          val p = array_position(col("cs_names"), c).cast("int")
+          Seq("cs_valid", "cs_lo", "cs_hi", "cs_nn", "cs_exact")
+            .map(a => when(p > 0, element_at(col(a), p)))
+        }
+        statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
+          .select(Seq(col("file"), col("rows"), col("dv_card")) ++ slots: _*)
+          .collect().map { r =>
+            def opt[T](i: Int): Option[T] =
+              if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+            val valid = physCol.isDefined && opt[Int](3).contains(1)
+            // no null count = the column has no stats in this file
+            val c = physCol.flatMap(name => opt[Long](6).map(nn =>
+              ColStats(name, opt[String](4).filter(_ => valid),
+                opt[String](5).filter(_ => valid), nn,
+                exact = opt[Int](7).contains(1))))
+            r.getString(0) -> FileStat(r.getString(0), opt[Long](1),
+              opt[Long](2).getOrElse(0L), c)
+          }.toMap
     }
-    import spark.implicits._
-    val rows = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .select(col("file"),
-        (col("rows") - coalesce(col("dv_card"), lit(0L))).as("n"))
-      .collect()
-    if (rows.length == files.size && rows.forall(!_.isNullAt(1)))
-      Some(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
-    else None
+    if (files.forall(got.contains)) Some(files.map(got)) else None
   }
 
-  /** TOTAL recorded rows of `files` (no DV subtraction) — a per-file
-    * row count is immutable for the file's whole life, so this is safe
-    * to answer from the HEAD stats frame even for a file list pinned
-    * at an earlier resolution: the caller subtracts ITS pinned DV
-    * cardinalities to get the live count AS OF resolution, immune to
-    * concurrent DV churn (the time-travel-skew carve-out, applied to
-    * the resolution-to-execution window). Fail-open (`None`) when any
-    * asked file has since been vacuumed or lacks an exact count.
-    */
-  def totalRowsOf(files: Seq[String]): Option[Long] = {
-    if (files.isEmpty) return Some(0L)
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      return if (sts.forall(_.rows.isDefined))
-        Some(sts.map(_.rows.get).sum)
-      else None
-    }
-    import spark.implicits._
-    val agg = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .agg(count(lit(1)).as("files"), sum(col("rows")).as("rows"),
-        count("rows").as("rows_known"))
-      .collect().head
-    if (agg.getLong(0) == files.size && agg.getLong(2) == agg.getLong(0)
-        && !agg.isNullAt(1))
-      Some(agg.getLong(1))
-    else None
-  }
-
-  /** Per-file TOTAL recorded rows (no DV subtraction; immutable per
-    * file — see [[totalRowsOf]]). The caller subtracts its own pinned
-    * DV cardinalities. Fail-open `None` unless every asked file has
-    * an exact count.
-    */
-  def fileTotalRowCounts(files: Seq[String]): Option[Map[String, Long]] = {
-    if (files.isEmpty) return Some(Map.empty)
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      return if (sts.forall(_.rows.isDefined))
-        Some(files.zip(sts).map { case (f, st) =>
-          f -> st.rows.get }.toMap)
-      else None
-    }
-    import spark.implicits._
-    val rows = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .select(col("file"), col("rows"))
-      .collect()
-    if (rows.length == files.size && rows.forall(!_.isNullAt(1)))
-      Some(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
-    else None
-  }
-
-  def rowCountOf(files: Seq[String]): Option[Long] = {
-    if (files.isEmpty) return Some(0L)
-    val snap0 = snapshot()
-    tailStatsOf(snap0, files).foreach { sts =>
-      return if (sts.forall(_.rows.isDefined))
-        Some(sts.map(st =>
-          st.rows.get - st.dv.map(_.card).getOrElse(0L)).sum)
-      else None
-    }
-    import spark.implicits._
-    val agg = statsFrame(snap0)
-      .join(files.toDF("file"), Seq("file"), "left_semi")
-      .agg(count(lit(1)).as("files"),
-        sum(col("rows") - coalesce(col("dv_card"), lit(0L))).as("rows"),
-        count("rows").as("rows_known"))
-      .collect().head
-    if (agg.getLong(0) == files.size && agg.getLong(2) == agg.getLong(0)
-        && !agg.isNullAt(1))
-      Some(agg.getLong(1))
-    else None
-  }
-
-  /** Live (file, deletion-vector) pairs of the current snapshot —
-    * the catalog's handle for DV-aware resolution: all-`None` means
-    * the plain stats-pruned parquet scan serves; any `Some` routes
-    * SQL reads through [[readPinned]].
+  /** Live (file, deletion-vector) pairs of the current snapshot,
+    * sorted by name; any `Some` means reads go through [[readPinned]].
     */
   def liveFilesWithDv: Seq[(String, Option[ManifestTableFormat.DvRef])] =
     liveWithDv(snapshot())
@@ -4377,16 +4161,6 @@ class ManifestTableFormat(
     // allowed to shuffle rather than blow the driver's broadcast cap
     val st = statsFrame(snap)
       .join(pinned.toDF("file"), Seq("file"), "left_semi")
-
-    def statVal(arr: String, name: String): Column = {
-      val pos = array_position(col("cs_names"), name).cast("int")
-      when(pos > 0 && element_at(col("cs_valid"), pos) === 1,
-        element_at(col(arr), pos))
-    }
-    def nullsOf(name: String): Column = {
-      val pos = array_position(col("cs_names"), name).cast("int")
-      when(pos > 0, element_at(col("cs_nn"), pos))
-    }
     val dec = DecimalType(38, 18)
     def open(c: Column): Column = coalesce(c, lit(true))
     // per-column bloom test (protocol v9): on an EQUALITY probe for a
@@ -4513,7 +4287,14 @@ class ManifestTableFormat(
     * name replaces its previous pair (how a DV commit supersedes).
     */
   def filesWithDvAtVersion(asOf: Long)
-      : Seq[(String, Option[ManifestTableFormat.DvRef])] = {
+      : Seq[(String, Option[ManifestTableFormat.DvRef])] =
+    stateAtVersion(asOf)._1
+
+  /** The pairs of [[filesWithDvAtVersion]] and the effective schema AS
+    * OF `asOf`, from one log listing.
+    */
+  private def stateAtVersion(asOf: Long)
+      : (Seq[(String, Option[ManifestTableFormat.DvRef])], StructType) = {
     val f = fs
     require(f.exists(logDir), s"no log at $path")
     val (entries, jsonCkpts, pqCkpts, schemaVers) = census(f)
@@ -4562,7 +4343,9 @@ class ManifestTableFormat(
         }
       }
     }
-    live.toSeq.sortBy(_._1)
+    val sv = schemaVers.filter(_ <= asOf)
+    (live.toSeq.sortBy(_._1),
+      if (sv.isEmpty) baseSchema else parseSchemaFile(sv.max))
   }
 
   /** Time-travel read: the table AS OF `asOf` — replay up to that
@@ -4573,8 +4356,10 @@ class ManifestTableFormat(
     * documents), and a gap in the surviving entries fails loudly
     * rather than silently serving a wrong state.
     */
-  def readVersion(asOf: Long): DataFrame =
-    readFilesDv(filesWithDvAtVersion(asOf), schemaAtVersion(asOf))
+  def readVersion(asOf: Long): DataFrame = {
+    val (pairs, s) = stateAtVersion(asOf)
+    readFilesDv(pairs, s)
+  }
 
   /** CHANGE FEED: the row-level delta between two committed versions —
     * the capability the reference's store exposes as the Cosmos change
@@ -4868,20 +4653,55 @@ object ManifestTableFormat {
     * read/vacuum alone). Caching the unresolved plan removes that;
     * every action on the handle still reads the checkpoint bytes, so
     * no row or result is ever reused.
+    *
+    * Bounded: one entry per log directory (the checkpoint directory's
+    * parent), holding the newest checkpoint read so far. Reading a
+    * newer checkpoint replaces it; a read of an older one (time
+    * travel) is served uncached. Vacuum reclaims only checkpoints
+    * older than the newest, and the snapshot read that planning or
+    * vacuum does next installs the newest. The parquet listing runs
+    * outside the lock.
     */
   private val ckptMemo =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
+      scala.collection.mutable.Map[Path, (Path, DataFrame)]]()
 
-  private[sink] def ckptFrame(spark: SparkSession, dir: String): DataFrame =
+  private[sink] def ckptFrame(spark: SparkSession, dir: String): DataFrame = {
+    val d = new Path(dir)
+    def memo = ckptMemo.computeIfAbsent(spark,
+      _ => scala.collection.mutable.Map.empty)
+    ckptMemo.synchronized(memo.get(d.getParent)).collect {
+      case (cached, df) if cached == d => df
+    }.getOrElse {
+      val df = spark.read.parquet(dir)
+      ckptMemo.synchronized {
+        memo.get(d.getParent) match {
+          // zero-padded version names order like the versions
+          case Some((held, heldDf)) if held.getName >= d.getName =>
+            if (held == d) heldDf else df
+          case _ => memo(d.getParent) = (d, df); df
+        }
+      }
+    }
+  }
+
+  /** Log directories and the checkpoint each memoizes (spec hook). */
+  private[sink] def memoizedCheckpoints(spark: SparkSession): Seq[(Path, Path)] =
     ckptMemo.synchronized {
-      ckptMemo.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, spark.read.parquet(dir))
+      Option(ckptMemo.get(spark)).toSeq.flatMap(_.toSeq.map {
+        case (log, (d, _)) => log -> d })
     }
 
+  /** Spark's string order (UTF-8 bytes), which Java's UTF-16 order is
+    * not on supplementary characters — for log-answered string
+    * extrema.
+    */
+  private[sink] val utf8Order: Ordering[String] =
+    Ordering.by[String, org.apache.spark.unsafe.types.UTF8String](
+      org.apache.spark.unsafe.types.UTF8String.fromString)
+
   /** One file's per-column range summary for TopN file pruning
-    * ([[ManifestTableFormat!.fileColumnRanges]]): TOTAL row count,
+    * ([[PinnedScan.ranges]]): TOTAL row count,
     * null count, the column's bounds decoded on the canonical stats
     * grid — `lo`/`hi` are `None` exactly for a provably all-null
     * column (`nulls == rows`) — and the file's deletion-vector

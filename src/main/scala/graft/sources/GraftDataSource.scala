@@ -194,10 +194,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       fs.exists(new Path(path, s"_log/branches/$b")),
       s"format(\"graft\"): no branch '$b' at $path — " +
         "createBranch / CALL create_branch first"))
-    val store = new ChunkStore(spark, path,
-      format = branch.fold(ManifestTableFormat.factory)(
-        ManifestTableFormat.branchFactory))
-    new ManifestTableFormat(spark, path, store.schema, branch = branch)
+    new ManifestTableFormat(spark, path, ChunkStore.schema, branch = branch)
   }
 
   /** `.option("branch", name)`: reads and writes target the named
@@ -232,7 +229,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // seam) — answer with the base chunk schema; reads of the missing
     // path still fail at scan time
     if (!exists(path))
-      new ChunkStore(spark, path).schema
+      ChunkStore.schema
     else {
       val mtf = mtfFor(path, branchOf(options))
       asOf(options, mtf).fold(mtf.currentSchema)(mtf.schemaAtVersion)
@@ -299,68 +296,16 @@ class GraftDataSource extends TableProvider with DataSourceRegister
           }
       }
     }
-    val branchOpt = branchOf(options)
-    val mtf = mtfFor(path, branchOpt)
-    val store = new ChunkStore(spark, path,
-      format = branchOpt.fold(ManifestTableFormat.factory)(
-        ManifestTableFormat.branchFactory))
+    val mtf = mtfFor(path, branchOf(options))
     val pin = asOf(options, mtf)
-    val filesDv = pin.fold(mtf.liveFilesWithDv)(mtf.filesWithDvAtVersion)
-    val files = filesDv.map(_._1)
-    val hasDv = filesDv.exists(_._2.isDefined)
-    val tblSchema = pin.fold(mtf.currentSchema)(mtf.schemaAtVersion)
+    val pinned = mtf.pinScan(pin)
     new graft.catalog.GraftTable(
-      s"graft.`$path`", spark, tblSchema, files,
-      insert = if (pin.isDefined) None else Some(store.append),
-      // a DELETION-VECTOR snapshot routes through dvInfo instead:
-      // DvColumnarRead substitutes the vectorized anti-join plan
-      // (with its own stats-driven file skipping); the V1 fallback
-      // covers rule-less sessions
-      statsPruner =
-        if (hasDv) None else Some(mtf.pruneFilesForScan(files, _)),
+      s"graft.`$path`", spark, pinned.schema, pinned.files,
+      insert = if (pin.isDefined) None else Some(mtf.append),
       overwriteHook = if (pin.isDefined) None else Some(mtf.overwrite),
       truncateHook =
         if (pin.isDefined) None else Some(() => mtf.truncate()),
-      dvInfo =
-        if (hasDv) {
-          val pinnedDv = filesDv.collect {
-            case (f, Some(dv)) => f -> dv.card }.toMap
-          Some(graft.plans.DvScanInfo(
-            filesDv, tblSchema, mtf.readPinned(_, tblSchema),
-            mtf.pruneFilesForScan(files, _),
-            ranges = Some(phys =>
-              mtf.fileColumnRanges(files, phys).map(_.map(r =>
-                r.copy(dvCard = pinnedDv.getOrElse(r.file, 0L))))),
-            liveRows = Some(() =>
-              mtf.fileTotalRowCounts(files).map(_.map {
-                case (f, n) => f -> (n - pinnedDv.getOrElse(f, 0L))
-              }))))
-        } else None,
-      rowsOf = Some(mtf.rowCountOf),
-      perFileRows =
-        if (pin.isDefined) None else Some(mtf.fileRowCounts),
-      perFileRanges =
-        if (pin.isDefined) None else Some(mtf.fileColumnRanges),
-      perFileStrBounds =
-        if (pin.isDefined) None else Some(mtf.stringMinMax),
-      // filtered metadata COUNT (see the catalog twin): pinned files
-      // + pinned DV cardinalities, immutable stats — time-travel-safe
-      metaCounts = {
-        val pinnedDv = filesDv.collect {
-          case (f, Some(dv)) => f -> dv.card }.toMap
-        Some((probes, targets) =>
-          mtf.filteredAggregates(files, pinnedDv, probes, targets))
-      },
-      colNdv = Some(() =>
-        mtf.ndvInfo.map(_._2).getOrElse(Map.empty)),
-      // live count from resolution-pinned DV cardinalities (see the
-      // catalog twin): immune to DV churn in the plan's lifetime
-      dvLiveRows =
-        if (pin.isDefined || !hasDv) None
-        else {
-          val pinnedDvCard = filesDv.flatMap(_._2).map(_.card).sum
-          Some(() => mtf.totalRowsOf(files).map(_ - pinnedDvCard))
-        },
+      pinned = Some(pinned),
       streamWrite =
         if (pin.isDefined) None
         else Some { inf =>

@@ -123,7 +123,7 @@ object DvTaxProbe {
       df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // the exact frame DvScanInfo.read produces, aggregated directly —
+    // the exact frame PinnedScan.read produces, aggregated directly —
     // separates "our reader is slow" from "the substitution context is"
     def pinnedOnce(): Double = {
       val df = agg(mtf.readPinned(mtf.liveFilesWithDv, store.schema))

@@ -126,6 +126,8 @@ object Bridge {
 
   /** Register a builder for `name` on an existing session (post-hoc; no
     * SparkSessionExtensions needed, so it works on any caller session).
+    * A name already bound to this very builder (`eq`) is left alone, so
+    * re-registering is free and logs no "replaced" warning.
     * Internal API: `sessionState.functionRegistry` (private[sql] on
     * the classic session) + `FunctionRegistry.registerFunction`.
     * Break mode: registry type/visibility change → compile error; the
@@ -138,7 +140,8 @@ object Bridge {
     val registry: FunctionRegistry =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.functionRegistry
-    val info = new ExpressionInfo("graft", name)
-    registry.registerFunction(FunctionIdentifier(name), info, builder)
+    val id = FunctionIdentifier(name)
+    if (!registry.lookupFunctionBuilder(id).exists(_ eq builder))
+      registry.registerFunction(id, new ExpressionInfo("graft", name), builder)
   }
 }

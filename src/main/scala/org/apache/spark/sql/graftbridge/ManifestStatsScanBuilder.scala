@@ -14,9 +14,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sink.ManifestTableFormat
-import graft.sink.ManifestTableFormat.StatsProbe
-import graft.sink.StatsProbes
+import graft.sink.{ManifestTableFormat, PinnedScan, StatsProbes}
 
 /** A parquet ScanBuilder for MANIFEST-format tables that consults the
   * log's per-file stats (url bloom + min/max, per-column min/max +
@@ -47,7 +45,7 @@ import graft.sink.StatsProbes
   * canonical rendering would not be the rendering the stats side used
   * and cross-representation rounding could invert an ordering. The
   * evaluation side
-  * ([[graft.sink.ManifestTableFormat.pruneFilesForScan]]) is
+  * ([[graft.sink.ManifestTableFormat!.pruneFilesForScan]]) is
   * fail-open on every absent/uncastable stat, and all original
   * predicates still reach the parquet scan (row-group pruning +
   * residual filters), so results equal the unpruned scan's.
@@ -92,8 +90,8 @@ final class RenamedScan(
   * broadcast join, and at execution calls [[filter]] with the build
   * side's actual key set as V2 `IN` predicates — BEFORE input
   * partitions are planned. We convert those predicates back to
-  * [[StatsProbe]]s and re-prune the FILE list through the same
-  * log-stats pruner the static path uses (url bloom + min/max), then
+  * stats probes and re-prune the FILE list through the pinned scan's
+  * pruner, the one the static path uses (url bloom + min/max), then
   * rebuild the parquet scan over the surviving subset.
   *
   * At 100 TB this is the difference between a selective
@@ -110,12 +108,9 @@ final class RenamedScan(
 final class ManifestRuntimeFilterScan(
     @volatile private var delegate: Scan,
     attrs: Seq[String],
-    typeOf: String => Option[(String, DataType)],
-    pruner: Seq[StatsProbe] => Option[Seq[String]],
+    pinned: PinnedScan,
     initialFiles: Seq[String],
-    rebuild: Seq[String] => Scan,
-    rowsOf: Option[Seq[String] => Option[Long]] = None,
-    colNdv: Option[() => Map[String, Long]] = None)
+    rebuild: Seq[String] => Scan)
     extends Scan with SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -159,22 +154,18 @@ final class ManifestRuntimeFilterScan(
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val base = Scans.statisticsOf(delegate)
-    val logRows: java.util.OptionalLong = rowsOf match {
-      case None => java.util.OptionalLong.empty()
-      case Some(f) =>
-        if (cachedRows.isEmpty) cachedRows = Some(
-          try f(files) catch { case scala.util.control.NonFatal(_) => None })
-        cachedRows.get.fold(java.util.OptionalLong.empty())(
-          java.util.OptionalLong.of)
-    }
+    if (cachedRows.isEmpty) cachedRows = Some(
+      try pinned.rowCount(files)
+      catch { case scala.util.control.NonFatal(_) => None })
+    val logRows: java.util.OptionalLong = cachedRows.get
+      .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     // ANALYZE-recorded NDV estimates (newest sidecar) as DSv2 column
     // statistics: the CBO's distinct-count input for join estimation.
     // Estimates as-of the analyzed version — correctness never depends
     // on them (exact lanes have their own fail-closed guards); empty
     // map when the table was never analyzed.
     val ndv: Map[String, Long] =
-      colNdv.fold(Map.empty[String, Long])(f =>
-        try f() catch { case scala.util.control.NonFatal(_) => Map.empty })
+      try pinned.ndv catch { case scala.util.control.NonFatal(_) => Map.empty }
     val colStats: java.util.Map[NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
       val m = new java.util.HashMap[NamedReference,
@@ -206,10 +197,10 @@ final class ManifestRuntimeFilterScan(
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val exprs = predicates.toSeq.flatMap(toCatalyst)
-    val probes = StatsProbes.extract(exprs, typeOf)
+    val probes = StatsProbes.extract(exprs, pinned.typeOf)
     received = predicates.toSeq.map(_.toString) ++
       Seq(s"exprs=$exprs", s"probes=$probes")
-    if (probes.nonEmpty) pruner(probes).foreach { keep =>
+    if (probes.nonEmpty) pinned.prune(probes).foreach { keep =>
       val keepSet = keep.toSet
       val subset = files.filter(keepSet.contains)
       if (subset.size < files.size) {
@@ -294,23 +285,16 @@ object Scans {
 class ManifestStatsScanBuilder(
     spark: SparkSession,
     tableName: String,
-    tableSchema: StructType,
-    paths: Seq[String],
-    options: CaseInsensitiveStringMap,
-    pruner: Seq[StatsProbe] => Option[Seq[String]],
-    rowsOf: Option[Seq[String] => Option[Long]] = None,
-    perFileRows: Option[Seq[String] => Option[Map[String, Long]]] = None,
-    perFileRanges: Option[(Seq[String], String) =>
-      Option[Seq[ManifestTableFormat.FileRange]]] = None,
-    perFileStrBounds: Option[(Seq[String], String) =>
-      Option[(Option[String], Option[String])]] = None,
-    colNdv: Option[() => Map[String, Long]] = None)
+    pinned: PinnedScan,
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit
     with SupportsPushDownTopN {
+
+  private val tableSchema = pinned.schema
 
   // logical → physical (lower-cased logical key); identity when the
   // table was never renamed
@@ -343,25 +327,18 @@ class ManifestStatsScanBuilder(
       .newScanBuilder(options)
       .asInstanceOf[FileScanBuilder]
 
-  private var inner: FileScanBuilder = mk(paths)
+  private var inner: FileScanBuilder = mk(pinned.files)
   // state needed to rebuild the scan over a runtime-pruned file list
-  private var currentFiles: Seq[String] = paths
+  private var currentFiles: Seq[String] = pinned.files
   private var pushedLogical: Seq[Expression] = Nil
   private var requiredLogical: Option[StructType] = None
   private var aggPushed = false
 
-  /** Probe names are PHYSICAL — that is how the stats were recorded,
-    * and renames never invalidate them.
-    */
-  private def typeOf(name: String): Option[(String, DataType)] =
-    tableSchema.fields.find(_.name.equalsIgnoreCase(name))
-      .map(f => (ManifestTableFormat.physicalName(f), f.dataType))
-
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     pushedLogical = filters
-    val probes = StatsProbes.extract(filters, typeOf)
+    val probes = StatsProbes.extract(filters, pinned.typeOf)
     if (probes.nonEmpty)
-      pruner(probes).foreach { files =>
+      pinned.prune(probes).foreach { files =>
         currentFiles = files
         inner = mk(files)
       }
@@ -423,8 +400,8 @@ class ManifestStatsScanBuilder(
     // are already aggregates, not the join's probe rows
     val attrs = runtimeFilterable(base.readSchema())
     if (aggPushed || attrs.isEmpty) base
-    else new ManifestRuntimeFilterScan(base, attrs, typeOf,
-      pruner, currentFiles, buildOver, rowsOf, colNdv)
+    else new ManifestRuntimeFilterScan(base, attrs, pinned, currentFiles,
+      buildOver)
   }
 
   // aggregate pushdown, two lanes in preference order:
@@ -532,41 +509,39 @@ class ManifestStatsScanBuilder(
     if (pushedLogical.nonEmpty) return None
     if (aggregation.groupByExpressions().nonEmpty)
       return tryGroupedLogAggregate(aggregation)
-    if (perFileRanges.isEmpty || perFileRows.isEmpty) return None
     val rangeCache = scala.collection.mutable.Map[
       String, Option[Seq[ManifestTableFormat.FileRange]]]()
     // DV'd files refuse the lane: recorded counts/bounds include
-    // deleted rows (COUNT(*) alone stays exact via perFileRows' live
+    // deleted rows (COUNT(*) alone stays exact via the live row
     // counts, which is why it reads those, not ranges)
     def rangesFor(phys: String) = rangeCache.getOrElseUpdate(phys,
-      perFileRanges.flatMap(_(currentFiles, phys))
-        .filter(_.forall(_.dvCard == 0L)))
-    // STRING extrema (protocol v7 exact-bounds marker): one provider
-    // call per column serves both MIN and MAX; DV'd / unmarked /
-    // truncated files refuse inside the provider
+      pinned.ranges(currentFiles, phys).filter(_.forall(_.dvCard == 0L)))
+    // STRING extrema (protocol v7 exact-bounds marker): one lookup per
+    // column serves both MIN and MAX; DV'd / unmarked / truncated
+    // files refuse inside it
     val strCache = scala.collection.mutable.Map[
       String, Option[(Option[String], Option[String])]]()
     def strBoundsFor(phys: String) = strCache.getOrElseUpdate(phys,
-      perFileStrBounds.flatMap(_(currentFiles, phys)))
+      pinned.strBounds(currentFiles, phys))
     val fields = Seq.newBuilder[StructField]
     val values = Seq.newBuilder[Any]
     aggregation.aggregateExpressions().foreach {
       case _: CountStar =>
-        val total = perFileRows.flatMap(_(currentFiles))
+        val total = pinned.liveRows(currentFiles)
           .getOrElse(return None).values.sum
         fields += StructField("count_star",
           org.apache.spark.sql.types.LongType, nullable = false)
         values += total
       case c: Count if !c.isDistinct =>
         val name = singleCol(c.column).getOrElse(return None)
-        val (phys, _) = typeOf(name).getOrElse(return None)
+        val (phys, _) = pinned.typeOf(name).getOrElse(return None)
         val rs = rangesFor(phys).getOrElse(return None)
         fields += StructField(s"count_$name",
           org.apache.spark.sql.types.LongType, nullable = false)
         values += rs.map(r => r.rows - r.nulls).sum
       case m: Min =>
         val name = singleCol(m.column).getOrElse(return None)
-        val (phys, dt) = typeOf(name).getOrElse(return None)
+        val (phys, dt) = pinned.typeOf(name).getOrElse(return None)
         fields += StructField(s"min_$name", dt, nullable = true)
         if (dt.isInstanceOf[StringType])
           values += strBoundsFor(phys).getOrElse(return None)._1
@@ -581,7 +556,7 @@ class ManifestStatsScanBuilder(
         }
       case m: Max =>
         val name = singleCol(m.column).getOrElse(return None)
-        val (phys, dt) = typeOf(name).getOrElse(return None)
+        val (phys, dt) = pinned.typeOf(name).getOrElse(return None)
         fields += StructField(s"max_$name", dt, nullable = true)
         if (dt.isInstanceOf[StringType])
           values += strBoundsFor(phys).getOrElse(return None)._2
@@ -611,19 +586,18 @@ class ManifestStatsScanBuilder(
     * files. Fail-open mirror of the ungrouped lane: any pushed
     * filter, multi-column or expression grouping, a file spanning
     * values or mixing nulls with values, a DV'd or stats-less file
-    * (refused inside `fileColumnRanges`), or a non-exact-kind column
+    * (refused on its `dvCard`), or a non-exact-kind column
     * falls through to the scan. Complete pushdown's row contract:
     * grouping columns FIRST in the schema, then the aggregates, one
     * row per group, each group exactly once.
     */
   private def tryGroupedLogAggregate(aggregation: Aggregation)
       : Option[(StructType, Seq[GenericInternalRow])] = {
-    if (perFileRanges.isEmpty || perFileRows.isEmpty) return None
     val groupCol = aggregation.groupByExpressions() match {
       case Array(one) => singleCol(one).getOrElse(return None)
       case _ => return None
     }
-    val (gPhys, gDt) = typeOf(groupCol).getOrElse(return None)
+    val (gPhys, gDt) = pinned.typeOf(groupCol).getOrElse(return None)
     if (!exactKind(gDt)) return None
     val rangeCache = scala.collection.mutable.Map[
       String, Option[Seq[ManifestTableFormat.FileRange]]]()
@@ -631,8 +605,7 @@ class ManifestStatsScanBuilder(
     // (counts AND extrema) is over recorded stats that include
     // deleted rows
     def rangesFor(phys: String) = rangeCache.getOrElseUpdate(phys,
-      perFileRanges.flatMap(_(currentFiles, phys))
-        .filter(_.forall(_.dvCard == 0L)))
+      pinned.ranges(currentFiles, phys).filter(_.forall(_.dvCard == 0L)))
     val gRanges = rangesFor(gPhys).getOrElse(return None)
     if (gRanges.size != currentFiles.size) return None
     // group key per file: its single value, or the NULL group —
@@ -661,7 +634,7 @@ class ManifestStatsScanBuilder(
           rs => rs.map(_.rows).sum))
       case c: Count if !c.isDistinct =>
         val name = singleCol(c.column).getOrElse(return None)
-        val (phys, _) = typeOf(name).getOrElse(return None)
+        val (phys, _) = pinned.typeOf(name).getOrElse(return None)
         if (rangesFor(phys).isEmpty) return None
         fields += StructField(s"count_$name",
           org.apache.spark.sql.types.LongType, nullable = false)
@@ -669,7 +642,7 @@ class ManifestStatsScanBuilder(
           rs => rs.map(r => r.rows - r.nulls).sum))
       case m: Min =>
         val name = singleCol(m.column).getOrElse(return None)
-        val (phys, dt) = typeOf(name).getOrElse(return None)
+        val (phys, dt) = pinned.typeOf(name).getOrElse(return None)
         if (!exactKind(dt) || rangesFor(phys).isEmpty) return None
         fields += StructField(s"min_$name", dt, nullable = true)
         folds += ((s"min_$name", Seq(phys), rs => {
@@ -679,7 +652,7 @@ class ManifestStatsScanBuilder(
         }))
       case m: Max =>
         val name = singleCol(m.column).getOrElse(return None)
-        val (phys, dt) = typeOf(name).getOrElse(return None)
+        val (phys, dt) = pinned.typeOf(name).getOrElse(return None)
         if (!exactKind(dt) || rangesFor(phys).isEmpty) return None
         fields += StructField(s"max_$name", dt, nullable = true)
         folds += ((s"max_$name", Seq(phys), rs => {
@@ -723,9 +696,7 @@ class ManifestStatsScanBuilder(
     */
   override def pushLimit(limit: Int): Boolean = {
     if (limit <= 0 || aggPushed || pushedLogical.nonEmpty) return false
-    val counts = perFileRows.flatMap(_(currentFiles)).getOrElse {
-      return false
-    }
+    val counts = pinned.liveRows(currentFiles).getOrElse(return false)
     var acc = 0L
     val keep = Seq.newBuilder[String]
     val it = currentFiles.iterator
@@ -776,11 +747,11 @@ class ManifestStatsScanBuilder(
         n.fieldNames()(0)
       case _ => return false
     }
-    val (physName, dt) = typeOf(colName).getOrElse(return false)
+    val (physName, dt) = pinned.typeOf(colName).getOrElse(return false)
     if (!StatsProbes.statsOrderedKind(dt) ||
       dt.isInstanceOf[org.apache.spark.sql.types.BooleanType])
       return false
-    val ranges = perFileRanges.flatMap(_(currentFiles, physName))
+    val ranges = pinned.ranges(currentFiles, physName)
       .getOrElse(return false)
     if (ranges.isEmpty) return false
 

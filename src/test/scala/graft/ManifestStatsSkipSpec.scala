@@ -786,4 +786,95 @@ class ManifestStatsSkipSpec extends SparkSpec
       "DESC NULLS LAST LIMIT 5 must plan only the top-range file " +
         "(null rows sort last, low file provably after top-5)")
   }
+
+  /** Result of `body` and the Spark jobs this thread launched in it. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val key = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag))
+          started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, started.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("planner stats lanes give the same answers from the log tail " +
+      "and from a parquet checkpoint; the tail launches no job") {
+    val (cat, wh) = freshCatalog()
+    val store = new ChunkStore(spark, s"$wh/t",
+      format = ManifestTableFormat.factory)
+    store.append(batch(0 until 10, i => i))
+    store.append(batch(10 until 20, i => i))
+    store.append(batch(20 until 30, i => i))
+    val mtf = new ManifestTableFormat(spark, s"$wh/t", store.schema)
+
+    // each lane: (planning jobs, answer); planning is where the lanes
+    // consult the stats lookup, and each asserts that its lane fired
+    def pass(): Seq[(String, Int, Any)] = {
+      def logAnswered(sql: String) = {
+        val q = spark.sql(sql)
+        val (plan, jobs) = jobsDuring(q.queryExecution.executedPlan.toString)
+        assert((plan.contains("GraftLogStatsAggScan") ||
+          plan.contains("LocalTableScan")) && !plan.contains("BatchScan"),
+          s"$sql must be log-answered:\n$plan")
+        (sql, jobs, q.collect().toSeq)
+      }
+      def trimmed(sql: String, files: Int) = {
+        val q = spark.sql(sql)
+        val (_, jobs) = jobsDuring(q.queryExecution.executedPlan)
+        assert(plannedFiles(q) == files, s"$sql must plan $files file(s)")
+        (sql, jobs, q.collect().toSeq)
+      }
+      val cbo = {
+        val q = spark.sql(s"SELECT * FROM $cat.t")
+        val (rows, jobs) = jobsDuring {
+          val scan = collectWithSubqueries(q.queryExecution.executedPlan) {
+            case b: org.apache.spark.sql.execution.datasources.v2
+                .BatchScanExec => b.scan
+          }.head
+          assert(scan.isInstanceOf[org.apache.spark.sql.graftbridge
+            .ManifestRuntimeFilterScan])
+          scan.asInstanceOf[org.apache.spark.sql.connector.read
+            .SupportsReportStatistics].estimateStatistics().numRows()
+        }
+        assert(rows.isPresent, "the log must answer the CBO's numRows")
+        ("numRows", jobs, rows.getAsLong)
+      }
+      Seq(
+        logAnswered(s"SELECT count(*), min(page_number), " +
+          s"max(page_number), count(page_number) FROM $cat.t"),
+        logAnswered(s"SELECT min(chunk_text), max(chunk_text) FROM $cat.t"),
+        trimmed(s"SELECT * FROM $cat.t LIMIT 7", 1),
+        trimmed(s"SELECT page_number FROM $cat.t " +
+          "ORDER BY page_number DESC LIMIT 12", 2),
+        cbo)
+    }
+
+    val tail = pass()
+    tail.foreach { case (lane, jobs, _) =>
+      assert(jobs == 0, s"$lane: the log tail must answer without a " +
+        s"Spark job, planning launched $jobs")
+    }
+    mtf.checkpoint()
+    val ckpt = pass()
+    ckpt.foreach { case (lane, jobs, _) =>
+      assert(jobs > 0, s"$lane: after a checkpoint the lookup reads " +
+        "the stats frame")
+    }
+    assert(tail.map(t => (t._1, t._3)) == ckpt.map(t => (t._1, t._3)))
+    assert(tail.last._3 == 30L)
+  }
 }

@@ -625,6 +625,30 @@ class StreamingSpec extends SparkSpec {
     assert(n > 0.9 && n < 1.1)
   }
 
+  test("a second GraftSession.install leaves the function registry " +
+      "untouched") {
+    import org.apache.spark.sql.graftbridge.TestSessions
+    val s2 = TestSessions.vanilla(spark)
+    try {
+      GraftSession.install(s2)
+      val names = GraftExtensions.functions.map(_._1)
+      val first = names.map(n => n -> TestSessions.registered(s2, n).get)
+      // ours: the builders of the one registration list
+      GraftExtensions.functions.foreach { case (n, b) =>
+        assert(first.toMap.apply(n)._2 eq b, s"$n not bound to our builder")
+      }
+      GraftSession.install(s2)
+      first.foreach { case (n, (info, builder)) =>
+        val (info2, builder2) = TestSessions.registered(s2, n).get
+        assert((info2 eq info) && (builder2 eq builder),
+          s"re-install replaced the registry entry of $n")
+      }
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("spark.sql.extensions alone registers the whole function surface") {
     // no GraftSession.install: the typed aggregates must come from the
     // extension's registration list like every other function

@@ -65,6 +65,32 @@ class ManifestInternalsSpec extends SparkSpec {
     assert(store.read().count() == 30)
   }
 
+  test("the checkpoint-frame memo holds at most one directory per " +
+      "table: three checkpoints and a vacuum leave the newest") {
+    val path = freshPath()
+    val store = new ChunkStore(spark, path,
+      format = ManifestTableFormat.factory)
+    val mtf = new ManifestTableFormat(spark, path, store.schema)
+    val logDir = new Path(path, "_log").toUri.getPath
+    def held = ManifestTableFormat.memoizedCheckpoints(spark)
+      .filter(_._1.toUri.getPath == logDir).map(_._2.getName)
+    val ckptVersions = (1 to 3).map { i =>
+      store.append(chunkRows(i * 10 until i * 10 + 10, "m").repartition(1))
+      mtf.checkpoint()
+      assert(mtf.liveFiles.size == i) // replay reads the checkpoint
+      assert(held == Seq(f"${mtf.version}%012d.checkpoint.parquet"),
+        s"after checkpoint $i the memo holds $held")
+      mtf.version
+    }
+    // a time-travel read of an older checkpoint is served uncached
+    assert(mtf.readVersion(ckptVersions.head).count() == 10)
+    assert(held == Seq(f"${ckptVersions.last}%012d.checkpoint.parquet"))
+    mtf.vacuum()
+    assert(held.size <= 1 && held.forall(_ ==
+      f"${ckptVersions.last}%012d.checkpoint.parquet"), s"memo: $held")
+    assert(store.read().count() == 30)
+  }
+
   test("protocol v1 (url-set add-actions) logs stay readable; stats " +
       "are synthesized and point reads still prune") {
     val path = freshPath()

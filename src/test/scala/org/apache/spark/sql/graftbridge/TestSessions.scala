@@ -29,4 +29,18 @@ object TestSessions {
       new java.util.HashMap[String, String]())
     finally prev.fold(conf.remove(key))(conf.set(key, _))
   }
+
+  /** The registry entry bound to `name`: its info and builder. */
+  def registered(spark: SparkSession, name: String): Option[(
+      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.spark.sql.catalyst.expressions.Expression)] = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic
+      .SparkSession].sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+    for {
+      info <- registry.lookupFunction(id)
+      builder <- registry.lookupFunctionBuilder(id)
+    } yield (info, builder)
+  }
 }
