@@ -116,7 +116,7 @@ object VectorQueries {
     // that may hold a probed url. The result must equal a plain filter
     // over the source table exactly — including an absent probe url
     // returning nothing (bloom false positives widen the file list;
-    // the residual semi-join keeps rows identical). ManifestFormatSpec
+    // the residual `isin` filter keeps rows identical). ManifestFormatSpec
     // pins that the read touches a strict file subset.
     "b5b_store_pruned_lookup" -> QueryDef(
       """SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS document_url,

@@ -119,15 +119,20 @@ final class ChunkStore(
   def documentCatalog(): DataFrame = read().select("document_url").distinct()
 
   /** Multi-document read, pruned to the files whose logged url stats
-    * may hold a probed url; a residual semi-join keeps the result
-    * identical to a full scan-and-filter.
+    * may hold a probed url (the urls tested as literals; no Spark job
+    * picks the files of a table without a parquet checkpoint); a
+    * residual `isin` filter keeps the result identical to a full
+    * scan-and-filter.
     */
   def readDocuments(urls: Seq[String]): DataFrame =
     if (urls.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else fmt.readDocuments(urls)
 
-  /** B5: single-document read — the same file pruning. */
+  /** B5: single-document read — the same file pruning: one Spark job,
+    * the read of the selected files, on a table without a parquet
+    * checkpoint.
+    */
   def readDocument(url: String): DataFrame = fmt.readDocuments(Seq(url))
 
   def read(): DataFrame = fmt.read()

@@ -1575,12 +1575,21 @@ class ManifestTableFormat(
     fs.makeQualified(target).toString
   }
 
-  /** Files whose stats say they MAY hold any of `probe`'s urls: the
-    * stats frame joins the broadcast distinct url-hash frame; min/max
-    * range + bloom membership filter the pairs; only surviving file
-    * names are collected. No false negatives (a file holding a probed
-    * url always survives its own bloom); false positives cost one
-    * extra file rewrite/read. `probe` must have a `document_url`
+  /** The url half of the per-file stats test: `u` lies within the
+    * file's min/max url and its hash `h` passes the file's url bloom.
+    * No false negatives (a file holding a url passes its own bloom);
+    * a false positive costs one extra file read or rewrite.
+    */
+  private def urlMayHold(u: Column, h: Column): Column =
+    u >= col("lo") && u <= col("hi") &&
+      Layout.bloomTestOn(col("bits"), h, col("num_bits"), col("num_hashes"))
+
+  /** Files whose stats say they MAY hold any of `probe`'s urls, for a
+    * url set that stays a Spark frame (frame-keyed deletes, MERGE INTO's
+    * url probe, a keyed upsert past [[ManifestTableFormat.mergeKeyPruneCap]]
+    * urls): the stats frame joins the broadcast distinct url-hash
+    * frame, [[urlMayHold]] filters the pairs, and only the surviving
+    * file names are collected. `probe` must have a `document_url`
     * column.
     */
   private def affectedFiles(snap: Snapshot, probe: DataFrame): Seq[String] = {
@@ -1590,10 +1599,31 @@ class ManifestTableFormat(
         xxhash64(col("document_url")).as("h"))
       .distinct()
     statsFrame(snap).join(broadcast(hashes))
-      .filter(col("u") >= col("lo") && col("u") <= col("hi"))
-      .filter(Layout.bloomTest)
+      .filter(urlMayHold(col("u"), col("h")))
       .select("file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
+  }
+
+  /** Files whose stats say they MAY hold any of `urls`, for a url set
+    * already on the driver (point reads, `delete(Seq)`, a keyed upsert
+    * up to [[ManifestTableFormat.mergeKeyPruneCap]] urls): the urls
+    * enter the stats-frame filter as ONE literal array of
+    * (url, xxhash64) pairs, hashed here, and [[urlMayHold]] is tested
+    * inside an `exists` lambda. Over a checkpoint-less snapshot the
+    * stats frame is a driver-local relation, so Catalyst folds the
+    * filter at optimization time and no Spark job runs; with a parquet
+    * checkpoint it is one narrow scan with no shuffle. Null urls match
+    * no file.
+    */
+  private[sink] def urlFiles(snap: Snapshot, urls: Seq[String]): Seq[String] = {
+    val probes = urls.filter(_ != null).distinct
+      .map(u => (u, ManifestTableFormat.stringHash(u)))
+    if (probes.isEmpty) return Seq.empty
+    statsFrame(snap)
+      .filter(exists(typedLit(probes),
+        p => urlMayHold(p.getField("_1"), p.getField("_2"))))
+      .select("file")
+      .collect().map(_.getString(0)).toSeq.distinct.sorted
   }
 
   // ---- column skipping stats (write side) ---------------------------
@@ -1962,6 +1992,14 @@ class ManifestTableFormat(
 
   // ---- the document-keyed operations ChunkStore routes here ---------
 
+  /** Keyed upsert: one commit replaces every document in `rows`.
+    * File selection takes the batch's distinct urls to the driver, up
+    * to [[ManifestTableFormat.mergeKeyPruneCap]] of them, and tests
+    * them as literals ([[urlFiles]]); a larger batch keeps the frame
+    * join ([[affectedFiles]]). The survivor rewrite anti-joins the
+    * broadcast url frame; an all-new batch selects no file and writes
+    * just the incoming rows.
+    */
   def merge(rows: DataFrame): Unit = {
     requireUrlKey("keyed upsert (merge by document_url)")
     // conform up-front (prunes pipeline working columns before the
@@ -1970,24 +2008,39 @@ class ManifestTableFormat(
     val incoming = conform(rows, currentSchema).persist()
     try {
       // no isEmpty pre-evaluation (the append() rule): an empty
-      // source yields an empty probe, zero affected files, an empty
-      // rewrite-union, zero add-actions, and commitCycle returns
-      // without committing — identical outcome, one full evaluation
-      // of the source saved on every upsert
-      val probe = incoming.select("document_url").distinct().persist()
-      try commitCycle(
-        snap => affectedFiles(snap, probe),
-        (snap, files) => readLive(snap, files)
-          .join(broadcast(probe), Seq("document_url"), "left_anti")
-          .unionByName(conform(incoming, snap.tableSchema)))
-      finally probe.unpersist()
+      // source yields no url, zero affected files, an empty rewrite,
+      // zero add-actions, and commitCycle returns without committing
+      val probe = incoming.select("document_url").distinct()
+      val cap = ManifestTableFormat.mergeKeyPruneCap
+      val urls = Some(probe.limit(cap + 1).collect()
+        .map(_.getString(0)).toSeq).filter(_.size <= cap)
+      commitCycle(
+        snap => urls.fold(affectedFiles(snap, probe))(urlFiles(snap, _)),
+        (snap, files) => {
+          val fresh = conform(incoming, snap.tableSchema)
+          if (files.isEmpty) fresh
+          else survivors(snap, files, probe).unionByName(fresh)
+        })
     } finally incoming.unpersist()
   }
 
+  /** The rows of `files` whose url is not in `probe`: an anti-join
+    * against the broadcast url frame, never url In-literals.
+    */
+  private def survivors(
+      snap: Snapshot, files: Seq[String], probe: DataFrame): DataFrame =
+    if (files.isEmpty) emptyFrame(snap.tableSchema)
+    else readLive(snap, files)
+      .join(broadcast(probe), Seq("document_url"), "left_anti")
+
+  /** Deletes the given documents; file selection tests the urls as
+    * literals ([[urlFiles]]), the rewrite is the frame path's.
+    */
   def delete(documentUrls: Seq[String]): Unit = {
     if (documentUrls.isEmpty) return
     import spark.implicits._
-    delete(documentUrls.distinct.toDF("document_url"))
+    val urls = documentUrls.distinct
+    deleteKeyed(urls.toDF("document_url"), Some(urls))
   }
 
   /** Frame-native delete — the url set stays a Spark frame end-to-end:
@@ -1999,7 +2052,14 @@ class ManifestTableFormat(
     * churn-scale by contract (they must also fit the per-file bloom
     * probe), and the hint is that contract's documented memory bound.
     */
-  def delete(urls: DataFrame): Unit = {
+  def delete(urls: DataFrame): Unit = deleteKeyed(urls, None)
+
+  /** The two deletes' shared body: `onDriver` holds the urls when the
+    * caller passed them as a driver Seq (file selection by literals),
+    * `None` keeps selection a frame join.
+    */
+  private def deleteKeyed(
+      urls: DataFrame, onDriver: Option[Seq[String]]): Unit = {
     requireUrlKey("document-keyed delete")
     if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
       deleteDocumentsDv(urls)
@@ -2012,9 +2072,8 @@ class ManifestTableFormat(
     // and commitCycle returns without committing — identical outcome,
     // one evaluation of the url set saved on every delete
     try commitCycle(
-      snap => affectedFiles(snap, probe),
-      (snap, files) => readLive(snap, files)
-        .join(broadcast(probe), Seq("document_url"), "left_anti"))
+      snap => onDriver.fold(affectedFiles(snap, probe))(urlFiles(snap, _)),
+      (snap, files) => survivors(snap, files, probe))
     finally probe.unpersist()
   }
 
@@ -2121,9 +2180,11 @@ class ManifestTableFormat(
     * source names), taken from top-level `=` / `<=>` conjuncts whose
     * one side is a single `__graft_t.<col>` reference and whose other
     * side references only `__graft_s.<col>` attributes (or none —
-    * literals). Fail-open: any unrecognized shape contributes nothing.
+    * literals). Target fields resolve against `schema`, the schema of
+    * the snapshot the keys prune. Fail-open: any unrecognized shape
+    * contributes nothing.
     */
-  private def mergeOnKeyExprs(onCond: Column)
+  private def mergeOnKeyExprs(onCond: Column, schema: StructType)
       : Seq[(StructField, Column)] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
@@ -2151,7 +2212,7 @@ class ManifestTableFormat(
     })
     def pair(l: Expression, r: Expression): Option[(StructField, Column)] =
       targetCol(l).filter(_ => sourceOnly(r)).flatMap(n =>
-        currentSchema.fields.find(_.name.equalsIgnoreCase(n))
+        schema.fields.find(_.name.equalsIgnoreCase(n))
           .map(_ -> unqualify(r)))
     val expr =
       try org.apache.spark.sql.graftbridge.Bridge.expression(spark, onCond)
@@ -2191,11 +2252,12 @@ class ManifestTableFormat(
       onCond: Column): Seq[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{In, Literal}
-    val keys = mergeOnKeyExprs(onCond).filter { case (f, c) =>
-      // same-type keys only: a differently-typed source key would
-      // need the join's implicit-cast semantics reproduced exactly
-      try src.select(c).schema.head.dataType == f.dataType
-      catch { case scala.util.control.NonFatal(_) => false }
+    val keys = mergeOnKeyExprs(onCond, snap.tableSchema).filter {
+      case (f, c) =>
+        // same-type keys only: a differently-typed source key would
+        // need the join's implicit-cast semantics reproduced exactly
+        try src.select(c).schema.head.dataType == f.dataType
+        catch { case scala.util.control.NonFatal(_) => false }
     }
     if (keys.isEmpty) return names
     val cap = ManifestTableFormat.mergeKeyPruneCap
@@ -3677,21 +3739,17 @@ class ManifestTableFormat(
   }
 
   /** Point/multi-document reads prune to the files whose stats MAY
-    * hold a probed url (bloom + min/max from log metadata — no data
-    * read beyond the surviving files). Probabilistic in the
-    * cheap direction only: a false positive reads one extra file; the
-    * residual semi-join keeps the result identical to a full
-    * scan-and-filter.
+    * hold a probed url ([[urlFiles]]: the urls as literals over the
+    * log's bloom + min/max, no Spark job on a checkpoint-less table).
+    * Probabilistic in the cheap direction only: a false positive
+    * reads one extra file; the residual `isin` filter keeps the
+    * result identical to a full scan-and-filter.
     */
   def readDocuments(urls: Seq[String]): DataFrame = {
     requireUrlKey("document point read")
-    import spark.implicits._
-    val probe = urls.distinct.toDF("document_url")
     val snap = snapshot()
-    val files = affectedFiles(snap, probe)
-    readLive(snap, files)
-      .join(broadcast(probe), Seq("document_url"), "left_semi")
-      .select(snap.tableSchema.fieldNames.map(col).toIndexedSeq: _*)
+    readLive(snap, urlFiles(snap, urls))
+      .filter(col("document_url").isin(urls: _*))
   }
 
   /** The surviving commit history, oldest first — one row per
@@ -4205,10 +4263,7 @@ class ManifestTableFormat(
         case _: ArithmeticException | _: NumberFormatException => None
       }
     }
-    def hashStr(s: String): Option[Long] = Some(
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType, 42L))
+    def hashStr(s: String): Option[Long] = Some(stringHash(s))
 
     val survive = probes.collect {
       case NumRange(c, loB, hiB) =>
@@ -4948,6 +5003,15 @@ object ManifestTableFormat {
     * before).
     */
   private[sink] val mergeKeyPruneCap = 10000
+
+  /** `xxhash64(s)` for a string, computed on the driver — the value
+    * Spark's `xxhash64` gives the same string column, which is what
+    * the url and per-column string blooms record.
+    */
+  private[sink] def stringHash(s: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s),
+      org.apache.spark.sql.types.StringType, 42L)
 
   /** String column stats keep at most this many chars; a longer max
     * is bounded upward by appending U+10FFFF (see [[truncHi]]).

@@ -56,7 +56,10 @@ object JobProfile {
     val t0 = System.nanoTime()
     fn(spark, dir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // let the listener bus drain
+    // every job-end event delivered before the listing: the counts
+    // of two runs of the same code are then identical
+    org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
 
     import scala.jdk.CollectionConverters._
     val recs = jobs.values.asScala.toSeq.sortBy(_.start)

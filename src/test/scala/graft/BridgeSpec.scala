@@ -106,4 +106,24 @@ class BridgeSpec extends SparkSpec {
     assert(spark.sql("SELECT bridge_canary_fn(41) AS v")
       .head().getInt(0) == 42)
   }
+
+  test("canary: drainListenerBus() delivers a job's end event before " +
+      "it returns (SparkContext.listenerBus.waitUntilEmpty)") {
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        // a slow listener: without the drain the count reads 0
+        Thread.sleep(200)
+        ended.incrementAndGet()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.parallelize(1 to 4, 2).count()
+      Bridge.drainListenerBus(sc)
+      assert(ended.get >= 1)
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -787,30 +787,6 @@ class ManifestStatsSkipSpec extends SparkSpec
         "(null rows sort last, low file provably after top-5)")
   }
 
-  /** Result of `body` and the Spark jobs this thread launched in it. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val key = "graft.spec.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag))
-          started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    sc.setLocalProperty(key, tag)
-    try {
-      val out = body
-      org.apache.spark.TestBus.drain(sc)
-      (out, started.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("planner stats lanes give the same answers from the log tail " +
       "and from a parquet checkpoint; the tail launches no job") {
     val (cat, wh) = freshCatalog()
