@@ -119,10 +119,12 @@ final class ChunkStore(
   def documentCatalog(): DataFrame = read().select("document_url").distinct()
 
   /** Multi-document read, pruned to the files whose logged url stats
-    * may hold a probed url (the urls tested as literals; no Spark job
-    * picks the files of a table without a parquet checkpoint); a
-    * residual `isin` filter keeps the result identical to a full
-    * scan-and-filter.
+    * may hold a probed url. Up to
+    * [[ManifestTableFormat.literalProbePairs]] url × log-tail-file
+    * pairs the urls are tested as literals, and no Spark job picks the
+    * files of a table without a parquet checkpoint; past it, a url
+    * frame join picks them. A residual filter keeps the result
+    * identical to a full scan-and-filter.
     */
   def readDocuments(urls: Seq[String]): DataFrame =
     if (urls.isEmpty)
@@ -131,7 +133,8 @@ final class ChunkStore(
 
   /** B5: single-document read — the same file pruning: one Spark job,
     * the read of the selected files, on a table without a parquet
-    * checkpoint.
+    * checkpoint (and a log tail of at most
+    * [[ManifestTableFormat.literalProbePairs]] files).
     */
   def readDocument(url: String): DataFrame = fmt.readDocuments(Seq(url))
 

@@ -1586,11 +1586,11 @@ class ManifestTableFormat(
 
   /** Files whose stats say they MAY hold any of `probe`'s urls, for a
     * url set that stays a Spark frame (frame-keyed deletes, MERGE INTO's
-    * url probe, a keyed upsert past [[ManifestTableFormat.mergeKeyPruneCap]]
-    * urls): the stats frame joins the broadcast distinct url-hash
-    * frame, [[urlMayHold]] filters the pairs, and only the surviving
-    * file names are collected. `probe` must have a `document_url`
-    * column.
+    * url probe) or is too large to fold ([[selectsByLiterals]]): the
+    * stats frame joins the broadcast distinct url-hash frame,
+    * [[urlMayHold]] filters the pairs on the executors, and only the
+    * surviving file names are collected. `probe` must have a
+    * `document_url` column.
     */
   private def affectedFiles(snap: Snapshot, probe: DataFrame): Seq[String] = {
     if (isLiveEmpty(snap)) return Seq.empty
@@ -1605,15 +1605,14 @@ class ManifestTableFormat(
   }
 
   /** Files whose stats say they MAY hold any of `urls`, for a url set
-    * already on the driver (point reads, `delete(Seq)`, a keyed upsert
-    * up to [[ManifestTableFormat.mergeKeyPruneCap]] urls): the urls
-    * enter the stats-frame filter as ONE literal array of
-    * (url, xxhash64) pairs, hashed here, and [[urlMayHold]] is tested
-    * inside an `exists` lambda. Over a checkpoint-less snapshot the
-    * stats frame is a driver-local relation, so Catalyst folds the
-    * filter at optimization time and no Spark job runs; with a parquet
-    * checkpoint it is one narrow scan with no shuffle. Null urls match
-    * no file.
+    * already on the driver and small enough to fold
+    * ([[selectsByLiterals]]): the urls enter the stats-frame filter as
+    * ONE literal array of (url, xxhash64) pairs, hashed here, and
+    * [[urlMayHold]] is tested inside an `exists` lambda. Over a
+    * checkpoint-less snapshot the stats frame is a driver-local
+    * relation, so Catalyst folds the filter at optimization time and
+    * no Spark job runs; with a parquet checkpoint it is one narrow
+    * scan with no shuffle. Null urls match no file.
     */
   private[sink] def urlFiles(snap: Snapshot, urls: Seq[String]): Seq[String] = {
     val probes = urls.filter(_ != null).distinct
@@ -1625,6 +1624,31 @@ class ManifestTableFormat(
       .select("file")
       .collect().map(_.getString(0)).toSeq.distinct.sorted
   }
+
+  /** Whether `n` urls held on the driver select their files by
+    * literals ([[urlFiles]]) on `snap`. Over the log tail Catalyst
+    * folds the literal filter interpreted, on one driver thread, at
+    * 0.5–0.9 µs per (url, tail file) pair, while the frame join
+    * ([[affectedFiles]]) spends 170–380 ms on three job launches and
+    * about 0.3 µs per pair on the executors (local[4], 4-vCPU VM; the
+    * two meet near 3·10⁵ pairs). So the literals take at most
+    * [[ManifestTableFormat.literalProbePairs]] pairs, and at most
+    * [[ManifestTableFormat.mergeKeyPruneCap]] urls (the plan carries
+    * every one). Checkpointed files do not count: their pairs are
+    * tested on the executors either way.
+    */
+  private def selectsByLiterals(snap: Snapshot, n: Int): Boolean =
+    n <= ManifestTableFormat.mergeKeyPruneCap &&
+      n.toLong * snap.base.size <= ManifestTableFormat.literalProbePairs
+
+  /** Files that may hold a url of `probe`: by literals when the same
+    * urls are on the driver (`onDriver`) and [[selectsByLiterals]]
+    * admits them, by the frame join otherwise.
+    */
+  private def keyedFiles(snap: Snapshot, onDriver: Option[Seq[String]],
+      probe: DataFrame): Seq[String] =
+    onDriver.filter(u => selectsByLiterals(snap, u.size))
+      .fold(affectedFiles(snap, probe))(urlFiles(snap, _))
 
   // ---- column skipping stats (write side) ---------------------------
 
@@ -1995,10 +2019,10 @@ class ManifestTableFormat(
   /** Keyed upsert: one commit replaces every document in `rows`.
     * File selection takes the batch's distinct urls to the driver, up
     * to [[ManifestTableFormat.mergeKeyPruneCap]] of them, and tests
-    * them as literals ([[urlFiles]]); a larger batch keeps the frame
-    * join ([[affectedFiles]]). The survivor rewrite anti-joins the
-    * broadcast url frame; an all-new batch selects no file and writes
-    * just the incoming rows.
+    * them as literals when [[selectsByLiterals]] admits them, by the
+    * frame join ([[affectedFiles]]) otherwise. The survivor
+    * rewrite anti-joins the broadcast url frame; an all-new batch
+    * selects no file and writes just the incoming rows.
     */
   def merge(rows: DataFrame): Unit = {
     requireUrlKey("keyed upsert (merge by document_url)")
@@ -2007,25 +2031,33 @@ class ManifestTableFormat(
     // re-conform per attempt in case an ALTER lands mid-retry
     val incoming = conform(rows, currentSchema).persist()
     try {
-      // no isEmpty pre-evaluation (the append() rule): an empty
+      // the distinct urls are collected up front, at most cap + 1 of
+      // them (no isEmpty pre-evaluation, the append() rule: an empty
       // source yields no url, zero affected files, an empty rewrite,
-      // zero add-actions, and commitCycle returns without committing
-      val probe = incoming.select("document_url").distinct()
+      // zero add-actions, and commitCycle returns without committing)
+      val distinct = incoming.select("document_url").distinct()
       val cap = ManifestTableFormat.mergeKeyPruneCap
-      val urls = Some(probe.limit(cap + 1).collect()
+      val urls = Some(distinct.limit(cap + 1).collect()
         .map(_.getString(0)).toSeq).filter(_.size <= cap)
-      commitCycle(
-        snap => urls.fold(affectedFiles(snap, probe))(urlFiles(snap, _)),
-        (snap, files) => {
-          val fresh = conform(incoming, snap.tableSchema)
-          if (files.isEmpty) fresh
-          else survivors(snap, files, probe).unionByName(fresh)
-        })
+      // the url frame of the frame join and the survivor anti-join:
+      // the collected urls as a local relation (broadcast without a
+      // job), or past the cap the distinct, persisted so the commit
+      // cycle computes it once
+      import spark.implicits._
+      val probe = urls.fold(distinct.persist())(_.toDF("document_url"))
+      try commitCycle(
+        snap => keyedFiles(snap, urls, probe),
+        (snap, files) => survivors(snap, files, probe)
+          .unionByName(conform(incoming, snap.tableSchema)))
+      finally probe.unpersist()
     } finally incoming.unpersist()
   }
 
   /** The rows of `files` whose url is not in `probe`: an anti-join
-    * against the broadcast url frame, never url In-literals.
+    * against the broadcast url frame, never url In-literals. No file
+    * gives an empty frame of the table schema, with no read and no
+    * broadcast; a union with it still types the written files with
+    * the table schema's nullability.
     */
   private def survivors(
       snap: Snapshot, files: Seq[String], probe: DataFrame): DataFrame =
@@ -2034,7 +2066,8 @@ class ManifestTableFormat(
       .join(broadcast(probe), Seq("document_url"), "left_anti")
 
   /** Deletes the given documents; file selection tests the urls as
-    * literals ([[urlFiles]]), the rewrite is the frame path's.
+    * literals when [[selectsByLiterals]] admits them, the rewrite is
+    * the frame path's.
     */
   def delete(documentUrls: Seq[String]): Unit = {
     if (documentUrls.isEmpty) return
@@ -2055,8 +2088,8 @@ class ManifestTableFormat(
   def delete(urls: DataFrame): Unit = deleteKeyed(urls, None)
 
   /** The two deletes' shared body: `onDriver` holds the urls when the
-    * caller passed them as a driver Seq (file selection by literals),
-    * `None` keeps selection a frame join.
+    * caller passed them as a driver Seq ([[keyedFiles]]), `None` keeps
+    * selection a frame join.
     */
   private def deleteKeyed(
       urls: DataFrame, onDriver: Option[Seq[String]]): Unit = {
@@ -2072,7 +2105,7 @@ class ManifestTableFormat(
     // and commitCycle returns without committing — identical outcome,
     // one evaluation of the url set saved on every delete
     try commitCycle(
-      snap => onDriver.fold(affectedFiles(snap, probe))(urlFiles(snap, _)),
+      snap => keyedFiles(snap, onDriver, probe),
       (snap, files) => survivors(snap, files, probe))
     finally probe.unpersist()
   }
@@ -3739,17 +3772,29 @@ class ManifestTableFormat(
   }
 
   /** Point/multi-document reads prune to the files whose stats MAY
-    * hold a probed url ([[urlFiles]]: the urls as literals over the
-    * log's bloom + min/max, no Spark job on a checkpoint-less table).
-    * Probabilistic in the cheap direction only: a false positive
-    * reads one extra file; the residual `isin` filter keeps the
-    * result identical to a full scan-and-filter.
+    * hold a probed url (bloom + min/max from log metadata): by
+    * literals ([[urlFiles]], no Spark job on a checkpoint-less table)
+    * with a residual `isin` filter when [[selectsByLiterals]] admits
+    * the urls, else by the frame join ([[affectedFiles]]) with a
+    * residual broadcast semi-join. Probabilistic in the cheap
+    * direction only: a false positive reads one extra file; the
+    * residual filter keeps the result identical to a full
+    * scan-and-filter.
     */
   def readDocuments(urls: Seq[String]): DataFrame = {
     requireUrlKey("document point read")
     val snap = snapshot()
-    readLive(snap, urlFiles(snap, urls))
-      .filter(col("document_url").isin(urls: _*))
+    val distinct = urls.distinct
+    if (selectsByLiterals(snap, distinct.size))
+      readLive(snap, urlFiles(snap, distinct))
+        .filter(col("document_url").isin(distinct: _*))
+    else {
+      import spark.implicits._
+      val probe = distinct.toDF("document_url")
+      readLive(snap, affectedFiles(snap, probe))
+        .join(broadcast(probe), Seq("document_url"), "left_semi")
+        .select(snap.tableSchema.fieldNames.map(col).toIndexedSeq: _*)
+    }
   }
 
   /** The surviving commit history, oldest first — one row per
@@ -5003,6 +5048,11 @@ object ManifestTableFormat {
     * before).
     */
   private[sink] val mergeKeyPruneCap = 10000
+
+  /** The most (url, log-tail file) pairs a url-keyed file selection
+    * folds on the driver as literals; see `selectsByLiterals`.
+    */
+  private[sink] val literalProbePairs = 100000L
 
   /** `xxhash64(s)` for a string, computed on the driver — the value
     * Spark's `xxhash64` gives the same string column, which is what

@@ -9,12 +9,14 @@ import graft.ops.Layout
 
 /** Url-keyed file selection with the urls on the driver
   * ([[ManifestTableFormat.urlFiles]]): point reads, `delete(Seq)` and
-  * keyed upserts up to [[ManifestTableFormat.mergeKeyPruneCap]] urls
-  * test the urls as literals against the per-file stats. Pinned here:
-  * the Spark jobs a point read and an all-new upsert launch, and the
-  * selected files and returned rows against a brute force — the files
-  * that physically hold a probed url, and a driver loop over
-  * [[Layout.bloomPos]] with UTF-8 range compares.
+  * keyed upserts test up to [[ManifestTableFormat.mergeKeyPruneCap]]
+  * urls, and at most [[ManifestTableFormat.literalProbePairs]]
+  * (url, log-tail file) pairs, as literals against the per-file stats;
+  * larger url sets keep the url frame join. Pinned here: the Spark
+  * jobs a point read and an all-new upsert launch, where the literal
+  * path ends, and the selected files and returned rows against a brute
+  * force — the files that physically hold a probed url, and a driver
+  * loop over [[Layout.bloomPos]] with UTF-8 range compares.
   */
 class UrlFileSelectionSpec extends SparkSpec {
 
@@ -196,9 +198,32 @@ class UrlFileSelectionSpec extends SparkSpec {
     }
   }
 
-  test("a merge batch above mergeKeyPruneCap (selection by the url " +
-      "frame join) rewrites the brute-force files and replaces exactly " +
-      "its documents") {
+  test("the literal path ends at literalProbePairs (url, tail file) " +
+      "pairs; past it a point read selects by the frame join and " +
+      "returns the same rows") {
+    val files = 20
+    val store = new ChunkStore(spark, freshPath())
+    store.append(rows((0 until 300 * files).map(i => Some(f"doc://b/$i%06d")),
+      "b", oneFile = false).repartition(files))
+    val mtf = new ManifestTableFormat(spark, store.path, store.schema)
+    assert(mtf.snapshot().base.size == files)
+    val atBudget = (ManifestTableFormat.literalProbePairs / files).toInt
+    def check(n: Int): Int = {
+      val probes = (0 until n).map(i => f"doc://b/$i%06d")
+      store.readDocuments(probes).collect() // warm
+      val (got, jobs) = jobsDuring(store.readDocuments(probes).collect())
+      assert(got.map(_.getAs[String]("document_url")).sorted.toSeq == probes)
+      jobs
+    }
+    val literalJobs = check(atBudget)
+    assert(literalJobs == 1, s"$atBudget urls x $files files ran $literalJobs jobs")
+    val frameJobs = check(atBudget + 1)
+    assert(frameJobs > 1, s"${atBudget + 1} urls x $files files ran $frameJobs jobs")
+  }
+
+  test("url sets above mergeKeyPruneCap select by the url frame join: " +
+      "a merge rewrites the brute-force files and replaces exactly its " +
+      "documents, a read and a delete return and remove exactly theirs") {
     var rewrites: List[DataFrame] = Nil
     val store = new ChunkStore(spark, freshPath(),
       format = s => new ManifestTableFormat(s.spark, s.path, s.schema) {
@@ -227,5 +252,15 @@ class UrlFileSelectionSpec extends SparkSpec {
     assert(store.readDocuments(probes).select("chunk_text")
       .collect().map(_.getString(0)).sorted.toSeq ==
       Seq("new-0", s"new-${n - 1}", "old-999"))
+
+    // more urls than the cap: read, then delete, 500 until 500 + n
+    val many = (500 until 500 + n).map(i => f"doc://cap/$i%06d") :+
+      "doc://cap/absent"
+    def urlsOf(df: DataFrame): Seq[String] =
+      df.select("document_url").collect().map(_.getString(0)).sorted.toSeq
+    assert(urlsOf(store.readDocuments(many)) == many.init)
+    store.delete(many)
+    assert(urlsOf(store.read()) ==
+      ((0 until 500) ++ (500 + n until 1000 + n)).map(i => f"doc://cap/$i%06d"))
   }
 }
