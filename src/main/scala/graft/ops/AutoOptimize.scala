@@ -77,8 +77,7 @@ object AutoOptimize {
       aggPaths: Seq[String] = Nil,
       targetFileBytes: Long = ManifestTableFormat.defaultTargetFileBytes)
       : Report = {
-    val store = new ChunkStore(spark, tablePath)
-    val mtf = new ManifestTableFormat(spark, tablePath, store.schema)
+    val mtf = new ManifestTableFormat(spark, tablePath, ChunkStore.schema)
     val before = mtf.version
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
 

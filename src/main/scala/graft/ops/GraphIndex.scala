@@ -266,7 +266,7 @@ object GraphIndex {
   }
 
   // ----------------------------------------------------------------
-  // delete / compact — same tombstone cycle as VectorIndex
+  // delete / compact — a tombstone flag, then a cell rebuild
   // ----------------------------------------------------------------
 
   /** Tombstone ids: deleted rows stop being RETURNED immediately (the

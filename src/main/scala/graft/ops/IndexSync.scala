@@ -1,53 +1,51 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sink.{ChunkStore, ManifestTableFormat, StagedSwap}
+import graft.sink.{ChunkStore, GraftMergeDelete, GraftMergeInsert, ManifestTableFormat}
 
-/** D3i: the index FOLLOWS the table — advance a persistent ANN index
-  * ([[VectorIndex]]) to a manifest table's current version by
-  * consuming the table's change feed (B13), on a maintenance cadence.
-  * This closes the loop the reference gets for free (its vector index
-  * lives ON the store container, so every upsert/delete is
-  * index-consistent by construction —
+/** D3i: the index FOLLOWS the table — advance a persistent index
+  * ([[VectorIndex]] or [[TextIndex]]) to a manifest table's current
+  * version by consuming the table's change feed (B13), on a
+  * maintenance cadence. This closes the loop the reference gets for
+  * free (its vector index lives ON the store container, so every
+  * upsert/delete is index-consistent by construction —
   * `AzureCosmosDB/.../CosmosDBClientWrapper.cs:112-152`): an EXTERNAL
   * index stays consistent by replaying exactly the rows that changed.
   *
   * Per catch-up, with `(from, to] = (last synced, table head]`:
   *  1. the net row delta comes from `changesBetween` — O(churn) rows,
   *     never the table;
-  *  2. ids being (re)inserted are REVIVED out of the tombstone
-  *     sidecar first (a staged-swap rewrite of the
-  *     deletion-rate-bounded tombstone set), so a re-added document
-  *     is never masked by its own earlier delete;
-  *  3. net-removed ids tombstone ([[VectorIndex.delete]] — idempotent,
-  *     serving stops immediately, bytes reclaimed by the maintenance
-  *     [[VectorIndex.compact]]);
-  *  4. inserted rows append AFTER an anti-join against ids already
-  *     present in the index — scoped to the TOUCHED partitions (the
-  *     insert batch's own IVF cells / LSH buckets), so the existence
-  *     probe reads O(touched partitions), not the index. This is what
-  *     makes replay convergent: re-running any span (crash between
-  *     apply and the version record, or a lost `_sync_version` file
-  *     forcing a from-scratch replay) appends nothing twice.
+  *  2. inserted ids the index does not hold yet are encoded with the
+  *     stamped model; net-removed ids (deleted and not re-inserted)
+  *     are deleted;
+  *  3. both land in ONE commit on the index table — an append, or a
+  *     MERGE that deletes the matched removed ids and inserts the new
+  *     rows — and that commit records `to` as its stream-transaction
+  *     marker, so the synced version and the rows it covers publish
+  *     together.
   *
   * **Ids must be content-addressed** — a deterministic function of the
   * row's content (use [[contentAddressedId]]), not a bare document
-  * key. A content change then flows as tombstone(old id) + append(new
-  * id); with a content-BLIND id, the old rows would be revived by
-  * step 2 and the new content dropped as "already present" by step 4.
+  * key. A content change then flows as delete(old id) + insert(new
+  * id); with a content-BLIND id the new content would be dropped as
+  * "already held".
   *
-  * Crash contract: the `_sync_version` record is written (atomic
-  * temp+rename) only after a span fully applies. A crash mid-span
-  * replays it; every step is idempotent, so replay converges. There
-  * is no cross-store transaction — exactly the
-  * checkpoint-plus-idempotence design of [[graft.pipeline.ChangeFeedSync]].
+  * Crash contract: a catch-up that dies before its commit publishes
+  * leaves the index as it was (its staged files are unreferenced,
+  * vacuum reclaims them) and the synced version unmoved, so the next
+  * run replays the same span; one that published is done. There is no
+  * window in between. [[markSynced]] may move the synced version
+  * anywhere, down to −1; a replay over rows the index already holds
+  * appends nothing, because held ids are not inserted again.
   */
 object IndexSync {
 
-  /** Outcome of one catch-up: the span applied and the work done. */
+  /** Outcome of one catch-up: the span applied, the ids appended and
+    * the net-removed ids deleted.
+    */
   final case class Stats(
       fromVersion: Long,
       toVersion: Long,
@@ -78,111 +76,52 @@ object IndexSync {
       col("embedding").as(meta.vecCol))
   }
 
-  private def syncPath(indexPath: String) = s"$indexPath/_sync_version"
+  /** The chunk-schema text prepare: content-addressed id over
+    * (document_url, chunk_id, chunk_text), text = chunk_text, under
+    * the text index's stamped id column plus a `text` column.
+    */
+  def chunkTextPrepare(
+      spark: SparkSession, indexPath: String): DataFrame => DataFrame = {
+    val meta = TextIndex.load(spark, indexPath)
+    rows => rows.select(
+      contentAddressedId(
+        Seq(col("document_url"), col("chunk_id")),
+        Seq(col("chunk_text"))).as(meta.idCol),
+      col("chunk_text").as("text"))
+  }
+
+  /** Catch-up commits carry the synced table version as a stream
+    * transaction marker under the app id `<SyncApp><n>`: [[markSynced]]
+    * opens generation n + 1, so it can move the version down as well
+    * as up, and the newest generation's marker is the synced version.
+    */
+  private val SyncApp = "graft.index_sync."
+
+  /** (current sync generation, its synced version); (0, −1) when the
+    * index never recorded one.
+    */
+  private def syncMarker(ix: ManifestTableFormat): (Long, Long) =
+    ix.streamTransactions.collect {
+      case (a, v) if a.startsWith(SyncApp) => (a.stripPrefix(SyncApp).toLong, v)
+    }.sortBy(_._1).lastOption.getOrElse((0L, -1L))
 
   /** The table version the index has fully applied; −1 if never. */
-  def lastSynced(spark: SparkSession, indexPath: String): Long = {
-    val p = new Path(syncPath(indexPath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return -1L
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-    finally in.close()
-  }
+  def lastSynced(spark: SparkSession, indexPath: String): Long =
+    syncMarker(IndexTable.open(spark, indexPath))._2
 
-  /** Record the applied version (atomic temp write + rename). Public
-    * so an index built from a table SNAPSHOT can declare its starting
-    * point before the first catch-up.
+  /** Record the applied version: one commit carrying only a new
+    * generation's marker. Public so an index built from a table
+    * SNAPSHOT can declare its starting point before the first
+    * catch-up; −1 makes the next catch-up replay the whole table.
     */
   def markSynced(spark: SparkSession, indexPath: String, version: Long): Unit = {
-    val p = new Path(syncPath(indexPath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(syncPath(indexPath) + ".tmp-" +
-      java.util.UUID.randomUUID())
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    require(fs.rename(tmp, p), s"could not publish $p")
+    val ix = IndexTable.open(spark, indexPath)
+    require(ix.version >= 0, s"no index table at $indexPath — build first")
+    ix.appendStream(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ix.currentSchema),
+      SyncApp + (syncMarker(ix)._1 + 1), version)
   }
 
-  /** Remove `ids` from the tombstone sidecar (staged-swap rewrite) so
-    * re-inserted content serves again. No-op without tombstones.
-    */
-  private def revive(
-      spark: SparkSession, indexPath: String, ids: DataFrame): Unit =
-    reviveSidecar(spark, VectorIndex.tombPath(indexPath), ids)
-
-  /** Returns false when there was no tombstone sidecar to rewrite. */
-  private def reviveSidecar(
-      spark: SparkSession, tombDir: String, ids: DataFrame): Boolean = {
-    val tomb = new Path(tombDir)
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) return false
-    val current = spark.read.parquet(tomb.toString)
-    // keep the sidecar's OWN column name and type: the rewrite must
-    // stay schema-identical to what VectorIndex.delete appends later,
-    // or the mixed-schema directory reads back as nulls and every
-    // masked id silently revives
-    val tombCol = current.columns.head
-    val survivors = current.join(
-      broadcast(ids
-        .select(col(ids.columns.head)
-          .cast(current.schema(tombCol).dataType).as(tombCol))
-        .distinct()),
-      Seq(tombCol), "left_anti")
-    val tmp = new Path(tomb.toString + ".reviving-" +
-      java.util.UUID.randomUUID())
-    survivors.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    StagedSwap.swap(fs, tomb, tmp)
-    true
-  }
-
-  /** Ids already physically present in the index, probed only in the
-    * partitions the insert batch itself touches (IVF cells / LSH
-    * buckets; q8 is unpartitioned and scans its id column — the
-    * documented flat-index trade).
-    */
-  private def existingIds(
-      spark: SparkSession, indexPath: String, meta: VectorIndex.Meta,
-      ins: DataFrame): DataFrame = {
-    val idName = VectorIndex.dataIdCol(meta)
-    val data = spark.read.parquet(VectorIndex.dataPath(indexPath))
-    meta.kind match {
-      case "ivfpq" =>
-        val cells = ins
-          .select(KMeans.assign(col(meta.vecCol), meta.centroids).as("cell"))
-          .distinct().collect().map(_.getInt(0)).toIndexedSeq
-        data.filter(col("cell").isin(cells: _*)).select(idName)
-      case "lsh" =>
-        // the batch's band buckets, capped: distinct buckets are
-        // bounded by min(numTables × batch, numTables × 2^numPlanes),
-        // but a massive catch-up batch could still blow the driver
-        // list / the literal OR-filter — past the cap, the flat
-        // id-column scan is the cheaper plan anyway
-        val maxBucketLiterals = 4096
-        val buckets = ins
-          .select(posexplode(Similarity.lshTableBuckets(col(meta.vecCol),
-            meta.dim, meta.numPlanes, meta.seed, meta.numTables))
-            .as(Seq("tbl", "bucket")))
-          .select("tbl", "bucket").distinct()
-          .limit(maxBucketLiterals + 1).collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toIndexedSeq
-        if (buckets.size > maxBucketLiterals) data.select(idName)
-        else data.filter(
-            buckets.map { case (t, b) =>
-              col("tbl") === t && col("bucket") === b
-            }.reduceOption(_ || _).getOrElse(lit(false)))
-          .select(idName)
-      case _ => data.select(idName)
-    }
-  }
-
-  /** Advance the index at `indexPath` to the head of the manifest
-    * table at `tablePath`. `prepare` maps changed TABLE rows to index
-    * rows carrying the stamped id/vector columns (ids
-    * content-addressed — see the object doc). Returns the span and
-    * row counts applied; a no-op span returns zeros.
-    */
   private def lockPath(indexPath: String) = s"$indexPath/_sync_lock"
 
   /** How long a sync lock may sit before a later run treats it as a
@@ -193,15 +132,16 @@ object IndexSync {
   private val lockStaleMs = 60L * 60 * 1000
 
   /** Single-maintainer guard: two concurrent catch-ups would each
-    * pass the existence anti-join before the other's append lands and
-    * double-append the span. The lock is the same fail-if-exists
-    * create the manifest log's commit publish relies on. A lock older
-    * than [[lockStaleMs]] is a hard-killed holder's leftover (OOM,
-    * SIGKILL): it is deleted and re-acquired — replay is convergent
-    * by the module's crash contract, so the takeover is safe, and
-    * without it every later catchUp/CALL sync_index would wedge until
-    * an operator deleted the file by hand. Only a FRESH lock (a
-    * plausibly live run) errors loudly.
+    * classify their span against the index before the other's commit
+    * lands, and the later commit would re-apply the rows of the
+    * earlier span. The lock is the same fail-if-exists create the
+    * manifest log's commit publish relies on. A lock older than
+    * [[lockStaleMs]] is a hard-killed holder's leftover (OOM,
+    * SIGKILL): it is deleted and re-acquired — a dead holder's span
+    * never published (the module's crash contract), so the takeover is
+    * safe, and without it every later catchUp/CALL sync_index would
+    * wedge until an operator deleted the file by hand. Only a FRESH
+    * lock (a plausibly live run) errors loudly.
     */
   private def withSyncLock[T](spark: SparkSession, indexPath: String)(
       body: => T): T = {
@@ -237,157 +177,104 @@ object IndexSync {
     try body finally fs.delete(p, false)
   }
 
-  /** The manifest handle + the span to apply; None = already at head. */
-  private def spanOf(
-      spark: SparkSession, tablePath: String, indexPath: String)
-      : (ManifestTableFormat, Long, Long) = {
-    val store = new ChunkStore(spark, tablePath)
-    val mtf = new ManifestTableFormat(spark, tablePath, store.schema)
-    val head = mtf.version
-    val from = lastSynced(spark, indexPath)
-    require(head >= from,
-      s"index at $indexPath is synced past the table ($from > $head) — " +
-        "wrong table, or the table's log was replaced")
-    (mtf, from, head)
-  }
-
+  /** Advance the vector index at `indexPath` to the head of the
+    * manifest table at `tablePath`. `prepare` maps changed TABLE rows
+    * to index rows carrying the stamped id/vector columns (ids
+    * content-addressed — see the object doc). Returns the span and row
+    * counts applied; a no-op span returns zeros.
+    */
   def catchUp(
       spark: SparkSession,
       tablePath: String,
       indexPath: String,
-      prepare: DataFrame => DataFrame): Stats = withSyncLock(spark, indexPath) {
-    val (mtf, from, head) = spanOf(spark, tablePath, indexPath)
-    if (head == from) return Stats(from, head, 0L, 0L)
-    val meta = VectorIndex.loadAny(spark, indexPath)
-    val delta = mtf.changesBetween(from, head).persist()
-    try {
-      val ins = prepare(
-        delta.filter(col("_change_type") === "insert")
-          .drop("_change_type"))
-        .select(col(meta.idCol), col(meta.vecCol)).persist()
-      val dels = prepare(
-        delta.filter(col("_change_type") === "delete")
-          .drop("_change_type"))
-        .select(col(meta.idCol))
-      try {
-        revive(spark, indexPath, ins.select(meta.idCol))
-        // net-removed ids only: an id on both sides (identical content
-        // re-added across the span) must stay served
-        val dead = dels.join(ins.select(meta.idCol).distinct(),
-          Seq(meta.idCol), "left_anti").persist()
-        val nDead =
-          try {
-            val n = dead.count()
-            if (n > 0) VectorIndex.delete(dead, indexPath)
-            n
-          } finally dead.unpersist()
-        val fresh = ins.join(
-          existingIds(spark, indexPath, meta, ins)
-            .toDF(meta.idCol).distinct(),
-          Seq(meta.idCol), "left_anti").persist()
-        val nFresh =
-          try {
-            val n = fresh.count()
-            if (n > 0) VectorIndex.append(fresh, indexPath)
-            n
-          } finally fresh.unpersist()
-        markSynced(spark, indexPath, head)
-        Stats(from, head, nFresh, nDead)
-      } finally ins.unpersist()
-    } finally delta.unpersist()
-  }
-
-  /** The chunk-schema text prepare: content-addressed id over
-    * (document_url, chunk_id, chunk_text), text = chunk_text, under
-    * the text index's stamped id column plus a `text` column.
-    */
-  def chunkTextPrepare(
-      spark: SparkSession, indexPath: String): DataFrame => DataFrame = {
-    val meta = TextIndex.load(spark, indexPath)
-    rows => rows.select(
-      contentAddressedId(
-        Seq(col("document_url"), col("chunk_id")),
-        Seq(col("chunk_text"))).as(meta.idCol),
-      col("chunk_text").as("text"))
-  }
+      prepare: DataFrame => DataFrame): Stats =
+    catchUpOn(IndexTable.open(spark, indexPath), spark, tablePath,
+      indexPath, prepare, text = false)
 
   /** [[catchUp]]'s twin for the BM25 text index ([[TextIndex]]):
-    * advance the index at `indexPath` to the table head off the
-    * change feed. `prepare` maps changed table rows to
-    * (stamped id column, `text`) — ids content-addressed, as in
-    * [[catchUp]]. Same revive → tombstone → existence-anti-join →
-    * append algebra; differences owed to the text index's design:
-    *  - the existence probe is the NARROW `doclen` table (one tiny
-    *    row per document — the flat-index trade, no partition
-    *    geometry to prune by);
-    *  - after a revive rewrite the stamped corpus stats (docCount,
-    *    sumDl — the BM25 normalizers) are re-derived with the text
-    *    index's own self-healing recount ([[TextIndex.delete]] with
-    *    an empty id set recounts doclen minus tombstones).
-    * The one formerly non-convergent window — a crash INSIDE an
-    * append, postings landed but the doclen existence anchor not —
-    * is closed by the staged append journal: each batch publishes a
-    * pending marker naming its postings buckets before writing, and
-    * the next run's [[TextIndex.healTornAppend]] drops the orphaned
-    * postings from exactly those buckets and recounts the stamp
-    * before replaying. Every interleaving is now convergent.
+    * `prepare` maps changed table rows to (stamped id column, `text`).
+    * A document's postings and doc-length row insert and delete
+    * together, and the BM25 corpus stats follow from the live
+    * doc-length rows, so nothing else needs recounting.
     */
   def catchUpText(
       spark: SparkSession,
       tablePath: String,
       indexPath: String,
-      prepare: DataFrame => DataFrame): Stats = withSyncLock(spark, indexPath) {
-    val (mtf, from, head) = spanOf(spark, tablePath, indexPath)
+      prepare: DataFrame => DataFrame): Stats =
+    catchUpOn(IndexTable.open(spark, indexPath), spark, tablePath,
+      indexPath, prepare, text = true)
+
+  /** The catch-up of either index kind, committing through `ix`, the
+    * index table's handle.
+    */
+  private[graft] def catchUpOn(
+      ix: ManifestTableFormat,
+      spark: SparkSession,
+      tablePath: String,
+      indexPath: String,
+      prepare: DataFrame => DataFrame,
+      text: Boolean): Stats = withSyncLock(spark, indexPath) {
+    val mtf = new ManifestTableFormat(spark, tablePath, ChunkStore.schema)
+    val head = mtf.version
+    val (gen, from) = syncMarker(ix)
+    require(head >= from,
+      s"index at $indexPath is synced past the table ($from > $head) — " +
+        "wrong table, or the table's log was replaced")
     if (head == from) return Stats(from, head, 0L, 0L)
-    val meta = TextIndex.load(spark, indexPath)
-    // consume any torn-append journal BEFORE the existence probe, so
-    // a crashed previous run's half-landed batch is scrubbed and the
-    // anti-join re-admits it cleanly
-    TextIndex.healTornAppend(spark, indexPath)
+    // the prepared id and value columns, the index table's id column,
+    // the encoding of prepared rows, and the ids the index holds
+    val (id, value, key, encode, held) =
+      if (text) {
+        val m = TextIndex.load(spark, indexPath)
+        (m.idCol, "text", "doc_id",
+          (df: DataFrame) => TextIndex.rowsFor(df, m.idCol, "text",
+            m.numBuckets),
+          ix.pinScan().readWhereIn("tb", Seq(TextIndex.DocLenBucket)))
+      } else {
+        val m = VectorIndex.loadAny(spark, indexPath)
+        (m.idCol, m.vecCol, VectorIndex.dataIdCol(m),
+          (df: DataFrame) => VectorIndex.encode(m, df), ix.read())
+      }
     val delta = mtf.changesBetween(from, head).persist()
     try {
-      val ins = prepare(
-        delta.filter(col("_change_type") === "insert")
-          .drop("_change_type"))
-        .select(col(meta.idCol), col("text")).persist()
-      val dels = prepare(
-        delta.filter(col("_change_type") === "delete")
-          .drop("_change_type"))
-        .select(col(meta.idCol))
+      def side(kind: String) = prepare(
+          delta.filter(col("_change_type") === kind).drop("_change_type"))
+        .select(col(id), col(value))
+      val ins = side("insert").dropDuplicates(id)
+      // net-removed ids only: an id on both sides (identical content
+      // re-added across the span) must stay served
+      val dead = side("delete").select(id)
+        .join(ins.select(id), Seq(id), "left_anti").distinct().persist()
+      // ids the index already holds (a replay after markSynced moved
+      // the version back) are not appended again
+      val fresh = ins
+        .join(held.select(col(key).as(id)).distinct(), Seq(id), "left_anti")
+        .persist()
       try {
-        val revived = reviveSidecar(spark,
-          TextIndex.tombPath(indexPath), ins.select(meta.idCol))
-        // recount the stamped BM25 stats against the revived
-        // tombstone set (empty-id delete = the index's own recount)
-        if (revived) TextIndex.delete(
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(meta.idCol,
-                org.apache.spark.sql.types.StringType)))),
-          indexPath)
-        val dead = dels.join(ins.select(meta.idCol).distinct(),
-          Seq(meta.idCol), "left_anti").persist()
-        val nDead =
-          try {
-            val n = dead.count()
-            if (n > 0) TextIndex.delete(dead, indexPath)
-            n
-          } finally dead.unpersist()
-        val existing = spark.read
-          .parquet(TextIndex.doclenPath(indexPath))
-          .select(col("doc_id").as(meta.idCol)).distinct()
-        val fresh = ins.join(existing, Seq(meta.idCol), "left_anti")
-          .persist()
-        val nFresh =
-          try {
-            val n = fresh.count()
-            if (n > 0) TextIndex.appendStaged(fresh, indexPath, "text")
-            n
-          } finally fresh.unpersist()
-        markSynced(spark, indexPath, head)
+        val nDead = dead.count()
+        val nFresh = fresh.count()
+        // encoded once, as plain rows: the model's literals (centroids,
+        // codebooks) stay out of every plan the commit builds on them
+        val rows = encode(fresh).localCheckpoint()
+        val app = SyncApp + gen
+        if (nDead == 0) ix.appendStream(rows, app, head)
+        else ix.mergeInto(
+          rows.withColumn("__ins", lit(true))
+            .unionByName(dead.select(col(id).as(key), lit(false).as("__ins")),
+              allowMissingColumns = true),
+          col(s"__graft_t.$key") === col(s"__graft_s.$key"),
+          matched = Seq(GraftMergeDelete(Some(!col("__graft_s.__ins")))),
+          notMatched = Seq(GraftMergeInsert(Some(col("__graft_s.__ins")),
+            ix.currentSchema.fieldNames.toSeq.map(c =>
+              c -> col(s"__graft_s.$c")))),
+          notMatchedBySource = Nil, urlProbe = None,
+          txn = Some(app -> head),
+          // a target row matches at most one source row: the removed
+          // ids are distinct and the inserted ones are not held
+          sourceKeyedByOn = true)
         Stats(from, head, nFresh, nDead)
-      } finally ins.unpersist()
+      } finally { fresh.unpersist(); dead.unpersist() }
     } finally delta.unpersist()
   }
 }

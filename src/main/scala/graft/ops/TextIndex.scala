@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,51 +10,51 @@ import org.apache.spark.unsafe.types.UTF8String
   * endpoint (`AzureCosmosDB/csharp/README.md:15`) as a provisioned
   * artifact instead of a per-query corpus scan.
   *
-  * Layout at `path`:
-  *  - `postings/` — (term, doc_id, tf) partitioned by
-  *    `tb = pmod(hash(term), numBuckets)`: a query prunes to its
-  *    terms' buckets (static partition pruning — the term-bucket
-  *    values are computed driver-side from the SAME Murmur3 evaluated
-  *    as a Catalyst literal expression, so the column and the pruning
-  *    list can never disagree), then row-group stats on `term` prune
-  *    within the bucket;
-  *  - `doclen/` — (doc_id, dl), the narrow length-norm side;
-  *  - `_graft_text_index` stamp — corpus stats (N, avgdl) + params,
-  *    validated on load (probing with a stale/foreign stamp fails
-  *    loudly; same pattern as [[VectorIndex]]).
+  * Layout at `path` ([[IndexTable]]): one manifest table partitioned
+  * on `tb`, holding two kinds of row —
+  *  - postings (doc_id, term, tf, positions) under
+  *    `tb = pmod(hash(term), numBuckets)`: a query picks its terms'
+  *    buckets' files from per-file `tb` min/max on the driver (the
+  *    bucket values come from the SAME Murmur3 evaluated as a Catalyst
+  *    literal expression, so the column and the pruning list can never
+  *    disagree), then filters the rows;
+  *  - one doc-length row (doc_id, dl) per document, under the reserved
+  *    bucket [[DocLenBucket]] with a null term.
+  * So an append, or a delete of a document's postings and length, is
+  * ONE commit. The `_graft_text_index` stamp holds what the build
+  * fixed (id column, bucket count, k1, b), validated on load (probing
+  * with a stale/foreign stamp fails loudly; same pattern as
+  * [[VectorIndex]]).
   *
   * Scale: the build is one tokenize+count aggregate (one exchange on
-  * (doc, term), map-side combined) plus one narrow length scan. A
-  * query touches ONLY the query terms' posting buckets — cost follows
-  * result size, not corpus size; document frequencies come from the
-  * pruned postings themselves (COUNT per term), so no third table.
-  * Scoring reproduces the transient BM25 query (B4c) bit-for-bit:
-  * same tokenizer (single-space split), same k1=1.2 / b=0.75 formula,
-  * so a prebuilt index answers hash-identically to the scan path.
+  * (doc, term), map-side combined) plus one narrow length projection.
+  * A query touches ONLY the query terms' posting buckets and the
+  * doc-length rows — cost follows result size, not corpus size;
+  * document frequencies come from the pruned postings themselves
+  * (COUNT per term), and the corpus stats (N, sum of lengths) from the
+  * live doc-length rows, inside the query plan. Scoring reproduces the
+  * transient BM25 query (B4c) bit-for-bit: same tokenizer
+  * (single-space split), same k1=1.2 / b=0.75 formula, and exact
+  * integer-valued length sums, so a prebuilt index answers
+  * hash-identically to the scan path.
   */
 object TextIndex {
 
-  private val Version = "graft-text-index v2"
-  private val StampName = "_graft_text_index"
+  private val Version = "graft-text-index v3"
+  private[ops] val StampName = "_graft_text_index"
 
-  /** Corpus stats are (docCount, sumDl), not (docCount, avgdl):
-    * document lengths are integers, so their double sum is EXACT
-    * (< 2^53) and order-independent — which makes [[append]]'s
-    * incremental stat update bit-identical to a full rebuild, where
-    * an avgdl-carrying stamp would accumulate n·(sum/n) rounding.
+  /** The `tb` of the doc-length rows: below every term bucket. */
+  private[ops] val DocLenBucket = -1
+
+  /** What the build fixed. Corpus stats are not stamped: they are the
+    * live doc-length rows' count and sum, so appends and deletes never
+    * rewrite the stamp.
     */
   final case class Meta(
       idCol: String,
-      docCount: Double,
-      sumDl: Double,
       numBuckets: Int,
       k1: Double,
-      b: Double) {
-    def avgdl: Double = sumDl / docCount
-  }
-
-  private[ops] def postingsPath(path: String) = s"$path/postings"
-  private[ops] def doclenPath(path: String) = s"$path/doclen"
+      b: Double)
 
   /** Driver-side twin of the build's `pmod(hash(term), nb)` column. */
   private[graft] def termBucket(term: String, nb: Int): Int = {
@@ -67,8 +66,9 @@ object TextIndex {
   }
 
   /** Tokenize `docs` (single-space split — B4c's corpus convention),
-    * materialize postings + doc lengths at `path`, stamp the corpus
-    * stats. Overwrites any previous index at `path`.
+    * materialize postings + doc lengths at `path` as one index table,
+    * stamp the parameters. Overwrites any previous index at `path`;
+    * the stamp is written last, so a crashed build is no index.
     */
   def build(
       docs: DataFrame,
@@ -80,34 +80,19 @@ object TextIndex {
       b: Double = 0.75): Unit = {
     require(numBuckets >= 1, s"numBuckets=$numBuckets")
     val spark = docs.sparkSession
-    unstamp(spark, path)
-    // corpus stats ride the doclen frame (persisted: two narrow
-    // columns) instead of a third full tokenize pass over `docs`; the
-    // sums are integer-valued doubles < 2^53, so aggregation order
-    // cannot change them
-    val dlf = docs.select(col(idCol).as("doc_id"),
-        size(split(col(textCol), " ")).cast("double").as("dl"))
-      .persist()
-    try {
-      dlf.write.mode(SaveMode.Overwrite).parquet(doclenPath(path))
-      val stats = dlf.agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("dl")).as("sumdl")).head()
-      postingsFor(docs, idCol, textCol, numBuckets)
-        .write.mode(SaveMode.Overwrite).partitionBy("tb")
-        .parquet(postingsPath(path))
-      stamp(spark, path, Meta(idCol, stats.getDouble(0), stats.getDouble(1),
-        numBuckets, k1, b))
-    } finally dlf.unpersist()
+    IndexTable.create(spark, path, rowsFor(docs, idCol, textCol, numBuckets),
+      Seq("tb"))
+    IndexTable.writeStamp(spark, path, StampName,
+      render(Meta(idCol, numBuckets, k1, b)))
   }
 
-  /** Incrementally index new documents WITHOUT rebuilding: postings
-    * and doclen rows for the batch append in the same layout, and the
-    * corpus stats update exactly (docCount += batch count, sumDl +=
-    * batch length sum — exact integer-valued double sums, so
-    * build(A)+append(B) is bit-identical to build(A∪B); TextIndexSpec
-    * pins it). O(batch), never reads the existing index data. Ids are
-    * the caller's append-only contract, as in [[VectorIndex.append]].
+  /** Incrementally index new documents WITHOUT rebuilding: their
+    * postings and doc-length rows append in ONE commit, so
+    * build(A)+append(B) holds exactly the rows of build(A∪B), and the
+    * exact integer-valued length sums make its scores bit-identical
+    * (TextIndexSpec pins it). O(batch), never reads the existing index
+    * data. Ids are the caller's append-only contract, as in
+    * [[VectorIndex.append]].
     */
   def append(
       docs: DataFrame,
@@ -115,215 +100,48 @@ object TextIndex {
       textCol: String): Unit = {
     val spark = docs.sparkSession
     val meta = load(spark, path)
-    // batch stats ride the persisted doclen frame — one tokenize pass
-    // fewer per append (see [[build]]); exact-integer double sums keep
-    // build(A)+append(B) bit-identical to build(A∪B) as before
-    val dlf = docs.select(col(meta.idCol).as("doc_id"),
-        size(split(col(textCol), " ")).cast("double").as("dl"))
-      .persist()
-    try {
-      val stats = dlf.agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("dl")).as("sumdl")).head()
-      postingsFor(docs, meta.idCol, textCol, meta.numBuckets)
-        .write.mode(SaveMode.Append).partitionBy("tb")
-        .parquet(postingsPath(path))
-      dlf.write.mode(SaveMode.Append).parquet(doclenPath(path))
-      stamp(spark, path, meta.copy(
-        docCount = meta.docCount + stats.getDouble(0),
-        sumDl = meta.sumDl + stats.getDouble(1)))
-    } finally dlf.unpersist()
+    IndexTable.open(spark, path)
+      .append(rowsFor(docs, meta.idCol, textCol, meta.numBuckets))
   }
 
-  private[ops] def pendingPath(path: String) = s"$path/_append_pending"
-
-  /** [[append]] wrapped in a crash-convergence journal, for the
-    * single-maintainer sync path (`IndexSync.catchUpText`). The naked
-    * append has one non-convergent crash window: postings landed,
-    * doclen not yet — the id is then absent from the doclen existence
-    * anchor, so a replay re-appends the batch and BM25 term
-    * frequencies double. Here a pending MARKER naming the batch's
-    * touched postings buckets publishes BEFORE any write and clears
-    * only after postings + doclen + stamp all landed;
-    * [[healTornAppend]] consumes a leftover marker on the next run by
-    * dropping orphaned postings (rows with no doclen anchor) from
-    * exactly the marked buckets and recounting the stamp stats —
-    * after which the existence anti-join re-admits the batch and the
-    * replay converges. Single-maintainer only (the sync lock): the
-    * marker is not a concurrency primitive.
-    */
-  def appendStaged(docs: DataFrame, path: String, textCol: String): Unit = {
-    val spark = docs.sparkSession
-    val meta = load(spark, path)
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val postings = postingsFor(docs, meta.idCol, textCol, meta.numBuckets)
-      .persist()
-    try {
-      val buckets = postings.select("tb").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (buckets.nonEmpty) {
-        val out = fs.create(new Path(pendingPath(path)), true)
-        try out.write(buckets.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-      }
-      val stats = docs.agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(size(split(col(textCol), " ")).cast("double")).as("sumdl"))
-        .head()
-      postings.write.mode(SaveMode.Append).partitionBy("tb")
-        .parquet(postingsPath(path))
-      docs.select(col(meta.idCol).as("doc_id"),
-          size(split(col(textCol), " ")).cast("double").as("dl"))
-        .write.mode(SaveMode.Append).parquet(doclenPath(path))
-      stamp(spark, path, meta.copy(
-        docCount = meta.docCount + stats.getDouble(0),
-        sumDl = meta.sumDl + stats.getDouble(1)))
-      fs.delete(new Path(pendingPath(path)), false)
-    } finally postings.unpersist()
-  }
-
-  /** Consume a leftover [[appendStaged]] marker: rewrite the marked
-    * postings buckets keeping only rows with a doclen anchor (the
-    * orphans are the torn batch's half-landed postings), re-derive
-    * the stamp stats with the index's own recount, then clear the
-    * marker. Idempotent — a crash inside the heal re-heals. Returns
-    * true when a marker was found. Covers every torn interleaving:
-    * nothing written (no orphans, recount no-op), postings-only
-    * (orphans dropped), postings+doclen but no stamp (recount fixes
-    * stats), all landed but marker not yet cleared (no orphans,
-    * recount idempotent).
-    */
-  def healTornAppend(spark: SparkSession, path: String): Boolean = {
-    val marker = new Path(pendingPath(path))
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) return false
-    val in = fs.open(marker)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-    val buckets = text.linesIterator.filter(_.nonEmpty).map(_.toInt).toSeq
-    val anchored = spark.read.parquet(doclenPath(path))
-      .select("doc_id").distinct()
-    buckets.foreach { b =>
-      val dir = new Path(s"${postingsPath(path)}/tb=$b")
-      if (fs.exists(dir)) {
-        val survivors = spark.read.parquet(dir.toString)
-          .join(broadcast(anchored), Seq("doc_id"), "left_semi")
-        val tmp = new Path(
-          dir.toString + ".healing-" + java.util.UUID.randomUUID())
-        survivors.write.parquet(tmp.toString)
-        graft.sink.StagedSwap.swap(fs, dir, tmp)
-      }
-    }
-    // stamp recount (empty-id delete = the index's own self-heal)
-    delete(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.StringType)))), path)
-    fs.delete(marker, false)
-    true
-  }
-
-  // ---------------------------------------------------------------
-  // delete — tombstones + exact stamp-stat update + query-time
-  // anti-join + physical compaction (the text-side twin of
-  // [[VectorIndex.delete]]; closes the same read-path gap: an
-  // append-only index keeps serving a deleted document's postings
-  // until a rebuild, where the reference's store-side index is
-  // delete-consistent by construction).
-  // ---------------------------------------------------------------
-
-  private[ops] def tombPath(path: String) = s"$path/tombstones"
-
-  /** Mark documents as deleted. Two effects, both O(ids) + one NARROW
-    * doclen scan:
-    *  - the id set appends to a `tombstones/` sidecar that every
-    *    query path anti-joins, so a deleted document stops matching
-    *    immediately (including its contribution to per-term document
-    *    frequencies, which queries derive from the pruned postings);
-    *  - the stamp's corpus stats are re-derived as a recount of
-    *    doclen minus tombstones — integer-valued double sums, so the
-    *    post-delete (docCount, sumDl) is BIT-IDENTICAL to a rebuild
-    *    on the reduced corpus, which makes BM25 scores after a delete
-    *    hash-equal to the scan path over the remaining documents
-    *    (gate b4h). The recount also makes delete idempotent and
-    *    self-healing: re-running it (any id set, including empty)
-    *    restores stats consistent with the tombstone set.
-    * Deleting an absent id is a no-op. Rows are physically dropped by
-    * [[compact]] on a maintenance cadence.
+  /** Delete documents: their postings and doc-length rows go in ONE
+    * commit on the index table, so a deleted document stops matching
+    * at once — including its share of per-term document frequencies
+    * and of the corpus stats, which queries derive from the live rows.
+    * BM25 scores after a delete therefore hash-equal the scan path over
+    * the remaining documents (gate b4h). Deleting an absent id is a
+    * no-op; deletes are idempotent.
     */
   def delete(ids: DataFrame, path: String): Unit = {
     val spark = ids.sparkSession
-    val meta = load(spark, path)
-    val dl = spark.read.parquet(doclenPath(path))
-    val idType = dl.schema("doc_id").dataType
-    ids.select(col(ids.columns.head).cast(idType).as("doc_id")).distinct()
-      .write.mode(SaveMode.Append).parquet(tombPath(path))
-    val remaining = notDeleted(spark, path, dl)
-    val stats = remaining.agg(
-      count(lit(1)).cast("double").as("n"),
-      coalesce(sum(col("dl")), lit(0.0)).as("sumdl")).head()
-    stamp(spark, path, meta.copy(
-      docCount = stats.getDouble(0), sumDl = stats.getDouble(1)))
+    load(spark, path)
+    IndexTable.deleteIds(IndexTable.open(spark, path), ids, "doc_id")
   }
 
-  /** Anti-join `df` (carrying `doc_id`) against the tombstone set —
-    * no tombstones, no change. Broadcast by design: the set is
-    * bounded by the deletion rate between compactions, never corpus
-    * scale.
-    */
-  private def notDeleted(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    val p = new Path(tombPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      df.join(broadcast(spark.read.parquet(tombPath(path)).distinct()),
-        Seq("doc_id"), "left_anti")
-    else df
-  }
-
-  /** Physically drop tombstoned documents from postings and doclen
-    * (staged rewrites in the same layouts), then clear the
-    * tombstones. The stamp is untouched — [[delete]] already set the
-    * reduced-corpus stats. Crash-safe by ORDER: the tombstone sidecar
-    * is removed last, so any partial compact state (one table
-    * swapped, the other not) still answers every query correctly —
-    * the anti-join masks whatever the rewrite didn't get to.
+  /** Rewrite the index table's files ([[ManifestTableFormat.compact]]),
+    * still clustered by `tb`. Answers are unchanged.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val tomb = new Path(tombPath(path))
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) return
-    load(spark, path) // fail loudly on a stampless/foreign directory
-    def swapFiltered(dir: String, partitionCols: Seq[String]): Unit = {
-      val live = new Path(dir)
-      val tmp = new Path(
-        dir + ".compacting-" + java.util.UUID.randomUUID())
-      val w = notDeleted(spark, path, spark.read.parquet(dir))
-        .write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      graft.sink.StagedSwap.swap(fs, live, tmp)
-    }
-    swapFiltered(postingsPath(path), Seq("tb"))
-    swapFiltered(doclenPath(path), Seq.empty)
-    fs.delete(tomb, true)
+    load(spark, path)
+    IndexTable.open(spark, path).compact()
   }
 
-  /** The shared postings plan: one tokenize (position-carrying) +
-    * one (doc, term) aggregate, map-side combined. `positions` makes
-    * the index positional (v2): phrase queries answer from postings
-    * alone, while the BM25 path's (doc_id, term, tf) projection lets
-    * Parquet column pruning skip the positions bytes entirely.
+  /** The live index rows at `path`: postings, and the doc-length rows
+    * (null `term`, `tb` = [[DocLenBucket]]).
     */
-  private def postingsFor(
+  def read(spark: SparkSession, path: String): DataFrame = {
+    load(spark, path)
+    IndexTable.open(spark, path).read()
+  }
+
+  /** The index rows of `docs`: one tokenize (position-carrying) + one
+    * (doc, term) aggregate, map-side combined, for the postings, plus
+    * a narrow doc-length row per document. `positions` makes the index
+    * positional: phrase queries answer from postings alone, while the
+    * BM25 path's (doc_id, term, tf) projection lets Parquet column
+    * pruning skip the positions bytes entirely.
+    */
+  private[ops] def rowsFor(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -334,6 +152,10 @@ object TextIndex {
       .agg(count(lit(1)).cast("double").as("tf"),
         sort_array(collect_list(col("pos"))).as("positions"))
       .withColumn("tb", pmod(hash(col("term")), lit(numBuckets)))
+      .unionByName(docs.select(col(idCol).as("doc_id"),
+          size(split(col(textCol), " ")).cast("double").as("dl"),
+          lit(DocLenBucket).as("tb")),
+        allowMissingColumns = true)
 
   /** Positional phrase query (the store-side `CONTAINS '"w1 w2"'`
     * surface): documents where `terms` occur as CONSECUTIVE tokens,
@@ -342,9 +164,9 @@ object TextIndex {
     * (overlapping matches included) and the 0-based token position of
     * the first match.
     *
-    * Shape: prune to the phrase terms' buckets (static partition
-    * pruning, as in [[query]]), then an n-way equi-join on `doc_id`
-    * of the per-term position lists, folding
+    * Shape: prune to the phrase terms' buckets (as in [[query]]),
+    * then an n-way equi-join on `doc_id` of the per-term position
+    * lists, folding
     * `positions(tᵢ₊₁) ∩ (positions(tᵢ) + 1)` — candidate documents
     * shrink at every join, and only (doc_id, positions) width ever
     * moves. Cost follows the phrase terms' posting sizes, never the
@@ -358,11 +180,10 @@ object TextIndex {
     val meta = load(spark, path)
     val distinctTerms = terms.distinct
     val buckets = distinctTerms.map(termBucket(_, meta.numBuckets)).distinct
-    val posts = notDeleted(spark, path,
-      spark.read.parquet(postingsPath(path))
-        .filter(col("tb").isin(buckets: _*) &&
-          col("term").isin(distinctTerms: _*))
-        .select("doc_id", "term", "positions"))
+    val posts = IndexTable.open(spark, path).pinScan()
+      .readWhereIn("tb", buckets)
+      .filter(col("term").isin(distinctTerms: _*))
+      .select("doc_id", "term", "positions")
     val byTerm = terms.zipWithIndex.map { case (t, i) =>
       posts.filter(col("term") === t)
         .select(col("doc_id"), col("positions").as(s"__p$i"))
@@ -383,8 +204,9 @@ object TextIndex {
   }
 
   /** BM25 top-k for `terms` from the prebuilt index: reads only the
-    * terms' posting buckets + the narrow doclen table; corpus stats
-    * from the stamp (no document scan). Output (doc_id, score) —
+    * terms' posting buckets + the narrow doc-length rows; the corpus
+    * stats (N, average length) aggregate those rows in the same plan
+    * (no document scan, no driver job). Output (doc_id, score) —
     * identical to the transient B4c formulation on the same corpus.
     */
   def query(
@@ -394,21 +216,23 @@ object TextIndex {
       k: Int): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
     val meta = load(spark, path)
+    val pin = IndexTable.open(spark, path).pinScan()
     val buckets = terms.map(termBucket(_, meta.numBuckets)).distinct
-    // the tombstone anti-join runs BEFORE the df aggregate so document
-    // frequencies, like everything else, reflect the reduced corpus
-    val tf = notDeleted(spark, path,
-      spark.read.parquet(postingsPath(path))
-        .filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*))
-        .select("doc_id", "term", "tf"))
+    val tf = pin.readWhereIn("tb", buckets)
+      .filter(col("term").isin(terms: _*))
+      .select("doc_id", "term", "tf")
     val df = tf.groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
-    val dl = spark.read.parquet(doclenPath(path))
+    val dl = pin.readWhereIn("tb", Seq(DocLenBucket)).select("doc_id", "dl")
+    // integer-valued lengths: the double sum is exact in any order
+    val corpus = dl.agg(count(lit(1)).cast("double").as("__n"),
+      sum(col("dl")).as("__sumdl"))
     val idfW = log(lit(1.0) +
-      (lit(meta.docCount) - col("df") + 0.5) / (col("df") + 0.5))
+      (col("__n") - col("df") + 0.5) / (col("df") + 0.5))
     val lenNorm = lit(meta.k1) * (lit(1.0) - lit(meta.b) +
-      lit(meta.b) * col("dl") / lit(meta.avgdl))
+      lit(meta.b) * col("dl") / (col("__sumdl") / col("__n")))
     dl.join(broadcast(tf.join(broadcast(df), "term")), "doc_id")
+      .crossJoin(broadcast(corpus))
       .groupBy("doc_id")
       .agg(round(sum(idfW * col("tf") * lit(meta.k1 + 1.0) /
         (col("tf") + lenNorm)), 6).as("score"))
@@ -421,8 +245,7 @@ object TextIndex {
   // ---------------------------------------------------------------
 
   private[graft] def render(m: Meta): String =
-    Seq(Version, s"idCol=${m.idCol}", s"docCount=${m.docCount}",
-      s"sumDl=${m.sumDl}", s"numBuckets=${m.numBuckets}",
+    Seq(Version, s"idCol=${m.idCol}", s"numBuckets=${m.numBuckets}",
       s"k1=${m.k1}", s"b=${m.b}").mkString("\n")
 
   private[graft] def parse(text: String, path: String): Meta = {
@@ -436,46 +259,15 @@ object TextIndex {
       require(i > 0, s"malformed stamp line '$l' in text index at $path")
       l.substring(0, i) -> l.substring(i + 1)
     }.toMap
-    Meta(kv("idCol"), kv("docCount").toDouble, kv("sumDl").toDouble,
-      kv("numBuckets").toInt, kv("k1").toDouble, kv("b").toDouble)
-  }
-
-  private def stampFile(spark: SparkSession, path: String) = {
-    val p = new Path(path, StampName)
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  private def unstamp(spark: SparkSession, path: String): Unit = {
-    val (p, fs) = stampFile(spark, path)
-    if (fs.exists(p)) fs.delete(p, false)
-    // a rebuild starts a fresh lifecycle: tombstones refer to the OLD
-    // data generation and must not mask rows of the new one
-    val t = new Path(tombPath(path))
-    if (fs.exists(t)) fs.delete(t, true)
-  }
-
-  private def stamp(spark: SparkSession, path: String, meta: Meta): Unit = {
-    val (p, fs) = stampFile(spark, path)
-    val out = fs.create(p, true)
-    try out.write(render(meta).getBytes("UTF-8")) finally out.close()
+    Meta(kv("idCol"), kv("numBuckets").toInt, kv("k1").toDouble,
+      kv("b").toDouble)
   }
 
   /** Load and validate the stamp — a driver-side file read, no Spark
     * job. Fails loudly on a missing/incompatible index.
     */
-  def load(spark: SparkSession, path: String): Meta = {
-    val (p, fs) = stampFile(spark, path)
-    require(fs.exists(p),
+  def load(spark: SparkSession, path: String): Meta =
+    parse(IndexTable.readStamp(spark, path, StampName,
       s"no text index at $path (missing $StampName stamp) — build() " +
-        "must complete before query()")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      var n = in.read(tmp)
-      while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    parse(text, path)
-  }
+        "must complete before query()"), path)
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{cosine_distance, q8_cosine_distance}
@@ -20,9 +19,10 @@ import graft.functions.GraftFunctions.{cosine_distance, q8_cosine_distance}
   * `build*` runs the one-scan training (IVF centroids + residual PQ
   * codebook; LSH is oblivious to the data, scalar int8 is model-free),
   * materializes the per-row index columns next to the float vectors as
-  * ONE Parquet table, and stamps the trained model + parameters into a
-  * `_graft_vector_index` sidecar (the same stamp-and-validate pattern
-  * as the [[graft.pipeline.StreamingDedup]] signature store: probing
+  * ONE manifest table ([[IndexTable]]), and stamps the trained model +
+  * parameters into a `_graft_vector_index` sidecar (the same
+  * stamp-and-validate pattern as the
+  * [[graft.pipeline.StreamingDedup]] signature store: probing
   * an index with the wrong parameters must fail loudly, not silently
   * return garbage). `query*` loads the stamp — KB-scale driver state,
   * no Spark job — and runs the SAME search shapes as the transient
@@ -31,12 +31,11 @@ import graft.functions.GraftFunctions.{cosine_distance, q8_cosine_distance}
   *
   * Scale design per kind:
   *  - `ivfpq`: data partitioned BY CELL — a probe visits nprobe cells,
-  *    so partition pruning (static via the broadcast cell list, or
-  *    dynamic) skips the other nlist−nprobe directories entirely; the
-  *    coarse stage column-prunes to (nn_id, cell, pq) (m bytes a row),
-  *    floats are decoded only by the candidate-bounded rerank join.
-  *  - `lsh`: the exploded band table partitioned by (tbl, bucket) —
-  *    probes read only their (multi-probed) buckets.
+  *    so per-file cell min/max, read from the log on the driver, skip
+  *    the files of the other cells; the coarse stage column-prunes to
+  *    (nn_id, cell, pq) (m bytes a row), floats are decoded only by
+  *    the candidate-bounded rerank join.
+  *  - `lsh`: the exploded band table partitioned by (tbl, bucket).
   *  - `q8`: flat table; the coarse pass column-prunes to the packed
   *    codes (¼ of the float bytes) + two doubles, rerank joins floats
   *    back for the survivors.
@@ -44,7 +43,7 @@ import graft.functions.GraftFunctions.{cosine_distance, q8_cosine_distance}
 object VectorIndex {
 
   private val Version = "graft-vector-index v1"
-  private val StampName = "_graft_vector_index"
+  private[ops] val StampName = "_graft_vector_index"
 
   /** The stamp: everything a query needs to reuse the index without
     * touching the training inputs. Driver-side KBs (nlist×dim floats +
@@ -62,7 +61,52 @@ object VectorIndex {
       centroids: Seq[Seq[Float]],
       pq: Option[Quantize.PqModel])
 
-  private[ops] def dataPath(path: String) = s"$path/data"
+  /** The index table's partition columns per kind: a probe's cells
+    * (ivfpq) or bands (lsh) select their files by per-file min/max.
+    */
+  private def partitionCols(kind: String): Seq[String] = kind match {
+    case "ivfpq" => Seq("cell")
+    case "lsh" => Seq("tbl", "bucket")
+    case _ => Seq.empty
+  }
+
+  /** `rows` (carrying the stamped id and vector columns) as index
+    * rows, encoded with the stamped model: row-local codes, so any
+    * split of the same rows encodes identically.
+    */
+  private[ops] def encode(meta: Meta, rows: DataFrame): DataFrame =
+    meta.kind match {
+      case "ivfpq" =>
+        Similarity.ivfPqIndexFrame(rows, meta.idCol, meta.vecCol,
+          meta.centroids, meta.pq.get, keepVec = true)
+      case "q8" =>
+        Quantize.withIndexColumns(
+          rows.select(col(meta.idCol), col(meta.vecCol)), meta.vecCol)
+      case "lsh" =>
+        rows.select(col(meta.idCol).as("nn_id"), col(meta.vecCol).as("bv"),
+          posexplode(Similarity.lshTableBuckets(col(meta.vecCol), meta.dim,
+            meta.numPlanes, meta.seed, meta.numTables))
+            .as(Seq("tbl", "bucket")))
+      case other => throw new IllegalArgumentException(
+        s"vector index has unknown kind '$other'")
+    }
+
+  /** The build's write: unstamp (the index table is created afresh,
+    * stamp and all), write the encoded rows, then stamp — a crashed
+    * build leaves no stamp, so it never passes for an index.
+    */
+  private def build(base: DataFrame, path: String, meta: Meta): Unit = {
+    val spark = base.sparkSession
+    IndexTable.create(spark, path, encode(meta, base),
+      partitionCols(meta.kind))
+    IndexTable.writeStamp(spark, path, StampName, render(meta))
+  }
+
+  /** The live index rows at `path`, under the index table's schema. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    loadAny(spark, path)
+    IndexTable.open(spark, path).read()
+  }
 
   // ----------------------------------------------------------------
   // build
@@ -98,13 +142,7 @@ object VectorIndex {
     val cents = Similarity.ivfCentroidsFromSample(sample, nlist)
     val model = Quantize.trainPqResidualsFromSample(sample, cents,
       m, ks, lloydIters = 5)
-    val spark = base.sparkSession
-    unstamp(spark, path)
-    Similarity.ivfPqIndexFrame(base, idCol, vecCol, cents, model,
-        keepVec = true)
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(dataPath(path))
-    stamp(spark, path, Meta("ivfpq", idCol, vecCol,
+    build(base, path, Meta("ivfpq", idCol, vecCol,
       cents.headOption.map(_.length).getOrElse(0), seed, nlist, 0, 0,
       cents, Some(model)))
   }
@@ -116,15 +154,9 @@ object VectorIndex {
       base: DataFrame,
       path: String,
       idCol: String,
-      vecCol: String): Unit = {
-    val spark = base.sparkSession
-    unstamp(spark, path)
-    Quantize.withIndexColumns(
-        base.select(col(idCol), col(vecCol)), vecCol)
-      .write.mode(SaveMode.Overwrite).parquet(dataPath(path))
-    stamp(spark, path, Meta("q8", idCol, vecCol, 0, 0L, 0, 0, 0,
+      vecCol: String): Unit =
+    build(base, path, Meta("q8", idCol, vecCol, 0, 0L, 0, 0, 0,
       Seq.empty, None))
-  }
 
   /** Materialize a hyperplane-LSH index: the exploded band table
     * (nn_id, vec, tbl, bucket) partitioned by (tbl, bucket) so probes
@@ -142,24 +174,17 @@ object VectorIndex {
       numTables: Int = 1,
       seed: Long = 42L): Unit = {
     require(numTables >= 1, s"numTables=$numTables")
-    val spark = base.sparkSession
-    unstamp(spark, path)
-    base.select(col(idCol).as("nn_id"), col(vecCol).as("bv"),
-        posexplode(Similarity.lshTableBuckets(col(vecCol), dim, numPlanes,
-          seed, numTables)).as(Seq("tbl", "bucket")))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbl", "bucket")
-      .parquet(dataPath(path))
-    stamp(spark, path, Meta("lsh", idCol, vecCol, dim, seed, 0,
+    build(base, path, Meta("lsh", idCol, vecCol, dim, seed, 0,
       numPlanes, numTables, Seq.empty, None))
   }
 
   /** Incrementally add rows to an existing index WITHOUT retraining:
     * the stamp's model (centroids + codebook / plane geometry / int8
     * scheme) encodes the new rows exactly as the build did, and the
-    * encoded rows append to the data table in the same partition
-    * layout. This is the ingest-time half of the provisioned-index
-    * contract — the reference's store indexes each upserted document
-    * as it arrives against the index policy fixed at provisioning
+    * encoded rows append to the index table in one commit. This is the
+    * ingest-time half of the provisioned-index contract — the
+    * reference's store indexes each upserted document as it arrives
+    * against the index policy fixed at provisioning
     * (`CosmosDBClientWrapper.cs:119-144`); it never retrains.
     *
     * Consequences, by design:
@@ -178,114 +203,44 @@ object VectorIndex {
   def append(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
     val meta = loadAny(spark, path)
-    meta.kind match {
-      case "ivfpq" =>
-        Similarity.ivfPqIndexFrame(rows, meta.idCol, meta.vecCol,
-            meta.centroids, meta.pq.get, keepVec = true)
-          .write.mode(SaveMode.Append).partitionBy("cell")
-          .parquet(dataPath(path))
-      case "q8" =>
-        Quantize.withIndexColumns(
-            rows.select(col(meta.idCol), col(meta.vecCol)), meta.vecCol)
-          .write.mode(SaveMode.Append).parquet(dataPath(path))
-      case "lsh" =>
-        rows.select(col(meta.idCol).as("nn_id"),
-            col(meta.vecCol).as("bv"),
-            posexplode(Similarity.lshTableBuckets(col(meta.vecCol),
-              meta.dim, meta.numPlanes, meta.seed, meta.numTables))
-              .as(Seq("tbl", "bucket")))
-          .write.mode(SaveMode.Append).partitionBy("tbl", "bucket")
-          .parquet(dataPath(path))
-      case other =>
-        throw new IllegalArgumentException(
-          s"index at $path has unknown kind '$other'")
-    }
+    IndexTable.open(spark, path).append(encode(meta, rows))
   }
 
   // ----------------------------------------------------------------
-  // delete — tombstones + query-time anti-join + physical compaction
+  // delete and compact: commits on the index table
   // ----------------------------------------------------------------
 
-  private[ops] def tombPath(path: String) = s"$path/tombstones"
-
-  /** The data table's id column name: the ivfpq/lsh layouts rename the
+  /** The index table's id column name: the ivfpq/lsh layouts rename the
     * id to `nn_id` at build time; q8 keeps the caller's column.
     */
   private[ops] def dataIdCol(meta: Meta): String =
     if (meta.kind == "q8") meta.idCol else "nn_id"
 
-  /** Mark ids as deleted: O(ids) — the id set appends to a
-    * `tombstones/` sidecar and every query path anti-joins it before
-    * scoring, so a deleted row stops serving results IMMEDIATELY.
+  /** Delete the rows of `ids` (the frame's first column) in ONE commit
+    * on the index table: a deleted row stops serving results at once.
     * This closes the read-path gap the reference's store never has
     * (its vector index lives ON the container, so a document delete
     * is index-consistent by construction —
-    * `AzureCosmosDB/.../CosmosDBClientWrapper.cs:112-152`); an
-    * append-only external index without tombstones would keep serving
-    * a deleted document until a full rebuild.
-    *
-    * The index data itself is untouched until [[compact]] physically
-    * drops the rows on a maintenance cadence — the same
-    * tombstone-then-compact cycle every LSM/lakehouse delete uses.
-    * Ids are cast to the data table's id type so the anti-join can
-    * never silently type-mismatch. Deleting an absent id is a no-op;
-    * deletes are idempotent.
+    * `AzureCosmosDB/.../CosmosDBClientWrapper.cs:112-152`). Ids are
+    * cast to the index's id type, so a type mismatch can never
+    * silently miss. Deleting an absent id is a no-op; deletes are
+    * idempotent.
     */
   def delete(ids: DataFrame, path: String): Unit = {
     val spark = ids.sparkSession
-    val meta = loadAny(spark, path)
-    val idName = dataIdCol(meta)
-    val idType = spark.read.parquet(dataPath(path)).schema(idName).dataType
-    ids.select(col(ids.columns.head).cast(idType).as(idName)).distinct()
-      .write.mode(SaveMode.Append).parquet(tombPath(path))
+    val idName = dataIdCol(loadAny(spark, path))
+    IndexTable.deleteIds(IndexTable.open(spark, path), ids, idName)
   }
 
-  /** Anti-join `df` against the tombstone set (no tombstones → `df`
-    * unchanged). Broadcast by design: tombstones accumulate only
-    * between maintenance compactions, so the set is
-    * deletion-rate-bounded — KBs of ids, never corpus-scale.
-    */
-  private def notDeleted(spark: SparkSession, path: String,
-      df: DataFrame, idName: String): DataFrame = {
-    val p = new Path(tombPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      df.join(
-        broadcast(spark.read.parquet(tombPath(path)).toDF(idName).distinct()),
-        Seq(idName), "left_anti")
-    else df
-  }
-
-  /** Physically drop tombstoned rows: stage a filtered rewrite of the
-    * data table in the SAME partition layout, swap directories, then
-    * clear the tombstones. Queries are answer-identical before and
-    * after (the anti-join already hid the rows); compaction reclaims
-    * the bytes and shrinks the tombstone set back to zero. Staged-swap
-    * failure contract as everywhere else: the live table is renamed
-    * aside (never deleted) until the swap succeeds — a failure leaves
-    * old or new, not a mix. Because row codes are row-local and the
-    * model lives in the stamp, the compacted table is bit-identical to
-    * encoding the surviving rows directly (IndexSpec pins it).
+  /** Rewrite the index table's files ([[ManifestTableFormat.compact]]):
+    * the files deletes and appends left behind re-bin, still clustered
+    * by the kind's partition columns. Answers are unchanged; because
+    * row codes are row-local and the model lives in the stamp, the
+    * compacted rows equal encoding the live rows directly.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val meta = loadAny(spark, path)
-    val tomb = new Path(tombPath(path))
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) return
-    val idName = dataIdCol(meta)
-    val live = new Path(dataPath(path))
-    val tmp = new Path(
-      dataPath(path) + ".compacting-" + java.util.UUID.randomUUID())
-    val filtered = notDeleted(spark, path,
-      spark.read.parquet(dataPath(path)), idName)
-    val w = filtered.write.mode(SaveMode.Overwrite)
-    meta.kind match {
-      case "ivfpq" => w.partitionBy("cell").parquet(tmp.toString)
-      case "lsh" => w.partitionBy("tbl", "bucket").parquet(tmp.toString)
-      case _ => w.parquet(tmp.toString)
-    }
-    graft.sink.StagedSwap.swap(fs, live, tmp)
-    fs.delete(tomb, true)
+    loadAny(spark, path)
+    IndexTable.open(spark, path).compact()
   }
 
   // ----------------------------------------------------------------
@@ -305,22 +260,19 @@ object VectorIndex {
       nprobe: Int = 4,
       rerankPerProbe: Int = 64): DataFrame = {
     val meta = load(spark, path, expectKind = "ivfpq")
-    val t = spark.read.parquet(dataPath(path))
-    // partition pruning, guaranteed statically: the probes' nprobe
-    // cells (≤ nlist ints, one tiny probe-side job) become a literal
-    // filter on the partition column, so the coarse scan lists only
-    // those cell directories — no reliance on the dynamic-pruning
-    // heuristics firing. Removes only rows the cell equi-join would
-    // drop anyway, so results are unchanged.
+    val pin = IndexTable.open(spark, path).pinScan()
+    // the probes' nprobe cells (≤ nlist ints, one tiny probe-side job)
+    // pick the coarse scan's files from their cell min/max on the
+    // driver and filter its rows. Removes only rows the cell equi-join
+    // would drop anyway, so results are unchanged.
     val cells = Similarity
       .ivfProbeCells(probes, meta.idCol, meta.vecCol, nprobe,
         meta.centroids)
       .select("cell").distinct().collect().map(_.getInt(0)).sorted
     Similarity.ivfPqSearch(
-      notDeleted(spark, path,
-        t.select("nn_id", "cell", "pq")
-          .filter(col("cell").isin(cells.toIndexedSeq: _*)), "nn_id"),
-      t.select(col("nn_id"), col("vec").as("bvx")),
+      pin.readWhereIn("cell", cells.toIndexedSeq)
+        .select("nn_id", "cell", "pq"),
+      pin.read(pin.pairs).select(col("nn_id"), col("vec").as("bvx")),
       probes, meta.idCol, meta.vecCol, k, nprobe, rerankPerProbe,
       meta.centroids, meta.pq.get)
   }
@@ -338,12 +290,10 @@ object VectorIndex {
       rerank: Int = 0): DataFrame = {
     val meta = load(spark, path, expectKind = "q8")
     val r = if (rerank > 0) rerank else math.max(4 * k, 32)
-    val t = spark.read.parquet(dataPath(path))
+    val t = IndexTable.open(spark, path).read()
     val id = col(meta.idCol)
     val q = typedlit(queryVec)
-    notDeleted(spark, path,
-        t.select(id, col("q8_codes"), col("q8_mn"), col("q8_scale")),
-        meta.idCol)
+    t.select(id, col("q8_codes"), col("q8_mn"), col("q8_scale"))
       .withColumn("q8_dist",
         round(q8_cosine_distance(
           col("q8_codes"), col("q8_mn"), col("q8_scale"), q), 6))
@@ -359,8 +309,8 @@ object VectorIndex {
 
   /** ANN via a prebuilt LSH index — identical results to
     * [[Similarity.lshAnnJoin]] with the build's parameters; the base
-    * side reads precomputed buckets (partition-pruned to the probed
-    * ones) instead of re-projecting every vector.
+    * side reads precomputed buckets instead of re-projecting every
+    * vector.
     */
   def queryLsh(
       spark: SparkSession,
@@ -369,10 +319,9 @@ object VectorIndex {
       k: Int): DataFrame = {
     val meta = load(spark, path, expectKind = "lsh")
     Similarity.lshSearch(
-      notDeleted(spark, path,
-        spark.read.parquet(dataPath(path))
-          .select(col("nn_id"), col("bv"), col("tbl").cast("int"),
-            col("bucket").cast("int")), "nn_id"),
+      IndexTable.open(spark, path).read()
+        .select(col("nn_id"), col("bv"), col("tbl").cast("int"),
+          col("bucket").cast("int")),
       probes, meta.idCol, meta.vecCol, k, meta.dim, meta.numPlanes,
       meta.seed, meta.numTables)
   }
@@ -433,42 +382,15 @@ object VectorIndex {
       kv("numTables").toInt, parseVecs(kv("centroids")), pq)
   }
 
-  private def stampFile(spark: SparkSession, path: String) = {
-    val p = new Path(path, StampName)
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  /** Remove the stamp before a rebuild: readers treat a stampless
-    * directory as "no index", so a crashed rebuild can never be
-    * mistaken for a valid one. Tombstones go with it — they refer to
-    * the OLD data generation and must not mask rows of the new one.
-    */
-  private def unstamp(spark: SparkSession, path: String): Unit = {
-    val (p, fs) = stampFile(spark, path)
-    if (fs.exists(p)) fs.delete(p, false)
-    val t = new Path(tombPath(path))
-    if (fs.exists(t)) fs.delete(t, true)
-  }
-
-  private def stamp(spark: SparkSession, path: String, meta: Meta): Unit = {
-    val (p, fs) = stampFile(spark, path)
-    val out = fs.create(p, true)
-    try out.write(render(meta).getBytes("UTF-8")) finally out.close()
-  }
-
   /** Load and validate the stamp — a driver-side file read, no Spark
     * job. Fails loudly on a missing/incompatible index.
     */
   def load(spark: SparkSession, path: String,
       expectKind: String): Meta = {
-    val (p, fs) = stampFile(spark, path)
-    require(fs.exists(p),
+    val meta = parse(IndexTable.readStamp(spark, path, StampName,
       s"no vector index at $path (missing $StampName stamp) — " +
         s"run VectorIndex.build first; a data directory without a " +
-        "stamp is an incomplete build")
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val meta = parse(text, path)
+        "stamp is an incomplete build"), path)
     require(meta.kind == expectKind,
       s"index at $path is kind '${meta.kind}' but was queried as " +
         s"'$expectKind' — kinds are not interchangeable")
@@ -478,13 +400,9 @@ object VectorIndex {
   /** Load whatever kind is stamped at `path` (for kind-dispatching
     * callers like [[append]]); same loud failure on a missing stamp.
     */
-  private[ops] def loadAny(spark: SparkSession, path: String): Meta = {
-    val (p, fs) = stampFile(spark, path)
-    require(fs.exists(p),
+  private[ops] def loadAny(spark: SparkSession, path: String): Meta =
+    parse(IndexTable.readStamp(spark, path, StampName,
       s"no vector index at $path (missing $StampName stamp) — " +
-        "run VectorIndex.build first; append cannot create an index")
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    parse(text, path)
-  }
+        "run VectorIndex.build first; append cannot create an index"),
+      path)
 }

@@ -348,10 +348,10 @@ object LlmOpsQueries {
     // persistent IVF-PQ index to a manifest table's head off the
     // change feed (B13). Contract booleans: one catch-up applies
     // exactly the churn (100 new + 20 rewritten appended; 20 old
-    // contents + 20 deletes tombstoned), a second catch-up is a
-    // no-op, and a full from-scratch replay (lost sync record)
-    // converges without appending anything twice. IndexSyncSpec adds
-    // the query-level serving checks (delete masks, revive unmasks).
+    // contents + 20 deletes removed), a second catch-up is a no-op,
+    // and a full replay forced by markSynced(-1) converges without
+    // appending anything twice. IndexSyncSpec adds the query-level
+    // serving checks (a delete stops serving, a re-insert serves).
     "d3i_ann_index_sync" -> QueryDef(
       "SELECT TRUE AS follows_ok, TRUE AS idempotent_ok, " +
         "TRUE AS replay_ok") { (s, dir) =>
@@ -1669,12 +1669,12 @@ object LlmOpsQueries {
     // index lives ON the container, so deletes are index-consistent by
     // construction; an append-only external index would keep serving a
     // deleted document until a rebuild). Two sub-contracts:
-    //  - q8 (model-free, so EXACT): build, tombstone vec_id < 10
+    //  - q8 (model-free, so EXACT): build, delete vec_id < 10
     //    (including the probe itself — the strongest case: the
     //    distance-0 top-1 must vanish), then a full-rerank query must
     //    hash-match DuckDB's brute-force cosine top-k over the REDUCED
     //    corpus — deleted rows gone, next-best backfilled, bit-equal.
-    //  - ivfpq: tombstoned ids never surface and every probe still
+    //  - ivfpq: deleted ids never surface and every probe still
     //    gets a full top-5 (masked_ok); [[VectorIndex.compact]] leaves
     //    query answers identical (compact_identical) and its physical
     //    data bit-equal to re-encoding the reduced corpus with the
@@ -1721,7 +1721,7 @@ object LlmOpsQueries {
       val reenc = Similarity.ivfPqIndexFrame(
         e.filter(col("vec_id") >= 10), "vec_id", "embedding",
         meta.centroids, meta.pq.get, keepVec = true)
-      val compacted = s.read.parquet(s"$ivfp/data")
+      val compacted = VectorIndex.read(s, ivfp)
         .select(col("nn_id"), col("cell").cast("int").as("cell"),
           col("pq"), col("vec"))
       topk
@@ -1736,14 +1736,14 @@ object LlmOpsQueries {
     },
 
     // B4h: delete propagation through the persistent text index — the
-    // text-side twin of d3g. Tombstoning documents updates the
-    // stamp's corpus stats by exact recount (integer-valued double
-    // sums), and queries anti-join tombstones BEFORE deriving document
-    // frequencies, so post-delete BM25 must hash-match DuckDB's scan
-    // over the REDUCED corpus (same formula as b4c/b4d/b4e, N and
-    // avgdl shrunk). compact() then physically drops the rows without
-    // changing any answer, and the postings files verifiably no
-    // longer contain the deleted documents.
+    // text-side twin of d3g. A delete removes the documents' postings
+    // and doc-length rows in one commit; queries derive document
+    // frequencies and the corpus stats (exact integer-valued sums)
+    // from the live rows, so post-delete BM25 must hash-match DuckDB's
+    // scan over the REDUCED corpus (same formula as b4c/b4d/b4e, N and
+    // avgdl shrunk). compact() then rewrites the files without
+    // changing any answer, and the index rows verifiably no longer
+    // contain the deleted documents.
     "b4h_fulltext_index_delete" -> QueryDef(
       """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0),
         |tok AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM docs),
@@ -1772,7 +1772,7 @@ object LlmOpsQueries {
         .localCheckpoint()
       TextIndex.compact(s, path)
       val post = TextIndex.query(s, path, Seq("window", "filter"), k = 20)
-      val leftover = s.read.parquet(s"$path/postings")
+      val leftover = TextIndex.read(s, path)
         .filter(col("doc_id") % 7 === 0)
       post
         .crossJoin(broadcast(symDiffCount(pre, post)

@@ -569,7 +569,9 @@ class ManifestTableFormat(
       val i = line.indexOf(tag)
       if (i < 0) None
       else {
+        // signed: a stream marker may record −1 (IndexSync.markSynced)
         var j = i + tag.length
+        if (j < line.length && line.charAt(j) == '-') j += 1
         while (j < line.length && line.charAt(j).isDigit) j += 1
         Some(line.substring(i + tag.length, j).toLong)
       }
@@ -1277,10 +1279,13 @@ class ManifestTableFormat(
     * (v5 column mapping), so the read happens under the physical
     * schema and projects back to the logical names; on a never-
     * renamed table the two are identical and the projection is a
-    * no-op Catalyst collapses.
+    * no-op Catalyst collapses. No file gives an empty frame typed as
+    * a parquet read types it (every field and element nullable), so
+    * an empty and a non-empty read have one schema.
     */
   private def readFiles(files: Seq[String], s: StructType): DataFrame = {
-    if (files.isEmpty) return emptyFrame(s)
+    if (files.isEmpty)
+      return emptyFrame(org.apache.spark.sql.graftbridge.Bridge.asNullable(s))
     val phys = ManifestTableFormat.physicalSchema(s)
     spark.read.schema(phys).parquet(files: _*)
       .select(s.fields.toIndexedSeq.map(f =>
@@ -1320,10 +1325,11 @@ class ManifestTableFormat(
         val kept =
           if (shadowed.isEmpty) ck
           else ck.join(shadowed.toDF("file"), Seq("file"), "left_anti")
-        // a pre-column-stats checkpoint lacks the stats columns:
-        // null-fill them (fail-open everywhere they are consulted);
-        // the next checkpoint re-records the full current shape
-        kept.unionByName(tail, allowMissingColumns = true)
+        // a pre-column-stats checkpoint reads its missing stats
+        // columns null ([[ManifestTableFormat.statsSchema]]: fail-open
+        // everywhere they are consulted); the next checkpoint
+        // re-records the full current shape
+        kept.unionByName(tail)
     }
   }
 
@@ -4413,15 +4419,11 @@ class ManifestTableFormat(
         "retention is bounded by checkpoint + vacuum)")
     var live = Map.empty[String, Option[ManifestTableFormat.DvRef]]
     if (pc >= jc && pc >= 0) {
-      val ck = ManifestTableFormat.ckptFrame(spark,
-        ckptParquetPath(pc).toString)
-      val hasDv = ck.schema.fieldNames.contains("dv_path")
-      val cols =
-        if (hasDv) ck.select("file", "dv_path", "dv_card")
-        else ck.select(col("file"),
-          lit(null).cast("string").as("dv_path"),
-          lit(null).cast("long").as("dv_card"))
-      live = cols.collect().map(r => r.getString(0) ->
+      // a pre-v6 checkpoint reads null dv columns: no vectors
+      live = ManifestTableFormat.ckptFrame(spark,
+          ckptParquetPath(pc).toString)
+        .select("file", "dv_path", "dv_card")
+        .collect().map(r => r.getString(0) ->
         (if (r.isNullAt(1)) None
          else Some(ManifestTableFormat.DvRef(
            r.getString(1), r.getLong(2))))).toMap
@@ -4747,10 +4749,8 @@ object ManifestTableFormat {
     * parquet directory is IMMUTABLE once published (versioned name,
     * `_SUCCESS`-guarded; vacuum only ever deletes SUPERSEDED dirs no
     * live snapshot references), yet every `spark.read.parquet` on it
-    * fires a fresh schema-inference + file-listing pass — one
-    * driver-side job per stats-frame consultation of a checkpointed
-    * table (measured: 13 such jobs in c37b's post-checkpoint
-    * read/vacuum alone). Caching the unresolved plan removes that;
+    * lists the directory again. Caching the unresolved plan removes
+    * that;
     * every action on the handle still reads the checkpoint bytes, so
     * no row or result is ever reused.
     *
@@ -4766,6 +4766,24 @@ object ManifestTableFormat {
     new java.util.WeakHashMap[SparkSession,
       scala.collection.mutable.Map[Path, (Path, DataFrame)]]()
 
+  /** The stats frame's columns ([[ManifestTableFormat!.statsFrame]]),
+    * which is what a parquet checkpoint holds. Checkpoints read under
+    * it, so no read infers a schema; a column an older checkpoint
+    * lacks reads null, which every consumer treats as "not recorded".
+    */
+  private[sink] val statsSchema: StructType = {
+    import org.apache.spark.sql.types._
+    def arr(t: DataType) = ArrayType(t)
+    StructType(Seq("file" -> StringType, "bits" -> arr(LongType),
+      "lo" -> StringType, "hi" -> StringType, "num_bits" -> IntegerType,
+      "num_hashes" -> IntegerType, "rows" -> LongType, "bytes" -> LongType,
+      "cs_names" -> arr(StringType), "cs_lo" -> arr(StringType),
+      "cs_hi" -> arr(StringType), "cs_valid" -> arr(IntegerType),
+      "cs_nn" -> arr(LongType), "cs_exact" -> arr(IntegerType),
+      "cs_bloom" -> arr(arr(LongType)), "dv_path" -> StringType,
+      "dv_card" -> LongType).map { case (n, t) => StructField(n, t) })
+  }
+
   private[sink] def ckptFrame(spark: SparkSession, dir: String): DataFrame = {
     val d = new Path(dir)
     def memo = ckptMemo.computeIfAbsent(spark,
@@ -4773,7 +4791,7 @@ object ManifestTableFormat {
     ckptMemo.synchronized(memo.get(d.getParent)).collect {
       case (cached, df) if cached == d => df
     }.getOrElse {
-      val df = spark.read.parquet(dir)
+      val df = spark.read.schema(statsSchema).parquet(dir)
       ckptMemo.synchronized {
         memo.get(d.getParent) match {
           // zero-padded version names order like the versions

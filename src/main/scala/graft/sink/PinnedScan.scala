@@ -1,6 +1,7 @@
 package graft.sink
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sink.ManifestTableFormat.{DvRef, ExactProbe, FileRange, MetaAgg, StatsProbe}
@@ -64,6 +65,26 @@ final class PinnedScan private[sink] (
     */
   def read(ps: Seq[(String, Option[DvRef])]): DataFrame =
     format.readPinned(ps, schema)
+
+  /** The pinned rows whose integer `column` is one of `values`. Files
+    * are picked from their recorded min/max ([[ranges]]): on the
+    * driver with no Spark job over a checkpoint-less log, by one narrow
+    * stats read with a checkpoint. Every pinned file is read when the
+    * ranges fail open, and the rows are filtered exactly either way.
+    * A persistent index reads its probed cells or term buckets so.
+    */
+  def readWhereIn(column: String, values: Seq[Int]): DataFrame = {
+    val phys = typeOf(column).map(_._1).getOrElse(
+      throw new IllegalArgumentException(
+        s"no column '$column' in ${schema.fieldNames.mkString(", ")}"))
+    val vs = values.map(BigDecimal(_))
+    val keep = ranges(files, phys).map(_.collect {
+      case r if r.lo.exists(lo => r.hi.exists(hi =>
+        vs.exists(v => lo <= v && v <= hi))) => r.file
+    }.toSet)
+    read(keep.fold(pairs)(k => pairs.filter(p => k(p._1))))
+      .filter(col(column).isin(values: _*))
+  }
 
   /** The CBO's numRows for `fs`. */
   def rowCount(fs: Seq[String]): Option[Long] = live(fs).map(_.values.sum)

@@ -3,10 +3,9 @@ package graft.sink
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The ONE staged-swap protocol behind every whole-directory rewrite
-  * in this engine (layout recluster, index compaction, signature-store
-  * compaction): materialize the
-  * replacement COMPLETELY at a staging path, then swap it into the
-  * live path under a persistent intent marker.
+  * in this engine (layout recluster, signature-store compaction):
+  * materialize the replacement COMPLETELY at a staging path, then swap
+  * it into the live path under a persistent intent marker.
   *
   * Protocol (marker = `<live>._graft_swap`, a sibling file naming the
   * staged and aside paths):
@@ -39,7 +38,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    maintenance swaps single-writer and keep the previous generation
   *    until recovery confirms, or use a manifest-committing table
   *    format (the documented Delta/Iceberg seam) where object-store
-  *    atomicity is required.
+  *    atomicity is required — as the vector and text indexes do: their
+  *    rows live on a manifest log, whose commits replace these swaps.
   */
 object StagedSwap {
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Spark internals needed by an extension
   * library: wrapping a Catalyst [[Expression]] as a user-facing [[Column]]
@@ -158,4 +159,13 @@ object Bridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `s` as a file-source read types it: every field, array element
+    * and map value nullable, at every depth. Internal API:
+    * `DataType.asNullable` (private[spark]), the call a parquet
+    * relation makes on its data schema. Break mode: visibility or
+    * signature change → compile error; the canary compares it with
+    * the schema a parquet round trip reads back.
+    */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

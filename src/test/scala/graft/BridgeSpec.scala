@@ -126,4 +126,21 @@ class BridgeSpec extends SparkSpec {
       assert(ended.get >= 1)
     } finally sc.removeSparkListener(l)
   }
+
+  test("canary: asNullable() types a schema as a parquet read does " +
+      "(DataType.asNullable)") {
+    import org.apache.spark.sql.types._
+    val s = StructType(Seq(
+      StructField("v", ArrayType(FloatType, containsNull = false),
+        nullable = false),
+      StructField("m", MapType(StringType,
+        ArrayType(IntegerType, containsNull = false),
+        valueContainsNull = false))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-nullable")
+      .toString + "/t"
+    spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(Seq(1f), Map("k" -> Seq(1)))), s)
+      .write.parquet(dir)
+    assert(Bridge.asNullable(s) == spark.read.schema(s).parquet(dir).schema)
+  }
 }

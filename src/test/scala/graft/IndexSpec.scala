@@ -37,10 +37,12 @@ class IndexSpec extends SparkSpec {
       "embedding", k = 5, nlist = 16, nprobe = 4, rerankPerProbe = 96)
     assert(rows(viaIndex) == rows(retrain))
     assert(viaIndex.count() == 50)
-    // the coarse scan must prune to the probed cells' partition
-    // directories (static partition filter from the collected cell set)
+    // the coarse scan must prune to the probed cells' files (picked by
+    // per-file cell min/max from the log) and filter on the collected
+    // cell set
     val plan = viaIndex.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
+    assert("PushedFilters: \\[[^\\]]*(In|EqualTo)\\(cell,".r
+      .findFirstIn(plan).isDefined,
       plan.take(2000))
   }
 
@@ -219,11 +221,15 @@ class IndexSpec extends SparkSpec {
     val post = rows(VectorIndex.queryLsh(spark, lshp, probes, k = 5))
     assert(post.forall(r => !victims.contains(r._2)))
 
-    // ivfpq: tombstone, then compact — answers identical before and
-    // after, tombstones cleared, deleted rows physically gone
+    // ivfpq: delete, then compact — answers identical before and
+    // after; the delete's own commit already removed the rows from the
+    // index table, and the compaction keeps them gone
     val ivfp = tmp("delete-ivfpq")
     VectorIndex.buildIvfPq(emb, ivfp, "vec_id", "embedding")
     VectorIndex.delete(Seq(1L, 2L, 3L).toDF("vec_id"), ivfp)
+    def held() = VectorIndex.read(spark, ivfp)
+      .filter(col("nn_id").isin(1L, 2L, 3L)).count()
+    assert(held() == 0)
     val preC = rows(VectorIndex.queryIvfPq(spark, ivfp, probes, k = 5,
       nprobe = 4, rerankPerProbe = 96))
     assert(preC.forall(r => !Seq(1L, 2L, 3L).contains(r._2)))
@@ -231,12 +237,9 @@ class IndexSpec extends SparkSpec {
     val postC = rows(VectorIndex.queryIvfPq(spark, ivfp, probes, k = 5,
       nprobe = 4, rerankPerProbe = 96))
     assert(preC == postC)
-    val fs = new Path(ivfp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(s"$ivfp/tombstones")))
-    assert(spark.read.parquet(s"$ivfp/data")
-      .filter(col("nn_id").isin(1L, 2L, 3L)).count() == 0)
-    // compact without tombstones is a no-op
+    assert(held() == 0)
+    assert(VectorIndex.read(spark, ivfp).count() == emb.count() - 3)
+    // a second compaction changes no answer
     VectorIndex.compact(spark, ivfp)
     assert(rows(VectorIndex.queryIvfPq(spark, ivfp, probes, k = 5,
       nprobe = 4, rerankPerProbe = 96)) == postC)
@@ -286,5 +289,33 @@ class IndexSpec extends SparkSpec {
     val after = VectorIndex.queryQ8(spark, path, queryVec, k = 1)
       .select("vec_id").collect().head.getLong(0)
     assert(after == 200L)
+  }
+
+  test("an index in the retired layout is refused with a rebuild " +
+      "message; a rebuild at the same path serves again") {
+    val path = tmp("old-layout")
+    // the retired layout: a stamp beside a parquet data directory, no
+    // manifest log
+    Quantize.withIndexColumns(emb.select("vec_id", "embedding"), "embedding")
+      .write.parquet(s"$path/data")
+    val out = new Path(path, "_graft_vector_index").getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+      .create(new Path(path, "_graft_vector_index"), true)
+    out.write(VectorIndex.render(VectorIndex.Meta("q8", "vec_id",
+      "embedding", 0, 0L, 0, 0, 0, Seq.empty, None)).getBytes("UTF-8"))
+    out.close()
+    val queryVec = emb.filter(col("vec_id") === 7L)
+      .select("embedding").collect().head.getSeq[Float](0)
+    val e = intercept[IllegalStateException] {
+      VectorIndex.queryQ8(spark, path, queryVec, k = 1)
+    }
+    assert(e.getMessage.contains("retired layout") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+    intercept[IllegalStateException] {
+      VectorIndex.append(emb.limit(1), path)
+    }
+    VectorIndex.buildQ8(emb, path, "vec_id", "embedding")
+    assert(VectorIndex.queryQ8(spark, path, queryVec, k = 1)
+      .select("vec_id").head().getLong(0) == 7L)
   }
 }

@@ -10,7 +10,8 @@ import graft.sink.{ChunkStore, ManifestTableFormat}
 
 /** D3i: a persistent IVF-PQ index follows a manifest table through
   * the change feed — upserts re-point, deletes stop serving, identical
-  * re-inserts revive, and replaying any span appends nothing twice.
+  * re-inserts serve again, replaying any span appends nothing twice,
+  * and a catch-up whose commit fails leaves nothing behind.
   */
 class IndexSyncSpec extends SparkSpec {
 
@@ -31,6 +32,11 @@ class IndexSyncSpec extends SparkSpec {
         Seq(col("document_url"), col("chunk_id")),
         Seq(col("embedding"))).as("vid"),
       col("embedding").as("v"))
+
+  /** The text index's live documents: its doc-length rows. */
+  private def docCount(idxPath: String): Long =
+    graft.ops.TextIndex.read(spark, idxPath)
+      .filter(col("term").isNull).count()
 
   private def served(idxPath: String, probe: Seq[Float]): Seq[String] = {
     import spark.implicits._
@@ -85,11 +91,10 @@ class IndexSyncSpec extends SparkSpec {
     val s2 = IndexSync.catchUp(spark, tbl, idx, prepare)
     assert(s2.appended == 0L && s2.tombstoned == 0L, s2)
 
-    // full replay (lost sync record) converges without duplicates,
-    // and earlier tombstones survive the replay's revive rewrite
-    // (the rewrite must keep the sidecar's schema — a renamed column
-    // reads back as nulls and silently serves every deleted id)
+    // full replay (the synced version moved back to -1) converges
+    // without duplicates, and earlier deletes stay deleted
     IndexSync.markSynced(spark, idx, -1L)
+    assert(IndexSync.lastSynced(spark, idx) == -1L)
     val s3 = IndexSync.catchUp(spark, tbl, idx, prepare)
     assert(s3.appended == 0L && s3.tombstoned == 0L, s3)
     val replayed = served(idx, vd)
@@ -97,8 +102,8 @@ class IndexSyncSpec extends SparkSpec {
     assert(!replayed.exists(_.startsWith("doc://b#")), replayed)
     assert(replayed.count(_.startsWith("doc://a#")) == 1, replayed)
 
-    // delete d, then re-insert it with IDENTICAL content: the revive
-    // path must unmask the same physical rows (nothing re-appended)
+    // delete d, then re-insert it with IDENTICAL content: the delete
+    // removed its row, so the re-insert appends it once
     store.delete(Seq("doc://d"))
     val s4 = IndexSync.catchUp(spark, tbl, idx, prepare)
     assert(s4.tombstoned == 1L, s4)
@@ -107,8 +112,8 @@ class IndexSyncSpec extends SparkSpec {
     assert(!afterDelete.exists(_.startsWith("doc://b#")), afterDelete)
     store.upsert(chunkOf("doc://d", vd, "d"))
     val s5 = IndexSync.catchUp(spark, tbl, idx, prepare)
-    assert(s5.appended == 0L && s5.tombstoned == 0L, s5)
-    assert(served(idx, vd).exists(_.startsWith("doc://d#")))
+    assert(s5.appended == 1L && s5.tombstoned == 0L, s5)
+    assert(served(idx, vd).count(_.startsWith("doc://d#")) == 1)
   }
 
   test("text index follows the table: upsert, delete, revive, replay") {
@@ -144,9 +149,9 @@ class IndexSyncSpec extends SparkSpec {
     assert(hits("pears").exists(_.startsWith("doc://a#")))
     assert(!hits("oranges").exists(_.startsWith("doc://a#")))
     assert(!hits("bananas").exists(_.startsWith("doc://b#")))
-    // stamped BM25 stats track the live corpus exactly: a(rewritten)
-    // and c live; b deleted
-    assert(TextIndex.load(spark, idx).docCount == 2.0)
+    // the BM25 corpus stats (the live doc-length rows) track the live
+    // corpus exactly: a(rewritten) and c live; b deleted
+    assert(docCount(idx) == 2L)
 
     // idempotent + full replay converges
     val s2 = IndexSync.catchUpText(spark, tbl, idx, tprep)
@@ -156,17 +161,18 @@ class IndexSyncSpec extends SparkSpec {
     assert(s3.appended == 0L && s3.tombstoned == 0L, s3)
     assert(!hits("bananas").exists(_.startsWith("doc://b#")))
 
-    // delete + identical re-insert: revive unmasks, stats recount
+    // delete + identical re-insert: the re-insert appends once, and
+    // the corpus stats follow
     store.delete(Seq("doc://c"))
     val s4 = IndexSync.catchUpText(spark, tbl, idx, tprep)
     assert(s4.tombstoned == 1L, s4)
     assert(hits("cherries").isEmpty)
-    assert(TextIndex.load(spark, idx).docCount == 1.0)
+    assert(docCount(idx) == 1L)
     store.upsert(doc("doc://c", "cherries everywhere"))
     val s5 = IndexSync.catchUpText(spark, tbl, idx, tprep)
-    assert(s5.appended == 0L && s5.tombstoned == 0L, s5)
+    assert(s5.appended == 1L && s5.tombstoned == 0L, s5)
     assert(hits("cherries").exists(_.startsWith("doc://c#")))
-    assert(TextIndex.load(spark, idx).docCount == 2.0)
+    assert(docCount(idx) == 2L)
   }
 
   test("a held sync lock refuses a second catch-up, release admits it") {
@@ -212,71 +218,69 @@ class IndexSyncSpec extends SparkSpec {
     assert(!fs.exists(lock))
   }
 
-  test("catchUpText heals a torn append instead of double-counting") {
+  test("a catch-up whose commit fails changes nothing; its re-run " +
+      "equals one clean catch-up") {
     import graft.ops.TextIndex
-    val tbl = fresh("graft-tsync-torn") + "/t"
-    val idx = fresh("graft-tsync-torn-idx") + "/ix"
-    val store = new ChunkStore(spark, tbl,
-      format = ManifestTableFormat.factory)
-    val mtf = new ManifestTableFormat(spark, tbl, store.schema)
-    def doc(url: String, text: String) =
-      chunkOf(url, Seq(1f, 0f, 0f, 0f), text)
-    val tprep = (rows: DataFrame) => rows.select(
+    def tprep(rows: DataFrame) = rows.select(
       IndexSync.contentAddressedId(
         Seq(col("document_url"), col("chunk_id")),
         Seq(col("chunk_text"))).as("tid"),
       col("chunk_text").as("text"))
-    store.upsert(doc("doc://a", "apples and oranges"))
-    TextIndex.build(tprep(store.read()), idx, "tid", "text")
-    IndexSync.markSynced(spark, idx, mtf.version)
+    /** A table with both indexes synced, then churn: a new document,
+      * a rewritten one and a deleted one.
+      */
+    def setup(tag: String): (String, String, String, Long) = {
+      val tbl = fresh(s"graft-isync-crash-$tag") + "/t"
+      val vidx = fresh(s"graft-isync-crash-v-$tag") + "/ix"
+      val tidx = fresh(s"graft-isync-crash-t-$tag") + "/ix"
+      val store = new ChunkStore(spark, tbl)
+      val mtf = new ManifestTableFormat(spark, tbl, store.schema)
+      store.upsert(chunkOf("doc://a", Seq(1f, 0f, 0f, 0f), "apples a"))
+      store.upsert(chunkOf("doc://b", Seq(0f, 1f, 0f, 0f), "bananas b"))
+      VectorIndex.buildIvfPq(prepare(store.read()), vidx, "vid", "v",
+        nlist = 2, m = 2, ks = 4)
+      TextIndex.build(tprep(store.read()), tidx, "tid", "text")
+      val v0 = mtf.version
+      IndexSync.markSynced(spark, vidx, v0)
+      IndexSync.markSynced(spark, tidx, v0)
+      store.upsert(chunkOf("doc://c", Seq(0f, 0f, 1f, 0f), "cherries c"))
+      store.upsert(chunkOf("doc://a", Seq(0.9f, 0.1f, 0f, 0f), "pears a"))
+      store.delete(Seq("doc://b"))
+      (tbl, vidx, tidx, v0)
+    }
+    def failing(idx: String) =
+      new ManifestTableFormat(spark, idx,
+          new org.apache.spark.sql.types.StructType()) {
+        override protected def beforeCommit(): Unit =
+          throw new IllegalStateException("injected commit failure")
+      }
+    def rowsOf(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
-    // new doc commits to the TABLE; now simulate a hard-killed sync
-    // that crashed between its postings write and its doclen write:
-    // the batch's postings landed, the doclen existence anchor did
-    // not, and the pending marker names the touched buckets
-    store.upsert(doc("doc://c", "cherries and apples"))
-    val tornId = tprep(store.read()
-        .filter(col("document_url") === "doc://c"))
-      .select("tid").collect().head.getString(0)
-    val posts = spark.read.parquet(idx + "/postings")
-    val appleTb = posts.filter(col("term") === "apples")
-      .select("tb").collect().head.getInt(0)
-    import spark.implicits._
-    Seq((tornId, "apples", 1.0, Seq(1)), (tornId, "cherries", 1.0, Seq(0)))
-      .toDF("doc_id", "term", "tf", "positions")
-      .withColumn("tb", when(col("term") === "apples", appleTb)
-        .otherwise(pmod(hash(col("term")),
-          lit(TextIndex.load(spark, idx).numBuckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("tb").parquet(idx + "/postings")
-    val tornTbs = spark.read.parquet(idx + "/postings")
-      .filter(col("doc_id") === tornId)
-      .select("tb").distinct().collect().map(_.getInt(0)).sorted
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(idx + "/_append_pending"), true)
-    out.write(tornTbs.mkString("\n").getBytes("UTF-8")); out.close()
-
-    // the replay heals the orphans FIRST, then re-appends the batch
-    // exactly once: without the heal, doc c's "apples"/"cherries"
-    // term frequencies would double
-    val s1 = IndexSync.catchUpText(spark, tbl, idx, tprep)
-    assert(s1.appended == 1L, s1)
-    val dup = spark.read.parquet(idx + "/postings")
-      .groupBy("doc_id", "term").count().filter(col("count") > 1)
-    assert(dup.isEmpty,
-      s"duplicated postings: ${dup.collect().mkString(", ")}")
-    assert(!fs.exists(
-      new org.apache.hadoop.fs.Path(idx + "/_append_pending")))
-    def hits(term: String) =
-      TextIndex.query(spark, idx, Seq(term), k = 10)
-        .select("doc_id").collect().map(_.getString(0)).toSeq
-    assert(hits("cherries").exists(_.startsWith("doc://c#")))
-    assert(hits("apples").count(_.nonEmpty) == 2)
-    assert(TextIndex.load(spark, idx).docCount == 2.0)
-    // no marker → heal is a no-op
-    assert(!TextIndex.healTornAppend(spark, idx))
+    val (tbl, vidx, tidx, v0) = setup("crash")
+    val (refTbl, refV, refT, _) = setup("clean")
+    for ((idx, text, read) <- Seq(
+        (vidx, false, (p: String) => VectorIndex.read(spark, p)),
+        (tidx, true, (p: String) => TextIndex.read(spark, p)))) {
+      val before = rowsOf(read(idx))
+      val e = intercept[IllegalStateException] {
+        IndexSync.catchUpOn(failing(idx), spark, tbl, idx,
+          if (text) tprep _ else prepare _, text)
+      }
+      assert(e.getMessage.contains("injected"))
+      // nothing published: same rows, same synced version, lock freed
+      assert(rowsOf(read(idx)) == before)
+      assert(IndexSync.lastSynced(spark, idx) == v0)
+    }
+    val s = IndexSync.catchUp(spark, tbl, vidx, prepare)
+    val sRef = IndexSync.catchUp(spark, refTbl, refV, prepare)
+    assert(s == sRef && s.appended == 2L && s.tombstoned == 2L, s)
+    assert(rowsOf(VectorIndex.read(spark, vidx)) ==
+      rowsOf(VectorIndex.read(spark, refV)))
+    val t = IndexSync.catchUpText(spark, tbl, tidx, tprep)
+    val tRef = IndexSync.catchUpText(spark, refTbl, refT, tprep)
+    assert(t == tRef && t.appended == 2L && t.tombstoned == 2L, t)
+    assert(rowsOf(TextIndex.read(spark, tidx)) ==
+      rowsOf(TextIndex.read(spark, refT)))
   }
 
   test("an index synced past the table fails loudly") {

@@ -48,6 +48,13 @@ class TextIndexSpec extends SparkSpec {
       .limit(k)
   }
 
+  /** (docCount, sumDl): the live doc-length rows' count and sum. */
+  private def corpus(path: String): (Long, Double) = {
+    val r = TextIndex.read(spark, path).filter(col("term").isNull)
+      .agg(count(lit(1)), sum(col("dl"))).head()
+    (r.getLong(0), r.getDouble(1))
+  }
+
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
@@ -56,10 +63,11 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(docs, path, "doc_id", "text")
     val viaIndex = TextIndex.query(spark, path, Seq("window", "filter"), 20)
     assert(rows(viaIndex) == rows(scanBm25(Seq("window", "filter"), 20)))
-    // postings scan must prune to the terms' tb partition directories
+    // the postings scan must prune to the terms' tb buckets: files
+    // picked by per-file tb min/max from the log, rows filtered on tb
     val plan = viaIndex.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*tb".r.findFirstIn(plan).isDefined,
-      plan.take(2000))
+    assert("PushedFilters: \\[[^\\]]*(In|EqualTo)\\(tb,".r
+      .findFirstIn(plan).isDefined, plan.take(2000))
   }
 
   test("query touches only the index (corpus deleted after build)") {
@@ -80,10 +88,11 @@ class TextIndexSpec extends SparkSpec {
       "doc_id", "text")
     TextIndex.append(docs.filter(col("doc_id") % 5 === 0), inc, "text")
     TextIndex.build(docs, full, "doc_id", "text")
-    // the stamps agree exactly (docCount and the EXACT sumDl), so the
-    // scoring constants are bit-equal, and the postings carry the same
-    // (doc, term, tf) rows
+    // the stamps agree, the corpus stats agree exactly (docCount and
+    // the EXACT sumDl), so the scoring constants are bit-equal, and the
+    // postings carry the same (doc, term, tf) rows
     assert(TextIndex.load(spark, inc) == TextIndex.load(spark, full))
+    assert(corpus(inc) == corpus(full))
     def q(p: String) = rows(
       TextIndex.query(spark, p, Seq("window", "filter"), 20))
     assert(q(inc) == q(full))
@@ -101,7 +110,7 @@ class TextIndexSpec extends SparkSpec {
       TextIndex.query(spark, path, Seq("x"), 5)
     }
     // round-trip
-    val m = TextIndex.Meta("doc_id", 500.0, 101.5, 64, 1.2, 0.75)
+    val m = TextIndex.Meta("doc_id", 64, 1.2, 0.75)
     assert(TextIndex.parse(TextIndex.render(m), path) == m)
     intercept[IllegalArgumentException] {
       TextIndex.parse("something else v9\nkind=?", path)
@@ -174,25 +183,23 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(docs, delP, "doc_id", "text")
     TextIndex.delete(deleted.select("doc_id"), delP)
     TextIndex.build(remaining, refP, "doc_id", "text")
-    // stamp stats recount exactly to the reduced corpus's build stats
-    assert(TextIndex.load(spark, delP) == TextIndex.load(spark, refP))
+    // the corpus stats are exactly the reduced corpus's build stats
+    assert(corpus(delP) == corpus(refP))
+    // the delete's commit removed every row of the deleted documents
+    def held() = TextIndex.read(spark, delP)
+      .filter(col("doc_id") % 7 === 0).count()
+    assert(held() == 0)
     def q(p: String) = rows(
       TextIndex.query(spark, p, Seq("window", "filter"), 20))
     assert(q(delP) == q(refP))
     // phrase path masks too (any 2-token prefix of a deleted doc)
     val phrase = TextIndex.phraseQuery(spark, delP, Seq("the", "quick"))
     assert(phrase.filter(col("doc_id") % 7 === 0).count() == 0)
-    // compact: physically dropped, tombstones cleared, answers fixed
+    // compact: rows stay gone, answers fixed
     TextIndex.compact(spark, delP)
     assert(q(delP) == q(refP))
-    assert(spark.read.parquet(s"$delP/postings")
-      .filter(col("doc_id") % 7 === 0).count() == 0)
-    assert(spark.read.parquet(s"$delP/doclen")
-      .filter(col("doc_id") % 7 === 0).count() == 0)
-    val fs = new Path(delP)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(s"$delP/tombstones")))
-    // compact without tombstones is a no-op
+    assert(held() == 0)
+    // a second compaction changes no answer
     TextIndex.compact(spark, delP)
     assert(q(delP) == q(refP))
   }
@@ -204,11 +211,11 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(docs.filter(col("doc_id") < 400), path,
       "doc_id", "text")
     TextIndex.delete(docs.filter(col("doc_id") < 10).select("doc_id"), path)
-    val stamped = TextIndex.load(spark, path)
+    val stats = corpus(path)
     // re-delete the same ids + ids that never existed: stats unchanged
     TextIndex.delete(docs.filter(col("doc_id") < 10).select("doc_id"), path)
     TextIndex.delete(Seq(999999L).toDF("doc_id"), path)
-    assert(TextIndex.load(spark, path) == stamped)
+    assert(corpus(path) == stats)
     // append post-delete: equivalent to building over (400..440) ∪
     // surviving — the incremental stat deltas compose exactly
     val extra = docs.filter(col("doc_id") >= 400 && col("doc_id") < 440)
@@ -216,7 +223,7 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(
       docs.filter((col("doc_id") >= 10 && col("doc_id") < 440)),
       refP, "doc_id", "text")
-    assert(TextIndex.load(spark, path) == TextIndex.load(spark, refP))
+    assert(corpus(path) == corpus(refP))
     def q(p: String) = rows(
       TextIndex.query(spark, p, Seq("window", "filter"), 20))
     assert(q(path) == q(refP))
@@ -244,5 +251,26 @@ class TextIndexSpec extends SparkSpec {
     terms.foreach { t =>
       assert(TextIndex.termBucket(t, 64) == colSide(t), s"term '$t'")
     }
+  }
+
+  test("an index in the retired layout is refused with a rebuild " +
+      "message") {
+    val path = tmp("old-layout")
+    docs.select(col("doc_id"), lit(1.0).as("dl")).write.parquet(s"$path/doclen")
+    val out = new Path(path, "_graft_text_index").getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+      .create(new Path(path, "_graft_text_index"), true)
+    out.write(Seq("graft-text-index v2", "idCol=doc_id", "docCount=1.0",
+      "sumDl=1.0", "numBuckets=64", "k1=1.2", "b=0.75").mkString("\n")
+      .getBytes("UTF-8"))
+    out.close()
+    val e = intercept[IllegalStateException] {
+      TextIndex.query(spark, path, Seq("window"), 5)
+    }
+    assert(e.getMessage.contains("retired layout") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+    TextIndex.build(docs, path, "doc_id", "text")
+    assert(rows(TextIndex.query(spark, path, Seq("window", "filter"), 20)) ==
+      rows(scanBm25(Seq("window", "filter"), 20)))
   }
 }
