@@ -13,8 +13,6 @@ import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, Proced
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,19 +37,19 @@ import graft.sink.{ChunkStore, ManifestTableFormat}
   * The catalog is a METADATA layer only: `loadTable` resolves a store
   * directory (one table per `warehouse/<name>`) to its live data-file
   * set — the manifest log's snapshot — and hands the actual scan to
-  * Spark's own parquet DataSourceV2 ([[ParquetTable]]). Everything
-  * the built-in read path does (vectorized decode, filter pushdown,
-  * column pruning, file-splitting at `maxPartitionBytes`) applies
-  * unchanged — which is the point: at 100 TB the catalog contributes
-  * file LISTS, never a bespoke reader.
+  * Spark's own parquet DataSourceV2. Everything the built-in read
+  * path does (vectorized decode, filter pushdown, column pruning,
+  * file-splitting at `maxPartitionBytes`) applies unchanged — which
+  * is the point: at 100 TB the catalog contributes file LISTS, never a
+  * bespoke reader.
   *
   * Every chunk table is a manifest table (`_log` present): reads are
   * snapshot-isolated (the file list is pinned at resolution),
   * `VERSION AS OF n` maps to the log replay at version n, INSERT
-  * appends through the log's commit protocol. Layout-managed z-order
-  * tables (`_hulls`/`_keybloom` sidecars, no log) resolve read-only.
-  * A directory the retired parquet engine wrote refuses with its
-  * migration ([[ChunkStore.requireManifestLayout]]).
+  * appends through the log's commit protocol; z-ordered tables are
+  * manifest tables clustered by `CALL compact_zorder`, pruned by the
+  * same per-file stats. A directory the retired parquet engine wrote
+  * refuses with its migration ([[ChunkStore.requireManifestLayout]]).
   *
   * Row-level DML is first-class SQL on manifest tables (planned by
   * `graft.plans.GraftDmlStrategy` onto the log's copy-on-write
@@ -109,9 +107,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // retired-engine stores stay listed: naming one refuses loudly
       // with its migration instead of vanishing
       .filter(p => fs.exists(new Path(p, ChunkStore.parquetLayoutMarker)) ||
-        fs.exists(new Path(p, "_log")) ||
-        fs.exists(new Path(p, "_hulls")) ||
-        fs.exists(new Path(p, "_keybloom")))
+        fs.exists(new Path(p, "_log")))
       .map(p => Identifier.of(Array.empty, p.getName))
       .toArray
   }
@@ -130,15 +126,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       resolve(ident, asOf = Some(_ => version.toLong))
     else resolve(ident, asOf = None, branchName = Some(version))
 
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
     // Spark hands TIMESTAMP AS OF as MICROS since epoch; commit times
     // are the log entries' mtimes (millis) — the Delta convention
-    if (!fs.exists(new Path(tableDir(ident), "_log")))
-      throw new UnsupportedOperationException(
-        s"$catalogName.${ident.name()}: TIMESTAMP AS OF needs the " +
-          "manifest table format (layout-managed tables keep no history)")
     resolve(ident, asOf = Some(_.versionAtTimestamp(timestamp / 1000L)))
-  }
 
   /** `asOf` picks the time-travel version off the table's handle. */
   private def resolve(ident: Identifier,
@@ -147,61 +138,47 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = tableDir(ident)
     if (!fs.exists(new Path(dir))) throw new NoSuchTableException(ident)
     val fullName = s"$catalogName.${ident.name()}"
-    if (fs.exists(new Path(dir, "_log"))) {
-      branchName.foreach { b =>
-        if (!fs.exists(new Path(dir, s"_log/branches/$b")))
-          throw new NoSuchTableException(ident)
-      }
-      val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema,
-        branch = branchName)
-      // a branch head read is frozen THROUGH THIS SURFACE (the audit
-      // view); branch writes go through the Scala branch handle
-      val frozen = asOf.isDefined || branchName.isDefined
-      // files, deletion vectors and the effective schema AT the
-      // resolved version (a pre-ALTER time travel shows the old shape)
-      val pinned = mtf.pinScan(asOf.map(_(mtf)))
-      new GraftTable(fullName, spark, pinned.schema, pinned.files,
-        // time-travel reads are frozen history: never writable
-        insert = if (frozen) None else Some(mtf.append),
-        // url-keyed whole-document DELETE only when the table has the
-        // key column; key-less tables route DELETE to the row-level
-        // predicate path instead
-        deleteDocs =
-          if (frozen || !mtf.hasUrlKey) None
-          else Some(mtf.delete(_: Seq[String])),
-        updateRows =
-          if (frozen) None else Some(mtf.update),
-        deleteRows =
-          if (frozen) None else Some(mtf.deleteWhere),
-        mergeHook =
-          if (frozen) None else Some(mtf.mergeInto(_, _, _, _, _, _)),
-        overwriteHook =
-          if (frozen) None else Some(mtf.overwrite),
-        truncateHook =
-          if (frozen) None else Some(() => mtf.truncate()),
-        // every read-side stats lane, and which of them this pin gets
-        pinned = Some(pinned),
-        // DSv2 STREAMING_WRITE (df.writeStream.toTable) — head
-        // snapshots only; time travel is frozen history
-        streamWrite =
-          if (frozen) None
-          else Some(inf =>
-            new graft.streaming.GraftStreamingWrite(spark, dir, inf)))
-    } else {
+    if (!fs.exists(new Path(dir, "_log"))) {
       ChunkStore.requireManifestLayout(spark, dir)
-      // a Layout-managed table: flat parquet with `_hulls` and/or
-      // `_keybloom` sidecars (z-order family). Readable by name;
-      // selective predicates prune to the file subset the sidecars
-      // admit (the SQL twin of Layout.prunedScan/prunedScanByKey).
-      if (fs.exists(new Path(dir, "_hulls")) ||
-          fs.exists(new Path(dir, "_keybloom"))) {
-        if (asOf.isDefined) throw new UnsupportedOperationException(
-          s"$fullName: VERSION AS OF needs the manifest table format")
-        new GraftTable(fullName, spark,
-          spark.read.parquet(dir).schema, Seq(dir),
-          insert = None, sidecarDir = Some(dir))
-      } else throw new NoSuchTableException(ident)
+      throw new NoSuchTableException(ident)
     }
+    branchName.foreach { b =>
+      if (!fs.exists(new Path(dir, s"_log/branches/$b")))
+        throw new NoSuchTableException(ident)
+    }
+    val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema,
+      branch = branchName)
+    // a branch head read is frozen THROUGH THIS SURFACE (the audit
+    // view); branch writes go through the Scala branch handle
+    val frozen = asOf.isDefined || branchName.isDefined
+    // files, deletion vectors and the effective schema AT the
+    // resolved version (a pre-ALTER time travel shows the old shape)
+    val pinned = mtf.pinScan(asOf.map(_(mtf)))
+    new GraftTable(fullName, spark, pinned,
+      // time-travel reads are frozen history: never writable
+      insert = if (frozen) None else Some(mtf.append),
+      // url-keyed whole-document DELETE only when the table has the
+      // key column; key-less tables route DELETE to the row-level
+      // predicate path instead
+      deleteDocs =
+        if (frozen || !mtf.hasUrlKey) None
+        else Some(mtf.delete(_: Seq[String])),
+      updateRows =
+        if (frozen) None else Some(mtf.update),
+      deleteRows =
+        if (frozen) None else Some(mtf.deleteWhere),
+      mergeHook =
+        if (frozen) None else Some(mtf.mergeInto(_, _, _, _, _, _)),
+      overwriteHook =
+        if (frozen) None else Some(mtf.overwrite),
+      truncateHook =
+        if (frozen) None else Some(() => mtf.truncate()),
+      // DSv2 STREAMING_WRITE (df.writeStream.toTable) — head
+      // snapshots only; time travel is frozen history
+      streamWrite =
+        if (frozen) None
+        else Some(inf =>
+          new graft.streaming.GraftStreamingWrite(spark, dir, inf)))
   }
 
   /** CREATE TABLE / CTAS: every table is a manifest table and accepts
@@ -258,7 +235,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * physical name keeps data files and per-file stats valid; a
     * dropped name can be re-added because the re-add allocates a
     * fresh physical name). Everything else — type changes, NOT NULL,
-    * nested/positioned adds, layout-managed tables — refuses loudly: a
+    * nested/positioned adds — refuses loudly: a
     * 100 TB table must never be silently committed to a full rewrite
     * by a DDL statement.
     */
@@ -267,7 +244,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(new Path(dir, "_log")))
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: ALTER TABLE needs the manifest " +
-          "table format (layout-managed tables have a fixed schema)")
+          "table format")
     val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema)
     changes.foreach {
       case add: TableChange.AddColumn =>
@@ -324,7 +301,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // as `CALL <catalog>.<proc>(...)`) ---------------------------------
 
   /** The log handle of `tableName`; procedures run on manifest tables
-    * only (a layout-managed table has no log to commit to).
+    * only.
     */
   private def manifestFor(tableName: String): ManifestTableFormat = {
     val dir = s"$warehouse/$tableName"
@@ -954,20 +931,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       "graft is a flat catalog; namespaces are not supported")
 }
 
-/** One resolved graft table: a fixed schema, a pinned file set (or a
-  * root path whose partition tree Spark discovers), and an optional
-  * V1 insert hook. Scans delegate wholesale to Spark's parquet
-  * DataSourceV2 so pushdown/pruning/vectorization are the built-in
-  * ones; inserts route through the store's A18 append (log-committed
-  * on the manifest format) via the `V1_BATCH_WRITE` bridge.
+/** One resolved graft table: a pinned manifest snapshot and the
+  * write hooks its handle allows. Scans plan through the snapshot's
+  * stats-pruned parquet DataSourceV2 so pushdown/pruning/vectorization
+  * are the built-in ones; inserts route through the log's A18 append
+  * via the `V1_BATCH_WRITE` bridge.
   */
 private[graft] class GraftTable(
     tableName: String,
     spark: SparkSession,
-    tableSchema: StructType,
-    paths: Seq[String],
+    /** The pinned manifest snapshot the scan builders and the optimizer
+      * rules ([[graft.plans.MetadataFilteredCount]], [[graft.plans
+      * .DvColumnarRead]]) read.
+      */
+    private[graft] val pinned: graft.sink.PinnedScan,
     insert: Option[DataFrame => Unit],
-    sidecarDir: Option[String] = None,
     deleteDocs: Option[Seq[String] => Unit] = None,
     updateRows: Option[
       (Option[org.apache.spark.sql.Column],
@@ -981,11 +959,6 @@ private[graft] class GraftTable(
         Option[DataFrame]) => Unit] = None,
     overwriteHook: Option[DataFrame => Unit] = None,
     truncateHook: Option[() => Unit] = None,
-    /** The pinned manifest snapshot the scan builders and the optimizer
-      * rules ([[graft.plans.MetadataFilteredCount]], [[graft.plans
-      * .DvColumnarRead]]) read; `None` on layout-managed tables.
-      */
-    private[graft] val pinned: Option[graft.sink.PinnedScan] = None,
     streamWrite: Option[
       org.apache.spark.sql.connector.write.LogicalWriteInfo =>
         org.apache.spark.sql.connector.write.streaming.StreamingWrite] =
@@ -998,14 +971,14 @@ private[graft] class GraftTable(
     * `graft.plans.GraftDmlStrategy` to the manifest format's
     * copy-on-write rewrite. Only the head snapshot of a
     * manifest-format table is updatable — frozen time-travel reads
-    * and layout-managed tables refuse with the reason.
+    * refuse with the reason.
     */
   override def updateWhere(
       condition: Option[org.apache.spark.sql.Column],
       set: Seq[(String, org.apache.spark.sql.Column)]): Unit =
     updateRows.getOrElse(throw new UnsupportedOperationException(
       s"$tableName does not support SQL UPDATE (time-travel reads are " +
-        "frozen history; layout-managed tables are read-only)"))(
+        "frozen history)"))(
       condition, set)
 
   /** Row-level DELETE hook: predicates beyond the url-keyed
@@ -1015,8 +988,7 @@ private[graft] class GraftTable(
       condition: org.apache.spark.sql.Column): Unit =
     deleteRows.getOrElse(throw new UnsupportedOperationException(
       s"$tableName: row-level DELETE supports only the manifest " +
-        "table format's head snapshot (time travel is frozen; " +
-        "layout-managed tables are read-only)"))(
+        "table format's head snapshot (time travel is frozen)"))(
       condition)
 
   /** SQL MERGE INTO hook ([[GraftUpdatable]]). */
@@ -1029,8 +1001,7 @@ private[graft] class GraftTable(
       urlProbe: Option[DataFrame]): Unit =
     mergeHook.getOrElse(throw new UnsupportedOperationException(
       s"$tableName: MERGE INTO supports only the manifest table " +
-        "format's head snapshot (time travel is frozen; " +
-        "layout-managed tables are read-only)"))(
+        "format's head snapshot (time travel is frozen)"))(
       source, onCond, matched, notMatched, notMatchedBySource, urlProbe)
 
   /** `DELETE FROM <cat>.<table> WHERE …` maps to the store's A20
@@ -1070,7 +1041,7 @@ private[graft] class GraftTable(
     val doDelete = deleteDocs.getOrElse(
       throw new UnsupportedOperationException(
         s"$tableName does not support SQL DELETE (time-travel reads " +
-          "are frozen history; layout tables have no document key)"))
+          "are frozen history; key-less tables have no document key)"))
     val urls = urlSet(filters).getOrElse(
       throw new UnsupportedOperationException(
         s"$tableName: DELETE supports document_url equality/IN " +
@@ -1083,23 +1054,19 @@ private[graft] class GraftTable(
   /** `TRUNCATE TABLE` on manifest tables: one atomic rm-all commit,
     * reversible via time travel / CALL restore until vacuum — so the
     * DROP-TABLE-instead refusal applies only to handles with no
-    * writable history (time travel, layout-managed tables).
+    * writable history (time travel).
     */
   override def truncateTable(): Boolean = truncateHook match {
     case Some(run) => run(); true
     case None => throw new UnsupportedOperationException(
       s"$tableName: TRUNCATE/unqualified DELETE is refused on " +
-        "time-travel and layout-managed tables — wipe via DROP TABLE " +
-        "or the store API, explicitly")
+        "time-travel reads — wipe via DROP TABLE or the store API, " +
+        "explicitly")
   }
-
-  private lazy val delegate = ParquetTable(
-    tableName, spark, CaseInsensitiveStringMap.empty(), paths,
-    Some(tableSchema), classOf[ParquetFileFormat])
 
   override def name(): String = tableName
 
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = pinned.schema
 
   override def capabilities(): util.Set[TableCapability] =
     (Set(TableCapability.BATCH_READ) ++
@@ -1108,8 +1075,8 @@ private[graft] class GraftTable(
       streamWrite.map(_ => TableCapability.STREAMING_WRITE)).asJava
 
   override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = pinned match {
-    case Some(p) if p.hasDv =>
+      options: CaseInsensitiveStringMap): ScanBuilder =
+    if (pinned.hasDv)
       // DELETION-VECTOR snapshot: rows are parquet files MINUS the
       // referenced position deletes — not a plain file scan. On a
       // graft-installed session this ScanBuilder is never planned:
@@ -1120,28 +1087,18 @@ private[graft] class GraftTable(
       // DV-aware frame) keeps results exact on sessions without the
       // rule; filters stay above the relation, nothing claimed
       // pushed. DV-free tables never take this branch.
-      new DvV1ScanBuilder(p)
-    case Some(p) =>
+      new DvV1ScanBuilder(pinned)
+    else
       // manifest-native data skipping: the log's per-file stats (url
       // bloom + per-column min/max) shrink the pinned file list from
       // the pushed predicates before parquet plans the read
       new org.apache.spark.sql.graftbridge.ManifestStatsScanBuilder(
-        spark, tableName, p, options)
-    case None => sidecarDir match {
-      case Some(dir) =>
-        // sidecar-aware scan: `_hulls`/`_keybloom` shrink the file
-        // list from the pushed predicates before parquet plans the read
-        new org.apache.spark.sql.graftbridge.SidecarPrunedScanBuilder(
-          spark, tableName, dir, tableSchema, options)
-      case None => delegate.newScanBuilder(options)
-    }
-  }
+        spark, tableName, pinned, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val doInsert = insert.getOrElse(throw new UnsupportedOperationException(
       s"$tableName is read-only through SQL (time-travel reads are " +
-        "frozen history; layout-managed tables are written by " +
-        "graft.ops.Layout)"))
+        "frozen history)"))
     // INSERT OVERWRITE arrives as the TRUNCATE write mode (the V1
     // fallback always calls insert(df, false); the mode lives in the
     // builder) — manifest tables map it to one atomic rm-all+add

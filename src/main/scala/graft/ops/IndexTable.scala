@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.StructType
 import graft.sink.{GraftMergeDelete, ManifestTableFormat}
 
 /** Storage shared by the persistent indexes ([[VectorIndex]],
-  * [[TextIndex]]): a stamp file holding what the build fixed (kind,
-  * parameters, trained model), beside one [[ManifestTableFormat]]
-  * table holding the index rows, both at the index path.
+  * [[TextIndex]]) and the dedup signature store
+  * ([[graft.pipeline.StreamingDedup]]): a stamp file holding what the
+  * build fixed (kind, parameters, trained model), beside one
+  * [[ManifestTableFormat]] table holding the rows, both at one path.
   *
   * The reference's vector index lives on the store container itself,
   * so every upsert and delete is index-consistent by construction
@@ -20,7 +21,7 @@ import graft.sink.{GraftMergeDelete, ManifestTableFormat}
   * atomic commit, compaction is the log's own rewrite, and a reader
   * sees one committed version.
   */
-private[ops] object IndexTable {
+private[graft] object IndexTable {
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -49,19 +50,22 @@ private[ops] object IndexTable {
     new ManifestTableFormat(spark, path, new StructType())
   }
 
-  /** An index whose stamp has no manifest log beside it was written by
-    * the retired layout (parquet directories, tombstone sidecars): it
-    * is refused with a rebuild message, never half-read.
+  /** A stamp with no manifest log beside it was written by the
+    * retired layout (parquet directories, tombstone sidecars, a
+    * band-partitioned signature store): it is refused with a rebuild
+    * message, never half-read.
     */
   private def requireLayout(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, new Path(path))
-    if (Seq(VectorIndex.StampName, TextIndex.StampName)
+    if (Seq(VectorIndex.StampName, TextIndex.StampName,
+            graft.pipeline.StreamingDedup.StampName)
           .exists(n => fs.exists(new Path(path, n))) &&
         !fs.exists(new Path(path, "_log")))
       throw new IllegalStateException(
-        s"index at $path was written by the retired layout (no manifest " +
-          "log beside its stamp): rebuild it with the index's build call " +
-          "at the same path")
+        s"$path was written by the retired layout (no manifest log " +
+          "beside its stamp): rebuild it — an index with its build call " +
+          "at the same path, a signature store by deleting it and " +
+          "re-running StreamingDedup.processBatch over its documents")
   }
 
   /** The stamp text, or `missing` as the error of a stampless path. */

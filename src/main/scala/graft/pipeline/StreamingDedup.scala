@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, IndexTable}
+import graft.sink.ManifestTableFormat
 
 /** Incremental near-dup detection on ingest (the streaming face of
   * D2): each micro-batch's documents are MinHash-signed and band-join
@@ -13,38 +13,35 @@ import graft.ops.Dedup
   * documents append their signatures — the store grows with the unique
   * corpus, not the ingest volume.
   *
-  * Scale design: the store holds EXPLODED band keys
-  * `(band, key, id, sig)` partitioned by `(band, bkt)` where `bkt`
-  * hashes the band key into [[defaultBuckets]] partition buckets. The
-  * per-batch probe is an equi-join on (band, key) — the batch side is
-  * tiny and broadcasts, so the store never shuffles — and the probed
-  * (band, bkt) pairs are pushed as PARTITION filters, so a micro-batch
-  * of B documents lists only its ≤ B×bands matching bucket directories
-  * instead of scanning the accumulated store: probe cost follows the
-  * BATCH size, not the corpus size (the bands×buckets grain — 4096
-  * directories at the defaults — keeps a 10-doc batch under 4% of the
-  * store even before file statistics). Stores written by older builds
-  * (partitioned by band only) are still probed correctly — via a full
-  * scan — and [[compact]] migrates them to the bucketed layout, also
-  * collapsing any replay-appended duplicate rows and rewriting each
-  * bucket as one file (append-per-micro-batch accumulates small
-  * files). Verification uses the signature-estimated Jaccard
-  * (equal-position fraction) — texts are never stored, so the store is
-  * ~(numHashes+bands)×8 bytes per document at any corpus size. The
-  * signature parameters are STAMPED into the store on bootstrap and
-  * validated per call: probing a store built with a different fold
-  * would silently match nothing.
+  * Storage: a stamp beside one manifest table ([[IndexTable]]), so
+  * every append and every compaction is one log commit. The table
+  * holds EXPLODED band keys `(pid, band, key, id, sig)`, where the
+  * pair id `pid = band * buckets + bkt` and `bkt` hashes the band key
+  * into the stamp's bucket count. The table is partitioned on `pid`:
+  * each write range-clusters its files by it, so per-file min/max
+  * bound the pair ids a file holds. The per-batch probe is an
+  * equi-join on (band, key) — the batch side is tiny and broadcasts,
+  * so the store never shuffles — over only the files whose pid range
+  * holds one of the batch's pair ids: probe cost follows the BATCH
+  * size, not the corpus size. Verification uses the
+  * signature-estimated Jaccard (equal-position fraction) — texts are
+  * never stored, so the store is ~(numHashes+bands)×8 bytes per
+  * document at any corpus size. The signature parameters are STAMPED
+  * on bootstrap and validated per call: probing a store built with a
+  * different fold would silently match nothing.
   */
 object StreamingDedup {
+
+  /** The stamp file naming the store's signature parameters. */
+  val StampName = "_graft_dedup_params"
 
   /** Partition buckets per band for newly bootstrapped stores. */
   val defaultBuckets = 256
 
-  /** Above this many probed (band, bucket) pairs the partition filter
-    * is dropped and the probe degrades to the full-store scan: a batch
-    * that large touches most buckets anyway, and an unbounded literal
-    * set is the Catalyst expression-size trap (it becomes a driver-side
-    * InSet, so the bound is memory hygiene, not codegen).
+  /** Above this many probed pair ids the probe reads the whole store: a
+    * batch that large touches most files anyway, and an unbounded
+    * literal set is the Catalyst expression-size trap (it becomes a
+    * driver-side InSet, so the bound is memory hygiene, not codegen).
     */
   private val maxPruneLiterals = 100000
 
@@ -59,16 +56,16 @@ object StreamingDedup {
       k -> v
     }.toMap
 
-  /** The partition bucket of a band key — MUST match between append
-    * and probe, so it is derived only from the stored key.
+  /** The pair id of a band key — MUST match between append and probe,
+    * so it is derived only from the band and the stored key.
     */
-  private def bucketOf(key: Column, buckets: Int): Column =
-    pmod(xxhash64(key), lit(buckets.toLong))
+  private def pairId(band: Column, key: Column, buckets: Int): Column =
+    (band * buckets + pmod(xxhash64(key), lit(buckets.toLong))).cast("int")
 
   /** One micro-batch: returns the duplicate matches
     * (id, existing_id, est_jaccard) and appends the non-duplicates'
-    * signatures to the store. Batch form of the `foreachBatch` body —
-    * "the batch is a bounded stream".
+    * signatures to the store in one commit. Batch form of the
+    * `foreachBatch` body — "the batch is a bounded stream".
     *
     * Contracts:
     *  - detects CROSS-batch duplicates (vs the accumulated store);
@@ -80,7 +77,8 @@ object StreamingDedup {
     *    the replayed docs as unique instead of self-duplicates —
     *    idempotent modulo the duplicate store rows the replay appends,
     *    which are harmless (same band/key/sig) and collapse at the
-    *    next [[compact]].
+    *    next [[compact]];
+    *  - a batch whose append fails leaves the store as it was.
     */
   def processBatch(
       spark: SparkSession,
@@ -91,7 +89,24 @@ object StreamingDedup {
       threshold: Double = 0.8,
       numHashes: Int = 64,
       bands: Int = 16,
-      shingleSize: Int = 3): DataFrame = {
+      shingleSize: Int = 3): DataFrame =
+    processBatchOn(spark, batch, storePath, idCol, textCol, threshold,
+      numHashes, bands, shingleSize, IndexTable.open)
+
+  /** [[processBatch]] with the store's table handle built by `open`:
+    * the seam a spec injects a failing commit through.
+    */
+  private[graft] def processBatchOn(
+      spark: SparkSession,
+      batch: DataFrame,
+      storePath: String,
+      idCol: String,
+      textCol: String,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int,
+      open: (SparkSession, String) => ManifestTableFormat): DataFrame = {
     import graft.functions.GraftFunctions.minhash_signature
 
     val signed = batch.select(col(idCol).as("id"),
@@ -99,96 +114,70 @@ object StreamingDedup {
           .as("sig"))
       .localCheckpoint(true) // one signature pass; probed AND appended
 
-    val banded = signed.select(col("id"), col("sig"),
-      posexplode(Dedup.bandKeys(col("sig"), numHashes, bands))
-        .as(Seq("band", "key")))
-
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tagPath = new Path(root, "_graft_dedup_params")
-
-    // "store exists" must mean DATA exists: an empty first batch
-    // leaves a file-less directory whose parquet read would fail
-    val storeHasData = fs.exists(tagPath)
-    // bucketed layout for new stores; an existing store's layout is a
-    // STORE property read from its stamp (legacy band-only stores have
-    // no buckets entry and keep full-scan probes until compacted)
-    val storeBuckets: Option[Int] = if (storeHasData) {
-      val in = fs.open(tagPath)
-      val onDisk = try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
+    val sigTag = paramsTag(numHashes, bands, shingleSize, None)
+    // the bucket count is a STORE property read from its stamp; a
+    // store in the retired layout is refused by the stamp read
+    val stamped = IndexTable.hasStamp(spark, storePath, StampName)
+    val buckets = if (!stamped) defaultBuckets else {
+      val onDisk = IndexTable.readStamp(spark, storePath, StampName,
+        s"no signature store at $storePath")
       val kv = parseTag(onDisk)
-      val sigTag = paramsTag(numHashes, bands, shingleSize, None)
       require(parseTag(sigTag).forall { case (k, v) => kv.get(k).contains(v) },
         s"signature store at $storePath was built with '$onDisk' but " +
           s"probed with '$sigTag' — signatures are incompatible across " +
           "parameter changes; rebuild the store or match the parameters")
-      kv.get("buckets").map(_.toInt)
-    } else Some(defaultBuckets)
+      kv("buckets").toInt
+    }
 
-    val matches = if (!storeHasData) {
-      // typed empty frame: id columns keep the caller's id type
-      signed.select(col("id"), col("id").as("existing_id"),
-        lit(0.0).as("est_jaccard")).limit(0)
-    } else {
-      val store = spark.read.parquet(storePath)
-      // bucketed store: push the probed (band, bucket) pairs down as a
-      // partition filter — the scan lists only the batch's buckets.
-      // The pair ids are ≤ batch×bands longs collected from the tiny
-      // (already-materialized) batch side.
-      val probed = storeBuckets match {
-        case Some(nb) if store.columns.contains("bkt") =>
-          val pairIds = banded.select(
-              (col("band").cast("long") * nb +
-                bucketOf(col("key"), nb)).as("pid"))
-            .distinct().collect().map(_.getLong(0))
-          if (pairIds.length <= maxPruneLiterals)
-            store.filter((col("band").cast("long") * nb +
-              col("bkt").cast("long")).isin(pairIds.toIndexedSeq: _*))
-          else store
-        case _ => store
-      }
-      banded.as("n")
-        .join(probed.as("o"),
-          col("n.band") === col("o.band") && col("n.key") === col("o.key") &&
-            // never match a doc against its own stored signature: an
-            // at-least-once replay would otherwise report every
-            // replayed doc as a self-duplicate
-            col("n.id") =!= col("o.id"))
-        .select(col("n.id").as("id"), col("o.id").as("existing_id"),
-          col("n.sig").as("nsig"), col("o.sig").as("osig"))
-        .distinct()
-        // estimated Jaccard = fraction of equal minhash positions
-        .withColumn("est_jaccard",
-          aggregate(zip_with(col("nsig"), col("osig"),
-              (a, b) => when(a === b, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x).cast("double") / numHashes)
-        .filter(col("est_jaccard") >= threshold)
-        .select("id", "existing_id", "est_jaccard")
+    val banded = signed.select(col("id"), col("sig"),
+        posexplode(Dedup.bandKeys(col("sig"), numHashes, bands))
+          .as(Seq("band", "key")))
+      .withColumn("pid", pairId(col("band"), col("key"), buckets))
+
+    val store = if (stamped) Some(open(spark, storePath)) else None
+    val matches = store match {
+      case None =>
+        // typed empty frame: id columns keep the caller's id type
+        signed.select(col("id"), col("id").as("existing_id"),
+          lit(0.0).as("est_jaccard")).limit(0)
+      case Some(t) =>
+        // the pair ids are ≤ batch×bands ints collected from the tiny
+        // (already-materialized) batch side
+        val pids = banded.select("pid").distinct().collect()
+          .map(_.getInt(0)).toSeq
+        banded.as("n")
+          .join(probe(t, pids).as("o"),
+            col("n.band") === col("o.band") && col("n.key") === col("o.key") &&
+              // never match a doc against its own stored signature: an
+              // at-least-once replay would otherwise report every
+              // replayed doc as a self-duplicate
+              col("n.id") =!= col("o.id"))
+          .select(col("n.id").as("id"), col("o.id").as("existing_id"),
+            col("n.sig").as("nsig"), col("o.sig").as("osig"))
+          .distinct()
+          // estimated Jaccard = fraction of equal minhash positions
+          .withColumn("est_jaccard",
+            aggregate(zip_with(col("nsig"), col("osig"),
+                (a, b) => when(a === b, 1).otherwise(0)),
+              lit(0), (acc, x) => acc + x).cast("double") / numHashes)
+          .filter(col("est_jaccard") >= threshold)
+          .select("id", "existing_id", "est_jaccard")
     }
     val m = matches.localCheckpoint(true) // evaluated twice below
 
     // only non-duplicates enter the store (left_anti ignores duplicate
     // right-side keys — no distinct needed): re-uploads never bloat it
     val fresh = banded.join(m.select("id"), Seq("id"), "left_anti")
-    val appended = fresh.select(col("band"), col("key"), col("id"), col("sig"))
-    storeBuckets match {
-      case Some(nb) =>
-        appended.withColumn("bkt", bucketOf(col("key"), nb))
-          .write.mode(SaveMode.Append).partitionBy("band", "bkt")
-          .parquet(storePath)
+      .select("pid", "band", "key", "id", "sig")
+    store match {
+      case Some(t) => t.append(fresh)
       case None =>
-        appended.write.mode(SaveMode.Append).partitionBy("band")
-          .parquet(storePath)
-    }
-    // stamp params once data exists; count the write's output via the
-    // directory, not an extra job: any parquet part implies data
-    if (!storeHasData && !fs.exists(tagPath)) {
-      if (hasParquetFile(fs, root)) {
-        val tag = paramsTag(numHashes, bands, shingleSize, storeBuckets)
-        val out = fs.create(tagPath, true)
-        try out.write(tag.getBytes("UTF-8")) finally out.close()
-      }
+        // bootstrap: the table (with this batch's rows), then the
+        // stamp — a crash in between leaves a stampless path, which
+        // the replayed batch bootstraps afresh
+        IndexTable.create(spark, storePath, fresh, Seq("pid"))
+        IndexTable.writeStamp(spark, storePath, StampName,
+          paramsTag(numHashes, bands, shingleSize, Some(buckets)))
     }
     // the batch signature checkpoint served both consumers (probe +
     // append) — free its blocks; a long-running stream must not
@@ -197,68 +186,26 @@ object StreamingDedup {
     m
   }
 
-  private def hasParquetFile(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Boolean = {
-    val it = fs.listFiles(root, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
-    found
-  }
-
-  /** Maintenance compaction: rewrite the signature store into the
-    * bucket-partitioned layout (migrating legacy band-only stores),
-    * collapse replay-appended duplicate rows, and coalesce each
-    * bucket's append-per-micro-batch small files into one. Safe to run
-    * between micro-batches — match results are unchanged, only the
-    * probe's pruning grain and file count improve.
-    *
-    * Swap protocol: the compacted store is fully written (data + stamp)
-    * to `<path>.compacting`, then swapped into place under
-    * [[graft.sink.StagedSwap]]'s persistent-marker protocol — a crash
-    * at any step is detectable and `StagedSwap.recover` resolves it to
-    * either the untouched live store or the complete compacted one,
-    * never a mix. Refuses to start if a previous attempt's staging is
-    * still present.
+  /** The store rows of the probed pair ids, read from only the files
+    * whose recorded pid range holds one of them
+    * ([[graft.sink.PinnedScan.readWhereIn]]); past [[maxPruneLiterals]]
+    * ids, the whole store.
     */
-  def compact(
-      spark: SparkSession,
-      storePath: String,
-      buckets: Int = defaultBuckets): Unit = {
-    require(buckets >= 1, s"buckets=$buckets")
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tagPath = new Path(root, "_graft_dedup_params")
-    if (!fs.exists(tagPath)) return // empty/unborn store: nothing to do
-
-    val tmp = new Path(storePath + ".compacting")
-    require(!fs.exists(tmp),
-      s"$tmp already exists — a previous compaction did not finish; " +
-        "run graft.sink.StagedSwap.recover and remove the leftover " +
-        "staging before retrying")
-
-    val in = fs.open(tagPath)
-    val onDisk = try new String(in.readAllBytes(), "UTF-8")
-      finally in.close()
-    val sig = parseTag(onDisk).view.filterKeys(_ != "buckets").toMap
-
-    val store = spark.read.parquet(storePath)
-    val rows = (if (store.columns.contains("bkt")) store.drop("bkt")
-      else store)
-      .select(col("band"), col("key"), col("id"), col("sig"))
-      .distinct() // replay appends collapse here
-      .withColumn("bkt", bucketOf(col("key"), buckets))
-    // one task per (band, bkt) → one file per bucket directory
-    rows.repartition(col("band"), col("bkt"))
-      .write.mode(SaveMode.Overwrite).partitionBy("band", "bkt")
-      .parquet(tmp.toString)
-    val newTag = Seq("numHashes", "bands", "shingles")
-      .map(k => s"$k=${sig(k)}").mkString(" ") + s" buckets=$buckets"
-    val out = fs.create(new Path(tmp, "_graft_dedup_params"), true)
-    try out.write(newTag.getBytes("UTF-8")) finally out.close()
-
-    // marker-protocol swap: interrupted compactions are detectable and
-    // recover to one complete generation (graft.sink.StagedSwap)
-    graft.sink.StagedSwap.swap(fs, root, tmp)
+  private[graft] def probe(t: ManifestTableFormat, pids: Seq[Int])
+      : DataFrame = {
+    val pin = t.pinScan()
+    if (pids.length <= maxPruneLiterals) pin.readWhereIn("pid", pids)
+    else pin.read(pin.pairs)
   }
+
+  /** Maintenance compaction: ONE log commit rewrites the store with the
+    * replay-appended duplicate rows collapsed and each write's small
+    * files merged (the rewrite range-clusters on `pid` like every
+    * write). Safe to run between micro-batches — match results are
+    * unchanged, only the file count shrinks. An empty or unborn store
+    * is left alone.
+    */
+  def compact(spark: SparkSession, storePath: String): Unit =
+    if (IndexTable.hasStamp(spark, storePath, StampName))
+      IndexTable.open(spark, storePath).rewriteLive(_.distinct())
 }

@@ -53,7 +53,7 @@ object DvColumnarRead extends Rule[LogicalPlan] with PredicateHelper {
 
   /** The table's pin when it carries deletion vectors. */
   private def dvPinOf(t: Table): Option[PinnedScan] = t match {
-    case g: graft.catalog.GraftTable => g.pinned.filter(_.hasDv)
+    case g: graft.catalog.GraftTable => Some(g.pinned).filter(_.hasDv)
     case _ => None
   }
 

@@ -77,7 +77,7 @@ object MetadataFilteredCount extends Rule[LogicalPlan]
           if fs.nonEmpty && fs.forall(_.deterministic) => (fs, g, out)
       case _ => return None
     }
-    val pin = table.pinned.getOrElse(return None)
+    val pin = table.pinned
     val relIds = relOutput.map(a => a.exprId -> a.name).toMap
     def physOf(att: Attribute): Option[String] =
       relIds.get(att.exprId).flatMap(pin.typeOf).map(_._1)

@@ -1127,10 +1127,10 @@ object RelationalQueries {
     // compact_zorder(table, cols)` rewrites the live set clustered on
     // the morton curve in one copy-on-write commit; the new files'
     // per-column stats then serve the 2-dim range query through c37j
-    // file skipping (the `_hulls` sidecar layout's pruning with no
-    // sidecar). The oracle replays the query relationally, so a
-    // row lost or duplicated by the rewrite is a hash mismatch; the
-    // pruned plan shape is pinned by ManifestStatsSkipSpec.
+    // file skipping (b11b/b11c/b11e probe the same lane on lineitem).
+    // The oracle replays the query relationally, so a row lost or
+    // duplicated by the rewrite is a hash mismatch; the pruned plan
+    // shape is pinned by ManifestStatsSkipSpec.
     "c37l_zorder_compact" -> QueryDef(
       """SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS document_url,
         |       text AS chunk_text,

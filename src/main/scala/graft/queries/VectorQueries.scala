@@ -32,6 +32,33 @@ object VectorQueries {
        |FROM pairs GROUP BY vec_id
        |ORDER BY dist, vec_id LIMIT $k""".stripMargin
 
+  /** lineitem's (orderkey, linenumber, partkey, suppkey) as a manifest
+    * table in a run-scoped warehouse, z-ordered on (partkey, suppkey)
+    * by `compactZorder` after `bloomKey`, if any, is declared a bloom
+    * column — so the rewritten files carry both the curve's tight
+    * min/max and the key's blooms. Returns the qualified name.
+    */
+  private def zorderedLineitem(s: SparkSession, dir: String,
+      bloomKey: Option[String]): String = {
+    val wh = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
+    val cat = QueryDef.freshCatalog(s, "graft_z", wh)
+    Tables(s, dir, "lineitem")
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+      .createOrReplaceTempView(s"${cat}_src")
+    s.sql(s"CREATE TABLE $cat.t TBLPROPERTIES ('format'='manifest') " +
+      s"AS SELECT * FROM ${cat}_src")
+    bloomKey.foreach(k => s.sql(s"CALL $cat.set_bloom_columns('t', '$k')"))
+    // CALL compact_zorder's 128 MB file target packs the table into one
+    // file at gate scale; an eighth of its bytes per file spreads it
+    // over about eight clustered files, so the gate exercises
+    // multi-file pruning
+    val t = new graft.sink.ManifestTableFormat(s, s"$wh/t",
+      graft.sink.ChunkStore.schema)
+    t.compactZorder(Seq("l_partkey", "l_suppkey"),
+      math.max(1L, t.tableStats()._4 / 8))
+    s"$cat.t"
+  }
+
   def defs: Map[String, QueryDef] = Map(
     // B2: brute-force exact top-k by cosine distance.
     "b2_vector_topk" -> QueryDef(oracleCosineTopK(10, 0)) { (s, dir) =>
@@ -138,7 +165,7 @@ object VectorQueries {
     },
 
     // B11: Z-order (Morton) curve — the multi-dimension clustering key
-    // behind ops.Layout.zorderWrite (SCALE §1). The gate pins the bit
+    // behind CALL compact_zorder (SCALE §1). The gate pins the bit
     // interleave itself: both engines compute the same magic-mask
     // dilation over two 10-bit dims, so a hash mismatch catches any
     // drift in the curve the layout (and its pruning) depends on.
@@ -172,48 +199,40 @@ object VectorQueries {
           .limit(50)
     },
 
-    // B11b: end-to-end layout payoff — z-order write + `_hulls`
-    // manifest + file-pruned interval scan must return EXACTLY the
-    // rows a plain scan-and-filter returns (pruning sound, residual
-    // filter exact). LayoutSpec additionally pins that the manifest
-    // consultation selects a strict subset of the files.
+    // B11b: end-to-end layout payoff — the z-ordered manifest table
+    // (compact_zorder) answers the 2-dim interval predicate through
+    // per-file min/max skipping and must return EXACTLY the rows a
+    // plain scan-and-filter returns (pruning sound, residual filter
+    // exact). GraftCatalogSpec pins that the scan plans a strict file
+    // subset.
     "b11b_pruned_scan" -> QueryDef(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
         |FROM lineitem
         |WHERE l_partkey BETWEEN 100 AND 120 AND l_suppkey BETWEEN 1 AND 5
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin) {
       (s, dir) =>
-      val path = s"/tmp/graft-zlayout-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      val li = Tables(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), path,
-        numFiles = 8, bits = 10)
-      Layout.writeManifest(s, path, Seq("l_partkey", "l_suppkey"))
-      Layout.prunedScan(s, path,
-        Seq(("l_partkey", 100.0, 120.0), ("l_suppkey", 1.0, 5.0)))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+        s.sql(s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
+          |FROM ${zorderedLineitem(s, dir, None)}
+          |WHERE l_partkey BETWEEN 100 AND 120 AND l_suppkey BETWEEN 1 AND 5
+          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""
+          .stripMargin)
     },
 
-    // B11c: key-probe pruning — the `_keybloom` sidecar prunes files
-    // for equality/IN predicates that min/max hulls can't help with.
-    // Result must equal the plain IN-filter exactly (bloom false
-    // positives only widen the file list; the semi-join makes rows
-    // exact). Probes one present key and one absent key.
+    // B11c: key-probe pruning — a `set_bloom_columns` bloom on
+    // l_partkey prunes files for equality/IN predicates that min/max
+    // cannot help with. Result must equal the plain IN-filter exactly
+    // (bloom false positives only widen the file list). Probes one
+    // present key and one absent key.
     "b11c_key_pruned_scan" -> QueryDef(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
         |FROM lineitem WHERE l_partkey IN (101, 987654321)
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin) {
       (s, dir) =>
-        import s.implicits._
-        val path = s"/tmp/graft-zkey-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-        val li = Tables(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-        Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), path,
-          numFiles = 8, bits = 10)
-        Layout.writeKeyManifest(s, path, "l_partkey")
-        Layout.prunedScanByKey(s, path,
-          Seq(101L, 987654321L).toDF("l_partkey"))
-          .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+        s.sql(s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
+          |FROM ${zorderedLineitem(s, dir, Some("l_partkey"))}
+          |WHERE l_partkey IN (101, 987654321)
+          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""
+          .stripMargin)
     },
 
     // B11d: the generic n-dim interleave (the path arities ≠ 2 use),
@@ -241,32 +260,20 @@ object VectorQueries {
           .limit(50)
     },
 
-    // B11e: the SQL face of b11b/b11c — the same z-ordered table
-    // registered on the graft catalog and queried by NAME with plain
-    // SQL predicates; the sidecar-aware scan builder mines the pushed
-    // conjuncts for hull intervals + key probes and plans the file
-    // subset (GraftCatalogSpec pins the subset; this gate pins the
-    // ROWS against DuckDB filtering the raw table — pruning must be
-    // invisible to results).
+    // B11e: b11b and b11c in one query — an interval on one curve
+    // dim AND an equality probe on the other, whose bloom
+    // (`set_bloom_columns`) intersects with the min/max selection.
+    // GraftCatalogSpec pins the file subset; this gate pins the ROWS
+    // against DuckDB filtering the raw table — pruning must be
+    // invisible to results.
     "b11e_sql_pruned_scan" -> QueryDef(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
         |FROM lineitem
         |WHERE l_partkey BETWEEN 200 AND 220 AND l_suppkey = 3
         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin) {
       (s, dir) =>
-        // run-scoped warehouse (the b2b pattern: no cross-run collision)
-        val wh = java.nio.file.Files
-          .createTempDirectory("graft-sqlz").toString
-        val path = s"$wh/zt"
-        val li = Tables(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-        Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), path,
-          numFiles = 8, bits = 10)
-        Layout.writeManifest(s, path, Seq("l_partkey", "l_suppkey"))
-        Layout.writeKeyManifest(s, path, "l_suppkey")
-        val cat = QueryDef.freshCatalog(s, "graft_z", wh)
         s.sql(s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
-          |FROM $cat.zt
+          |FROM ${zorderedLineitem(s, dir, Some("l_suppkey"))}
           |WHERE l_partkey BETWEEN 200 AND 220 AND l_suppkey = 3
           |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""
           .stripMargin)

@@ -3310,6 +3310,14 @@ class ManifestTableFormat(
       })
   }
 
+  /** Replace the live set with `f` of its rows in ONE copy-on-write
+    * commit; a lost race re-runs `f` over the new snapshot. The dedup
+    * signature store compacts with it (`f` collapses replayed rows).
+    */
+  def rewriteLive(f: DataFrame => DataFrame): Unit =
+    commitCycle(snap => liveNames(snap),
+      (snap, files) => f(readLive(snap, files)))
+
   /** PREDICATE-SCOPED COMPACTION (the Delta `OPTIMIZE WHERE` idea):
     * bin-pack only the SMALL files (< `targetFileBytes`) whose stats
     * overlap `condition` — at 100 TB you never rewrite the whole
@@ -3348,8 +3356,8 @@ class ManifestTableFormat(
     rewritten
   }
 
-  /** Z-ORDER COMPACTION (B11 clustering for manifest tables): the
-    * live set rewrites clustered on the morton curve of `dimNames` —
+  /** Z-ORDER COMPACTION (B11 clustering): the live set rewrites
+    * clustered on the morton curve of `dimNames` —
     * one range-stats pass over just the dim columns, one range
     * exchange on the curve, a per-partition sort, size-targeted
     * output files — all through the same copy-on-write commit as
@@ -3358,11 +3366,11 @@ class ManifestTableFormat(
     * on every new file, the clustered files immediately serve
     * selective predicates through the c37j file skipping: curve
     * locality makes each file's hull tight, so range conjuncts on
-    * the dims prune to a small file subset — the `_hulls` sidecar
-    * layout's pruning with NO sidecar to maintain. Non-numeric dims
-    * degrade to a constant curve coordinate (no clustering benefit,
-    * never an error); run on a maintenance cadence after appends
-    * dilute locality, exactly like the sidecar layout's `recluster`.
+    * the dims prune to a small file subset, and `set_bloom_columns`
+    * blooms prune equality probes on unclustered keys. Non-numeric
+    * dims degrade to a constant curve coordinate (no clustering
+    * benefit, never an error); run on a maintenance cadence after
+    * appends dilute locality.
     */
   def compactZorder(dimNames: Seq[String],
       targetFileBytes: Long = ManifestTableFormat.defaultTargetFileBytes)

@@ -300,12 +300,11 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val pin = asOf(options, mtf)
     val pinned = mtf.pinScan(pin)
     new graft.catalog.GraftTable(
-      s"graft.`$path`", spark, pinned.schema, pinned.files,
+      s"graft.`$path`", spark, pinned,
       insert = if (pin.isDefined) None else Some(mtf.append),
       overwriteHook = if (pin.isDefined) None else Some(mtf.overwrite),
       truncateHook =
         if (pin.isDefined) None else Some(() => mtf.truncate()),
-      pinned = Some(pinned),
       streamWrite =
         if (pin.isDefined) None
         else Some { inf =>

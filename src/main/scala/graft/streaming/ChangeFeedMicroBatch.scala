@@ -115,10 +115,8 @@ private final class GraftChangeFeedStream(
 
   private def spark = SparkSession.active
 
-  private def mtf = {
-    val store = new graft.sink.ChunkStore(spark, tablePath)
-    new ManifestTableFormat(spark, tablePath, store.schema)
-  }
+  private def mtf =
+    new ManifestTableFormat(spark, tablePath, graft.sink.ChunkStore.schema)
 
   private val maxVersionsPerBatch: Option[Long] =
     Option(options.get("maxVersionsPerBatch")).map(_.toLong)

@@ -58,8 +58,7 @@ class ChangeFeedProvider extends TableProvider with DataSourceRegister {
 
   private def feedSchema(path: String): StructType = {
     val spark = SparkSession.active
-    val store = new ChunkStore(spark, path)
-    val mtf = new ManifestTableFormat(spark, path, store.schema)
+    val mtf = new ManifestTableFormat(spark, path, ChunkStore.schema)
     StructType(mtf.currentSchema.fields :+
       StructField("_change_type", StringType, nullable = false))
   }

@@ -57,10 +57,7 @@ class GraftStreamingWrite(
         s"graft stream: no branch '$b' at $tablePath — " +
           "createBranch / CALL create_branch first")
     }
-    val store = new ChunkStore(spark, tablePath,
-      format = branch.fold(ManifestTableFormat.factory)(
-        ManifestTableFormat.branchFactory))
-    new ManifestTableFormat(spark, tablePath, store.schema,
+    new ManifestTableFormat(spark, tablePath, ChunkStore.schema,
       branch = branch)
   }
 

@@ -46,8 +46,7 @@ object StreamWriter {
       appId: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = source.sparkSession
-    val store = new ChunkStore(spark, targetPath)
-    val mtf = new ManifestTableFormat(spark, targetPath, store.schema)
+    val mtf = new ManifestTableFormat(spark, targetPath, ChunkStore.schema)
     source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val app = appId.orElse(Option(batch.sparkSession.sparkContext

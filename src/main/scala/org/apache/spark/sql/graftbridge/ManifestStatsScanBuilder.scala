@@ -20,9 +20,9 @@ import graft.sink.{ManifestTableFormat, PinnedScan, StatsProbes}
   * log's per-file stats (url bloom + min/max, per-column min/max +
   * null counts) to shrink the FILE list before delegating to Spark's
   * own parquet scan — Delta-style data skipping, driven by the
-  * predicates Catalyst pushes. The layout twin is
-  * [[SidecarPrunedScanBuilder]]; this one needs no sidecar because
-  * the manifest's add-actions already carry the stats.
+  * predicates Catalyst pushes. It is the one pruning scan of every
+  * graft table: the manifest's add-actions already carry the stats,
+  * z-ordered tables included (`CALL compact_zorder`).
   *
   * Lives in the `org.apache.spark.sql` tree for the `private[sql]`
   * `SupportsPushDownCatalystFilters` seam — the only hook that sees

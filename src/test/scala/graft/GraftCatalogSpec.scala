@@ -229,18 +229,22 @@ class GraftCatalogSpec extends SparkSpec
     assert(e3.getMessage != null)
   }
 
-  test("z-ordered table: SQL predicates prune through _hulls/_keybloom") {
-    import graft.ops.Layout
+  test("z-ordered table: SQL predicates prune through compact_zorder " +
+      "stats and column blooms") {
     val (cat, wh) = freshCatalog()
-    val dir = s"$wh/zt"
     val df = spark.range(0, 10000).select(col("id"),
       (col("id") % 100).as("x"), (col("id") / 100).as("y"))
-    Layout.zorderWriteAuto(df, Seq("x", "y"), dir, numFiles = 16)
-    Layout.writeManifest(spark, dir, Seq("x", "y"))
-    Layout.writeKeyManifest(spark, dir, "id")
-    val all = spark.read.parquet(dir).inputFiles.length
+    df.createOrReplaceTempView("zt_src")
+    spark.sql(s"CREATE TABLE $cat.zt TBLPROPERTIES ('format'='manifest') " +
+      "AS SELECT * FROM zt_src")
+    spark.sql(s"CALL $cat.set_bloom_columns('zt', 'id')")
+    // CALL compact_zorder's 128 MB file target packs this table into
+    // one file; the Scala call's target spreads the curve over many
+    val mtf = new ManifestTableFormat(spark, s"$wh/zt", ChunkStore.schema)
+    mtf.compactZorder(Seq("x", "y"), targetFileBytes = 8192)
+    val all = mtf.liveFiles.size
     assert(all >= 8, s"layout produced only $all files")
-    // the catalog lists and resolves the sidecar table
+    // the catalog lists and resolves the z-ordered table
     assert(spark.sql(s"SHOW TABLES IN $cat").collect()
       .map(_.getString(1)).contains("zt"))
 
@@ -262,13 +266,13 @@ class GraftCatalogSpec extends SparkSpec
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == want && got.nonEmpty)
     assert(plannedFiles(q) < all,
-      s"hull pruning planned ${plannedFiles(q)} of $all files")
+      s"min/max pruning planned ${plannedFiles(q)} of $all files")
 
-    // point probe through the key bloom: one row, file subset
+    // point probe through the id bloom: one row, file subset
     val q2 = spark.sql(s"SELECT x FROM $cat.zt WHERE id = 4242")
     assert(q2.collect().map(_.getLong(0)).toSeq == Seq(42L))
     assert(plannedFiles(q2) < all,
-      s"keybloom pruning planned ${plannedFiles(q2)} of $all files")
+      s"bloom pruning planned ${plannedFiles(q2)} of $all files")
 
     // parquet pushdown still reaches the scan under the pruned list
     assert(q2.queryExecution.executedPlan.toString
@@ -816,18 +820,18 @@ class GraftCatalogSpec extends SparkSpec
       "(0, 'c', array(1.0F), 3, 'doc://c')")
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 3)
 
-    // a layout-managed z-order table is read-only: INSERT OVERWRITE
+    // a directory the retired parquet engine wrote: INSERT OVERWRITE
     // refuses loudly and leaves its rows alone
-    val zt = spark.range(0, 40).select(col("id"),
-      (col("id") % 4).as("x"), (col("id") / 4).as("y"))
-    graft.ops.Layout.zorderWriteAuto(zt, Seq("x", "y"), s"$wh/zt",
-      numFiles = 2)
-    graft.ops.Layout.writeManifest(spark, s"$wh/zt", Seq("x", "y"))
+    val old = s"$wh/old"
+    chunkRows(1 to 3, "p-").write.parquet(old)
+    Files.write(java.nio.file.Paths.get(old, ChunkStore.parquetLayoutMarker),
+      "buckets=4".getBytes("UTF-8"))
     val e = intercept[Exception] {
-      spark.sql(s"INSERT OVERWRITE $cat.zt VALUES (0, 0, 0)")
+      spark.sql(s"INSERT OVERWRITE $cat.old VALUES " +
+        "(0, 'ow', array(1.0F), 1, 'doc://ow')")
     }
-    assert(e.getMessage.contains("zt"), e.getMessage)
-    assert(spark.sql(s"SELECT * FROM $cat.zt").count() == 40)
+    assert(e.getMessage.contains(old), e.getMessage)
+    assert(spark.read.parquet(old).count() == 3)
   }
 
   test("TRUNCATE TABLE and CALL restore: reversible wipes, history " +

@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.ops.Layout
 
 /** Z-order layout (ops.Layout): the morton curve is pinned three ways
-  * (mask fast path ≡ generic interleave ≡ plain-Scala reference), and
-  * the z-ordered write is shown to actually buy multi-dimension
-  * pruning — per-file min/max hulls cover a fraction of the key space
-  * that a round-robin layout's files do not.
+  * (mask fast path ≡ generic interleave ≡ plain-Scala reference), the
+  * z-ordered frame is shown to actually buy multi-dimension pruning —
+  * per-file min/max hulls cover a fraction of the key space that a
+  * round-robin layout's files do not — and manifest tables' file
+  * skipping, which serves that layout (`CALL compact_zorder`), stays
+  * exact at its edges.
   */
 class LayoutSpec extends SparkSpec {
 
@@ -64,6 +66,15 @@ class LayoutSpec extends SparkSpec {
     assert(r.getLong(4) == 128L)
   }
 
+  /** Per-file min/max hulls of `dims` over the parquet files at `path`
+    * — the stats file skipping consults.
+    */
+  private def fileHulls(path: String, dims: Seq[String]): DataFrame =
+    spark.read.parquet(path)
+      .groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("rows"), dims.flatMap(d => Seq(
+        min(col(d)).as(s"${d}_min"), max(col(d)).as(s"${d}_max"))): _*)
+
   /** Sum over files of the fraction of the 2-d key space the file's
     * min/max hull covers — the pruning currency: a scan with a point
     * predicate must read every file whose hull contains it.
@@ -74,7 +85,7 @@ class LayoutSpec extends SparkSpec {
         ((col("y_max") - col("y_min") + lit(1)) / lit(span))).as("c"))
       .collect().head.getDouble(0)
 
-  test("zorderWrite clusters both dims per file; round-robin does not") {
+  test("zorderFrame clusters both dims per file; round-robin does not") {
     val raw = Tables(spark, sf(), "lineitem")
     // range stats (driver-scale, same provenance as write-time bounds)
     val Array(b) = raw.agg(min("l_partkey"), max("l_partkey"),
@@ -87,7 +98,8 @@ class LayoutSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-zorder").toString
     val nFiles = 8
 
-    Layout.zorderWrite(li, Seq(col("x"), col("y")), s"$base/z", nFiles)
+    Layout.zorderFrame(li, Seq(col("x"), col("y")), nFiles).drop("__z")
+      .write.parquet(s"$base/z")
     li.repartition(nFiles).write.parquet(s"$base/rr")
 
     // rows unchanged — the curve only permutes
@@ -98,8 +110,8 @@ class LayoutSpec extends SparkSpec {
       li.agg(sum(col("l_orderkey") * col("l_linenumber"))).collect()
         .head.getLong(0))
 
-    val zHulls = Layout.fileHulls(spark, s"$base/z", Seq("x", "y"))
-    val rrHulls = Layout.fileHulls(spark, s"$base/rr", Seq("x", "y"))
+    val zHulls = fileHulls(s"$base/z", Seq("x", "y"))
+    val rrHulls = fileHulls(s"$base/rr", Seq("x", "y"))
     assert(zHulls.count() == nFiles)
 
     // round-robin: every file spans ~the whole space → coverage ≈ nFiles.
@@ -117,14 +129,15 @@ class LayoutSpec extends SparkSpec {
     assert(hit <= nFiles / 2, s"point predicate still hits $hit/$nFiles files")
   }
 
-  test("zorderWriteAuto: self-ranged write preserves rows and clusters") {
+  test("zorderFrameAuto: self-ranged frame preserves rows and clusters") {
     val li = Tables(spark, sf(), "lineitem")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
     val dir = Files.createTempDirectory("graft-zauto").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), dir, 8, bits = 10)
+    Layout.zorderFrameAuto(li, Seq("l_partkey", "l_suppkey"), 8, bits = 10)
+      .drop("__z").write.parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == li.count())
-    val hulls = Layout.fileHulls(spark, dir, Seq("l_partkey", "l_suppkey"))
+    val hulls = fileHulls(dir, Seq("l_partkey", "l_suppkey"))
     val Array(g) = li.agg(
       (max("l_partkey") - min("l_partkey") + lit(1)).cast("double"),
       (max("l_suppkey") - min("l_suppkey") + lit(1)).cast("double")).collect()
@@ -135,237 +148,54 @@ class LayoutSpec extends SparkSpec {
     assert(cov < 4.0, s"auto z-order hull coverage too loose: $cov (8 files)")
   }
 
-  test("prunedScan: manifest skips files, results equal the full filter") {
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("graft-zprune").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), dir, 8, bits = 10)
-    Layout.writeManifest(spark, dir, Seq("l_partkey", "l_suppkey"))
-
-    val preds = Seq(("l_partkey", 100.0, 120.0), ("l_suppkey", 1.0, 5.0))
-    val selected = Layout.selectFiles(spark, dir, preds)
-    assert(selected.nonEmpty && selected.size < 8,
-      s"manifest selected ${selected.size}/8 files — no pruning")
-
-    val exact = li.filter(
-      col("l_partkey").between(100, 120) && col("l_suppkey").between(1, 5))
-      .collect().map(_.toSeq).toSet
-    assert(exact.nonEmpty, "test predicate selects no rows at this sf")
-    val pruned = Layout.prunedScan(spark, dir, preds)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      .collect().map(_.toSeq).toSet
-    assert(pruned == exact)
-
-    // no manifest → plain filtered scan, same rows
-    val noManifest = Files.createTempDirectory("graft-znoman").toString + "/d"
-    li.repartition(4).write.parquet(noManifest)
-    val fallback = Layout.prunedScan(spark, noManifest, preds)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      .collect().map(_.toSeq).toSet
-    assert(fallback == exact)
-
-    // disjoint predicate → empty result, schema intact
-    val none = Layout.prunedScan(spark, dir,
-      Seq(("l_partkey", -10.0, -1.0)))
-    assert(none.count() == 0 && none.columns.contains("l_suppkey"))
+  /** A fresh graft catalog over a fresh warehouse: (catalog, warehouse). */
+  private def freshCatalog(): (String, String) = {
+    val wh = Files.createTempDirectory("graft-zcat").toString
+    (graft.queries.QueryDef.freshCatalog(spark, "graft_layout", wh), wh)
   }
 
-  test("prunedScanByKey: bloom manifest prunes files, rows stay exact") {
-    import spark.implicits._
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("graft-zbloom").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), dir, 8, bits = 10)
-    Layout.writeKeyManifest(spark, dir, "l_partkey")
-
-    val probe = Seq(101L).toDF("l_partkey")
-    val exact = li.filter(col("l_partkey") === 101)
-      .collect().map(_.toSeq).toSet
-    assert(exact.nonEmpty)
-    val got = Layout.prunedScanByKey(spark, dir, probe)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      .collect().map(_.toSeq).toSet
-    assert(got == exact)
-
-    // z-order clusters l_partkey, so the present key lives in few
-    // files and the bloom proves it: the probe reads a strict subset
-    assert(spark.read.parquet(s"$dir/_keybloom").count() == 8)
-    val hit = Layout.selectFilesByKey(spark, dir, probe)
-    assert(hit.nonEmpty && hit.size < 8,
-      s"bloom selected ${hit.size}/8 files — no pruning")
-    // absent key: bloom either rejects every file or false-positives a
-    // few; rows must be empty either way
-    assert(Layout.prunedScanByKey(spark, dir,
-      Seq(987654321L).toDF("l_partkey")).count() == 0)
-
-    // probing a column the manifest wasn't built on fails loudly
-    intercept[IllegalArgumentException] {
-      Layout.prunedScanByKey(spark, dir, Seq(1L).toDF("l_suppkey")).count()
-    }
-
-    // no manifest → plain semi-join scan, same rows
-    val plain = Files.createTempDirectory("graft-zbloom-plain").toString + "/d"
-    li.repartition(4).write.parquet(plain)
-    assert(Layout.prunedScanByKey(spark, plain, probe)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      .collect().map(_.toSeq).toSet == exact)
+  /** Files the (single) scan of `q` planned, after running it. */
+  private def plannedFiles(q: DataFrame): Int = {
+    q.collect()
+    val scans = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {
+      def scansOf(p: org.apache.spark.sql.execution.SparkPlan) =
+        collectWithSubqueries(p) {
+          case b: org.apache.spark.sql.execution.datasources.v2
+              .BatchScanExec => b
+        }
+    }.scansOf(q.queryExecution.executedPlan)
+    org.apache.spark.sql.graftbridge.Scans.fileScan(scans.head.scan)
+      .fileIndex.inputFiles.length
   }
 
-  test("prunedScanByKey: probes of a different (compatible) type are " +
-      "cast to the manifest's key type — no silent false negatives") {
-    import spark.implicits._
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_partkey")
-    val dir = Files.createTempDirectory("graft-zbloom-cast").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey"), dir, 4, bits = 10)
-    Layout.writeKeyManifest(spark, dir, "l_partkey") // BIGINT key
-    val exact = li.filter(col("l_partkey") === 101)
-      .collect().map(_.toSeq).toSet
-    assert(exact.nonEmpty)
-    // an INT probe and a STRING probe hash differently from BIGINT
-    // under xxhash64 — without the recorded-type cast every bloom
-    // test is a false negative and matching files get PRUNED
-    // (explicit select: the semi-join moves the key column first)
-    assert(Layout.prunedScanByKey(spark, dir, Seq(101).toDF("l_partkey"))
-      .select("l_orderkey", "l_partkey")
-      .collect().map(_.toSeq).toSet == exact)
-    assert(Layout.prunedScanByKey(spark, dir, Seq("101").toDF("l_partkey"))
-      .select("l_orderkey", "l_partkey")
-      .collect().map(_.toSeq).toSet == exact)
-  }
-
-  test("keyedSurvivors runs the bloom tests as a Spark job over the " +
-      "manifest frame — never a driver-side bitset loop") {
-    import spark.implicits._
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_partkey")
-    // inflated file count: 64 z-ordered files; the probe keys span a
-    // narrow slice of the key domain so genuine matches cluster in
-    // few files (l_partkey covers 0..199 at this sf — probing the
-    // whole domain would legitimately match every file)
-    val dir = Files.createTempDirectory("graft-zbloom-scale").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey"), dir, 64, bits = 10)
-    Layout.writeKeyManifest(spark, dir, "l_partkey")
-    val probe = (10L to 15L).toDF("l_partkey")
-    val surv = Layout.keyedSurvivors(spark, dir, probe)
-    // the plan must SCAN the _keybloom manifest (bitsets stay in
-    // executors) and broadcast only the probe hashes
-    val plan = surv.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(plan.contains("_keybloom"), plan.take(2000))
-    assert(plan.contains("BroadcastExchange") ||
-      plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-    val hit = surv.collect().map(_.getString(0)).toSeq
-    assert(hit.nonEmpty && hit.size < 64,
-      s"bloom selected ${hit.size}/64 files — no pruning")
-    // and the selection is exact end-to-end at this file count
-    val exact = li.filter(col("l_partkey").between(10, 15))
-      .collect().map(_.toSeq).toSet
-    assert(Layout.prunedScanByKey(spark, dir, probe)
-      .select("l_orderkey", "l_partkey")
-      .collect().map(_.toSeq).toSet == exact)
-  }
-
-  test("path-rendering divergence: every file unknown → full read, " +
-      "each physical file read AT MOST once (no duplicated rows)") {
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("graft-zdiverge").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), dir, 8,
-      bits = 10)
-    Layout.writeManifest(spark, dir, Seq("l_partkey", "l_suppkey"))
-    // doctor the manifest's file paths to simulate a rendering
-    // divergence (file:/ vs file:/// class of mismatch): every data
-    // file becomes "unknown" AND every doctored name still "selects"
-    val doctored = spark.read.parquet(s"$dir/_hulls")
-      .withColumn("file", concat(lit("divergent-"), col("file")))
-    val tmpMan =
-      Files.createTempDirectory("graft-zdiverge-man").toString + "/m"
-    doctored.write.parquet(tmpMan)
-    spark.read.parquet(tmpMan).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_hulls")
-    val preds = Seq(("l_partkey", 100.0, 120.0), ("l_suppkey", 1.0, 5.0))
-    val exact = li.filter(
-      col("l_partkey").between(100, 120) && col("l_suppkey").between(1, 5))
-      .collect().map(_.toSeq).toSet
-    val got = Layout.prunedScan(spark, dir, preds)
-      .collect().map(_.toSeq).toList
-    assert(got.toSet == exact)
-    assert(got.size == exact.size, // bag equality: no doubled rows
-      s"divergent manifest duplicated rows: ${got.size} vs ${exact.size}")
-  }
-
-  test("zorderWriteAuto: empty input writes an empty table, not NPE") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zempty").toString + "/z"
-    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    Layout.zorderWriteAuto(empty, Seq("a", "b"), dir, 4)
-    assert(spark.read.parquet(dir).count() == 0)
-    // all-null dim on a non-empty frame: degenerate cell, rows kept
-    val dir2 = Files.createTempDirectory("graft-zempty2").toString + "/z"
-    val withNulls = Seq((1L, Option.empty[Long]), (2L, None))
-      .toDF("a", "b")
-    Layout.zorderWriteAuto(withNulls, Seq("a", "b"), dir2, 2)
-    assert(spark.read.parquet(dir2).count() == 2)
-  }
-
-  test("recluster restores clustering after appends, refreshes manifests") {
-    import spark.implicits._
-    val li = Tables(spark, sf(), "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("graft-zrecl").toString + "/z"
-    Layout.zorderWriteAuto(li, Seq("l_partkey", "l_suppkey"), dir, 8, bits = 10)
-    Layout.writeManifest(spark, dir, Seq("l_partkey", "l_suppkey"))
-
-    // appends land unclustered: 3 extra files spanning the key space
-    val extra = li.filter(col("l_orderkey") % 3 === 0)
-    extra.repartition(3).write.mode("append").parquet(dir)
-    val expectRows = li.count() + extra.count()
-    val checksum = spark.read.parquet(dir)
-      .agg(sum(col("l_orderkey") * col("l_partkey"))).collect().head.getLong(0)
-    val dilutedFiles = Layout.fileHulls(spark, dir,
-      Seq("l_partkey", "l_suppkey")).count()
-    assert(dilutedFiles == 11)
-
-    // the manifest is now STALE (3 files it never saw) — pruning must
-    // stay sound by always reading unknown files
-    val preds0 = Seq(("l_partkey", 100.0, 120.0), ("l_suppkey", 1.0, 5.0))
-    val staleExact = spark.read.parquet(dir).filter(
-      col("l_partkey").between(100, 120) && col("l_suppkey").between(1, 5))
-      .collect().map(_.toSeq).toSet
-    assert(Layout.prunedScan(spark, dir, preds0)
-      .collect().map(_.toSeq).toSet == staleExact)
-
-    Layout.recluster(spark, dir, Seq("l_partkey", "l_suppkey"), 8,
-      bits = 10, bloomKey = Some("l_partkey"))
-
-    val back = spark.read.parquet(dir)
-    assert(back.count() == expectRows)
-    assert(back.agg(sum(col("l_orderkey") * col("l_partkey"))).collect()
-      .head.getLong(0) == checksum)
-    // manifests rebuilt on the new file set
-    val hulls = spark.read.parquet(s"$dir/_hulls")
-    assert(hulls.count() == 8)
-    assert(spark.read.parquet(s"$dir/_keybloom").count() == 8)
-    // clustering is back: the interval probe prunes again and agrees
-    val preds = Seq(("l_partkey", 100.0, 120.0), ("l_suppkey", 1.0, 5.0))
-    assert(Layout.selectFiles(spark, dir, preds).size < 8)
-    val exact = back.filter(
-      col("l_partkey").between(100, 120) && col("l_suppkey").between(1, 5))
-      .collect().map(_.toSeq).toSet
-    assert(Layout.prunedScan(spark, dir, preds)
-      .collect().map(_.toSeq).toSet == exact)
+  test("compact_zorder: an empty table stays empty, not NPE; an " +
+      "all-null dim keeps its rows") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.e (a BIGINT, b BIGINT) " +
+      "TBLPROPERTIES ('format'='manifest')")
+    spark.sql(s"CALL $cat.compact_zorder('e', 'a,b')")
+    assert(spark.sql(s"SELECT * FROM $cat.e").count() == 0)
+    // all-null dim on a non-empty table: degenerate cell, rows kept
+    spark.sql(s"INSERT INTO $cat.e VALUES (1, NULL), (2, NULL)")
+    spark.sql(s"CALL $cat.compact_zorder('e', 'a,b')")
+    assert(spark.sql(s"SELECT a FROM $cat.e").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(1L, 2L))
   }
 
   test("integral predicate bounds stay exact beyond 2^53") {
-    import spark.implicits._
-    // 2^53 and 2^53+1 are equal as doubles — a double-cast comparison
-    // would return both rows for a point predicate on either
-    val dir = Files.createTempDirectory("graft-zbig").toString + "/d"
-    Seq(1L << 53, (1L << 53) + 1L).toDF("id").coalesce(1).write.parquet(dir)
-    val got = Layout.prunedScan(spark, dir,
-      Seq(("id", math.pow(2, 53), math.pow(2, 53))))
-      .collect().map(_.getLong(0)).toSeq
+    // 2^53 and 2^53+1 are equal as doubles — a double-cast stats
+    // comparison would keep both files (and a double-cast filter
+    // return both rows) for a point predicate on either
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.big (id BIGINT) " +
+      "TBLPROPERTIES ('format'='manifest')")
+    spark.sql(s"INSERT INTO $cat.big VALUES (${1L << 53})")
+    spark.sql(s"INSERT INTO $cat.big VALUES (${(1L << 53) + 1L})")
+    assert(plannedFiles(spark.sql(s"SELECT id FROM $cat.big")) == 2)
+    val q = spark.sql(s"SELECT id FROM $cat.big WHERE id = ${1L << 53}")
+    assert(plannedFiles(q) == 1)
+    val got = q.collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L << 53), s"got $got")
   }
 

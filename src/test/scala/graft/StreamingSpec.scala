@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -520,7 +522,8 @@ class StreamingSpec extends SparkSpec {
     assert(urls.size == 3 && !urls.exists(_.endsWith("c.txt")), urls)
 
     // signature store consistent: signatures for a, b, d only
-    val sigIds = spark.read.parquet(sig).select("id").distinct()
+    val sigIds = graft.ops.IndexTable.open(spark, sig).read()
+      .select("id").distinct()
       .collect().map(_.getString(0)).toSet
     assert(sigIds.size == 3 && !sigIds.exists(_.endsWith("c.txt")), sigIds)
   }
@@ -528,8 +531,8 @@ class StreamingSpec extends SparkSpec {
   test("signature store compaction mid-stream: matches unchanged, " +
       "replay rows collapsed, probe bucket-pruned") {
     import spark.implicits._
+    import graft.ops.IndexTable
     import graft.pipeline.StreamingDedup
-    import org.apache.spark.sql.functions.col
     val store = java.nio.file.Files
       .createTempDirectory("graft-sigstore-compact").toString + "/sigs"
     def run(rows: (Long, String)*): Set[(Long, Long)] =
@@ -544,69 +547,112 @@ class StreamingSpec extends SparkSpec {
     // at-least-once replay of batch 1: no self-matches, but the store
     // now holds every signature row twice
     assert(run(base.toIndexedSeq: _*).isEmpty)
-    val preCompact = spark.read.parquet(store)
+    val preCompact = IndexTable.open(spark, store).read()
     assert(preCompact.count() ==
       2 * preCompact.dropDuplicates("band", "key", "id").count())
+    val before = IndexTable.open(spark, store).version
 
-    StreamingDedup.compact(spark, store, buckets = 64)
+    StreamingDedup.compact(spark, store)
 
-    // replay duplicates collapsed; layout is now (band, bkt)
-    val post = spark.read.parquet(store)
+    // ONE commit collapsed the replay duplicates
+    val t = IndexTable.open(spark, store)
+    assert(t.version == before + 1)
+    val post = t.read()
     assert(post.count() == post.dropDuplicates("band", "key", "id").count())
-    assert(post.columns.contains("bkt"))
-    // …and the same duplicate contract holds after the swap
+    assert(post.count() == preCompact.count() / 2)
+    // …and the same duplicate contract holds after the compaction
     assert(run((100L, base(0)._2)) == Set((100L, base(0)._1)))
-    // appends after compaction stay in the bucketed layout and remain
-    // probe-visible
+    // appends after compaction remain probe-visible
     assert(run((200L, base(1)._2 + " tail")) == Set((200L, base(1)._1)))
 
-    // the probed (band, bucket) pairs must reach the scan as PARTITION
-    // filters (pruning = probe cost follows batch size, not store size)
-    val pruned = spark.read.parquet(store)
-      .filter((col("band").cast("long") * 64 + col("bkt").cast("long"))
-        .isin(0L, 64L))
-    pruned.collect()
-    val scan = pruned.queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[[^\\]]+\\]".r.findFirstIn(scan)
-    assert(pf.isDefined && pf.get.length > "PartitionFilters: []".length,
-      scan.take(2000))
+    // a probe reads only the files whose pid range holds a probed pair
+    // id (probe cost follows batch size, not store size), and exactly
+    // the rows of those pair ids
+    StreamingDedup.compact(spark, store)
+    val compacted = IndexTable.open(spark, store)
+    val live = compacted.liveFiles.size
+    val probed = StreamingDedup.probe(compacted, Seq(0, 256))
+    assert(live > 1, s"compaction left $live file")
+    assert(probed.inputFiles.length < live,
+      s"probe of 2 pair ids read ${probed.inputFiles.length} of $live files")
+    val want = compacted.read().filter(col("pid").isin(0, 256))
+    assert(probed.collect().map(_.toSeq).toSet ==
+      want.collect().map(_.toSeq).toSet)
   }
 
-  test("legacy band-only signature stores still probe, and compaction " +
-      "migrates them") {
+  test("a signature store in the retired layout is refused with a " +
+      "rebuild message") {
     import spark.implicits._
     import graft.pipeline.StreamingDedup
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sigstore-legacy").toString
-    val seedStore = s"$dir/seed"
-    val legacy = s"$dir/legacy"
-    def run(path: String)(rows: (Long, String)*): Set[(Long, Long)] =
-      StreamingDedup.processBatch(spark, rows.toSeq.toDF("doc_id", "text"),
-          path, threshold = 0.8)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val base = Tables(spark, sf(), "documents").limit(2)
-      .select("doc_id", "text").as[(Long, String)].collect()
-    assert(run(seedStore)(base.toIndexedSeq: _*).isEmpty)
-
-    // rebuild the seed store in the pre-bucket layout: band-partitioned
-    // data, stamp without a buckets entry
-    spark.read.parquet(seedStore).drop("bkt")
+    val legacy = java.nio.file.Files
+      .createTempDirectory("graft-sigstore-legacy").toString + "/sigs"
+    // the retired layout: band-partitioned parquet beside a stamp, no
+    // manifest log
+    Seq((0, 1L, 7L, Seq(1L, 2L))).toDF("band", "key", "id", "sig")
       .write.partitionBy("band").parquet(legacy)
-    val fs = new org.apache.hadoop.fs.Path(legacy)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(legacy, "_graft_dedup_params"), true)
+    val stamp = new org.apache.hadoop.fs.Path(legacy, StreamingDedup.StampName)
+    val out = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(stamp, true)
     try out.write("numHashes=64 bands=16 shingles=3".getBytes("UTF-8"))
     finally out.close()
+    def refused(e: IllegalStateException): Unit =
+      assert(e.getMessage.contains("retired layout") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    refused(intercept[IllegalStateException] {
+      StreamingDedup.processBatch(spark,
+        Seq((100L, "some text")).toDF("doc_id", "text"), legacy)
+    })
+    refused(intercept[IllegalStateException] {
+      StreamingDedup.compact(spark, legacy)
+    })
+    // nothing was written beside the old files
+    assert(!Files.exists(Paths.get(legacy, "_log")))
+  }
 
-    // legacy store probes via full scan — same matches
-    assert(run(legacy)((100L, base(0)._2)) == Set((100L, base(0)._1)))
-    // migrate; the contract is unchanged and the layout is bucketed
-    StreamingDedup.compact(spark, legacy)
-    assert(spark.read.parquet(legacy).columns.contains("bkt"))
-    assert(run(legacy)((300L, base(1)._2)) == Set((300L, base(1)._1)))
+  test("a signature-store append that dies after writing its data files " +
+      "but before the log publish leaves the store unchanged") {
+    import spark.implicits._
+    import graft.ops.IndexTable
+    import graft.pipeline.StreamingDedup
+    import graft.sink.ManifestTableFormat
+    val store = java.nio.file.Files
+      .createTempDirectory("graft-sigstore-atomic").toString + "/sigs"
+    def run(rows: (Long, String)*): Set[(Long, Long)] =
+      StreamingDedup.processBatch(spark, rows.toSeq.toDF("doc_id", "text"),
+          store, threshold = 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val base = Tables(spark, sf(), "documents").limit(3)
+      .select("doc_id", "text").as[(Long, String)].collect()
+    assert(run(base.take(2).toIndexedSeq: _*).isEmpty)
+    val rows = IndexTable.open(spark, store).read().count()
+    val version = IndexTable.open(spark, store).version
+
+    // the failing handle: the batch's data files are on disk when the
+    // commit dies
+    def dataFiles(): Int = Files.walk(Paths.get(store, "data")).iterator()
+      .asScala.count(_.toString.endsWith(".parquet"))
+    val filesBefore = dataFiles()
+    var staged = 0
+    val failing = (s: org.apache.spark.sql.SparkSession, p: String) =>
+      new ManifestTableFormat(s, p, new org.apache.spark.sql.types.StructType()) {
+        override protected def beforeCommit(): Unit = {
+          staged = dataFiles() - filesBefore
+          throw new java.io.IOException("injected: died before publish")
+        }
+      }
+    intercept[java.io.IOException] {
+      StreamingDedup.processBatchOn(spark,
+        Seq((300L, base(2)._2)).toDF("doc_id", "text"), store,
+        "doc_id", "text", 0.8, 64, 16, 3, failing)
+    }
+    assert(staged > 0)
+
+    // the store reads as before the failed batch: same rows, same
+    // version, and doc 300's signature never became probe-visible
+    assert(IndexTable.open(spark, store).read().count() == rows)
+    assert(IndexTable.open(spark, store).version == version)
+    assert(run((400L, base(2)._2)).isEmpty)
+    assert(run((500L, base(0)._2)) == Set((500L, base(0)._1)))
   }
 
   test("function registration is session-isolated and idempotent") {
