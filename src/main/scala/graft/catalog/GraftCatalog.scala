@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sink.{ChunkStore, ManifestTableFormat}
+import graft.sink.{ChunkStore, ManifestLog, ManifestTableFormat}
 
 /** SQL-addressable catalog over the engine's own tables (SURVEY A17/
   * B5 read surface; the reference's stores are queryable by name in
@@ -107,7 +107,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // retired-engine stores stay listed: naming one refuses loudly
       // with its migration instead of vanishing
       .filter(p => fs.exists(new Path(p, ChunkStore.parquetLayoutMarker)) ||
-        fs.exists(new Path(p, "_log")))
+        ManifestLog.isTable(fs, p))
       .map(p => Identifier.of(Array.empty, p.getName))
       .toArray
   }
@@ -138,12 +138,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = tableDir(ident)
     if (!fs.exists(new Path(dir))) throw new NoSuchTableException(ident)
     val fullName = s"$catalogName.${ident.name()}"
-    if (!fs.exists(new Path(dir, "_log"))) {
+    if (!ManifestLog.isTable(fs, new Path(dir))) {
       ChunkStore.requireManifestLayout(spark, dir)
       throw new NoSuchTableException(ident)
     }
     branchName.foreach { b =>
-      if (!fs.exists(new Path(dir, s"_log/branches/$b")))
+      if (!ManifestLog.hasBranch(fs, new Path(dir), b))
         throw new NoSuchTableException(ident)
     }
     val mtf = new ManifestTableFormat(spark, dir, ChunkStore.schema,
@@ -241,7 +241,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = tableDir(ident)
-    if (!fs.exists(new Path(dir, "_log")))
+    if (!ManifestLog.isTable(fs, new Path(dir)))
       throw new UnsupportedOperationException(
         s"$catalogName.${ident.name()}: ALTER TABLE needs the manifest " +
           "table format")
@@ -308,7 +308,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(new Path(dir)))
       throw new NoSuchTableException(Identifier.of(Array.empty, tableName))
     ChunkStore.requireManifestLayout(spark, dir)
-    if (!fs.exists(new Path(dir, "_log")))
+    if (!ManifestLog.isTable(fs, new Path(dir)))
       throw new UnsupportedOperationException(
         s"$catalogName.$tableName is not a manifest-format table — " +
           "procedures operate on the commit log")
@@ -625,7 +625,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         StructField("version", LongType, nullable = false))))(
       args => {
         manifestFor(args(0)) // refuses on non-manifest sources
-        val copied = ManifestTableFormat.cloneLog(spark,
+        val copied = ManifestLog.cloneLog(spark,
           s"$warehouse/${args(0)}", s"$warehouse/${args(1)}")
         longsRow(copied, manifestFor(args(1)).version)
       }),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.sink.{GraftMergeDelete, ManifestTableFormat}
+import graft.sink.{GraftMergeDelete, ManifestLog, ManifestTableFormat}
 
 /** Storage shared by the persistent indexes ([[VectorIndex]],
   * [[TextIndex]]) and the dedup signature store
@@ -60,7 +60,7 @@ private[graft] object IndexTable {
     if (Seq(VectorIndex.StampName, TextIndex.StampName,
             graft.pipeline.StreamingDedup.StampName)
           .exists(n => fs.exists(new Path(path, n))) &&
-        !fs.exists(new Path(path, "_log")))
+        !ManifestLog.isTable(fs, new Path(path)))
       throw new IllegalStateException(
         s"$path was written by the retired layout (no manifest log " +
           "beside its stamp): rebuild it — an index with its build call " +

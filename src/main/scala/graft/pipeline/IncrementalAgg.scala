@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sink.{ChunkStore, GraftMergeDelete, GraftMergeInsert, GraftMergeUpdate, ManifestTableFormat}
+import graft.sink.{ChunkStore, GraftMergeDelete, GraftMergeInsert, GraftMergeUpdate, ManifestLog, ManifestTableFormat}
 
 /** INCREMENTAL AGGREGATE MAINTENANCE off the change feed (B13) — the
   * materialized-view story at 100 TB: a derived manifest table
@@ -129,7 +129,7 @@ object IncrementalAgg {
       (String, Seq[String], Seq[String], Seq[String], Seq[String])] = {
     val fs = new Path(aggPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(aggPath, "_log"))) return None
+    if (!ManifestLog.isTable(fs, new Path(aggPath))) return None
     val store = new ChunkStore(spark, aggPath)
     val mtf = new ManifestTableFormat(spark, aggPath, store.schema)
     mtf.streamTransactions.collectFirst {
@@ -253,7 +253,7 @@ object IncrementalAgg {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val aggStore = new ChunkStore(spark, aggPath)
     val aggMtf = new ManifestTableFormat(spark, aggPath, aggStore.schema)
-    if (!fs.exists(new Path(aggPath, "_log")))
+    if (!ManifestLog.isTable(fs, new Path(aggPath)))
       aggMtf.initializeTable(Some(aggSchema), Nil)
     else require(
       aggMtf.currentSchema.fieldNames.toSeq == aggSchema.fieldNames.toSeq,

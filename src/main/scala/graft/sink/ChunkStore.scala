@@ -168,7 +168,7 @@ object ChunkStore {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(root, parquetLayoutMarker)
-    if (!fs.exists(new Path(root, "_log")) && fs.exists(marker)) {
+    if (!ManifestLog.isTable(fs, root) && fs.exists(marker)) {
       val in = fs.open(marker)
       val layout =
         try new String(in.readAllBytes(), "UTF-8") finally in.close()

@@ -6,30 +6,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 
 import graft.ops.Layout
-import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe}
+import graft.sink.ManifestLog.{Action, ColStats, FileStats, Snapshot}
+import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe, FileStat}
 
 /** The manifest-committing table format behind [[ChunkStore]] — the
   * Delta/Iceberg commit model in miniature, implemented on plain
   * parquet + one numbered JSON-lines log (SURVEY A17's "MERGE INTO"
   * mapping, `AzureCosmosDB/.../CosmosDBClientWrapper.cs:36-72`,
-  * without the external dependency the sandbox lacks):
+  * without the external dependency the sandbox lacks). The log — its
+  * files, action codec, replay, checkpoints, history, branches and
+  * protocol ledger — is [[ManifestLog]]; this class holds one and
+  * adds data writes, DML and stats pruning:
   *
-  *  - **The log is the table.** `_log/<version>.json` entries list
-  *    `add`/`rm` file actions; the live file set is the replay of all
-  *    committed versions. Data files are immutable and invisible
-  *    until an entry references them — a crashed writer leaves only
-  *    unreferenced files (cleaned by [[vacuum]]), never a torn table.
-  *  - **Commits are one atomic publish.** An entry is staged to a
-  *    temp name and published at the next version with the strongest
-  *    fail-if-exists primitive the filesystem offers: hard-link on
-  *    local filesystems (POSIX link(2) fails on an existing target —
-  *    rename there would silently overwrite), rename-if-absent on
-  *    HDFS-class stores (rename fails onto an existing destination),
-  *    conditional put on S3-class stores (same contract as Delta's
-  *    LogStore requirement). No directory renames anywhere, which is
-  *    what makes this the object-store answer to the staged-swap
-  *    contract in SCALE.md §1. The cross-process race test pins the
-  *    local primitive with two concurrent writer JVMs.
   *  - **Add-actions carry per-file STATS, never key sets.** Each `add`
   *    records a fixed-size bloom filter over the file's document-url
   *    hashes plus the min/max url — O(1) bytes per file regardless of
@@ -60,94 +48,6 @@ import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe}
   *    maintenance cadence (mind scan retention, as with any
   *    log-structured table).
   *
-  * Driver state: bounded by CHECKPOINT CADENCE, not table size.
-  * Checkpoints are PARQUET (Delta's answer to log replay): snapshot
-  * assembly reads them as a Spark job ([[statsFrame]]) and the driver
-  * holds only (a) the tail — per-file stats of commits since the
-  * newest checkpoint, ~1 KB/file — and (b) live file NAMES when a
-  * scan is planned (the O(names) any file-list read holds). A
-  * 10⁷-file table with a maintenance-cadence checkpoint keeps the
-  * driver at O(churn since checkpoint) + O(names), never
-  * O(table × stats). Protocol: v1 logs (exact url sets per
-  * add-action) and v1 JSON checkpoints are still READ (stats
-  * synthesized on parse; same bit walk) — the next checkpoint
-  * re-records everything in the current protocol; an unrecognized
-  * line fails with an explicit protocol message, never a half-read
-  * table. The upgrade is ONE-WAY: compatibility guards live in THIS
-  * reader (new code reads v1 logs), but a v1-era binary knows no
-  * protocol file to check, so after a parquet checkpoint + vacuum
-  * prunes the entries a v1 reader would have replayed, that old
-  * binary reconstructs a tail-only state with no error — do not point
-  * pre-parquet-checkpoint engine builds at a vacuumed current log
-  * (the same operational contract as raising a Delta table's
-  * reader version).
-  *
-  * PROTOCOL LEDGER (each one-way; this reader is the compatibility
-  * boundary — it reads every older shape, older binaries fail loudly
-  * on newer logs rather than half-reading):
-  *  - v1: add-actions carry exact url sets (`"u":[…]`) — read with
-  *    stats synthesized on parse.
-  *  - v2: add-actions carry fixed-size url bloom + min/max; parquet
-  *    manifest-list checkpoints.
-  *  - v3: add-actions additionally carry the file's row count, byte
-  *    size, and per-column min/max + null-count skipping stats
-  *    (`"rows"/"sz"/"cs*"` fields — ignored by a v2 reader, so v3
-  *    LOGS stay v2-readable; v3 CHECKPOINTS are not).
-  *  - v4: streaming transaction actions (`"a":"txn"`) + the
-  *    checkpoint txns sidecar.
-  *  - v5: COLUMN MAPPING — schema-sidecar fields may carry a
-  *    `graft.physical` metadata entry naming the column's stable
-  *    on-disk name; data files and per-file column stats always use
-  *    physical names (identical to logical until the first RENAME or
-  *    re-ADD, so pre-v5 tables are byte-identical). RENAME COLUMN is
-  *    one metadata commit; re-adding a dropped name allocates a fresh
-  *    physical name so stale bytes never resurrect. CAVEAT: this is
-  *    the first sidecar change an older binary cannot DETECT — a
-  *    pre-v5 reader on a renamed table silently reads the renamed
-  *    column as NULL (it reads by logical name). Do not point pre-v5
-  *    engine builds at renamed tables — same operational contract as
-  *    raising a Delta table's reader version with column mapping.
-  *  - v6: DELETION VECTORS — an add-action may carry a `dvp`/`dvc`
-  *    reference to a position-delete sidecar ([[ManifestTableFormat.DvRef]]);
-  *    re-adding a live file with a new DV supersedes its previous
-  *    add (merge-on-read DELETE: one metadata commit + O(deleted
-  *    rows) of sidecar, no file rewrite). CAVEAT (one-way, like v5):
-  *    a pre-v6 reader ignores the unknown fields and reads deleted
-  *    rows back — do not point pre-v6 engine builds at DV-carrying
-  *    tables.
-  *  - v7: per-column EXACT-BOUNDS marker (`"cse"` array) — records at
-  *    stats-write time whether a column's lo/hi are the file's exact
-  *    extrema (always for the canonical numeric grid; for strings,
-  *    iff neither bound was truncation-adjusted). Ignored by older
-  *    readers; enables the log-answered string MIN/MAX lane.
-  *  - v8: IN-COMMIT TIMESTAMPS (`"a":"cts"` — the Delta ICT idea):
-  *    every commit entry leads with its own monotone epoch-ms
-  *    timestamp, so timestamp time travel ([[versionAtTimestamp]])
-  *    and history answer from the COMMIT CONTENT, not file mtime —
-  *    mtime shifts on object-store copy/migration and on
-  *    [[ManifestTableFormat.cloneLog]] (which copies log objects),
-  *    and is not even guaranteed monotone across racing writers'
-  *    clocks. Monotonicity is enforced at commit time
-  *    (`max(wall clock, predecessor + 1)`); checkpoints carry the
-  *    subsumed timestamp in the txns sidecar so vacuum never loses
-  *    it. Pre-v8 entries fall back to mtime (documented best-effort,
-  *    exactly the pre-ICT Delta contract). CAVEAT (one-way, like
-  *    v4): a pre-v8 reader fails loudly on the unknown action kind.
-  *  - v9: PER-COLUMN BLOOMS (`"csb"` array — the Delta bloom-filter-
-  *    index idea at file-skipping granularity): columns declared via
-  *    [[recordBloomColumns]] carry, per add-action, a fixed-size
-  *    bloom over `xxhash64(value)` (same params and bit walk as the
-  *    url bloom); equality probes on them prune files whose bloom
-  *    excludes the value — the point-set complement of min/max
-  *    skipping for high-cardinality UNCLUSTERED columns. Ignored by
-  *    older readers; absent blooms fail open everywhere.
-  *  - Versioned SIDECARS (never vacuumed; bounded by ALTER count):
-  *    `<v>.schema.json` (ADD/DROP/RENAME COLUMN eras),
-  *    `<v>.constraints.json` (the named CHECK set), `<v>.txns.json`
-  *    (checkpoint-subsumed stream markers), `_base.schema.json` +
-  *    `_partition.cols` (creation-time identity); `<v>.ndv.json`
-  *    (ANALYZE's HLL sketches — newest wins, older ones vacuum).
-  *
   * [[ChunkStore]] builds one per store through
   * [[ManifestTableFormat.factory]] (its default), so
   * `new ChunkStore(spark, path)` is a manifest table.
@@ -173,15 +73,13 @@ class ManifestTableFormat(
   branch.foreach(b => require(ManifestTableFormat.validBranchName(b),
     s"invalid branch name '$b' — use [A-Za-z0-9][A-Za-z0-9_.-]*"))
 
-  private val logDir = branch match {
-    case None => new Path(path, "_log")
-    case Some(b) => new Path(path, s"_log/branches/$b")
-  }
+  /** The table's commit log (a branch handle's: the branch's fork). */
+  private[sink] val log = new ManifestLog(spark, path, branch, schema,
+    bloomBits, bloomHashes, () => nowMillis)
   private val dataDir = new Path(path, "data")
-  private def branchRoot = new Path(path, "_log/branches")
   // a branch handle only ever points at a FORKED log: a typo'd name
   // must fail here, not bootstrap a rogue branch on first commit
-  branch.foreach(b => require(fs.exists(logDir),
+  branch.foreach(b => require(log.exists,
     s"no branch '$b' at $path — createBranch / CALL create_branch first"))
   private def fs = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -214,28 +112,10 @@ class ManifestTableFormat(
   // MERGE INTO, time travel, CDF, constraints, compaction — works
   // unchanged (they are schema-generic copy-on-write commits).
 
-  private def baseSchemaPath = new Path(logDir, "_base.schema.json")
-  private def partitionColsPath = new Path(logDir, "_partition.cols")
-  private def bloomColsPath = new Path(logDir, "_bloom.cols")
-
-  /** The evolution floor: the persisted DDL schema when this table was
-    * created with one, else the constructor schema (the chunk shape).
-    */
-  private lazy val baseSchema: StructType =
-    if (fs.exists(baseSchemaPath))
-      org.apache.spark.sql.types.DataType
-        .fromJson(readText(baseSchemaPath)) match {
-        case s: StructType => s
-        case other => throw new IllegalStateException(
-          s"base schema sidecar $baseSchemaPath holds a " +
-            s"${other.typeName}, not a struct — corrupt or foreign file")
-      }
-    else schema
-
   /** True when the url-keyed fast lanes apply: the base schema has a
     * STRING `document_url` column (the chunk shape always does).
     */
-  def hasUrlKey: Boolean = baseSchema.fields.exists(f =>
+  def hasUrlKey: Boolean = log.baseSchema.fields.exists(f =>
     f.name.equalsIgnoreCase("document_url") &&
       f.dataType == org.apache.spark.sql.types.StringType)
 
@@ -246,11 +126,7 @@ class ManifestTableFormat(
     * to a strict file subset — Hive partition pruning re-expressed as
     * data skipping, without a directory-per-value metastore bomb.
     */
-  lazy val partitionColumns: Seq[String] =
-    if (fs.exists(partitionColsPath))
-      readText(partitionColsPath).linesIterator
-        .map(_.trim).filter(_.nonEmpty).toSeq
-    else Seq.empty
+  def partitionColumns: Seq[String] = log.partitionColumns
 
   /** DECLARE per-column bloom filters (protocol v9 — the Delta bloom
     * filter index idea at FILE-skipping granularity): every future
@@ -282,19 +158,14 @@ class ManifestTableFormat(
       }
       ManifestTableFormat.physicalName(f)
     }
-    val out = fs.create(bloomColsPath, true)
-    try out.write(phys.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    log.recordBloomColumns(phys)
   }
 
   /** The declared bloom columns (PHYSICAL names); empty when never
     * declared. Read per call — a declaration after this handle was
     * built still applies to its next write.
     */
-  def bloomColumns: Seq[String] =
-    if (!fs.exists(bloomColsPath)) Seq.empty
-    else readText(bloomColsPath).linesIterator
-      .map(_.trim).filter(_.nonEmpty).toSeq
+  def bloomColumns: Seq[String] = log.bloomColumns
 
   /** One-time table initialization for catalog CREATE TABLE: persist
     * the DDL schema (when it differs from the chunk shape) and the
@@ -305,24 +176,12 @@ class ManifestTableFormat(
   def initializeTable(
       ddlSchema: Option[StructType],
       partCols: Seq[String]): Unit = {
-    fs.mkdirs(logDir)
-    ddlSchema.foreach { s =>
-      require(!fs.exists(baseSchemaPath),
-        s"table at $path already has a base schema — CREATE TABLE " +
-          "ran twice, or the directory is being reused")
-      val out = fs.create(baseSchemaPath, false)
-      try out.write(s.json.getBytes("UTF-8")) finally out.close()
-    }
-    if (partCols.nonEmpty) {
-      val known = ddlSchema.getOrElse(schema).fieldNames
-      partCols.foreach(c => require(
-        known.exists(_.equalsIgnoreCase(c)),
-        s"PARTITIONED BY column '$c' is not in the table schema " +
-          s"(${known.mkString(", ")})"))
-      val out = fs.create(partitionColsPath, false)
-      try out.write(partCols.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    val known = ddlSchema.getOrElse(schema).fieldNames
+    partCols.foreach(c => require(
+      known.exists(_.equalsIgnoreCase(c)),
+      s"PARTITIONED BY column '$c' is not in the table schema " +
+        s"(${known.mkString(", ")})"))
+    log.initialize(ddlSchema, partCols)
   }
 
   private def requireUrlKey(what: String): Unit =
@@ -342,376 +201,6 @@ class ManifestTableFormat(
         "on the main table handle (branches carry data commits only; " +
         "publish with fastForward, then apply DDL/maintenance on main)"))
 
-  // ---- log entries -------------------------------------------------
-
-  /** Per-column skipping stats an add-action may carry (the
-    * Delta/Iceberg data-skipping idea): min/max of the column's
-    * non-null values in this file, rendered as a canonical string
-    * (numeric kinds by `toString`/`toPlainString` of the encoded
-    * value — timestamps as epoch micros, dates as epoch days,
-    * booleans as 0/1 — strings truncated to a sound prefix bound),
-    * plus the null count. `lo`/`hi` are both present or both absent
-    * (absent = all-null column, or an unboundable truncated max).
-    */
-  private[sink] final case class ColStats(
-      name: String, lo: Option[String], hi: Option[String], nulls: Long,
-      /** Bounds are the column's EXACT extrema (always true for the
-        * canonical numeric grid; for strings, true iff neither bound
-        * was truncation-adjusted) — protocol v7's `cse` marker. Absent
-        * on older actions → false (string extremum lane fails open;
-        * nothing else consults it).
-        */
-      exact: Boolean = false,
-      /** Protocol v9 per-column BLOOM (the Delta bloom-filter-index
-        * idea at file-skipping granularity): set for columns declared
-        * via [[recordBloomColumns]] at write time — a fixed-size
-        * bitset over `xxhash64(value)` (same bit walk and params as
-        * the url bloom), so an equality probe on a high-cardinality
-        * UNCLUSTERED column prunes files min/max never could. Absent
-        * → fail open (the file is read).
-        */
-      bloom: Option[Seq[Long]] = None)
-
-  /** Per-file stats an add-action carries: a bloom bitset over
-    * xxhash64(document_url) plus the min/max url — fixed size, so the
-    * log stays O(files) however many documents a file packs — and,
-    * from protocol v3 on, the file's row count plus per-column
-    * min/max/null-count skipping stats ([[ColStats]], bounded at
-    * [[ManifestTableFormat.maxStatsColumns]] columns). Pre-v3 actions
-    * parse with `rows = None, cols = Nil` and every consumer treats
-    * absent stats as "may match anything" (fail-open).
-    */
-  private[sink] final case class FileStats(
-      bits: Seq[Long], lo: String, hi: String, numBits: Int, numHashes: Int,
-      rows: Option[Long] = None, cols: Seq[ColStats] = Nil,
-      bytes: Option[Long] = None,
-      dv: Option[ManifestTableFormat.DvRef] = None)
-
-  /** One committed action: add (with the file's stats), remove, or —
-    * when `txn` is set (protocol v4) — a STREAMING TRANSACTION marker
-    * `(appId, batchId)` recording that a writer's micro-batch
-    * committed in this entry (the Delta `SetTransaction` idea). Txn
-    * actions carry no file (`file = ""`, `add = false`); replay keeps
-    * the MAX batchId per appId, which is what makes a restarted
-    * micro-batch replay idempotent ([[appendStream]]).
-    */
-  private[sink] final case class Action(
-      add: Boolean, file: String, stats: Option[FileStats],
-      txn: Option[(String, Long)] = None,
-      /** Protocol v8 IN-COMMIT TIMESTAMP (`"a":"cts"`): the commit's
-        * own monotone epoch-ms stamp, written as the entry's first
-        * line by [[tryCommit]]. Carries no file; every replay site
-        * must skip it (and may harvest the value).
-        */
-      cts: Option[Long] = None)
-
-  /** A replayed snapshot. Driver state is bounded by CHECKPOINT
-    * CADENCE, not table size: `base` holds only the stats of files
-    * added since the newest parquet checkpoint (plus the whole state
-    * when no parquet checkpoint exists yet — the pre-checkpoint
-    * bootstrap, or a legacy JSON checkpoint), and `removed` the names
-    * the tail removed from the checkpoint. The checkpoint itself
-    * stays ON DISK as parquet and is consumed as a Spark read
-    * ([[statsFrame]]); only live-file NAMES ever transit the driver
-    * (to plan parquet scans — the same O(names) any file-list read
-    * holds), never the per-file bloom stats.
-    */
-  private[sink] final case class Snapshot(
-      version: Long,
-      ckptParquet: Option[Path],
-      base: Map[String, FileStats],
-      removed: Set[String],
-      tableSchema: StructType,
-      txns: Map[String, Long] = Map.empty,
-      /** Newest in-commit timestamp replayed (protocol v8) — the
-        * monotonicity floor for the next commit. None on pre-v8
-        * tails (the next commit starts the timeline).
-        */
-      cts: Option[Long] = None)
-
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n' => b += '\n'; i += 2
-          case 'r' => b += '\r'; i += 2
-          case 't' => b += '\t'; i += 2
-          case 'u' =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => b += other; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.result()
-  }
-
-  private def packBits(bits: Seq[Long]): String = {
-    val buf = java.nio.ByteBuffer.allocate(bits.length * 8)
-    bits.foreach(buf.putLong)
-    java.util.Base64.getEncoder.encodeToString(buf.array())
-  }
-
-  private def unpackBits(b64: String): Seq[Long] = {
-    val buf = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64))
-    Seq.fill(buf.remaining() / 8)(buf.getLong)
-  }
-
-  private[sink] def renderAction(a: Action): String = a.stats match {
-    case Some(st) =>
-      val base = s""""a":"add","f":"${esc(a.file)}","lo":"${esc(st.lo)}","hi":"${
-        esc(st.hi)}","nb":${st.numBits},"nh":${st.numHashes},"b":"${
-        packBits(st.bits)}""""
-      // column skipping stats (protocol v3): five PARALLEL arrays —
-      // names, lo, hi, a lo/hi validity flag (an empty string is a
-      // legitimate value, so absence needs its own bit), null counts —
-      // plus the file row count. An older reader ignores unknown
-      // fields, so v3 logs stay readable by the v2 parser.
-      val sz = st.bytes.fold("")(b => "," + "\"sz\":" + b) +
-        // protocol v6: deletion-vector reference (path + cardinality).
-        // CAVEAT (one-way, like v5): a pre-v6 reader ignores unknown
-        // fields and would read the file's DELETED rows back — do not
-        // point pre-v6 engine builds at DV-carrying tables.
-        st.dv.fold("")(d =>
-          s""","dvp":"${esc(d.path)}","dvc":${d.card}""")
-      val ext = st.rows match {
-        case None => sz
-        case Some(n) =>
-          val cs = st.cols
-          val names = cs.map(c => "\"" + esc(c.name) + "\"").mkString(",")
-          val los = cs.map(c => "\"" + esc(c.lo.getOrElse("")) + "\"")
-            .mkString(",")
-          val his = cs.map(c => "\"" + esc(c.hi.getOrElse("")) + "\"")
-            .mkString(",")
-          val valid = cs.map(c => if (c.lo.isDefined && c.hi.isDefined) 1
-            else 0).mkString(",")
-          val nulls = cs.map(_.nulls).mkString(",")
-          // protocol v7: per-column exact-bounds marker (string
-          // extremum lane); older readers ignore the field
-          val exact = cs.map(c => if (c.exact) 1 else 0).mkString(",")
-          // protocol v9: per-column blooms for declared columns ("" =
-          // none recorded); older readers ignore the field
-          val blooms =
-            if (cs.forall(_.bloom.isEmpty)) ""
-            else "," + "\"csb\":[" + cs.map(c =>
-              "\"" + c.bloom.fold("")(packBits) + "\"").mkString(",") + "]"
-          s"""$sz,"rows":$n,"csn":[$names],"cslo":[$los],"cshi":[$his],""" +
-            s""""csv":[$valid],"csnn":[$nulls],"cse":[$exact]$blooms"""
-      }
-      s"{$base$ext}"
-    case None => a.txn match {
-      case Some((app, batch)) =>
-        s"""{"a":"txn","app":"${esc(app)}","batch":$batch}"""
-      case None => a.cts match {
-        case Some(ts) => s"""{"a":"cts","ts":$ts}"""
-        case None => s"""{"a":"rm","f":"${esc(a.file)}"}"""
-      }
-    }
-  }
-
-  private[sink] def parseAction(line: String): Action = {
-    // strict parser for the shapes this engine has ever emitted; an
-    // unrecognized shape fails with a protocol message, not a generic
-    // parse error (a NEWER writer's log must not be half-read)
-    def fail(what: String): Nothing = throw new IllegalArgumentException(
-      s"unrecognized manifest log line ($what) at $path — the log was " +
-        "written by a newer engine protocol than this reader " +
-        s"understands, or is corrupt: ${line.take(200)}")
-    def fieldAt(key: String): Option[(Int, Int)] = {
-      val tag = "\"" + key + "\":\""
-      val i = line.indexOf(tag)
-      if (i < 0) None
-      else {
-        val start = i + tag.length
-        // escape-aware scan (a backslash consumes the next char, so an
-        // escaped-backslash-final value cannot hide the closing quote)
-        var j = start
-        var closed = false
-        while (!closed) {
-          line.charAt(j) match {
-            case '\\' => j += 2
-            case '"' => closed = true
-            case _ => j += 1
-          }
-        }
-        Some((start, j))
-      }
-    }
-    def field(key: String): String = fieldAt(key) match {
-      case Some((s, e)) => unesc(line.substring(s, e))
-      case None => fail(s"missing field $key")
-    }
-    def num(key: String): Int = {
-      val tag = "\"" + key + "\":"
-      val i = line.indexOf(tag)
-      if (i < 0) fail(s"missing field $key")
-      var j = i + tag.length
-      while (j < line.length && line.charAt(j).isDigit) j += 1
-      line.substring(i + tag.length, j).toInt
-    }
-    def numLong(key: String): Option[Long] = {
-      val tag = "\"" + key + "\":"
-      val i = line.indexOf(tag)
-      if (i < 0) None
-      else {
-        // signed: a stream marker may record −1 (IndexSync.markSynced)
-        var j = i + tag.length
-        if (j < line.length && line.charAt(j) == '-') j += 1
-        while (j < line.length && line.charAt(j).isDigit) j += 1
-        Some(line.substring(i + tag.length, j).toLong)
-      }
-    }
-    def colStats: Seq[ColStats] =
-      if (!line.contains("\"csn\":[")) Nil
-      else {
-        val names = parseStringArray(line, "csn")
-        val los = parseStringArray(line, "cslo")
-        val his = parseStringArray(line, "cshi")
-        val valid = parseLongArray(line, "csv")
-        val nulls = parseLongArray(line, "csnn")
-        val exact = if (line.contains("\"cse\":["))
-          parseLongArray(line, "cse") else Seq.empty
-        val blooms = if (line.contains("\"csb\":["))
-          parseStringArray(line, "csb") else Seq.empty
-        if (Seq(los, his).exists(_.size != names.size) ||
-            Seq(valid, nulls).exists(_.size != names.size) ||
-            (exact.nonEmpty && exact.size != names.size) ||
-            (blooms.nonEmpty && blooms.size != names.size))
-          fail("ragged column-stats arrays")
-        names.indices.map { i =>
-          val ok = valid(i) == 1L
-          ColStats(names(i),
-            if (ok) Some(los(i)) else None,
-            if (ok) Some(his(i)) else None, nulls(i),
-            exact = i < exact.size && exact(i) == 1L,
-            bloom = if (i < blooms.size && blooms(i).nonEmpty)
-              Some(unpackBits(blooms(i))) else None)
-        }
-      }
-    def dvRef: Option[ManifestTableFormat.DvRef] =
-      fieldAt("dvp").map { case (s, e) =>
-        ManifestTableFormat.DvRef(unesc(line.substring(s, e)),
-          numLong("dvc").getOrElse(fail("dvp without dvc")))
-      }
-    if (line.contains("\"a\":\"add\"")) {
-      if (fieldAt("b").nonEmpty)
-        Action(add = true, field("f"), Some(FileStats(
-          unpackBits(field("b")), field("lo"), field("hi"),
-          num("nb"), num("nh"), numLong("rows"), colStats,
-          numLong("sz"), dvRef)))
-      else if (line.contains("\"u\":[")) {
-        // PROTOCOL V1 add-action: the file's exact url set instead of
-        // bloom stats. Accepted on read — stats are synthesized with
-        // the same xxhash64+double-hash bit walk the write side uses,
-        // so a pre-stats table stays readable (and its point reads
-        // prunable) with no migration step; the next checkpoint or
-        // rewrite re-records it in the current protocol.
-        val urls = parseUrlArray(line)
-        if (urls.isEmpty) fail("v1 add-action with empty url set")
-        val bits = new Array[Long](bloomBits / 64)
-        urls.foreach { u =>
-          val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-            .hash(org.apache.spark.unsafe.types.UTF8String.fromString(u),
-              org.apache.spark.sql.types.StringType, 42L)
-          var i = 0
-          while (i < bloomHashes) {
-            val pos = Layout.bloomPos(h, i, bloomBits)
-            bits(pos >> 6) |= (1L << (pos & 63))
-            i += 1
-          }
-        }
-        Action(add = true, field("f"), Some(FileStats(
-          bits.toSeq, urls.min, urls.max, bloomBits, bloomHashes)))
-      } else fail("add-action with neither stats nor url set")
-    } else if (line.contains("\"a\":\"rm\"")) Action(add = false, field("f"), None)
-    else if (line.contains("\"a\":\"txn\""))
-      Action(add = false, "", None,
-        Some((field("app"), numLong("batch").getOrElse(
-          fail("txn action without batch")))))
-    else if (line.contains("\"a\":\"cts\""))
-      Action(add = false, "", None, None,
-        Some(numLong("ts").getOrElse(fail("cts action without ts"))))
-    else fail("unknown action")
-  }
-
-  /** Parse protocol-v1's `"u":["...","..."]` url array (escape-aware,
-    * same quoting rules as [[unesc]]).
-    */
-  private def parseUrlArray(line: String): Seq[String] =
-    parseStringArray(line, "u")
-
-  /** Parse a `"key":[1,2,3]` array of non-negative integers. */
-  private def parseLongArray(line: String, key: String): Seq[Long] = {
-    val tag = "\"" + key + "\":["
-    val at = line.indexOf(tag)
-    if (at < 0) return Nil
-    val start = at + tag.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var i = start
-    while (i < line.length && line.charAt(i) != ']') {
-      if (line.charAt(i).isDigit) {
-        var j = i
-        while (j < line.length && line.charAt(j).isDigit) j += 1
-        out += line.substring(i, j).toLong
-        i = j
-      } else i += 1
-    }
-    out.toSeq
-  }
-
-  /** Parse a `"key":["...","..."]` string array (escape-aware, same
-    * quoting rules as [[unesc]]).
-    */
-  private def parseStringArray(line: String, key: String): Seq[String] = {
-    val tag = "\"" + key + "\":["
-    val at = line.indexOf(tag)
-    if (at < 0) return Nil
-    val start = at + tag.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = start
-    while (i < line.length && line.charAt(i) != ']') {
-      if (line.charAt(i) == '"') {
-        var j = i + 1
-        var closed = false
-        while (!closed) {
-          line.charAt(j) match {
-            case '\\' => j += 2
-            case '"' => closed = true
-            case _ => j += 1
-          }
-        }
-        out += unesc(line.substring(i + 1, j))
-        i = j + 1
-      } else i += 1
-    }
-    out.toSeq
-  }
-
-  private def entryPath(v: Long) = new Path(logDir, f"$v%012d.json")
-  private def checkpointPath(v: Long) =
-    new Path(logDir, f"$v%012d.checkpoint.json")
-  private def ckptParquetPath(v: Long) =
-    new Path(logDir, f"$v%012d.checkpoint.parquet")
-  private def schemaFilePath(v: Long) =
-    new Path(logDir, f"$v%012d.schema.json")
-  private def txnsFilePath(v: Long) =
-    new Path(logDir, f"$v%012d.txns.json")
-
   // ---- schema evolution --------------------------------------------
   //
   // ADD COLUMN is recorded as an immutable `<version>.schema.json`
@@ -727,34 +216,38 @@ class ManifestTableFormat(
   // Protocol note: a pre-evolution reader knows no schema sidecar and
   // would read evolved tables with the base schema silently — the
   // same one-way-upgrade contract as the parquet-checkpoint bump
-  // (class doc above); this reader is the compatibility boundary.
-
-  /** Versions that have a schema sidecar, ascending. One listing —
-    * the census already walked the log dir; reuse it (listings are
-    * the expensive primitive on object stores).
-    */
-  private def schemaVersions(f: org.apache.hadoop.fs.FileSystem): Seq[Long] =
-    if (!f.exists(logDir)) Seq.empty else census(f)._4
-
-  private def parseSchemaFile(v: Long): StructType =
-    org.apache.spark.sql.types.DataType.fromJson(
-      readText(schemaFilePath(v))) match {
-      case s: StructType => s
-      case other => throw new IllegalStateException(
-        s"schema sidecar ${schemaFilePath(v)} holds a ${other.typeName}" +
-          ", not a struct — corrupt or foreign file")
-    }
+  // ([[ManifestLog]]'s protocol ledger); this reader is the
+  // compatibility boundary.
 
   /** Effective schema at `asOf` (−1/any pre-first-commit = base). */
-  def schemaAtVersion(asOf: Long): StructType = {
-    val vs = schemaVersions(fs).filter(_ <= asOf)
-    if (vs.isEmpty) baseSchema else parseSchemaFile(vs.max)
-  }
+  def schemaAtVersion(asOf: Long): StructType = log.schemaAt(asOf)
 
   /** The current effective schema (base + committed ADD COLUMNs). */
-  def currentSchema: StructType = {
-    val vs = schemaVersions(fs)
-    if (vs.isEmpty) baseSchema else parseSchemaFile(vs.max)
+  def currentSchema: StructType = log.schemaAt(Long.MaxValue)
+
+  /** The linearized metadata commit behind every ALTER and CONSTRAINT
+    * change: `change` validates against a fresh snapshot and returns
+    * the sidecar write for the version it claims; the version is
+    * claimed with an empty entry through the same fail-if-exists
+    * commit as data, then the sidecar is written for it. A lost race
+    * re-runs `change` against the winner's state (which may refuse:
+    * the winner added the same column).
+    */
+  private def metadataCommit(what: String)(
+      change: Snapshot => Long => Unit): Unit = {
+    var attempt = 0
+    var done = false
+    while (!done) {
+      attempt += 1
+      require(attempt <= maxCommitRetries,
+        s"$what at $path lost $maxCommitRetries commit races")
+      val snap = log.snapshot()
+      val record = change(snap)
+      if (log.tryCommit(snap, Seq.empty)) {
+        record(snap.version + 1)
+        done = true
+      }
+    }
   }
 
   /** ADD COLUMN: nullable, top-level, default-null read of old files.
@@ -774,18 +267,12 @@ class ManifestTableFormat(
   def addColumn(name: String, dataType: org.apache.spark.sql.types.DataType)
       : Unit = {
     requireMain("ALTER TABLE ADD COLUMN")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"ALTER TABLE at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+    metadataCommit("ALTER TABLE") { snap =>
       require(!snap.tableSchema.fieldNames
           .exists(_.equalsIgnoreCase(name)),
         s"ALTER TABLE at $path: column '$name' already exists " +
           s"(schema: ${snap.tableSchema.fieldNames.mkString(", ")})")
-      val used = everPhysical(fs)
+      val used = everPhysical
       val phys =
         if (!used.contains(name.toLowerCase)) name
         else {
@@ -799,13 +286,7 @@ class ManifestTableFormat(
           .putString(ManifestTableFormat.physicalKey, phys).build()
       val next = StructType(snap.tableSchema.fields :+
         StructField(name, dataType, nullable = true, metadata = meta))
-      if (tryCommit(snap, Seq.empty)) {
-        val out = fs.create(schemaFilePath(snap.version + 1), false)
-        try out.write(next.json.getBytes("UTF-8")) finally out.close()
-        done = true
-      }
-      // lost race: loop re-snapshots (maybe the winner added the same
-      // column — the duplicate check above then refuses)
+      v => log.recordSchema(v, next)
     }
   }
 
@@ -830,13 +311,7 @@ class ManifestTableFormat(
         s"RENAME at $path: 'document_url' is reserved as the key " +
           "column name")
     }
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"RENAME at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+    metadataCommit("RENAME") { snap =>
       val field = snap.tableSchema.fields
         .find(_.name.equalsIgnoreCase(oldName))
         .getOrElse(throw new IllegalArgumentException(
@@ -853,11 +328,7 @@ class ManifestTableFormat(
           StructField(newName, f.dataType, f.nullable, meta)
         else f
       })
-      if (tryCommit(snap, Seq.empty)) {
-        val out = fs.create(schemaFilePath(snap.version + 1), false)
-        try out.write(next.json.getBytes("UTF-8")) finally out.close()
-        done = true
-      }
+      v => log.recordSchema(v, next)
     }
   }
 
@@ -874,7 +345,7 @@ class ManifestTableFormat(
     */
   def dropColumn(name: String): Unit = {
     requireMain("ALTER TABLE DROP COLUMN")
-    val basePhys = baseSchema.fields
+    val basePhys = log.baseSchema.fields
       .map(f => ManifestTableFormat.physicalName(f).toLowerCase).toSet
     currentSchema.fields.find(_.name.equalsIgnoreCase(name)).foreach { f =>
       require(!basePhys.contains(
@@ -882,23 +353,13 @@ class ManifestTableFormat(
         s"ALTER TABLE at $path: cannot drop base column '$name' — the " +
           "table's readers depend on its creation-time base schema")
     }
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"ALTER TABLE at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+    metadataCommit("ALTER TABLE") { snap =>
       require(snap.tableSchema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"ALTER TABLE at $path: no column '$name' to drop " +
           s"(schema: ${snap.tableSchema.fieldNames.mkString(", ")})")
       val next = StructType(snap.tableSchema.fields
         .filterNot(_.name.equalsIgnoreCase(name)))
-      if (tryCommit(snap, Seq.empty)) {
-        val out = fs.create(schemaFilePath(snap.version + 1), false)
-        try out.write(next.json.getBytes("UTF-8")) finally out.close()
-        done = true
-      }
+      v => log.recordSchema(v, next)
     }
   }
 
@@ -907,10 +368,8 @@ class ManifestTableFormat(
     * allocator consults this so a re-added logical name can never
     * collide with bytes an old file still holds.
     */
-  private def everPhysical(f: org.apache.hadoop.fs.FileSystem)
-      : Set[String] =
-    (baseSchema.fields ++
-        schemaVersions(f).flatMap(v => parseSchemaFile(v).fields))
+  private def everPhysical: Set[String] =
+    log.schemaEras.flatMap(_.fields)
       .map(fi => ManifestTableFormat.physicalName(fi).toLowerCase).toSet
 
   // ---- CHECK constraints -------------------------------------------
@@ -929,44 +388,8 @@ class ManifestTableFormat(
   // the existing live rows first, so a violation can never exist in
   // a committed snapshot.
 
-  private def constraintsFilePath(v: Long) =
-    new Path(logDir, f"$v%012d.constraints.json")
-
-  private def constraintVersions(f: org.apache.hadoop.fs.FileSystem)
-      : Seq[Long] =
-    if (!f.exists(logDir)) Seq.empty
-    else f.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{12}\\.constraints\\.json"))
-      .map(_.stripSuffix(".constraints.json").toLong).sorted
-
   /** The current named CHECK constraints (name → SQL expression). */
-  def constraints: Seq[(String, String)] = {
-    val vs = constraintVersions(fs)
-    if (vs.isEmpty) Seq.empty else parseConstraintsFile(vs.max)
-  }
-
-  private def parseConstraintsFile(v: Long): Seq[(String, String)] =
-    readText(constraintsFilePath(v)).linesIterator.filter(_.nonEmpty)
-      .map { line =>
-        (jsonStringField(line, "n"), jsonStringField(line, "e"))
-      }.toSeq
-
-  /** Escape-aware `"key":"value"` scan (same quoting as [[unesc]]). */
-  private def jsonStringField(line: String, key: String): String = {
-    val tag = "\"" + key + "\":\""
-    val i = line.indexOf(tag)
-    require(i >= 0, s"corrupt constraints sidecar line: ${line.take(120)}")
-    var j = i + tag.length
-    var closed = false
-    while (!closed) {
-      line.charAt(j) match {
-        case '\\' => j += 2
-        case '"' => closed = true
-        case _ => j += 1
-      }
-    }
-    unesc(line.substring(i + tag.length, j))
-  }
+  def constraints: Seq[(String, String)] = log.constraints
 
   /** The combined VIOLATION predicate (FALSE-only, SQL three-valued
     * CHECK semantics), or None when no constraints exist.
@@ -974,16 +397,6 @@ class ManifestTableFormat(
   private def violationFilter(cs: Seq[(String, String)]): Option[Column] =
     cs.map { case (_, sql) => !coalesce(expr(sql), lit(true)) }
       .reduceOption(_ || _)
-
-  private def writeConstraintsSidecar(v: Long,
-      cs: Seq[(String, String)]): Unit = {
-    val lines = cs.map { case (n, e) =>
-      s"""{"n":"${esc(n)}","e":"${esc(e)}"}"""
-    }
-    val out = fs.create(constraintsFilePath(v), false)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** ADD CONSTRAINT: validates the whole live table first (one
     * predicate-pushed scan — a violation refuses the ALTER, the
@@ -993,48 +406,29 @@ class ManifestTableFormat(
   def addConstraint(name: String, exprSql: String): Unit = {
     requireMain("ADD CONSTRAINT")
     require(name.nonEmpty, "constraint name must be non-empty")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"ADD CONSTRAINT at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+    metadataCommit("ADD CONSTRAINT") { snap =>
       val current = constraints
       require(!current.exists(_._1.equalsIgnoreCase(name)),
         s"constraint '$name' already exists at $path")
-      val viol = readFiles(liveNames(snap), snap.tableSchema)
+      val viol = readFiles(log.liveNames(snap), snap.tableSchema)
         .filter(!coalesce(expr(exprSql), lit(true))).limit(1)
       require(viol.isEmpty,
         s"ADD CONSTRAINT $name at $path: existing rows violate " +
           s"($exprSql) — clean the data first")
-      if (tryCommit(snap, Seq.empty)) {
-        writeConstraintsSidecar(snap.version + 1,
-          current :+ (name -> exprSql))
-        done = true
-      }
+      v => log.recordConstraints(v, current :+ (name -> exprSql))
     }
   }
 
   /** DROP CONSTRAINT by name (loud error when absent). */
   def dropConstraint(name: String): Unit = {
     requireMain("DROP CONSTRAINT")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"DROP CONSTRAINT at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+    metadataCommit("DROP CONSTRAINT") { _ =>
       val current = constraints
       require(current.exists(_._1.equalsIgnoreCase(name)),
         s"no constraint '$name' at $path (have: ${
           current.map(_._1).mkString(", ")})")
-      if (tryCommit(snap, Seq.empty)) {
-        writeConstraintsSidecar(snap.version + 1,
-          current.filterNot(_._1.equalsIgnoreCase(name)))
-        done = true
-      }
+      v => log.recordConstraints(v,
+        current.filterNot(_._1.equalsIgnoreCase(name)))
     }
   }
 
@@ -1046,7 +440,7 @@ class ManifestTableFormat(
     */
   private def conform(df: DataFrame, s: StructType): DataFrame = {
     val have = df.columns.map(_.toLowerCase).toSet
-    val basePhys = baseSchema.fields
+    val basePhys = log.baseSchema.fields
       .map(f => ManifestTableFormat.physicalName(f).toLowerCase).toSet
     df.select(s.fields.toIndexedSeq.map { f =>
       if (have.contains(f.name.toLowerCase)) col(f.name)
@@ -1057,214 +451,11 @@ class ManifestTableFormat(
     }: _*)
   }
 
-  /** A parquet checkpoint directory counts only when its write
-    * completed (`_SUCCESS` present — Spark writes it last). A torn
-    * checkpoint (crashed writer) is ignored and replay falls back to
-    * the previous checkpoint + entries, which remain sound.
+  /** Write the head's state as a parquet checkpoint
+    * ([[ManifestLog!.checkpoint]]): replay thereafter starts there, and
+    * [[vacuum]] prunes the entries it subsumes.
     */
-  private def validCkptParquet(f: org.apache.hadoop.fs.FileSystem,
-      v: Long): Boolean =
-    f.exists(new Path(ckptParquetPath(v), "_SUCCESS"))
-
-  /** Log-directory census — ONE listing: committed entry versions,
-    * legacy JSON checkpoint versions, completed parquet checkpoint
-    * versions, and schema-sidecar versions (ascending).
-    */
-  private def census(f: org.apache.hadoop.fs.FileSystem)
-      : (Seq[Long], Seq[Long], Seq[Long], Seq[Long]) = {
-    val names = f.listStatus(logDir).toSeq.map(_.getPath.getName)
-    (names.filter(_.matches("\\d{12}\\.json"))
-       .map(_.stripSuffix(".json").toLong),
-     names.filter(_.matches("\\d{12}\\.checkpoint\\.json"))
-       .map(_.stripSuffix(".checkpoint.json").toLong),
-     names.filter(_.matches("\\d{12}\\.checkpoint\\.parquet"))
-       .map(_.stripSuffix(".checkpoint.parquet").toLong)
-       .filter(validCkptParquet(f, _)),
-     names.filter(_.matches("\\d{12}\\.schema\\.json"))
-       .map(_.stripSuffix(".schema.json").toLong).sorted)
-  }
-
-  private def readText(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
-  }
-
-  /** Replay the committed log, starting from the newest checkpoint (a
-    * full-state summary — the replay bound that keeps snapshot cost
-    * O(commits since checkpoint), not O(table lifetime)). A PARQUET
-    * checkpoint is not parsed here at all: the snapshot only records
-    * its path, and [[statsFrame]] consumes it as a Spark read — the
-    * driver holds just the tail (entries after the checkpoint).
-    * Legacy JSON checkpoints replay driver-side as before. Temp files
-    * (crashed commit/checkpoint staging) are ignored: only
-    * fully-renamed numbered files (and `_SUCCESS`-complete parquet
-    * directories) count.
-    */
-  private[sink] def snapshot(): Snapshot = {
-    val f = fs
-    if (!f.exists(logDir))
-      return Snapshot(-1L, None, Map.empty, Set.empty, baseSchema)
-    val (entries, jsonCkpts, pqCkpts, schemaVers) = census(f)
-    val jc = if (jsonCkpts.isEmpty) -1L else jsonCkpts.max
-    val pc = if (pqCkpts.isEmpty) -1L else pqCkpts.max
-    val ckpt = math.max(jc, pc)
-    var base = Map.empty[String, FileStats]
-    var removed = Set.empty[String]
-    var txns = Map.empty[String, Long]
-    var cts: Option[Long] = None
-    def takeTxn(app: String, batch: Long): Unit =
-      txns += (app -> math.max(batch, txns.getOrElse(app, Long.MinValue)))
-    def takeCts(ts: Long): Unit =
-      cts = Some(cts.fold(ts)(math.max(_, ts)))
-    val parquetBase = pc >= jc && pc >= 0
-    def replay(p: Path): Unit =
-      readText(p).linesIterator.filter(_.nonEmpty).foreach { line =>
-        val a = parseAction(line)
-        a.txn match {
-          case Some((app, batch)) => takeTxn(app, batch)
-          case None => a.cts match {
-            case Some(ts) => takeCts(ts)
-            case None =>
-              if (a.add) { base += (a.file -> a.stats.get); removed -= a.file }
-              else { base -= a.file; removed += a.file }
-          }
-        }
-      }
-    if (!parquetBase && ckpt >= 0) replay(checkpointPath(ckpt))
-    // a checkpoint's txn SIDECAR carries the markers its subsumed
-    // entries held (vacuum prunes those entries; without the sidecar
-    // a very late micro-batch replay could double-append) — and, from
-    // protocol v8 on, the subsumed in-commit timestamp (without it a
-    // vacuumed table's next commit could step its timeline backwards)
-    if (ckpt >= 0 && f.exists(txnsFilePath(ckpt)))
-      readText(txnsFilePath(ckpt)).linesIterator.filter(_.nonEmpty)
-        .foreach { line =>
-          val a = parseAction(line)
-          a.txn.foreach { case (ap, b) => takeTxn(ap, b) }
-          a.cts.foreach(takeCts)
-        }
-    entries.filter(_ > ckpt).sorted.foreach(v => replay(entryPath(v)))
-    val version = (entries ++ jsonCkpts ++ pqCkpts).foldLeft(-1L)(math.max)
-    // schema from the census's own listing — no second log-dir walk
-    val sv = schemaVers.filter(_ <= version)
-    Snapshot(
-      version,
-      if (parquetBase) Some(ckptParquetPath(pc)) else None,
-      base,
-      if (parquetBase) removed else Set.empty,
-      if (sv.isEmpty) baseSchema else parseSchemaFile(sv.max),
-      txns,
-      cts)
-  }
-
-  /** Write the current live state as a PARQUET checkpoint — assembled
-    * as a Spark job over the previous checkpoint + tail
-    * ([[statsFrame]]), so checkpointing never materializes per-file
-    * stats on the driver either. Published by staged-write + rename
-    * with `_SUCCESS` as the completeness marker (a torn directory is
-    * ignored by replay). Safe to race: a lost rename means someone
-    * else checkpointed — both summaries describe a committed state,
-    * keeping either is sound. Replay thereafter starts at the
-    * checkpoint; [[vacuum]] prunes the subsumed older entries.
-    */
-  def checkpoint(): Unit = {
-    val snap = snapshot()
-    if (snap.version < 0) return
-    val f = fs
-    if (f.exists(checkpointPath(snap.version)) ||
-        validCkptParquet(f, snap.version)) return
-    val target = ckptParquetPath(snap.version)
-    // a TORN target (no _SUCCESS — a crashed or non-atomic publish)
-    // is never read; without this, every later checkpoint() at this
-    // version silently no-ops and replay stays O(entire log) until a
-    // vacuum happens to run — reclaim it here instead
-    if (f.exists(target) && !validCkptParquet(f, snap.version))
-      f.delete(target, true)
-    // txn sidecar FIRST: its content for a version is deterministic
-    // (the replayed markers at that version), so a racing writer
-    // producing the same file is harmless, and ordering it before the
-    // parquet publish means vacuum can never prune marker-carrying
-    // entries subsumed by a checkpoint whose sidecar is missing
-    if ((snap.txns.nonEmpty || snap.cts.isDefined) &&
-        !f.exists(txnsFilePath(snap.version))) {
-      val lines = snap.cts.toSeq.map(ts =>
-        renderAction(Action(add = false, "", None, None, Some(ts)))) ++
-        snap.txns.toSeq.sortBy(_._1).map { case (app, b) =>
-          renderAction(Action(add = false, "", None, Some((app, b))))
-        }
-      val out = f.create(txnsFilePath(snap.version), true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    val tmp = new Path(logDir, s"tmp-ckpt-${java.util.UUID.randomUUID()}")
-    // MANIFEST-LIST sizing (the Iceberg idea): the checkpoint is a
-    // DIRECTORY of manifest part-files, ~100k file-stats (~100 MB)
-    // each, so a 10⁷-file table checkpoints as ~100 parallel parts —
-    // written AND read as a distributed job; the driver ever holds
-    // one directory name. Small tables still get one part.
-    try {
-      val stats = statsFrame(snap)
-      val parts = math.max(1L,
-        stats.count() / ManifestTableFormat.statsPerManifestPart).toInt
-      stats.repartition(parts).write.parquet(tmp.toString)
-      // directory publish through the same seam: a lost race is sound
-      // here (checkpoint content is deterministic per version), but an
-      // UNREGISTERED scheme still refuses — same policy as commits
-      if (!commitPublisher.putDirIfAbsent(f, tmp, target))
-        f.delete(tmp, true)
-    } catch {
-      case e: Throwable => f.delete(tmp, true); throw e
-    }
-  }
-
-  /** Stage `actions` as version `base.version + 1` and rename into
-    * place; returns false when the version was taken (lost race).
-    */
-  private def tryCommit(base: Snapshot, actions: Seq[Action]): Boolean = {
-    val f = fs
-    if (!f.exists(logDir)) f.mkdirs(logDir)
-    val target = entryPath(base.version + 1)
-    if (f.exists(target)) return false
-    val tmp = new Path(logDir,
-      s"tmp-${java.util.UUID.randomUUID()}")
-    // protocol v8: the entry leads with its IN-COMMIT TIMESTAMP,
-    // clamped monotone against the predecessor (max(wall, prev+1)) so
-    // timestamp time travel has a total order even across writers
-    // with skewed clocks or a driver clock stepping backwards
-    val stamped = Action(add = false, "", None, None,
-      Some(math.max(nowMillis,
-        base.cts.fold(Long.MinValue)(_ + 1)))) +: actions
-    val out = f.create(tmp, false)
-    try out.write(stamped.map(renderAction).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // The commit is an atomic publish of `tmp` at `target`, delegated
-    // to the scheme's registered [[CommitPublisher]] (link(2)-if-absent
-    // local, rename-if-absent HDFS-class, LOUD REFUSAL on schemes
-    // without a registered conditional-put publisher — see the trait's
-    // doc for why exists+rename on S3-class stores is a lost-commit
-    // race, not a fallback). Pinned by the cross-process race tests
-    // and the seam race/refusal tests in ManifestFormatSpec.
-    val won = commitPublisher.putFileIfAbsent(f, tmp, target)
-    f.delete(tmp, false) // link published a second name; tmp always goes
-    won
-  }
-
-  /** The publish primitive for this table's store, resolved from the
-    * table path's URI scheme (falling back to the FileSystem's scheme
-    * for scheme-less local paths). Resolved per call so a publisher
-    * registered after the table handle was built is still honored.
-    */
-  private def commitPublisher: CommitPublisher = {
-    val scheme = Option(new Path(path).toUri.getScheme)
-      .getOrElse(fs.getScheme)
-    CommitPublisher.forScheme(scheme)
-  }
+  def checkpoint(): Unit = log.checkpoint()
 
   // ---- data files --------------------------------------------------
 
@@ -1292,163 +483,29 @@ class ManifestTableFormat(
         col(ManifestTableFormat.physicalName(f)).as(f.name)): _*)
   }
 
-  /** The snapshot's per-file stats as a DataFrame, shaped for
-    * [[Layout.bloomTest]] — so affected-file selection runs as a Spark
-    * job over (file, bits, lo, hi), never as a driver loop. With a
-    * parquet checkpoint the bulk of the frame is a NARROW PARQUET READ
-    * (checkpoint minus tail-removed names, anti-joined as a frame,
-    * union the tail's adds); only the tail is a driver-local relation.
-    */
-  private def statsFrame(snap: Snapshot): DataFrame = {
-    import spark.implicits._
-    val tail = snap.base.toSeq
-      .map { case (f, st) =>
-        (f, st.bits, st.lo, st.hi, st.numBits, st.numHashes,
-          st.rows, st.bytes,
-          st.cols.map(_.name), st.cols.map(_.lo.getOrElse("")),
-          st.cols.map(_.hi.getOrElse("")),
-          st.cols.map(c => if (c.lo.isDefined && c.hi.isDefined) 1 else 0),
-          st.cols.map(_.nulls),
-          st.cols.map(c => if (c.exact) 1 else 0),
-          // per-column blooms (v9); empty seq = not recorded
-          st.cols.map(_.bloom.getOrElse(Seq.empty[Long])),
-          st.dv.map(_.path), st.dv.map(_.card)) }
-      .toDF("file", "bits", "lo", "hi", "num_bits", "num_hashes",
-        "rows", "bytes", "cs_names", "cs_lo", "cs_hi", "cs_valid",
-        "cs_nn", "cs_exact", "cs_bloom", "dv_path", "dv_card")
-    snap.ckptParquet match {
-      case None => tail
-      case Some(dir) =>
-        val ck = ManifestTableFormat.ckptFrame(spark, dir.toString)
-        // names the tail removed or re-added supersede the checkpoint
-        val shadowed = (snap.removed ++ snap.base.keySet).toSeq
-        val kept =
-          if (shadowed.isEmpty) ck
-          else ck.join(shadowed.toDF("file"), Seq("file"), "left_anti")
-        // a pre-column-stats checkpoint reads its missing stats
-        // columns null ([[ManifestTableFormat.statsSchema]]: fail-open
-        // everywhere they are consulted); the next checkpoint
-        // re-records the full current shape
-        kept.unionByName(tail)
-    }
-  }
-
-  /** Live file names, sorted — the ONLY thing that ever transits the
-    * driver from a parquet checkpoint (a single-column projection of
-    * the stats frame; parquet reads just the `file` column). Any
-    * file-list-planned scan holds this much; the per-file stats stay
-    * executor-side.
-    */
-  private[sink] def liveNames(snap: Snapshot): Seq[String] = snap.ckptParquet match {
-    case None => snap.base.keys.toSeq.sorted
-    case Some(_) =>
-      statsFrame(snap).select("file")
-        .collect().map(_.getString(0)).toSeq.sorted
-  }
-
   private def isLiveEmpty(snap: Snapshot): Boolean =
     snap.base.isEmpty &&
-      (snap.ckptParquet.isEmpty || statsFrame(snap).isEmpty)
-
-  /** A stats-frame / checkpoint row back to [[FileStats]] (the two
-    * shapes are identical by construction — [[checkpoint]] writes the
-    * stats frame). Pre-v3/v6 rows lack columns entirely; absent or
-    * null means "not recorded" (fail-open downstream).
-    */
-  private def rowToStats(r: org.apache.spark.sql.Row)
-      : (String, FileStats) = {
-    def opt[T](n: String): Option[T] =
-      if (!r.schema.fieldNames.contains(n)) None
-      else {
-        val i = r.fieldIndex(n)
-        if (r.isNullAt(i)) None else Some(r.getAs[T](n))
-      }
-    val names = opt[scala.collection.Seq[String]]("cs_names")
-      .map(_.toSeq).getOrElse(Nil)
-    val los = opt[scala.collection.Seq[String]]("cs_lo")
-      .map(_.toSeq).getOrElse(Nil)
-    val his = opt[scala.collection.Seq[String]]("cs_hi")
-      .map(_.toSeq).getOrElse(Nil)
-    val valid = opt[scala.collection.Seq[Int]]("cs_valid")
-      .map(_.toSeq).getOrElse(Nil)
-    val nulls = opt[scala.collection.Seq[Long]]("cs_nn")
-      .map(_.toSeq).getOrElse(Nil)
-    val exact = opt[scala.collection.Seq[Int]]("cs_exact")
-      .map(_.toSeq).getOrElse(Nil)
-    val blooms = opt[scala.collection.Seq[
-        scala.collection.Seq[Long]]]("cs_bloom")
-      .map(_.toSeq).getOrElse(Nil)
-    val cols = names.indices.map { i =>
-      val ok = i < valid.size && valid(i) == 1
-      ColStats(names(i),
-        if (ok) Some(los(i)) else None,
-        if (ok) Some(his(i)) else None,
-        if (i < nulls.size) nulls(i) else 0L,
-        exact = i < exact.size && exact(i) == 1,
-        bloom = if (i < blooms.size && blooms(i).nonEmpty)
-          Some(blooms(i).toSeq) else None)
-    }
-    r.getAs[String]("file") -> FileStats(
-      r.getAs[scala.collection.Seq[Long]]("bits").toSeq,
-      r.getAs[String]("lo"), r.getAs[String]("hi"),
-      r.getAs[Int]("num_bits"), r.getAs[Int]("num_hashes"),
-      opt[Long]("rows"), cols, opt[Long]("bytes"),
-      opt[String]("dv_path").map(p =>
-        ManifestTableFormat.DvRef(p, opt[Long]("dv_card").getOrElse(0L))))
-  }
-
-  /** Full [[FileStats]] for the given live names — one narrow collect,
-    * bounded by the CALLER's list (DML churn), never table size.
-    */
-  private def statsOf(snap: Snapshot, files: Seq[String])
-      : Map[String, FileStats] = {
-    if (files.isEmpty) return Map.empty
-    // checkpoint-less snapshot: the stats already sit in the
-    // driver-held tail map — a Spark semi-join here is pure job-launch
-    // overhead (measured ≥1 job per DML cycle at 30-100 ms each);
-    // with a checkpoint the frame path keeps per-file stats
-    // executor-side as before
-    if (snap.ckptParquet.isEmpty)
-      return files.flatMap(f => snap.base.get(f).map(f -> _)).toMap
-    import spark.implicits._
-    statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
-      .collect().map(rowToStats).toMap
-  }
+      (snap.ckptParquet.isEmpty || log.statsFrame(snap).isEmpty)
 
   /** (file → deletion-vector ref) for the given live names — the
-    * narrow projection of [[statsOf]] every rewrite read consults.
+    * narrow projection of [[ManifestLog!.statsOf]] every rewrite read
+    * consults.
     */
   private def dvOf(snap: Snapshot, files: Seq[String])
       : Map[String, Option[ManifestTableFormat.DvRef]] = {
     if (files.isEmpty) return Map.empty
-    // same checkpoint-less fast path as [[statsOf]]: dv refs live in
-    // the driver-held tail — no job needed
+    // same checkpoint-less fast path as [[ManifestLog!.statsOf]]: dv
+    // refs live in the driver-held tail — no job needed
     if (snap.ckptParquet.isEmpty)
       return files.map(f => f -> snap.base.get(f).flatMap(_.dv))
         .toMap.withDefaultValue(None)
     import spark.implicits._
-    statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
+    log.statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
       .select("file", "dv_path", "dv_card").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) None
         else Some(ManifestTableFormat.DvRef(r.getString(1), r.getLong(2)))))
       .toMap.withDefaultValue(None)
   }
-
-  /** Live (file, dv) pairs, sorted by name — [[liveNames]] plus each
-    * file's deletion-vector reference.
-    */
-  private[sink] def liveWithDv(snap: Snapshot)
-      : Seq[(String, Option[ManifestTableFormat.DvRef])] =
-    snap.ckptParquet match {
-      case None =>
-        snap.base.toSeq.sortBy(_._1).map { case (f, st) => (f, st.dv) }
-      case Some(_) =>
-        statsFrame(snap).select("file", "dv_path", "dv_card").collect()
-          .map(r => r.getString(0) -> (if (r.isNullAt(1)) None
-            else Some(ManifestTableFormat.DvRef(
-              r.getString(1), r.getLong(2)))))
-          .toSeq.sortBy(_._1)
-    }
 
   private def baseNameOf(p: String): String = p.split('/').last
 
@@ -1604,7 +661,7 @@ class ManifestTableFormat(
       .select(col("document_url").as("u"),
         xxhash64(col("document_url")).as("h"))
       .distinct()
-    statsFrame(snap).join(broadcast(hashes))
+    log.statsFrame(snap).join(broadcast(hashes))
       .filter(urlMayHold(col("u"), col("h")))
       .select("file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
@@ -1624,7 +681,7 @@ class ManifestTableFormat(
     val probes = urls.filter(_ != null).distinct
       .map(u => (u, ManifestTableFormat.stringHash(u)))
     if (probes.isEmpty) return Seq.empty
-    statsFrame(snap)
+    log.statsFrame(snap)
       .filter(exists(typedLit(probes),
         p => urlMayHold(p.getField("_1"), p.getField("_2"))))
       .select("file")
@@ -1894,15 +951,15 @@ class ManifestTableFormat(
     */
   private def sizesOf(snap: Snapshot, files: Seq[String])
       : Map[String, Long] = {
-    // checkpoint-less fast path (see [[statsOf]]): bytes come from
-    // the driver-held tail, no job
+    // checkpoint-less fast path (see [[ManifestLog!.statsOf]]): bytes
+    // come from the driver-held tail, no job
     val known: Map[String, Long] =
       if (snap.ckptParquet.isEmpty)
         files.flatMap(n => snap.base.get(n).flatMap(_.bytes)
           .map(n -> _)).toMap
       else {
         import spark.implicits._
-        statsFrame(snap)
+        log.statsFrame(snap)
           .join(files.toDF("file"), Seq("file"), "left_semi")
           .select("file", "bytes").collect()
           .flatMap(r => if (r.isNullAt(1)) None
@@ -1940,7 +997,7 @@ class ManifestTableFormat(
     var done = false
     while (!done) {
       guard()
-      val snap = snapshot()
+      val snap = log.snapshot()
       if (applied(snap)) return
       val files = affected(snap)
       // the (file, dv) pairs this cycle READ — the conflict unit. A
@@ -1956,11 +1013,11 @@ class ManifestTableFormat(
         txn.map { case (a, b) => Action(add = false, "", None, Some((a, b))) }
       beforeCommit()
       var base = snap
-      var committed = tryCommit(base, actions)
+      var committed = log.tryCommit(base, actions)
       var rerun = false
       while (!committed && !rerun) {
         guard()
-        val now = snapshot()
+        val now = log.snapshot()
         if (applied(now)) {
           // a racing replay of this very marker landed: the work IS
           // in the table exactly once — abandon our staged files
@@ -1980,7 +1037,7 @@ class ManifestTableFormat(
           val mine = files
             .map(f => (f, inputDv(f).map(_.path).orNull))
             .toDF("file", "dv")
-          val live = statsFrame(now)
+          val live = log.statsFrame(now)
             .select(col("file").as("n_file"), col("dv_path").as("n_dv"))
           mine.join(live,
               mine("file") === live("n_file") &&
@@ -1992,7 +1049,7 @@ class ManifestTableFormat(
           rerun = true
         } else {
           base = now
-          committed = tryCommit(base, actions)
+          committed = log.tryCommit(base, actions)
         }
       }
       done = committed
@@ -2165,7 +1222,7 @@ class ManifestTableFormat(
     try {
       commitCycle(
         snap => {
-          val names = liveNames(snap)
+          val names = log.liveNames(snap)
           if (names.isEmpty) Seq.empty
           else if (notMatchedBySource.nonEmpty) names
           else urlProbe match {
@@ -2276,12 +1333,12 @@ class ManifestTableFormat(
     */
   /** Test seam: [[mergePreScanCandidates]] at the head snapshot over
     * the full live list — lets the spec pin which files the key
-    * pre-prune admits without reaching into [[Snapshot]].
+    * pre-prune admits without reaching into [[ManifestLog.Snapshot]].
     */
   private[graft] def mergePreScanCandidatesAtHead(
       src: DataFrame, onCond: Column): Seq[String] = {
-    val snap = snapshot()
-    mergePreScanCandidates(snap, liveNames(snap), src, onCond)
+    val snap = log.snapshot()
+    mergePreScanCandidates(snap, log.liveNames(snap), src, onCond)
   }
 
   private[sink] def mergePreScanCandidates(
@@ -2426,7 +1483,7 @@ class ManifestTableFormat(
   private[sink] def preScanCandidates(
       snap: Snapshot,
       condition: org.apache.spark.sql.Column): Seq[String] = {
-    val names = liveNames(snap)
+    val names = log.liveNames(snap)
     if (names.isEmpty) return names
     val probes = try {
       StatsProbes.extract(
@@ -2571,14 +1628,14 @@ class ManifestTableFormat(
       bumpAttempt: () => Unit): Boolean = {
     import spark.implicits._
     var b = base
-    var committed = tryCommit(b, actions)
+    var committed = log.tryCommit(b, actions)
     while (!committed) {
       bumpAttempt()
-      val now = snapshot()
+      val now = log.snapshot()
       val mine = readSet
         .map { case (f, d) => (f, d.map(_.path).orNull) }
         .toDF("file", "dv")
-      val live = statsFrame(now)
+      val live = log.statsFrame(now)
         .select(col("file").as("n_file"), col("dv_path").as("n_dv"))
       val conflicted = mine.join(live,
           mine("file") === live("n_file") &&
@@ -2589,7 +1646,7 @@ class ManifestTableFormat(
         return false
       }
       b = now
-      committed = tryCommit(b, actions)
+      committed = log.tryCommit(b, actions)
     }
     true
   }
@@ -2612,10 +1669,10 @@ class ManifestTableFormat(
       attempt += 1
       require(attempt <= maxCommitRetries,
         s"DV delete at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+      val snap = log.snapshot()
       val names = candidates(snap)
       if (names.isEmpty) { lastMetadataOnlyFiles = 0L; return (0L, 0L) }
-      val stats = statsOf(snap, names)
+      val stats = log.statsOf(snap, names)
       val provable = fullMatch(snap, names).toSet
       val scanned = names.filterNot(provable)
       val byBase = scanned.map(f => baseNameOf(f) -> f).toMap
@@ -2694,7 +1751,7 @@ class ManifestTableFormat(
     var purged = 0L
     commitCycle(
       snap => {
-        val files = liveWithDv(snap).collect {
+        val files = log.liveWithDv(snap).collect {
           case (f, Some(_)) => f }
         purged = files.size.toLong
         files
@@ -2731,7 +1788,7 @@ class ManifestTableFormat(
       case Some(Nil) => Seq.empty
       case Some(ps) =>
         import spark.implicits._
-        val st = statsFrame(snap)
+        val st = log.statsFrame(snap)
           .join(names.toDF("file"), Seq("file"), "left_semi")
         st.filter(allMatchProof(ps) &&
             col("rows").isNotNull && col("rows") > 0)
@@ -2871,7 +1928,7 @@ class ManifestTableFormat(
       targets: Seq[ManifestTableFormat.MetaAgg]): Option[Seq[Any]] = {
     import ManifestTableFormat.{MetaAgg, MetaCount, MetaCountStar, MetaMax, MetaMin}
     if (probes.isEmpty || targets.isEmpty) return None
-    val snap = snapshot()
+    val snap = log.snapshot()
     val fieldsByPhys = snap.tableSchema.fields
       .map(f => ManifestTableFormat.physicalName(f) -> f).toMap
     val countCols = targets.collect { case MetaCount(c) => c }.distinct
@@ -2919,7 +1976,7 @@ class ManifestTableFormat(
         when(pos > 0, element_at(col("cs_exact"), pos)).as(s"xex_$i"))
     }
     val base = 4 + countCols.size
-    val got = statsFrame(snap)
+    val got = log.statsFrame(snap)
       .join(files.toDF("file"), Seq("file"), "left_semi")
       .select(Seq(col("file"), col("rows"),
         allMatchProof(probes).as("all_m"),
@@ -3137,7 +2194,7 @@ class ManifestTableFormat(
     val cond = condition.getOrElse(lit(true))
     commitCycle(
       snap => {
-        val names = condition.fold(liveNames(snap))(
+        val names = condition.fold(log.liveNames(snap))(
           preScanCandidates(snap, _))
         if (names.isEmpty) Seq.empty
         else toRecordedNames(names,
@@ -3195,11 +2252,11 @@ class ManifestTableFormat(
       attempt += 1
       require(attempt <= maxCommitRetries,
         s"DV update at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
-      val names = condition.fold(liveNames(snap))(
+      val snap = log.snapshot()
+      val names = condition.fold(log.liveNames(snap))(
         preScanCandidates(snap, _))
       if (names.isEmpty) return (0L, 0L)
-      val stats = statsOf(snap, names)
+      val stats = log.statsOf(snap, names)
       val s = snap.tableSchema
       val phys = ManifestTableFormat.physicalSchema(s)
       val logical = s.fields.toIndexedSeq.map(f =>
@@ -3297,17 +2354,8 @@ class ManifestTableFormat(
     * every byte).
     */
   def compact(targetFileBytes: Long): Unit = {
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
-    commitCycle(
-      snap => liveNames(snap),
-      (snap, files) => {
-        val totalBytes = sizesOf(snap, files).values.sum
-        val parts = math.max(1L,
-          (totalBytes + targetFileBytes - 1) / targetFileBytes)
-          .min(Int.MaxValue.toLong).toInt
-        readLive(snap, files).repartition(parts)
-      })
+    compaction("compact", targetFileBytes, None, Nil)
+    ()
   }
 
   /** Replace the live set with `f` of its rows in ONE copy-on-write
@@ -3315,7 +2363,7 @@ class ManifestTableFormat(
     * signature store compacts with it (`f` collapses replayed rows).
     */
   def rewriteLive(f: DataFrame => DataFrame): Unit =
-    commitCycle(snap => liveNames(snap),
+    commitCycle(snap => log.liveNames(snap),
       (snap, files) => f(readLive(snap, files)))
 
   /** PREDICATE-SCOPED COMPACTION (the Delta `OPTIMIZE WHERE` idea):
@@ -3333,28 +2381,8 @@ class ManifestTableFormat(
   def compactWhere(
       condition: org.apache.spark.sql.Column,
       targetFileBytes: Long = ManifestTableFormat.defaultTargetFileBytes)
-      : Long = {
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
-    var rewritten = 0L
-    commitCycle(
-      snap => {
-        val pruned = preScanCandidates(snap, condition)
-        val sizes = sizesOf(snap, pruned)
-        val candidates = pruned.filter(sizes(_) < targetFileBytes)
-        // one output bin from one input file is a rewrite for nothing
-        rewritten = if (candidates.size < 2) 0L else candidates.size.toLong
-        if (rewritten == 0L) Seq.empty else candidates
-      },
-      (snap, files) => {
-        val totalBytes = sizesOf(snap, files).values.sum
-        val parts = math.max(1L,
-          (totalBytes + targetFileBytes - 1) / targetFileBytes)
-          .min(Int.MaxValue.toLong).toInt
-        readLive(snap, files).repartition(parts)
-      })
-    rewritten
-  }
+      : Long =
+    compaction("compactWhere", targetFileBytes, Some(condition), Nil)
 
   /** Z-ORDER COMPACTION (B11 clustering): the live set rewrites
     * clustered on the morton curve of `dimNames` —
@@ -3376,23 +2404,7 @@ class ManifestTableFormat(
       targetFileBytes: Long = ManifestTableFormat.defaultTargetFileBytes)
       : Unit = {
     require(dimNames.nonEmpty, "compactZorder needs at least one column")
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
-    commitCycle(
-      snap => liveNames(snap),
-      (snap, files) => {
-        val known = snap.tableSchema.fieldNames.toSet
-        dimNames.foreach(d => require(known.contains(d),
-          s"compactZorder at $path: unknown column '$d' " +
-            s"(table columns: ${known.toSeq.sorted.mkString(", ")})"))
-        val totalBytes = sizesOf(snap, files).values.sum
-        val parts = math.max(1L,
-          (totalBytes + targetFileBytes - 1) / targetFileBytes)
-          .min(Int.MaxValue.toLong).toInt
-        Layout.zorderFrameAuto(
-          readLive(snap, files), dimNames, parts)
-          .drop("__z")
-      })
+    compaction("compactZorder", targetFileBytes, None, dimNames)
     recordClusterSpec(dimNames)
   }
 
@@ -3410,30 +2422,49 @@ class ManifestTableFormat(
       targetFileBytes: Long = ManifestTableFormat.defaultTargetFileBytes)
       : Long = {
     require(dimNames.nonEmpty, "compactZorderWhere needs a column")
+    val rewritten = compaction("compactZorderWhere", targetFileBytes,
+      Some(condition), dimNames)
+    if (rewritten > 0L) recordClusterSpec(dimNames)
+    rewritten
+  }
+
+  /** The one copy-on-write rewrite behind the four compactions. The
+    * candidates are every live file, or with `where` the SMALL files
+    * (under `targetFileBytes`) whose stats overlap the predicate, and
+    * fewer than two of those rewrite nothing. Their rows land in
+    * `ceil(bytes / targetFileBytes)` files: repartitioned, or
+    * clustered on the morton curve of `dims`. Returns the number of
+    * files the `where` selection rewrote (0 without `where`).
+    */
+  private def compaction(what: String, targetFileBytes: Long,
+      where: Option[Column], dims: Seq[String]): Long = {
     require(targetFileBytes > 0,
       s"targetFileBytes must be positive, got $targetFileBytes")
     var rewritten = 0L
     commitCycle(
       snap => {
         val known = snap.tableSchema.fieldNames.toSet
-        dimNames.foreach(d => require(known.contains(d),
-          s"compactZorderWhere at $path: unknown column '$d' " +
+        dims.foreach(d => require(known.contains(d),
+          s"$what at $path: unknown column '$d' " +
             s"(table columns: ${known.toSeq.sorted.mkString(", ")})"))
-        val pruned = preScanCandidates(snap, condition)
-        val sizes = sizesOf(snap, pruned)
-        val candidates = pruned.filter(sizes(_) < targetFileBytes)
-        rewritten = if (candidates.size < 2) 0L else candidates.size.toLong
-        if (rewritten == 0L) Seq.empty else candidates
+        where.fold(log.liveNames(snap)) { c =>
+          val pruned = preScanCandidates(snap, c)
+          val sizes = sizesOf(snap, pruned)
+          val candidates = pruned.filter(sizes(_) < targetFileBytes)
+          // one output bin from one input file is a rewrite for nothing
+          rewritten = if (candidates.size < 2) 0L else candidates.size.toLong
+          if (rewritten == 0L) Seq.empty else candidates
+        }
       },
       (snap, files) => {
         val totalBytes = sizesOf(snap, files).values.sum
         val parts = math.max(1L,
           (totalBytes + targetFileBytes - 1) / targetFileBytes)
           .min(Int.MaxValue.toLong).toInt
-        Layout.zorderFrameAuto(readLive(snap, files), dimNames, parts)
-          .drop("__z")
+        val rows = readLive(snap, files)
+        if (dims.isEmpty) rows.repartition(parts)
+        else Layout.zorderFrameAuto(rows, dims, parts).drop("__z")
       })
-    if (rewritten > 0L) recordClusterSpec(dimNames)
     rewritten
   }
 
@@ -3462,7 +2493,7 @@ class ManifestTableFormat(
   def clusterSpec: Option[(Seq[String], Long)] = {
     val p = new Path(path, "_graft_cluster")
     if (!fs.exists(p)) return None
-    val lines = readText(p).linesIterator.toSeq
+    val lines = log.readText(p).linesIterator.toSeq
     if (lines.size < 2) return None
     scala.util.Try((lines(1).split(",").toSeq, lines(0).trim.toLong))
       .toOption.filter(_._1.nonEmpty)
@@ -3475,7 +2506,7 @@ class ManifestTableFormat(
     * no data reads. 0.0 on an empty table.
     */
   def newFileFraction(sinceVersion: Long): Double = {
-    val live = liveNames(snapshot())
+    val live = log.liveNames(log.snapshot())
     if (live.isEmpty) return 0.0
     val old = filesAtVersion(sinceVersion).toSet
     live.count(f => !old.contains(f)).toDouble / live.size
@@ -3492,8 +2523,8 @@ class ManifestTableFormat(
     */
   def maintenanceStats(targetFileBytes: Long)
       : ManifestTableFormat.MaintenanceStats = {
-    val snap = snapshot()
-    val agg = statsFrame(snap).agg(
+    val snap = log.snapshot()
+    val agg = log.statsFrame(snap).agg(
       count(lit(1)).as("files"),
       sum(coalesce(col("bytes"), lit(0L))).as("bytes"),
       sum(when(col("bytes") < targetFileBytes, 1L).otherwise(0L))
@@ -3537,58 +2568,8 @@ class ManifestTableFormat(
     */
   def truncate(): Unit =
     commitCycle(
-      snap => liveNames(snap),
+      snap => log.liveNames(snap),
       (snap, _) => emptyFrame(snap.tableSchema))
-
-  /** The per-file stats of every live file AS OF `asOf` — the
-    * [[filesAtVersion]] replay keeping the stats (add-actions carry
-    * them; a parquet-checkpoint base contributes via a collected
-    * read). Driver cost is O(files at that version) — [[restore]]'s
-    * documented bound: the restore COMMIT itself must list every
-    * re-added file, so the entry is the same size either way.
-    */
-  private def statsAtVersion(asOf: Long): Map[String, FileStats] = {
-    val f = fs
-    require(f.exists(logDir), s"no log at $path")
-    val (entries, jsonCkpts, pqCkpts, _) = census(f)
-    val latest = (entries ++ jsonCkpts ++ pqCkpts).foldLeft(-1L)(math.max)
-    require(asOf >= 0 && asOf <= latest,
-      s"version $asOf out of range [0, $latest] at $path")
-    val uj = jsonCkpts.filter(_ <= asOf)
-    val up = pqCkpts.filter(_ <= asOf)
-    val jc = if (uj.isEmpty) -1L else uj.max
-    val pc = if (up.isEmpty) -1L else up.max
-    val ckpt = math.max(jc, pc)
-    val wanted = entries.filter(v => v > ckpt && v <= asOf).sorted
-    require(wanted.size == (asOf - ckpt),
-      s"version $asOf at $path is no longer reconstructable — " +
-        s"entries in (${ckpt}, $asOf] were vacuumed")
-    var live = Map.empty[String, FileStats]
-    if (pc >= jc && pc >= 0) {
-      live = ManifestTableFormat.ckptFrame(spark,
-          ckptParquetPath(pc).toString)
-        .collect().map(rowToStats).toMap
-    } else if (ckpt >= 0)
-      readText(checkpointPath(ckpt)).linesIterator.filter(_.nonEmpty)
-        .foreach { line =>
-          val a = parseAction(line)
-          if (a.txn.isEmpty && a.cts.isEmpty) {
-            if (a.add) live += (a.file -> a.stats.get)
-            else live -= a.file
-          }
-        }
-    wanted.foreach { v =>
-      readText(entryPath(v)).linesIterator.filter(_.nonEmpty)
-        .foreach { line =>
-          val a = parseAction(line)
-          if (a.txn.isEmpty && a.cts.isEmpty) {
-            if (a.add) live += (a.file -> a.stats.get)
-            else live -= a.file
-          }
-        }
-    }
-    live
-  }
 
   /** RESTORE the table to the live file set of `asOf` as a NEW
     * commit (the Delta RESTORE semantics): files live at both
@@ -3607,10 +2588,10 @@ class ManifestTableFormat(
       attempt += 1
       require(attempt <= maxCommitRetries,
         s"RESTORE at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+      val snap = log.snapshot()
       if (snap.version == asOf) return (0L, 0L)
-      val wanted = statsAtVersion(asOf)
-      val currentDv = liveWithDv(snap).toMap
+      val wanted = log.liveStats(log.snapshot(Some(asOf)))
+      val currentDv = log.liveWithDv(snap).toMap
       // re-add when not live now, OR live under a DIFFERENT deletion
       // vector (a replay add replaces the pair — the restore must
       // reset post-asOf DV drift, not just name churn)
@@ -3632,7 +2613,8 @@ class ManifestTableFormat(
       val actions = toRm.map(Action(add = false, _, None)) ++
         toAdd.toSeq.sortBy(_._1).map { case (n, st) =>
           Action(add = true, n, Some(st)) }
-      if (tryCommit(snap, actions)) return (toAdd.size.toLong, toRm.size.toLong)
+      if (log.tryCommit(snap, actions))
+        return (toAdd.size.toLong, toRm.size.toLong)
       // lost race: loop recomputes against the new snapshot
     }
     (0L, 0L) // unreachable
@@ -3648,7 +2630,7 @@ class ManifestTableFormat(
     */
   def overwrite(rows: DataFrame): Unit =
     commitCycle(
-      snap => liveNames(snap),
+      snap => log.liveNames(snap),
       (snap, _) => conform(rows, snap.tableSchema))
 
   /** EXACTLY-ONCE streaming append: the micro-batch's rows and a
@@ -3675,7 +2657,7 @@ class ManifestTableFormat(
       attempt += 1
       require(attempt <= maxCommitRetries,
         s"streaming append at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+      val snap = log.snapshot()
       if (snap.txns.get(appId).exists(_ >= batchId)) return false
       val adds = writeData(conform(rows, snap.tableSchema),
         snap.tableSchema)
@@ -3683,12 +2665,12 @@ class ManifestTableFormat(
         Action(add = false, "", None, Some((appId, batchId)))
       beforeCommit()
       var base = snap
-      var committed = tryCommit(base, actions)
+      var committed = log.tryCommit(base, actions)
       while (!committed) {
         attempt += 1
         require(attempt <= maxCommitRetries,
           s"streaming append at $path lost $maxCommitRetries commit races")
-        val now = snapshot()
+        val now = log.snapshot()
         if (now.txns.get(appId).exists(_ >= batchId)) {
           // someone else (a racing replay of this very batch)
           // committed the marker: abandon our staged files — the
@@ -3699,7 +2681,7 @@ class ManifestTableFormat(
         // append-only: no file-level conflict possible — recommit
         // under the next version as-is
         base = now
-        committed = tryCommit(base, actions)
+        committed = log.tryCommit(base, actions)
       }
       return true
     }
@@ -3746,7 +2728,7 @@ class ManifestTableFormat(
       attempt += 1
       require(attempt <= maxCommitRetries,
         s"streaming commit at $path lost $maxCommitRetries commit races")
-      val snap = snapshot()
+      val snap = log.snapshot()
       if (snap.txns.get(appId).exists(_ >= batchId)) {
         dropStaged(); return false
       }
@@ -3762,18 +2744,18 @@ class ManifestTableFormat(
         Action(add = false, "", None, Some((appId, batchId)))
       beforeCommit()
       var base = snap
-      var committed = tryCommit(base, actions)
+      var committed = log.tryCommit(base, actions)
       while (!committed) {
         attempt += 1
         require(attempt <= maxCommitRetries,
           s"streaming commit at $path lost $maxCommitRetries commit races")
-        val now = snapshot()
+        val now = log.snapshot()
         if (now.txns.get(appId).exists(_ >= batchId)) {
           dropStaged(); return false
         }
         // append-only: no file-level conflict possible — recommit
         base = now
-        committed = tryCommit(base, actions)
+        committed = log.tryCommit(base, actions)
       }
       return true
     }
@@ -3781,8 +2763,8 @@ class ManifestTableFormat(
   }
 
   def read(): DataFrame = {
-    val snap = snapshot()
-    readFilesDv(liveWithDv(snap), snap.tableSchema)
+    val snap = log.snapshot()
+    readFilesDv(log.liveWithDv(snap), snap.tableSchema)
   }
 
   /** Point/multi-document reads prune to the files whose stats MAY
@@ -3797,7 +2779,7 @@ class ManifestTableFormat(
     */
   def readDocuments(urls: Seq[String]): DataFrame = {
     requireUrlKey("document point read")
-    val snap = snapshot()
+    val snap = log.snapshot()
     val distinct = urls.distinct
     if (selectsByLiterals(snap, distinct.size))
       readLive(snap, urlFiles(snap, distinct))
@@ -3811,44 +2793,12 @@ class ManifestTableFormat(
     }
   }
 
-  /** The surviving commit history, oldest first — one row per
-    * still-on-disk log object: `(version, mtimeMillis, adds, removes,
-    * kind)` with kind `commit` (data actions), `schema` (an ADD
-    * COLUMN's claim — empty entry + sidecar), or `checkpoint`.
-    * Driver cost is O(surviving entries) — bounded by the
-    * checkpoint+vacuum cadence, the same set replay walks. The
-    * operational `DESCRIBE HISTORY` answer: what changed, when, and
-    * how far back time travel still reaches.
+  /** The surviving commit history, oldest first
+    * ([[ManifestLog!.history]]) — the operational `DESCRIBE HISTORY`
+    * answer: what changed, when, and how far back time travel still
+    * reaches.
     */
-  def history(): Seq[(Long, Long, Long, Long, String)] = {
-    val f = fs
-    if (!f.exists(logDir)) return Seq.empty
-    val (entries, jsonCkpts, pqCkpts, schemaVers) = census(f)
-    val schemas = schemaVersions(f).toSet
-    val commitRows = entries.sorted.map { v =>
-      val all = readText(entryPath(v)).linesIterator
-        .filter(_.nonEmpty).map(parseAction).toSeq
-      // the v8 in-commit timestamp is commit METADATA: it names the
-      // history row's timestamp (mtime only for pre-v8 entries) and
-      // never counts as an action
-      val acts = all.filter(_.cts.isEmpty)
-      val ts = all.flatMap(_.cts).headOption
-        .getOrElse(f.getFileStatus(entryPath(v)).getModificationTime)
-      val kind =
-        if (acts.isEmpty && schemas.contains(v)) "schema"
-        else if (acts.nonEmpty && acts.forall(_.txn.isDefined)) "txn"
-        else "commit"
-      (v, ts,
-        acts.count(_.add).toLong,
-        acts.count(a => !a.add && a.txn.isEmpty).toLong, kind)
-    }
-    val ckptRows = (jsonCkpts.map(v => (v, checkpointPath(v))) ++
-        pqCkpts.map(v => (v, ckptParquetPath(v))))
-      .map { case (v, p) =>
-        (v, f.getFileStatus(p).getModificationTime, 0L, 0L, "checkpoint")
-      }
-    (commitRows ++ ckptRows).sortBy(r => (r._1, r._5))
-  }
+  def history(): Seq[(Long, Long, Long, Long, String)] = log.history()
 
   /** Metadata-only table summary: `(version, live files, live rows,
     * live bytes)` — one narrow aggregate over the stats frame
@@ -3860,8 +2810,8 @@ class ManifestTableFormat(
     * answered from the log.
     */
   def tableStats(): (Long, Long, Long, Long) = {
-    val snap = snapshot()
-    val agg = statsFrame(snap)
+    val snap = log.snapshot()
+    val agg = log.statsFrame(snap)
       .agg(count(lit(1)).as("files"),
         sum(col("rows") - coalesce(col("dv_card"), lit(0L))).as("rows"),
         count("rows").as("rows_known"), sum("bytes").as("bytes"),
@@ -3884,11 +2834,9 @@ class ManifestTableFormat(
     * pipeline X delivered batch N yet".
     */
   def streamTransactions: Seq[(String, Long)] =
-    snapshot().txns.toSeq.sortBy(_._1)
+    log.snapshot().txns.toSeq.sortBy(_._1)
 
   // ---- ANALYZE: table-level NDV sketches ---------------------------
-
-  private def ndvFilePath(v: Long) = new Path(logDir, f"$v%012d.ndv.json")
 
   /** ANALYZE (the Iceberg Puffin / `ANALYZE TABLE` idea): ONE
     * DV-aware scan computes a DataSketches HLL sketch per requested
@@ -3906,7 +2854,7 @@ class ManifestTableFormat(
     */
   def analyzeNdv(cols: Seq[String]): (Long, Map[String, Long]) = {
     require(cols.nonEmpty, "analyzeNdv needs at least one column")
-    val snap = snapshot()
+    val snap = log.snapshot()
     require(snap.version >= 0, s"analyze: no commits at $path yet")
     val schemaNow = snap.tableSchema
     val resolved = cols.map { c =>
@@ -3930,12 +2878,7 @@ class ManifestTableFormat(
     val entries = resolved.zipWithIndex.map { case (c, i) =>
       (c, row.getLong(2 * i), row.getString(2 * i + 1))
     }
-    val body = s"""{"v":${snap.version},"cols":[""" + entries.map {
-      case (c, e, s64) =>
-        s"""{"n":"${esc(c)}","ndv":$e,"s":"$s64"}"""
-    }.mkString(",") + "]}"
-    val out = fs.create(ndvFilePath(snap.version), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    log.recordNdv(snap.version, entries)
     (snap.version, entries.map { case (c, e, _) => c -> e }.toMap)
   }
 
@@ -3944,21 +2887,7 @@ class ManifestTableFormat(
     * the analyzed version — staleness is the caller's call (the CBO
     * hook serves them as estimates; exact lanes never consult this).
     */
-  def ndvInfo: Option[(Long, Map[String, Long])] = {
-    val f = fs
-    if (!f.exists(logDir)) return None
-    val vs = f.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{12}\\.ndv\\.json"))
-      .map(_.stripSuffix(".ndv.json").toLong)
-    if (vs.isEmpty) return None
-    val line = readText(ndvFilePath(vs.max))
-    val v = "\"v\":(-?\\d+)".r.findFirstMatchIn(line)
-      .map(_.group(1).toLong).getOrElse(return None)
-    val cols = "\\{\"n\":\"((?:[^\"\\\\]|\\\\.)*)\",\"ndv\":(\\d+)".r
-      .findAllMatchIn(line)
-      .map(m => unesc(m.group(1)) -> m.group(2).toLong).toMap
-    Some((v, cols))
-  }
+  def ndvInfo: Option[(Long, Map[String, Long])] = log.ndvInfo
 
   // ---- branches (write-audit-publish) ------------------------------
 
@@ -3983,65 +2912,13 @@ class ManifestTableFormat(
     requireMain("createBranch")
     require(ManifestTableFormat.validBranchName(name),
       s"invalid branch name '$name' — use [A-Za-z0-9][A-Za-z0-9_.-]*")
-    val f = fs
-    require(f.exists(logDir), s"no log at $path")
-    val target = new Path(branchRoot, name)
-    if (f.exists(target)) throw new IllegalStateException(
-      s"branch '$name' already exists at $path")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new Path(logDir, s"tmp-branch-${java.util.UUID.randomUUID()}")
-    try {
-      f.mkdirs(tmp)
-      var fork = -1L
-      f.listStatus(logDir).foreach { st =>
-        val n = st.getPath.getName
-        val isCkptDir = n.matches("\\d{12}\\.checkpoint\\.parquet")
-        if (n.startsWith("tmp-") || n == "branches") ()
-        else if (st.isDirectory && !isCkptDir) ()
-        else if (isCkptDir) {
-          // only COMPLETE checkpoints fork (a torn one is replayed as
-          // absent at the source too)
-          val v = n.stripSuffix(".checkpoint.parquet").toLong
-          if (validCkptParquet(f, v)) {
-            org.apache.hadoop.fs.FileUtil.copy(
-              f, st.getPath, f, new Path(tmp, n), false, conf)
-            fork = math.max(fork, v)
-          }
-        } else {
-          org.apache.hadoop.fs.FileUtil.copy(
-            f, st.getPath, f, new Path(tmp, n), false, conf)
-          if (n.matches("\\d{12}\\.json"))
-            fork = math.max(fork, n.stripSuffix(".json").toLong)
-          else if (n.matches("\\d{12}\\.checkpoint\\.json"))
-            fork = math.max(fork,
-              n.stripSuffix(".checkpoint.json").toLong)
-        }
-      }
-      // the fork marker: the copied log is consistent for ANY
-      // concurrent commit activity (log objects are write-once and
-      // versions contiguous, so the copied set is a committed prefix)
-      val out = f.create(new Path(tmp, "_fork"), false)
-      try out.write(fork.toString.getBytes("UTF-8")) finally out.close()
-      if (!commitPublisher.putDirIfAbsent(f, tmp, target)) {
-        f.delete(tmp, true)
-        throw new IllegalStateException(
-          s"branch '$name' already exists at $path (lost creation race)")
-      }
-      fork
-    } catch {
-      case e: Throwable =>
-        if (f.exists(tmp)) f.delete(tmp, true)
-        throw e
-    }
+    log.fork(name)
   }
 
   /** The branches of this table: (name, fork version), sorted. */
   def listBranches: Seq[(String, Long)] = {
     requireMain("listBranches")
-    val f = fs
-    if (!f.exists(branchRoot)) Nil
-    else f.listStatus(branchRoot).toSeq.filter(_.isDirectory)
-      .map(st => (st.getPath.getName, forkOf(st.getPath))).sortBy(_._1)
+    log.branches
   }
 
   /** DROP BRANCH: delete the branch's log fork. Data files only the
@@ -4051,18 +2928,7 @@ class ManifestTableFormat(
     */
   def dropBranch(name: String): Unit = {
     requireMain("dropBranch")
-    val f = fs
-    val dir = new Path(branchRoot, name)
-    require(f.exists(dir), s"no branch '$name' at $path")
-    f.delete(dir, true)
-    ()
-  }
-
-  private def forkOf(bdir: Path): Long = {
-    val p = new Path(bdir, "_fork")
-    require(fs.exists(p),
-      s"branch dir $bdir has no _fork marker — not a branch fork")
-    readText(p).trim.toLong
+    log.dropBranch(name)
   }
 
   /** FAST-FORWARD PUBLISH (the Iceberg `fast_forward` procedure / the
@@ -4092,17 +2958,13 @@ class ManifestTableFormat(
     */
   def fastForward(name: String): (Long, Long) = {
     requireMain("fastForward")
-    val f = fs
-    val bdir = new Path(branchRoot, name)
-    require(f.exists(bdir), s"no branch '$name' at $path")
-    val fork = forkOf(bdir)
-    val names = f.listStatus(bdir).toSeq.map(_.getPath.getName)
-    val bEntries = names.filter(_.matches("\\d{12}\\.json"))
-      .map(_.stripSuffix(".json").toLong).filter(_ > fork).sorted
-    val ddl = names.filter(n =>
-      n.matches("\\d{12}\\.schema\\.json") ||
-        n.matches("\\d{12}\\.constraints\\.json"))
-      .filter(_.takeWhile(_.isDigit).toLong > fork)
+    val b = log.branchLog(name)
+    require(b.exists, s"no branch '$name' at $path")
+    val fork = b.forkVersion
+    val c = b.census()
+    val bEntries = c.versions(ManifestLog.Entry).filter(_ > fork)
+    val ddl = Seq(ManifestLog.SchemaEra, ManifestLog.Constraints)
+      .flatMap(k => c.versions(k).filter(_ > fork).map(b.at(_, k).getName))
     require(ddl.isEmpty,
       s"branch '$name' evolved schema/constraints after the fork " +
         s"(${ddl.mkString(", ")}) — fast-forward publishes net DATA " +
@@ -4117,18 +2979,16 @@ class ManifestTableFormat(
       .empty[String, Option[FileStats]]
     var txns = Map.empty[String, Long]
     bEntries.foreach { v =>
-      readText(new Path(bdir, f"$v%012d.json")).linesIterator
-        .filter(_.nonEmpty).foreach { line =>
-          val a = parseAction(line)
-          a.txn match {
-            case Some((app, b)) =>
-              txns += (app -> math.max(b, txns.getOrElse(app, Long.MinValue)))
-            case None if a.cts.isDefined => ()
-            case None =>
-              if (a.add) finals(a.file) = Some(a.stats.get)
-              else finals(a.file) = None
-          }
+      b.actions(b.at(v, ManifestLog.Entry)).foreach { a =>
+        a.txn match {
+          case Some((app, n)) =>
+            txns += (app -> math.max(n, txns.getOrElse(app, Long.MinValue)))
+          case None if a.cts.isDefined => ()
+          case None =>
+            if (a.add) finals(a.file) = Some(a.stats.get)
+            else finals(a.file) = None
         }
+      }
     }
     val rms = finals.collect { case (file, None) => file }.toSeq
     val adds = finals.collect { case (file, Some(st)) => (file, st) }.toSeq
@@ -4138,48 +2998,38 @@ class ManifestTableFormat(
         txns.toSeq.sortBy(_._1).map { case (app, b) =>
           Action(add = false, "", None, Some((app, b)))
         }
-    val snap = snapshot()
+    val snap = log.snapshot()
     def refuse(v: Long): Nothing = throw new IllegalStateException(
       s"main advanced past branch '$name''s fork (head v$v > fork " +
         s"v$fork) — nothing was published. The audit certified the " +
         "branch against the forked state; re-branch from the head, " +
         "re-apply, re-audit, and fast-forward again")
     if (snap.version != fork) refuse(snap.version)
-    if (!tryCommit(snap, actions)) {
+    if (!log.tryCommit(snap, actions)) {
       // lost the fork+1 publish race — main has advanced by definition
-      refuse(snapshot().version)
+      refuse(log.snapshot().version)
     }
     (adds.size.toLong, rms.size.toLong)
   }
 
   /** The current committed version (−1 before the first commit). */
-  def version: Long = snapshot().version
+  def version: Long = log.snapshot().version
 
   /** Live data files of the current snapshot (absolute paths,
     * sorted).
     */
-  def liveFiles: Seq[String] = liveNames(snapshot())
+  def liveFiles: Seq[String] = log.liveNames(log.snapshot())
 
   /** Pins one snapshot for a SQL scan — the head, or version `asOf`
     * — taking the (file, deletion vector) pairs and the schema from
-    * the same log listing. The [[PinnedScan]] owns every planner-time
+    * the same replay. The [[PinnedScan]] owns every planner-time
     * stats lane of the resolved table.
     */
   def pinScan(asOf: Option[Long] = None): PinnedScan = {
-    val (pairs, s) = asOf match {
-      case None =>
-        val snap = snapshot()
-        (liveWithDv(snap), snap.tableSchema)
-      case Some(v) => stateAtVersion(v)
-    }
-    new PinnedScan(this, pairs, s, timeTravel = asOf.isDefined)
+    val snap = log.snapshot(asOf)
+    new PinnedScan(this, log.liveWithDv(snap), snap.tableSchema,
+      timeTravel = asOf.isDefined)
   }
-
-  /** One file's planner-time stats: its recorded row count, the
-    * head's deletion-vector cardinality, and one column's stats.
-    */
-  private[sink] final case class FileStat(
-      file: String, rows: Option[Long], dvCard: Long, col: Option[ColStats])
 
   /** The per-file stats lookup behind every [[PinnedScan]] lane, in
     * `files` order; `physCol` names the one column whose stats to
@@ -4193,7 +3043,7 @@ class ManifestTableFormat(
   private[sink] def statsLookup(files: Seq[String], physCol: Option[String])
       : Option[Seq[FileStat]] = {
     if (files.isEmpty) return Some(Nil)
-    val snap = snapshot()
+    val snap = log.snapshot()
     val got: Map[String, FileStat] = snap.ckptParquet match {
       case None =>
         files.flatMap(f => snap.base.get(f).map(st => f -> FileStat(f,
@@ -4206,7 +3056,7 @@ class ManifestTableFormat(
           Seq("cs_valid", "cs_lo", "cs_hi", "cs_nn", "cs_exact")
             .map(a => when(p > 0, element_at(col(a), p)))
         }
-        statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
+        log.statsFrame(snap).join(files.toDF("file"), Seq("file"), "left_semi")
           .select(Seq(col("file"), col("rows"), col("dv_card")) ++ slots: _*)
           .collect().map { r =>
             def opt[T](i: Int): Option[T] =
@@ -4228,7 +3078,7 @@ class ManifestTableFormat(
     * sorted by name; any `Some` means reads go through [[readPinned]].
     */
   def liveFilesWithDv: Seq[(String, Option[ManifestTableFormat.DvRef])] =
-    liveWithDv(snapshot())
+    log.liveWithDv(log.snapshot())
 
   /** DV-aware read of a PINNED (file, dv) list under `s` — the SQL
     * catalog's scan body for deletion-vector snapshots (snapshot
@@ -4272,11 +3122,11 @@ class ManifestTableFormat(
     import org.apache.spark.sql.types.DecimalType
     if (pinned.isEmpty || probes.isEmpty) return None
     import spark.implicits._
-    val snap = snapshot()
+    val snap = log.snapshot()
     // no broadcast hint: the pinned list is usually small enough that
     // AQE broadcasts it anyway, but at the 10⁷-file end it must be
     // allowed to shuffle rather than blow the driver's broadcast cap
-    val st = statsFrame(snap)
+    val st = log.statsFrame(snap)
       .join(pinned.toDF("file"), Seq("file"), "left_semi")
     val dec = DecimalType(38, 18)
     def open(c: Column): Column = coalesce(c, lit(true))
@@ -4395,68 +3245,13 @@ class ManifestTableFormat(
   def filesAtVersion(asOf: Long): Seq[String] =
     filesWithDvAtVersion(asOf).map(_._1)
 
-  /** Live (file, deletion-vector) pairs AS OF `asOf` — names-plus-dv
-    * replay: a parquet checkpoint contributes via a three-column
-    * Spark read, a legacy JSON one by driver parse; an add for a live
+  /** Live (file, deletion-vector) pairs AS OF `asOf`, from the same
+    * replay as the head ([[ManifestLog!.snapshot]]): an add for a live
     * name replaces its previous pair (how a DV commit supersedes).
     */
   def filesWithDvAtVersion(asOf: Long)
       : Seq[(String, Option[ManifestTableFormat.DvRef])] =
-    stateAtVersion(asOf)._1
-
-  /** The pairs of [[filesWithDvAtVersion]] and the effective schema AS
-    * OF `asOf`, from one log listing.
-    */
-  private def stateAtVersion(asOf: Long)
-      : (Seq[(String, Option[ManifestTableFormat.DvRef])], StructType) = {
-    val f = fs
-    require(f.exists(logDir), s"no log at $path")
-    val (entries, jsonCkpts, pqCkpts, schemaVers) = census(f)
-    val latest = (entries ++ jsonCkpts ++ pqCkpts).foldLeft(-1L)(math.max)
-    require(asOf >= 0 && asOf <= latest,
-      s"version $asOf out of range [0, $latest] at $path")
-    val uj = jsonCkpts.filter(_ <= asOf)
-    val up = pqCkpts.filter(_ <= asOf)
-    val jc = if (uj.isEmpty) -1L else uj.max
-    val pc = if (up.isEmpty) -1L else up.max
-    val ckpt = math.max(jc, pc)
-    val wanted = entries.filter(v => v > ckpt && v <= asOf).sorted
-    require(wanted.size == (asOf - ckpt),
-      s"version $asOf at $path is no longer reconstructable — " +
-        s"entries in (${ckpt}, $asOf] were vacuumed (history " +
-        "retention is bounded by checkpoint + vacuum)")
-    var live = Map.empty[String, Option[ManifestTableFormat.DvRef]]
-    if (pc >= jc && pc >= 0) {
-      // a pre-v6 checkpoint reads null dv columns: no vectors
-      live = ManifestTableFormat.ckptFrame(spark,
-          ckptParquetPath(pc).toString)
-        .select("file", "dv_path", "dv_card")
-        .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) None
-         else Some(ManifestTableFormat.DvRef(
-           r.getString(1), r.getLong(2))))).toMap
-    } else if (ckpt >= 0)
-      readText(checkpointPath(ckpt)).linesIterator.filter(_.nonEmpty)
-        .foreach { line =>
-          val a = parseAction(line)
-          if (a.txn.isEmpty && a.cts.isEmpty) {
-            if (a.add) live += (a.file -> a.stats.flatMap(_.dv))
-            else live -= a.file
-          }
-        }
-    wanted.foreach { v =>
-      readText(entryPath(v)).linesIterator.filter(_.nonEmpty).foreach { line =>
-        val a = parseAction(line)
-        if (a.txn.isEmpty && a.cts.isEmpty) {
-          if (a.add) live += (a.file -> a.stats.flatMap(_.dv))
-          else live -= a.file
-        }
-      }
-    }
-    val sv = schemaVers.filter(_ <= asOf)
-    (live.toSeq.sortBy(_._1),
-      if (sv.isEmpty) baseSchema else parseSchemaFile(sv.max))
-  }
+    log.liveWithDv(log.snapshot(Some(asOf)))
 
   /** Time-travel read: the table AS OF `asOf` — replay up to that
     * version from the newest checkpoint at or below it (each file
@@ -4467,8 +3262,8 @@ class ManifestTableFormat(
     * rather than silently serving a wrong state.
     */
   def readVersion(asOf: Long): DataFrame = {
-    val (pairs, s) = stateAtVersion(asOf)
-    readFilesDv(pairs, s)
+    val snap = log.snapshot(Some(asOf))
+    readFilesDv(log.liveWithDv(snap), snap.tableSchema)
   }
 
   /** CHANGE FEED: the row-level delta between two committed versions —
@@ -4505,10 +3300,11 @@ class ManifestTableFormat(
       if (fromVersion < 0)
         Set.empty[(String, Option[ManifestTableFormat.DvRef])]
       else filesWithDvAtVersion(fromVersion).toSet
-    val after = filesWithDvAtVersion(toVersion).toSet
+    val to = log.snapshot(Some(toVersion))
+    val after = log.liveWithDv(to).toSet
     // both sides read under the TO version's schema: the delta is
     // expressed in the evolved shape, pre-ALTER rows null-filled
-    val s = schemaAtVersion(toVersion)
+    val s = to.tableSchema
     val addedSet = (after -- before).toSeq.sortBy(_._1)
     val removedSet = (before -- after).toSeq.sortBy(_._1)
     val addedRows = readFilesDv(addedSet, s)
@@ -4541,75 +3337,13 @@ class ManifestTableFormat(
       .drop("__graft_n", "__graft_i")
   }
 
-  /** The latest version committed at or before `tsMillis` (epoch ms)
-    * — commit time is the log entry's filesystem mtime, the Delta
-    * convention behind SQL `TIMESTAMP AS OF`. Versions whose entries
-    * a checkpoint+vacuum pruned are not independently dated; they
-    * resolve to the checkpoint's own mtime (the earliest state still
-    * reconstructable). Fails loudly when nothing was committed yet at
-    * the asked time.
+  /** The latest version committed at or before `tsMillis` (epoch ms),
+    * behind SQL `TIMESTAMP AS OF`: a commit's time is its v8 in-commit
+    * stamp, and the log object's mtime only where the commit carries
+    * none ([[ManifestLog!.versionAtTimestamp]]).
     */
-  def versionAtTimestamp(tsMillis: Long): Long = {
-    val f = fs
-    require(f.exists(logDir), s"no log at $path")
-    // one listing yields version -> (mtime, has entry/ckpt). Per
-    // version the timestamp is the v8 IN-COMMIT stamp when the commit
-    // carries one (entry first line; checkpoint txns sidecar for
-    // checkpoint-only versions), else the file mtime (pre-v8
-    // fallback — best effort, exactly the pre-ICT Delta contract:
-    // mtime shifts on object-store copy and CLONE, cts does not).
-    val listed = f.listStatus(logDir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.matches("\\d{12}\\.json"))
-        Some((n.stripSuffix(".json").toLong, st.getModificationTime, true))
-      else if (n.matches("\\d{12}\\.checkpoint\\.json"))
-        Some((n.stripSuffix(".checkpoint.json").toLong,
-          st.getModificationTime, false))
-      else if (n.matches("\\d{12}\\.checkpoint\\.parquet") &&
-          validCkptParquet(f, n.stripSuffix(".checkpoint.parquet").toLong))
-        Some((n.stripSuffix(".checkpoint.parquet").toLong,
-          st.getModificationTime, false))
-      else None
-    }
-    // collapse duplicates (a version may have entry + checkpoint):
-    // prefer the ENTRY (it holds the authoritative cts line)
-    val byVersion = listed.groupBy(_._1).map { case (v, rows) =>
-      val entry = rows.find(_._3)
-      (v, entry.getOrElse(rows.head))
-    }
-    def ctsOf(v: Long, isEntry: Boolean): Option[Long] = {
-      val p = if (isEntry) entryPath(v) else txnsFilePath(v)
-      if (!isEntry && !f.exists(p)) None
-      else scala.util.Try(
-        // the stamp is always the FIRST line of a v8 entry/sidecar —
-        // one line parses, pre-v8 shapes simply yield None
-        readText(p).linesIterator.find(_.nonEmpty)
-          .flatMap(parseAction(_).cts)).toOption.flatten
-    }
-    def tsOf(v: Long): Long = {
-      val (_, mtime, isEntry) = byVersion(v)
-      ctsOf(v, isEntry).getOrElse(mtime)
-    }
-    val versions = byVersion.keys.toSeq.sorted
-    require(versions.nonEmpty, s"no committed versions at $path")
-    // in-commit stamps are monotone in version (enforced at commit);
-    // binary-search the newest version at or before the ask, reading
-    // O(log n) commits — never one read per retained version. Mixed
-    // logs (pre-v8 prefix under mtime) keep the same search: entries
-    // were written in version order, so their mtimes are ordered too
-    // unless externally touched — and externally-touched pre-v8 logs
-    // had no reliable answer under any strategy (that is v8's point).
-    var lo = 0
-    var hi = versions.size - 1
-    require(tsOf(versions(lo)) <= tsMillis,
-      s"no version of $path was committed at or before epoch-ms " +
-        s"$tsMillis (earliest commit: ${tsOf(versions(lo))})")
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (tsOf(versions(mid)) <= tsMillis) lo = mid else hi = mid - 1
-    }
-    versions(lo)
-  }
+  def versionAtTimestamp(tsMillis: Long): Long =
+    log.versionAtTimestamp(tsMillis)
 
   /** Delete data files no committed version references (crashed
     * writers' leftovers and removed-by-rm files), plus log entries
@@ -4640,11 +3374,8 @@ class ManifestTableFormat(
   def vacuum(retentionMs: Long, dryRun: Boolean): (Long, Long) = {
     requireMain("vacuum")
     val f = fs
-    def reclaim(p: Path, recursive: Boolean): Unit =
-      if (!dryRun) { f.delete(p, recursive); () }
     val keepAfter = System.currentTimeMillis() - retentionMs
     var nData = 0L
-    var nLog = 0L
     if (f.exists(dataDir)) {
       // dead-file detection as BATCHED ANTI-JOINS against the
       // live-name frame, keyed on BASENAME (part-file uuids are
@@ -4659,11 +3390,8 @@ class ManifestTableFormat(
       // branch handles write into this shared data/ namespace, and a
       // not-yet-published branch's files must survive main's vacuum
       // until the branch is dropped or fast-forwarded
-      val frames = statsFrame(snapshot()) +: listBranches.map { case (b, _) =>
-        val bf = new ManifestTableFormat(spark, path, schema,
-          bloomBits, bloomHashes, Some(b))
-        bf.statsFrame(bf.snapshot())
-      }
+      val frames = (log +: log.branches.map(b => log.branchLog(b._1)))
+        .map(l => l.statsFrame(l.snapshot()))
       val liveBase = frames.map { sf =>
         sf.select(element_at(split(col("file"), "/"), -1).as("name"))
           .union(sf.filter(col("dv_path").isNotNull)
@@ -4677,7 +3405,7 @@ class ManifestTableFormat(
           val dead = batch.toSeq.toDF("path", "name")
             .join(liveBase, Seq("name"), "left_anti")
             .select("path").collect().map(_.getString(0))
-          dead.foreach(p => reclaim(new Path(p), recursive = false))
+          if (!dryRun) dead.foreach(p => f.delete(new Path(p), false))
           nData += dead.length
           batch.clear()
         }
@@ -4688,135 +3416,17 @@ class ManifestTableFormat(
               !name.startsWith(".") &&
               st.getModificationTime <= keepAfter)
             batch += ((st.getPath.toString, name))
-          if (batch.size >= ManifestTableFormat.statsPerManifestPart)
+          if (batch.size >= ManifestLog.statsPerManifestPart)
             flush()
         }
         flush()
       } finally liveBase.unpersist()
     }
-    if (f.exists(logDir)) {
-      val (entries, jsonCkpts, pqCkpts, schemaVers) = census(f)
-      val all = jsonCkpts ++ pqCkpts
-      if (all.nonEmpty) {
-        val ckpt = all.max
-        val oldEntries = entries.filter(_ <= ckpt)
-        oldEntries.foreach(v => reclaim(entryPath(v), recursive = false))
-        val oldJson = jsonCkpts.filter(_ < ckpt)
-        oldJson.foreach(v => reclaim(checkpointPath(v), recursive = false))
-        val oldPq = pqCkpts.filter(_ < ckpt)
-        oldPq.foreach(v => reclaim(ckptParquetPath(v), recursive = true))
-        // txn sidecars of superseded checkpoints are subsumed by the
-        // newest checkpoint's own sidecar (markers only ever grow)
-        (oldJson ++ oldPq).foreach(v => reclaim(txnsFilePath(v), recursive = false))
-        nLog += oldEntries.size + oldJson.size + oldPq.size
-        // a same-version legacy JSON twin is subsumed by the parquet
-        // checkpoint (identical state, heavier replay) — drop it
-        if (pqCkpts.contains(ckpt) && jsonCkpts.contains(ckpt)) {
-          reclaim(checkpointPath(ckpt), recursive = false)
-          nLog += 1
-        }
-      }
-      // superseded NDV sidecars: only the newest analysis is ever
-      // served — older ones are dead weight
-      val ndvVs = f.listStatus(logDir).toSeq.map(_.getPath.getName)
-        .filter(_.matches("\\d{12}\\.ndv\\.json"))
-        .map(_.stripSuffix(".ndv.json").toLong)
-      if (ndvVs.size > 1) {
-        ndvVs.filter(_ < ndvVs.max).foreach(v =>
-          reclaim(new Path(logDir, f"$v%012d.ndv.json"),
-            recursive = false))
-        nLog += ndvVs.size - 1
-      }
-      // torn parquet checkpoints (no _SUCCESS): crashed writers'
-      // leftovers, never read — reclaim
-      val torn = f.listStatus(logDir).toSeq.map(_.getPath.getName)
-        .filter(_.matches("\\d{12}\\.checkpoint\\.parquet"))
-        .map(_.stripSuffix(".checkpoint.parquet").toLong)
-        .filterNot(validCkptParquet(f, _))
-      torn.foreach(v => reclaim(ckptParquetPath(v), recursive = true))
-      nLog += torn.size
-      // stale commit/checkpoint staging leftovers (hard-killed
-      // writers): never referenced, reclaimed only once provably
-      // stale — the mtime guard keeps a LIVE writer's staging safe
-      val staleMs = 60L * 60 * 1000
-      val now = System.currentTimeMillis()
-      val strays = f.listStatus(logDir).toSeq
-        .filter(st => st.getPath.getName.startsWith("tmp-") &&
-          now - st.getModificationTime > staleMs)
-      strays.foreach(st => reclaim(st.getPath, recursive = true))
-      nLog += strays.size
-    }
-    (nData, nLog)
+    (nData, log.vacuum(dryRun))
   }
 }
 
 object ManifestTableFormat {
-
-  /** Memo of the LAZY DataFrame handle per (session, checkpoint dir) —
-    * the Tables() pattern applied to checkpoint manifests. A checkpoint
-    * parquet directory is IMMUTABLE once published (versioned name,
-    * `_SUCCESS`-guarded; vacuum only ever deletes SUPERSEDED dirs no
-    * live snapshot references), yet every `spark.read.parquet` on it
-    * lists the directory again. Caching the unresolved plan removes
-    * that;
-    * every action on the handle still reads the checkpoint bytes, so
-    * no row or result is ever reused.
-    *
-    * Bounded: one entry per log directory (the checkpoint directory's
-    * parent), holding the newest checkpoint read so far. Reading a
-    * newer checkpoint replaces it; a read of an older one (time
-    * travel) is served uncached. Vacuum reclaims only checkpoints
-    * older than the newest, and the snapshot read that planning or
-    * vacuum does next installs the newest. The parquet listing runs
-    * outside the lock.
-    */
-  private val ckptMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[Path, (Path, DataFrame)]]()
-
-  /** The stats frame's columns ([[ManifestTableFormat!.statsFrame]]),
-    * which is what a parquet checkpoint holds. Checkpoints read under
-    * it, so no read infers a schema; a column an older checkpoint
-    * lacks reads null, which every consumer treats as "not recorded".
-    */
-  private[sink] val statsSchema: StructType = {
-    import org.apache.spark.sql.types._
-    def arr(t: DataType) = ArrayType(t)
-    StructType(Seq("file" -> StringType, "bits" -> arr(LongType),
-      "lo" -> StringType, "hi" -> StringType, "num_bits" -> IntegerType,
-      "num_hashes" -> IntegerType, "rows" -> LongType, "bytes" -> LongType,
-      "cs_names" -> arr(StringType), "cs_lo" -> arr(StringType),
-      "cs_hi" -> arr(StringType), "cs_valid" -> arr(IntegerType),
-      "cs_nn" -> arr(LongType), "cs_exact" -> arr(IntegerType),
-      "cs_bloom" -> arr(arr(LongType)), "dv_path" -> StringType,
-      "dv_card" -> LongType).map { case (n, t) => StructField(n, t) })
-  }
-
-  private[sink] def ckptFrame(spark: SparkSession, dir: String): DataFrame = {
-    val d = new Path(dir)
-    def memo = ckptMemo.computeIfAbsent(spark,
-      _ => scala.collection.mutable.Map.empty)
-    ckptMemo.synchronized(memo.get(d.getParent)).collect {
-      case (cached, df) if cached == d => df
-    }.getOrElse {
-      val df = spark.read.schema(statsSchema).parquet(dir)
-      ckptMemo.synchronized {
-        memo.get(d.getParent) match {
-          // zero-padded version names order like the versions
-          case Some((held, heldDf)) if held.getName >= d.getName =>
-            if (held == d) heldDf else df
-          case _ => memo(d.getParent) = (d, df); df
-        }
-      }
-    }
-  }
-
-  /** Log directories and the checkpoint each memoizes (spec hook). */
-  private[sink] def memoizedCheckpoints(spark: SparkSession): Seq[(Path, Path)] =
-    ckptMemo.synchronized {
-      Option(ckptMemo.get(spark)).toSeq.flatMap(_.toSeq.map {
-        case (log, (d, _)) => log -> d })
-    }
 
   /** Spark's string order (UTF-8 bytes), which Java's UTF-16 order is
     * not on supplementary characters — for log-answered string
@@ -4918,62 +3528,6 @@ object ManifestTableFormat {
     }.toSet)
   }
 
-  /** SHALLOW CLONE: fork `srcPath`'s table into a new table at
-    * `destPath` by copying its `_log` directory — a metadata-only
-    * copy, O(log objects), never O(data). Every data-file reference
-    * in the log is an ABSOLUTE path and checkpoints are discovered by
-    * listing (never by embedded path), so the copied log is fully
-    * self-contained: the clone reads the source's data files by
-    * reference and all future writes land under the clone's own
-    * `data/`, invisible to the source (and vice versa).
-    *
-    * Fork semantics (stronger than Delta shallow CLONE): the FULL log
-    * history carries over — time travel reaches pre-clone versions,
-    * schema eras, CHECK constraints, CDF, and streaming txn markers
-    * all behave as if the clone had always been this table.
-    *
-    * Consistency: one recursive listing picks the fork point; every
-    * log object is write-once, and a checkpoint caught mid-write
-    * (no `_SUCCESS` yet) replays as a crashed checkpoint exactly as
-    * it would at the source — ignored, falling back to entries.
-    *
-    * CAVEAT (the shallow-clone hazard, same as Delta's): VACUUM on
-    * the SOURCE reclaims files the source dropped after the fork but
-    * the clone may still reference. Vacuum a cloned-from table only
-    * after its clones are dropped or compacted away from the shared
-    * files (clone-side `compact` rewrites into the clone's own dir).
-    * Clone-side vacuum is always safe: it only ever lists the
-    * clone's own `data/`.
-    *
-    * Returns the number of log objects copied.
-    */
-  def cloneLog(spark: SparkSession, srcPath: String,
-      destPath: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(srcPath).getFileSystem(conf)
-    val src = fs.makeQualified(new Path(srcPath, "_log"))
-    val dst = new Path(destPath, "_log")
-    if (!fs.exists(src)) throw new UnsupportedOperationException(
-      s"$srcPath is not a manifest-format table (no _log) — CLONE " +
-        "forks the commit log")
-    if (fs.exists(dst)) throw new IllegalStateException(
-      s"$destPath already holds a manifest table — CLONE refuses to " +
-        "overwrite")
-    val it = fs.listFiles(src, true)
-    var copied = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile) {
-        val rel = src.toUri.relativize(
-          fs.makeQualified(f.getPath).toUri).getPath
-        org.apache.hadoop.fs.FileUtil.copy(
-          fs, f.getPath, fs, new Path(dst, rel), false, conf)
-        copied += 1
-      }
-    }
-    copied
-  }
-
   /** A DELETION VECTOR reference (protocol v6 — the Delta DV /
     * Iceberg position-delete idea): an add-action may name a DV
     * object holding the file's deleted ROW POSITIONS, so a row-level
@@ -4989,6 +3543,14 @@ object ManifestTableFormat {
     * and drop the reference.
     */
   final case class DvRef(path: String, card: Long)
+
+  /** One file's planner-time stats ([[ManifestTableFormat!.statsLookup]]):
+    * its recorded row count, the head's deletion-vector cardinality,
+    * and one column's stats.
+    */
+  final case class FileStat(
+      file: String, rows: Option[Long], dvCard: Long,
+      col: Option[ManifestLog.ColStats])
 
   /** Log-derived maintenance gauges (see
     * [[ManifestTableFormat.maintenanceStats]]).
@@ -5024,12 +3586,6 @@ object ManifestTableFormat {
   def physicalSchema(s: StructType): StructType =
     StructType(s.fields.map(f => StructField(
       physicalName(f), f.dataType, f.nullable)))
-
-  /** Stats rows per checkpoint manifest part (~100 MB of per-file
-    * stats each) and the vacuum listing batch size — the two knobs
-    * that keep driver state bounded at the 10⁷-file end.
-    */
-  private[sink] val statsPerManifestPart = 100000L
 
   /** OBSERVABILITY PIN for the filtered metadata-COUNT lane
     * ([[ManifestTableFormat!.filteredCounts]]): (log-answered files,

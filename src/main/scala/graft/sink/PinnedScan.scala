@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.sink.ManifestTableFormat.{DvRef, ExactProbe, FileRange, MetaAgg, StatsProbe}
+import graft.sink.ManifestTableFormat.{DvRef, ExactProbe, FileRange, FileStat, MetaAgg, StatsProbe}
 
 /** One SQL resolution of a manifest table: the (file, deletion vector)
   * pairs and the schema of one pinned snapshot — the head or a
@@ -44,7 +44,7 @@ final class PinnedScan private[sink] (
     pairs.collect { case (f, Some(dv)) => f -> dv.card }.toMap
   private val perFileLanes = hasDv || !timeTravel
 
-  private def dvCard(s: format.FileStat): Long =
+  private def dvCard(s: FileStat): Long =
     if (hasDv) pinnedDv.getOrElse(s.file, 0L) else s.dvCard
 
   /** (physical name, type) of a logical column — how the stats were

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sink.{ChunkStore, ManifestTableFormat}
+import graft.sink.{ChunkStore, ManifestLog, ManifestTableFormat}
 
 /** Path-based access to a manifest table with NO catalog
   * registration — the `spark.read.format("graft")` twin of the
@@ -83,8 +83,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // predicates prune to a strict file subset. On an existing table
     // the declaration must MATCH what the table recorded — a sink
     // cannot silently re-partition a table it didn't create.
-    if (!fs.exists(new Path(path)) ||
-        !fs.exists(new Path(path, "_log"))) {
+    if (!ManifestLog.isTable(fs, new Path(path))) {
       mtf0.initializeTable(None, partitionColumns)
     } else if (partitionColumns.nonEmpty) {
       val recorded = mtf0.partitionColumns
@@ -143,9 +142,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // table); an existing path must already be manifest-format.
     // Branch writes (`.option("branch", …)`) never bootstrap: the
     // branch must have been forked first.
-    if (!fs.exists(new Path(path)) && !parameters.contains("branch"))
-      fs.mkdirs(new Path(path, "_log"))
+    val fresh = !fs.exists(new Path(path)) && !parameters.contains("branch")
     val mtf = mtfFor(path, parameters.get("branch"))
+    if (fresh) mtf.initializeTable(None, Nil)
     val exists = mtf.version >= 0
     mode match {
       case SaveMode.Append => mtf.append(data)
@@ -184,14 +183,14 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // directory without _log stays refused: that's a plain parquet
     // tree, and bootstrapping a manifest log over it would orphan it.
     require(!fs.exists(new Path(path)) ||
-        fs.exists(new Path(path, "_log")) ||
+        ManifestLog.isTable(fs, new Path(path)) ||
         fs.listStatus(new Path(path)).isEmpty,
       s"format(\"graft\"): $path is not a manifest-format table " +
         "(no _log) — plain store layouts read as parquet directly")
     // a branch must have been forked first (a typo'd name must not
     // silently bootstrap a rogue branch log)
     branch.foreach(b => require(
-      fs.exists(new Path(path, s"_log/branches/$b")),
+      ManifestLog.hasBranch(fs, new Path(path), b),
       s"format(\"graft\"): no branch '$b' at $path — " +
         "createBranch / CALL create_branch first"))
     new ManifestTableFormat(spark, path, ChunkStore.schema, branch = branch)
@@ -351,7 +350,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       path: String, partitionCols: Seq[String]): Unit = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path, "_log")))
+    if (!ManifestLog.isTable(fs, new Path(path)))
       mtfFor(path).initializeTable(None, partitionCols)
   }
 

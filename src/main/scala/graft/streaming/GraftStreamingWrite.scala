@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.graftbridge.{StagedStreamFile, StreamingParquet, StreamingParquetWriterFactory}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.sink.{ChunkStore, ManifestTableFormat}
+import graft.sink.{ChunkStore, ManifestLog, ManifestTableFormat}
 
 /** The DSv2 STREAMING_WRITE path onto a manifest table — the modern
   * twin of the V1 `StreamSinkProvider` seam (which stays for
@@ -53,7 +53,7 @@ class GraftStreamingWrite(
     branch.foreach { b =>
       val fs = new Path(tablePath).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(new Path(tablePath, s"_log/branches/$b")),
+      require(ManifestLog.hasBranch(fs, new Path(tablePath), b),
         s"graft stream: no branch '$b' at $tablePath — " +
           "createBranch / CALL create_branch first")
     }

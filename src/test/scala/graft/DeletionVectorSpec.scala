@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sink.{ChunkStore, ManifestTableFormat}
+import graft.sink.{ChunkStore, ManifestLog, ManifestTableFormat}
 
 /** Protocol v6 DELETION VECTORS — merge-on-read row-level DELETE on
   * the manifest format (the Delta DV / Iceberg position-delete idea):
@@ -487,7 +487,7 @@ class DeletionVectorSpec extends SparkSpec {
 
     // shallow clone: the fork reads the shared vectors by reference
     val dest = path + "2"
-    ManifestTableFormat.cloneLog(spark, path, dest)
+    ManifestLog.cloneLog(spark, path, dest)
     val cloneStore = new ChunkStore(spark, dest,
       format = ManifestTableFormat.factory)
     assert(cloneStore.read().count() == 32)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
-import graft.sink.{ChunkStore, GraftMergeDelete, GraftMergeInsert, GraftMergeUpdate, ManifestTableFormat}
+import graft.sink.{ChunkStore, GraftMergeDelete, GraftMergeInsert, GraftMergeUpdate, ManifestLog, ManifestTableFormat}
 
 /** Round-8 fuzz: random sequences of the round's DML + evolution
   * surface — upsert, append, row-level UPDATE/DELETE, keyed delete,
@@ -21,6 +21,13 @@ class Round8DmlFuzzSpec extends SparkSpec {
 
   // a model row: base columns + evolved extras (None = SQL NULL)
   private type Doc = Map[String, Any]
+
+  /** One recorded version: the model rows and the head's (file,
+    * deletion vector) pairs and schema when it was the head.
+    */
+  private case class Recorded(v: Long, model: Map[String, Doc],
+      pairs: Seq[(String, Option[ManifestTableFormat.DvRef])],
+      schema: org.apache.spark.sql.types.StructType)
 
   /** Predicate family: evaluable as a Column AND on the model. */
   private case class Pred(
@@ -110,7 +117,7 @@ class Round8DmlFuzzSpec extends SparkSpec {
       var evolved = Vector.empty[String]
       def allCols = Seq("chunk_id", "chunk_text", "embedding",
         "page_number", "document_url") ++ evolved
-      val history = mutable.ArrayBuffer.empty[(Long, Map[String, Doc])]
+      val history = mutable.ArrayBuffer.empty[Recorded]
       var urlSeq = 0
       def newUrl(): String = { urlSeq += 1; f"doc://$round%d-$urlSeq%04d" }
       var batchSeq = 0L
@@ -123,12 +130,12 @@ class Round8DmlFuzzSpec extends SparkSpec {
           case 14 => // RESTORE to a random recorded version; a
             // vacuumed-away target must fail loudly WITHOUT changes
             if (history.nonEmpty) {
-              val (v, snap) = history(rnd.nextInt(history.size))
-              if (v >= 0) {
+              val h = history(rnd.nextInt(history.size))
+              if (h.v >= 0) {
                 val before = model.toMap
                 try {
-                  mtf.restore(v)
-                  model.clear(); model ++= snap
+                  mtf.restore(h.v)
+                  model.clear(); model ++= h.model
                 } catch {
                   case _: IllegalArgumentException =>
                     assert(model.toMap == before)
@@ -273,7 +280,9 @@ class Round8DmlFuzzSpec extends SparkSpec {
             mtf.vacuum()
           }
         }
-        history += ((mtf.version, model.toMap))
+        val head = mtf
+        history += Recorded(head.version, model.toMap,
+          head.liveFilesWithDv, head.currentSchema)
 
         // CLONE arm, deterministic cadence (every 9th op, so it
         // leaves the seeds' random op sequences untouched): fork the
@@ -286,7 +295,7 @@ class Round8DmlFuzzSpec extends SparkSpec {
         if (i % 9 == 0 && mtf.version >= 0) {
           val clonePath = java.nio.file.Files
             .createTempDirectory(s"graft-dmlfuzz-clone$i").toString + "/c"
-          ManifestTableFormat.cloneLog(spark, path, clonePath)
+          ManifestLog.cloneLog(spark, path, clonePath)
           val cloneStore = new ChunkStore(spark, clonePath,
             format = ManifestTableFormat.factory)
           def urlText(df: DataFrame): Set[(String, String)] =
@@ -342,9 +351,25 @@ class Round8DmlFuzzSpec extends SparkSpec {
           s"round $round SQL page_number<=$k: $sqlCount != $modelCount")
       }
 
-      // surviving history: spot-check 3 recorded versions
+      // surviving history: every recorded version still reconstructable
+      // replays to the pairs and schema it had as the head — through
+      // checkpoints, ADD COLUMNs, restores and vacuums alike
       val m = mtf
-      rnd.shuffle(history.toSeq).take(3).foreach { case (v, snap) =>
+      history.filter(_.v >= 0).foreach { h =>
+        try {
+          assert(m.filesWithDvAtVersion(h.v) == h.pairs,
+            s"round $round version ${h.v}: replayed pairs diverged")
+          val pin = m.pinScan(Some(h.v))
+          assert(pin.pairs == h.pairs && pin.schema == h.schema,
+            s"round $round version ${h.v}: pinned pairs or schema diverged")
+        } catch {
+          case e: IllegalArgumentException
+              if e.getMessage.contains("reconstructable") => ()
+        }
+      }
+      // and 3 of them read back the model's rows
+      rnd.shuffle(history.toSeq).take(3).foreach { h =>
+        val (v, snap) = (h.v, h.model)
         if (v >= 0) {
           try {
             val df = m.readVersion(v)

@@ -45,7 +45,7 @@ class InCommitTimestampSpec extends SparkSpec {
         val first = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
           .getLines().find(_.nonEmpty).get
         (p.getName.stripSuffix(".json").toLong,
-          mtf.parseAction(first).cts.getOrElse(
+          mtf.log.parseAction(first).cts.getOrElse(
             fail(s"entry ${p.getName} does not lead with a cts line")))
       }
   }
@@ -79,7 +79,7 @@ class InCommitTimestampSpec extends SparkSpec {
       s"backward clock must clamp to predecessor+1, got ${cts(1L)}")
     assert(cts(2L) == 10000L)
     // the snapshot exposes the newest stamp (the next commit's floor)
-    assert(mtf.snapshot().cts.contains(10000L))
+    assert(mtf.log.snapshot().cts.contains(10000L))
   }
 
   test("versionAtTimestamp answers from the in-commit stamp, immune " +
@@ -124,7 +124,7 @@ class InCommitTimestampSpec extends SparkSpec {
     mtf.clock = 2000L
     mtf.append(chunkRows(4 to 6, "b-"))
     val dst = freshPath()
-    ManifestTableFormat.cloneLog(spark, src, dst)
+    ManifestLog.cloneLog(spark, src, dst)
     val clone = new ManifestTableFormat(spark, dst, store.schema)
     assert(clone.versionAtTimestamp(1500L) == 0L)
     assert(clone.versionAtTimestamp(2000L) == 1L)
@@ -174,7 +174,7 @@ class InCommitTimestampSpec extends SparkSpec {
       .filter(_.getName.matches("\\d{12}\\.json")).foreach { p =>
         val lines = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
           .getLines().filter(_.nonEmpty).toList
-          .filter(l => mtf.parseAction(l).cts.isEmpty)
+          .filter(l => mtf.log.parseAction(l).cts.isEmpty)
         fs.delete(p, false)
         val out = fs.create(p, false)
         try out.write(lines.mkString("\n").getBytes("UTF-8"))

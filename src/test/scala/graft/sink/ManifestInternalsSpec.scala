@@ -47,8 +47,8 @@ class ManifestInternalsSpec extends SparkSpec {
     store.append(batch(10 until 20, 15))
     store.append(batch(20 until 30, 25))
     val mtf = new ManifestTableFormat(spark, path, store.schema)
-    val snap = mtf.snapshot()
-    assert(mtf.liveNames(snap).size == 3)
+    val snap = mtf.log.snapshot()
+    assert(mtf.log.liveNames(snap).size == 3)
     // a selective numeric predicate: stats prove 2 of 3 files clean
     assert(mtf.preScanCandidates(snap,
       col("page_number") > 20).size == 1)
@@ -72,7 +72,7 @@ class ManifestInternalsSpec extends SparkSpec {
       format = ManifestTableFormat.factory)
     val mtf = new ManifestTableFormat(spark, path, store.schema)
     val logDir = new Path(path, "_log").toUri.getPath
-    def held = ManifestTableFormat.memoizedCheckpoints(spark)
+    def held = ManifestLog.memoizedCheckpoints(spark)
       .filter(_._1.toUri.getPath == logDir).map(_._2.getName)
     val ckptVersions = (1 to 3).map { i =>
       store.append(chunkRows(i * 10 until i * 10 + 10, "m").repartition(1))
@@ -111,7 +111,7 @@ class ManifestInternalsSpec extends SparkSpec {
         val lines = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
           .getLines().toList
         val v1 = lines.map { line =>
-          val a = mtf.parseAction(line)
+          val a = mtf.log.parseAction(line)
           if (!a.add) line
           else {
             val urls = spark.read.parquet(a.file)
@@ -128,7 +128,7 @@ class ManifestInternalsSpec extends SparkSpec {
     // point read prunes to ONE file via the synthesized stats
     val reader = new ManifestTableFormat(spark, path, store.schema)
     assert(reader.read().count() == 100)
-    val snap = reader.snapshot()
+    val snap = reader.log.snapshot()
     assert(snap.base.values.forall(_.bits.exists(_ != 0L)),
       "v1 parse must synthesize non-empty bloom stats")
     val one = reader.readDocuments(Seq("doc://00007"))
@@ -141,7 +141,8 @@ class ManifestInternalsSpec extends SparkSpec {
     assert(store.read().count() == 100)
     // a checkpoint re-records everything in the current protocol
     reader.checkpoint()
-    val after = new ManifestTableFormat(spark, path, store.schema).snapshot()
+    val after =
+      new ManifestTableFormat(spark, path, store.schema).log.snapshot()
     assert(after.ckptParquet.nonEmpty)
   }
 
@@ -152,11 +153,11 @@ class ManifestInternalsSpec extends SparkSpec {
     store.append(chunkRows(1 to 5, "x-"))
     val mtf = new ManifestTableFormat(spark, path, store.schema)
     val e = intercept[IllegalArgumentException] {
-      mtf.parseAction("""{"a":"add","f":"x","zz":true}""")
+      mtf.log.parseAction("""{"a":"add","f":"x","zz":true}""")
     }
     assert(e.getMessage.contains("protocol"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      mtf.parseAction("""{"a":"truncate"}""")
+      mtf.log.parseAction("""{"a":"truncate"}""")
     }
     assert(e2.getMessage.contains("protocol"), e2.getMessage)
   }
@@ -176,10 +177,10 @@ class ManifestInternalsSpec extends SparkSpec {
     val perEntry = 25000
     (0 until n / perEntry).foreach { e =>
       val lines = (e * perEntry until (e + 1) * perEntry).map { i =>
-        mtf.renderAction(mtf.Action(add = true,
+        ManifestLog.renderAction(ManifestLog.Action(add = true,
           f"file:/fake/part-$i%06d.parquet",
-          Some(mtf.FileStats(Seq(0x5L), f"doc://$i%06d", f"doc://$i%06d",
-            64, 2))))
+          Some(ManifestLog.FileStats(Seq(0x5L), f"doc://$i%06d",
+            f"doc://$i%06d", 64, 2))))
       }
       writeLogFile(new Path(logDir, f"$e%012d.json"), lines)
     }
@@ -194,7 +195,7 @@ class ManifestInternalsSpec extends SparkSpec {
     // state, consumed as a Spark read
     val reader = new ManifestTableFormat(spark, path, schema,
       bloomBits = 64, bloomHashes = 2)
-    val snap = reader.snapshot()
+    val snap = reader.log.snapshot()
     assert(snap.ckptParquet.nonEmpty)
     assert(snap.base.isEmpty,
       s"driver snapshot carries ${snap.base.size} file stats " +
@@ -205,12 +206,12 @@ class ManifestInternalsSpec extends SparkSpec {
     assert(reader.filesAtVersion(3L).size == n)
     // a post-checkpoint commit lands in the tail; checkpoint state
     // remains on disk
-    val extra = mtf.renderAction(mtf.Action(add = true,
+    val extra = ManifestLog.renderAction(ManifestLog.Action(add = true,
       "file:/fake/extra.parquet",
-      Some(mtf.FileStats(Seq(0x5L), "doc://x", "doc://x", 64, 2))))
+      Some(ManifestLog.FileStats(Seq(0x5L), "doc://x", "doc://x", 64, 2))))
     writeLogFile(new Path(logDir, f"${4}%012d.json"), Seq(extra))
     val snap2 = new ManifestTableFormat(spark, path, schema,
-      bloomBits = 64, bloomHashes = 2).snapshot()
+      bloomBits = 64, bloomHashes = 2).log.snapshot()
     assert(snap2.base.size == 1 && snap2.ckptParquet.nonEmpty)
     assert(snap2.version == 4L)
     // vacuum subsumes the pre-checkpoint entries; state unchanged
@@ -247,7 +248,7 @@ class ManifestInternalsSpec extends SparkSpec {
     assert(mtf.version == 0L)
     // the driver's snapshot holds ZERO per-file stats — the 1e6-row
     // state lives in the checkpoint manifests, consumed executor-side
-    assert(mtf.snapshot().base.isEmpty)
+    assert(mtf.log.snapshot().base.isEmpty)
 
     // commits against the huge state: append (no affected files) and
     // a MERGE whose probe the stats must exclude — the affected-file
@@ -298,9 +299,9 @@ class ManifestInternalsSpec extends SparkSpec {
     val mtf = new ManifestTableFormat(spark, path, store.schema)
     // write a LEGACY JSON checkpoint at the head version by hand
     // (what a pre-parquet engine left behind)
-    val snap = mtf.snapshot()
+    val snap = mtf.log.snapshot()
     val lines = (snap.base.toSeq.sortBy(_._1)).map { case (f, st) =>
-      mtf.renderAction(mtf.Action(add = true, f, Some(st)))
+      ManifestLog.renderAction(ManifestLog.Action(add = true, f, Some(st)))
     }
     writeLogFile(new Path(path, f"_log/${snap.version}%012d.checkpoint.json"),
       lines)
@@ -309,7 +310,7 @@ class ManifestInternalsSpec extends SparkSpec {
     // further commits + a new checkpoint → parquet takes over
     store.upsert(chunkRows(31 to 35, "c-"))
     reader.checkpoint()
-    val s2 = new ManifestTableFormat(spark, path, store.schema).snapshot()
+    val s2 = new ManifestTableFormat(spark, path, store.schema).log.snapshot()
     assert(s2.ckptParquet.nonEmpty && s2.base.isEmpty)
     assert(reader.read().count() == 35)
     reader.vacuum()

@@ -77,7 +77,7 @@ class UrlFileSelectionSpec extends SparkSpec {
 
   /** Every live file's url stats; the table must have no checkpoint. */
   private def urlStats(mtf: ManifestTableFormat): Map[String, UrlStats] = {
-    val snap = mtf.snapshot()
+    val snap = mtf.log.snapshot()
     assert(snap.ckptParquet.isEmpty)
     snap.base.map { case (f, st) =>
       f -> UrlStats(st.lo, st.hi, st.bits, st.numBits, st.numHashes) }
@@ -121,7 +121,7 @@ class UrlFileSelectionSpec extends SparkSpec {
   private def checkProbes(store: ChunkStore, mtf: ManifestTableFormat,
       stats: Map[String, UrlStats], held: Map[String, Set[String]],
       probes: Seq[String], label: String): Unit = {
-    val picked = mtf.urlFiles(mtf.snapshot(), probes)
+    val picked = mtf.urlFiles(mtf.log.snapshot(), probes)
     assert(picked == bruteForce(stats, probes),
       s"$label: selection for ${probes.take(4)} is not the brute force")
     probes.flatMap(held.getOrElse(_, Set.empty)).foreach { b =>
@@ -153,7 +153,7 @@ class UrlFileSelectionSpec extends SparkSpec {
     checkProbes(empty, emptyFmt, Map.empty, Map.empty, Seq("doc://a"),
       "emptied")
     emptyFmt.checkpoint()
-    assert(emptyFmt.snapshot().ckptParquet.isDefined)
+    assert(emptyFmt.log.snapshot().ckptParquet.isDefined)
     checkProbes(empty, emptyFmt, Map.empty, Map.empty, Seq("doc://a"),
       "emptied checkpoint")
 
@@ -180,7 +180,7 @@ class UrlFileSelectionSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.deletionVectors")
       val stats = urlStats(mtf)
       val held = holders(stats.keys.toSeq)
-      assert(mtf.snapshot().base.values.exists(_.dv.isDefined),
+      assert(mtf.log.snapshot().base.values.exists(_.dv.isDefined),
         "no DV'd file")
       val bounds = stats.values.toSeq.flatMap(st => Seq(st.lo, st.hi))
       val probeSets = Seq(
@@ -194,7 +194,7 @@ class UrlFileSelectionSpec extends SparkSpec {
       probeSets.foreach(p =>
         checkProbes(store, mtf, stats, held, p, s"seed $seed tail"))
       mtf.checkpoint()
-      assert(mtf.snapshot().ckptParquet.isDefined)
+      assert(mtf.log.snapshot().ckptParquet.isDefined)
       probeSets.foreach(p =>
         checkProbes(store, mtf, stats, held, p, s"seed $seed checkpoint"))
     }
@@ -208,7 +208,7 @@ class UrlFileSelectionSpec extends SparkSpec {
     store.append(rows((0 until 300 * files).map(i => Some(f"doc://b/$i%06d")),
       "b", oneFile = false).repartition(files))
     val mtf = new ManifestTableFormat(spark, store.path, store.schema)
-    assert(mtf.snapshot().base.size == files)
+    assert(mtf.log.snapshot().base.size == files)
     val atBudget = (ManifestTableFormat.literalProbePairs / files).toInt
     def check(n: Int): Int = {
       val probes = (0 until n).map(i => f"doc://b/$i%06d")
