@@ -263,7 +263,8 @@ final class ManifestLog(
       if (parquetBase) Some(at(pc, ParquetCkpt)) else None,
       base,
       if (parquetBase) removed else Set.empty,
-      schemaAt(c, upTo), txns, cts)
+      schemaAt(c, upTo), txns, cts,
+      c.versions(Constraints).filter(_ <= upTo).lastOption.getOrElse(-1L))
   }
 
   /** The snapshot's per-file stats as a DataFrame, shaped for
@@ -660,9 +661,16 @@ final class ManifestLog(
 
   /** The current named CHECK constraints (name → SQL expression). */
   def constraints: Seq[(String, String)] =
-    census().versions(Constraints).lastOption.toSeq.flatMap(v =>
-      readText(at(v, Constraints)).linesIterator.filter(_.nonEmpty)
-        .map(line => (stringField(line, "n"), stringField(line, "e"))))
+    constraintsAt(census().versions(Constraints).lastOption.getOrElse(-1L))
+
+  /** The CHECK constraints `snap` was replayed under (no listing). */
+  def constraints(snap: Snapshot): Seq[(String, String)] =
+    constraintsAt(snap.constraintsEra)
+
+  private def constraintsAt(era: Long): Seq[(String, String)] =
+    if (era < 0) Nil
+    else readText(at(era, Constraints)).linesIterator.filter(_.nonEmpty)
+      .map(line => (stringField(line, "n"), stringField(line, "e"))).toSeq
 
   /** Record the FULL constraint set as of version `v`. */
   def recordConstraints(v: Long, cs: Seq[(String, String)]): Unit =
@@ -1029,7 +1037,12 @@ object ManifestLog {
         * monotonicity floor for the next commit. None on pre-v8
         * tails (the next commit starts the timeline).
         */
-      cts: Option[Long] = None)
+      cts: Option[Long] = None,
+      /** Version of the newest constraints sidecar at or below
+        * `version` (−1: none): a writer whose commit race an ADD or
+        * DROP CONSTRAINT won sees it move and re-enforces.
+        */
+      constraintsEra: Long = -1L)
 
   private[sink] def esc(s: String): String = s.flatMap {
     case '"' => "\\\""

@@ -35,11 +35,15 @@ import graft.sink.ManifestTableFormat.{ExactCmp, ExactNull, ExactProbe, FileStat
   *    `rm`(affected) + `add`(new) commit in one entry. Bloom false
   *    positives only cost an extra file rewrite; min/max makes
   *    disjoint url ranges free.
-  *  - **Writers are optimistic.** A lost commit race (version already
-  *    taken) reloads the log and checks FILE-LEVEL conflicts: if the
-  *    winner removed none of this writer's inputs, the commit retries
-  *    under the next version as-is; if it did, the staged files are
-  *    abandoned and the whole merge re-runs against the new snapshot.
+  *  - **Writers are optimistic, through one loop** ([[commitLoop]],
+  *    every writer but [[fastForward]]). A lost race reloads the log
+  *    and checks the attempt's conflict unit: the (file, dv) pairs it
+  *    read (copy-on-write DML, both deletion-vector writers), none
+  *    (append-only streaming commits), or the whole table (RESTORE,
+  *    the metadata claims). If the winner changed a pair it read,
+  *    moved the CHECK constraints, or the unit is the whole table, the
+  *    staged files are abandoned and the attempt re-runs against the
+  *    new snapshot; otherwise it recommits under the next version.
   *    Concurrent writers on disjoint files both land.
   *  - **Readers are snapshot-isolated.** [[read]] plans against the
   *    file list of the snapshot current at call time; `rm` never
@@ -184,6 +188,12 @@ class ManifestTableFormat(
     log.initialize(ddlSchema, partCols)
   }
 
+  /** Whether row deletes and updates write deletion vectors instead
+    * of rewriting files (`spark.graft.deletionVectors`, default off).
+    */
+  private def dvWrites: Boolean =
+    spark.conf.get("spark.graft.deletionVectors", "false").toBoolean
+
   private def requireUrlKey(what: String): Unit =
     if (!hasUrlKey) throw new UnsupportedOperationException(
       s"table at $path has no STRING document_url column — $what needs " +
@@ -235,19 +245,11 @@ class ManifestTableFormat(
     */
   private def metadataCommit(what: String)(
       change: Snapshot => Long => Unit): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"$what at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
-      val record = change(snap)
-      if (log.tryCommit(snap, Seq.empty)) {
-        record(snap.version + 1)
-        done = true
-      }
-    }
+    var record: Long => Unit = _ => ()
+    commitLoop(what) { snap =>
+      record = change(snap)
+      Some(Attempt(Nil, None))
+    }.foreach(record)
   }
 
   /** ADD COLUMN: nullable, top-level, default-null read of old files.
@@ -407,7 +409,7 @@ class ManifestTableFormat(
     requireMain("ADD CONSTRAINT")
     require(name.nonEmpty, "constraint name must be non-empty")
     metadataCommit("ADD CONSTRAINT") { snap =>
-      val current = constraints
+      val current = log.constraints(snap)
       require(!current.exists(_._1.equalsIgnoreCase(name)),
         s"constraint '$name' already exists at $path")
       val viol = readFiles(log.liveNames(snap), snap.tableSchema)
@@ -422,8 +424,8 @@ class ManifestTableFormat(
   /** DROP CONSTRAINT by name (loud error when absent). */
   def dropConstraint(name: String): Unit = {
     requireMain("DROP CONSTRAINT")
-    metadataCommit("DROP CONSTRAINT") { _ =>
-      val current = constraints
+    metadataCommit("DROP CONSTRAINT") { snap =>
+      val current = log.constraints(snap)
       require(current.exists(_._1.equalsIgnoreCase(name)),
         s"no constraint '$name' at $path (have: ${
           current.map(_._1).mkString(", ")})")
@@ -527,51 +529,71 @@ class ManifestTableFormat(
       s: StructType): DataFrame = {
     val clean = withDv.collect { case (f, None) => f }
     val dvd = withDv.collect { case (f, Some(d)) => (f, d) }
-    val dvdLogical = () => readDvdFiles(dvd, s)
-      .select(s.fields.toIndexedSeq.map(f =>
-        col(ManifestTableFormat.physicalName(f)).as(f.name)): _*)
     if (dvd.isEmpty) return readFiles(clean, s)
     // no empty union leg when every file carries a vector — the
     // empty-frame RDD leg costs a scheduled stage of no-op tasks
-    if (clean.isEmpty) return dvdLogical()
-    readFiles(clean, s).unionByName(dvdLogical())
+    if (clean.isEmpty) return readDvdFiles(dvd, s)
+    readFiles(clean, s).unionByName(readDvdFiles(dvd, s))
   }
 
-  /** The DV'd branch of [[readFilesDv]], rows still under PHYSICAL
-    * names. `withPath = true` adds the `__fp` file-path column (for
-    * callers that need per-row file provenance, e.g. the DML
-    * pre-scans) — OFF for plain reads so no per-row path string is
-    * ever materialized on the query path (even a dropped column can
-    * cost if pruning misses it; the hot path should not rely on the
-    * optimizer to delete work this code can simply not declare).
+  /** The DV'd branch of [[readFilesDv]]: the raw rows of the DV'd
+    * files minus the positions their vectors delete. `withPath = true`
+    * keeps the `__fp` file-path column ([[rawWithPos]]).
     */
   private def readDvdFiles(
       dvd: Seq[(String, ManifestTableFormat.DvRef)],
       s: StructType,
+      withPath: Boolean = false): DataFrame =
+    rawWithPos(dvd.map(_._1), s, withPath)
+      .join(broadcast(dvPositions(dvd)), Seq("__name", "__pos"), "left_anti")
+      .drop("__name", "__pos")
+
+  /** Raw (pre-deletion-vector) read of the non-empty `files` under
+    * `s`'s LOGICAL names plus (`__name`, `__pos`) parquet position
+    * columns — the DV'd read branch's and the DV writers' scan shape
+    * (already-deleted rows are still there). `withPath = true` adds
+    * the `__fp` file-path column (for callers that need per-row file
+    * provenance, e.g. the DML pre-scans) — OFF for plain reads so no
+    * per-row path string is ever materialized on the query path (even
+    * a dropped column can cost if pruning misses it; the hot path
+    * should not rely on the optimizer to delete work this code can
+    * simply not declare).
+    */
+  private def rawWithPos(files: Seq[String], s: StructType,
       withPath: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val phys = ManifestTableFormat.physicalSchema(s)
-    val refs = dvd.map { case (f, d) =>
-      (baseNameOf(f), baseNameOf(d.path)) }.toDF("__name", "__dv")
     // _metadata.file_name, NOT split(file_path): the basename feeds
     // the per-row anti-join key, and a per-row split/array-alloc over
     // the whole DV'd branch was the measurable chunk of the DV read
     // tax (the metadata column is materialized from the file status,
     // no string surgery in the row loop)
-    val deleted = spark.read.parquet(dvd.map(_._2.path).distinct: _*)
-      .withColumn("__dv", col("_metadata.file_name"))
-      .join(broadcast(refs), Seq("__name", "__dv"), "left_semi")
-      .select("__name", "__pos")
     val pathCol =
       if (withPath) Seq(col("_metadata.file_path").as("__fp"))
       else Seq.empty
-    spark.read.schema(phys).parquet(dvd.map(_._1): _*)
+    spark.read.schema(ManifestTableFormat.physicalSchema(s))
+      .parquet(files: _*)
       .select((pathCol ++ Seq(
         col("_metadata.file_name").as("__name"),
         col("_metadata.row_index").as("__pos")) ++
-          phys.fieldNames.toIndexedSeq.map(col)): _*)
-      .join(broadcast(deleted), Seq("__name", "__pos"), "left_anti")
-      .drop("__name", "__pos")
+          s.fields.toIndexedSeq.map(f =>
+            col(ManifestTableFormat.physicalName(f)).as(f.name))): _*)
+  }
+
+  /** The (`__name`, `__pos`) positions the vectors of `dvd` delete:
+    * each data file keeps only the positions of the DV object its
+    * own reference names (the pair join on (data-file basename, dv
+    * basename)).
+    */
+  private def dvPositions(
+      dvd: Seq[(String, ManifestTableFormat.DvRef)]): DataFrame = {
+    import spark.implicits._
+    if (dvd.isEmpty)
+      return spark.emptyDataset[(String, Long)].toDF("__name", "__pos")
+    val refs = dvd.map { case (f, d) =>
+      (baseNameOf(f), baseNameOf(d.path)) }.toDF("__name", "__dv")
+    spark.read.parquet(dvd.map(_._2.path).distinct: _*)
+      .withColumn("__dv", col("_metadata.file_name"))
+      .join(broadcast(refs), Seq("__name", "__dv"), "left_semi")
+      .select("__name", "__pos")
   }
 
   /** [[readFiles]] with the snapshot's deletion vectors applied — the
@@ -606,13 +628,11 @@ class ManifestTableFormat(
     val dvs = dvOf(snap, files)
     val clean = files.filter(dvs(_).isEmpty)
     val dvd = files.flatMap(f => dvs(f).map(d => (f, d)))
-    val logical = s.fields.toIndexedSeq.map(f =>
-      col(ManifestTableFormat.physicalName(f)).as(f.name))
     val base = readFiles(clean, s)
       .withColumn(fileCol, input_file_name())
     if (dvd.isEmpty) base
     else base.unionByName(readDvdFiles(dvd, s, withPath = true)
-      .select(logical :+ col("__fp").as(fileCol): _*))
+      .withColumnRenamed("__fp", fileCol))
   }
 
   /** Publish the (name, pos) frame as ONE deletion-vector parquet
@@ -798,7 +818,8 @@ class ManifestTableFormat(
     * the skippable columns ([[statColumns]]). O(1) metadata per file,
     * however many documents it packs.
     */
-  private def writeData(rows: DataFrame, s: StructType): Seq[Action] = {
+  private def writeData(rows: DataFrame, snap: Snapshot): Seq[Action] = {
+    val s = snap.tableSchema
     val batchDir = new Path(dataDir,
       s"batch-${java.util.UUID.randomUUID()}")
     val sPhys = ManifestTableFormat.physicalSchema(s)
@@ -831,7 +852,7 @@ class ManifestTableFormat(
     // DML commit
     val actions = statsActionsFor(written, sPhys)
     if (actions.isEmpty) { fs.delete(batchDir, true); return Seq.empty }
-    enforceConstraints(written, s, () => fs.delete(batchDir, true))
+    enforceConstraints(written, snap, () => fs.delete(batchDir, true))
     actions
   }
 
@@ -842,22 +863,26 @@ class ManifestTableFormat(
     * fodder) and the throw guarantees no rows were committed.
     * Constraints are written in LOGICAL names; evaluate over the
     * logical projection of the batch. One columnar re-scan of the
-    * batch, never of the table.
+    * batch, never of the table. The constraints are `snap`'s: a
+    * commit race whose winner moves them re-runs the write
+    * ([[commitLoop]]).
     */
   private def enforceConstraints(
-      written: DataFrame, s: StructType, cleanup: () => Unit): Unit =
-    violationFilter(constraints).foreach { bad =>
-      val logicalView = written.select(s.fields.toIndexedSeq.map(f =>
-        col(ManifestTableFormat.physicalName(f)).as(f.name)): _*)
+      written: DataFrame, snap: Snapshot, cleanup: () => Unit): Unit = {
+    val cs = log.constraints(snap)
+    violationFilter(cs).foreach { bad =>
+      val logicalView = written.select(snap.tableSchema.fields.toIndexedSeq
+        .map(f => col(ManifestTableFormat.physicalName(f)).as(f.name)): _*)
       val hit = logicalView.filter(bad).limit(1)
       if (!hit.isEmpty) {
         cleanup()
         throw new IllegalArgumentException(
           s"write to $path violates a CHECK constraint (${
-            constraints.map { case (n, e) => s"$n: $e" }
+            cs.map { case (n, e) => s"$n: $e" }
               .mkString("; ")}) — no rows were committed")
       }
     }
+  }
 
   /** Per-file add-actions for already-written parquet data files
     * (physical schema): ONE columnar aggregate job over the batch
@@ -970,97 +995,116 @@ class ManifestTableFormat(
       f.getFileStatus(new Path(n)).getLen)).toMap
   }
 
-  /** Copy-on-write commit cycle shared by merge/delete/compact:
-    * `affected` picks the files to rewrite from log metadata,
+  /** One staged commit attempt for [[commitLoop]]: the actions; the
+    * conflict unit — the (file, dv) pairs the attempt read, or `None`
+    * for the whole table; and the paths it staged, deleted when the
+    * attempt is abandoned.
+    */
+  private case class Attempt(
+      actions: Seq[Action],
+      reads: Option[Seq[(String, Option[ManifestTableFormat.DvRef])]],
+      staged: Seq[String] = Nil)
+
+  /** The one optimistic commit loop every writer but [[fastForward]]
+    * runs: `stage` builds an attempt against a snapshot (`None`:
+    * nothing to commit), and the loop commits its actions plus the
+    * streaming transaction marker `txn` as the next version. An
+    * already-applied marker (`(appId, batchId)` at or below the app's
+    * recorded high-water mark) makes the whole call a no-op, checked
+    * against every fresh snapshot. On a lost race, against a fresh
+    * snapshot:
+    *  - the marker landed (a racing replay of this very batch): the
+    *    staged paths are abandoned — the work IS in the table once;
+    *  - the winner removed or re-vectored a (file, dv) pair the
+    *    attempt read, moved the CHECK constraints era, or the unit is
+    *    the whole table: the staged paths are abandoned and `stage`
+    *    re-runs. Pairs, not names: a commit that re-adds an input
+    *    file under a NEW vector did not remove the name, but a
+    *    rewrite that applied the OLD vector would resurrect its
+    *    deletes. A new constraint was validated against the live rows
+    *    only, so the staged rows must be re-enforced;
+    *  - otherwise the same actions recommit under the next version.
+    * `first` is the first attempt's snapshot when the caller took it
+    * (`None`: the loop takes it). Returns the committed version, or
+    * None when nothing committed.
+    */
+  private def commitLoop(what: String, txn: Option[(String, Long)] = None,
+      first: Option[Snapshot] = None)(
+      stage: Snapshot => Option[Attempt]): Option[Long] = {
+    var races = 0
+    def fresh(): Snapshot = {
+      races += 1
+      require(races < maxCommitRetries,
+        s"$what at $path lost $maxCommitRetries commit races")
+      log.snapshot()
+    }
+    def landed(s: Snapshot): Boolean = txn.exists { case (app, batch) =>
+      s.txns.get(app).exists(_ >= batch) }
+    // checked as a JOIN: the churn-bounded pairs anti-join the live
+    // (file, dv) FRAME (checkpoint manifests read executor-side), so
+    // the driver never materializes the live set
+    def changed(pairs: Seq[(String, Option[ManifestTableFormat.DvRef])],
+        now: Snapshot): Boolean = pairs.nonEmpty && {
+      import spark.implicits._
+      val mine = pairs.map { case (f, d) => (f, d.map(_.path).orNull) }
+        .toDF("file", "dv")
+      val live = log.statsFrame(now)
+        .select(col("file").as("n_file"), col("dv_path").as("n_dv"))
+      mine.join(live,
+          mine("file") === live("n_file") && mine("dv") <=> live("n_dv"),
+          "left_anti")
+        .limit(1).count() > 0
+    }
+    val marker = txn.map(t => Action(add = false, "", None, Some(t)))
+    var snap = first.getOrElse(log.snapshot())
+    while (!landed(snap)) stage(snap) match {
+      case None => return None
+      case Some(a) =>
+        val actions = a.actions ++ marker
+        beforeCommit()
+        var base = snap
+        var stale = false
+        while (!stale && !log.tryCommit(base, actions)) {
+          val now = fresh()
+          stale = landed(now) || now.constraintsEra != snap.constraintsEra ||
+            a.reads.forall(changed(_, now))
+          if (stale) {
+            a.staged.foreach(p => fs.delete(new Path(p), false))
+            snap = now
+          } else base = now
+        }
+        if (!stale) return Some(base.version + 1)
+    }
+    None
+  }
+
+  /** Copy-on-write commit cycle shared by merge/delete/compact and the
+    * appends: `affected` picks the files to rewrite from log metadata,
     * `rewrite` maps their rows to the surviving rows (incoming rows
-    * appended by the caller). Optimistic: a lost race re-checks
-    * file-level conflicts and either recommits or re-runs.
+    * appended by the caller). The conflict unit is the (file, dv)
+    * pairs of the affected files. True when it committed.
     */
   private def commitCycle(
       affected: Snapshot => Seq[String],
       rewrite: (Snapshot, Seq[String]) => DataFrame,
-      txn: Option[(String, Long)] = None): Unit = {
-    var attempt = 0
-    def guard(): Unit = {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"manifest commit at $path lost $maxCommitRetries races — " +
-          "livelocked writers; widen the retry bound or serialize")
-    }
-    // a commit may carry a STREAMING TRANSACTION marker (the
-    // appendStream idempotence contract, extended to rewrites): an
-    // already-applied (appId, batchId) makes the whole cycle a no-op,
-    // checked against every fresh snapshot — exactly-once derived
-    // maintenance (IncrementalAgg) rides on this
-    def applied(s: Snapshot): Boolean = txn.exists { case (a, b) =>
-      s.txns.get(a).exists(_ >= b) }
-    var done = false
-    while (!done) {
-      guard()
-      val snap = log.snapshot()
-      if (applied(snap)) return
+      txn: Option[(String, Long)] = None,
+      first: Option[Snapshot] = None): Boolean =
+    commitLoop("write", txn, first) { snap =>
       val files = affected(snap)
-      // the (file, dv) pairs this cycle READ — the conflict unit. A
-      // concurrent commit that merely re-adds an input file with a
-      // NEW deletion vector did not remove the name, but our rewrite
-      // applied the OLD vector: committing would resurrect its
-      // deletes. Pair-compare, not name-compare.
       val inputDv = dvOf(snap, files)
-      val adds = writeData(onRewrite(rewrite(snap, files)), snap.tableSchema)
-      val dataActions = files.map(Action(add = false, _, None)) ++ adds
-      if (dataActions.isEmpty && txn.isEmpty) return
-      val actions = dataActions ++
-        txn.map { case (a, b) => Action(add = false, "", None, Some((a, b))) }
-      beforeCommit()
-      var base = snap
-      var committed = log.tryCommit(base, actions)
-      var rerun = false
-      while (!committed && !rerun) {
-        guard()
-        val now = log.snapshot()
-        if (applied(now)) {
-          // a racing replay of this very marker landed: the work IS
-          // in the table exactly once — abandon our staged files
-          adds.foreach(a => fs.delete(new Path(a.file), false))
-          return
-        }
-        // file-level conflict: the winner removed (or re-DV'd)
-        // something we read (rewrote or planned to remove) — our
-        // staged rewrite is stale, abandon it and re-run against the
-        // new snapshot. Checked as a JOIN: the churn-bounded `files`
-        // list anti-joins the live (file, dv) FRAME (checkpoint
-        // manifests read executor-side), so the driver never
-        // materializes the live set — the check stays O(churn) at any
-        // table size.
-        val conflicted = files.nonEmpty && {
-          import spark.implicits._
-          val mine = files
-            .map(f => (f, inputDv(f).map(_.path).orNull))
-            .toDF("file", "dv")
-          val live = log.statsFrame(now)
-            .select(col("file").as("n_file"), col("dv_path").as("n_dv"))
-          mine.join(live,
-              mine("file") === live("n_file") &&
-                mine("dv") <=> live("n_dv"), "left_anti")
-            .limit(1).count() > 0
-        }
-        if (conflicted) {
-          adds.foreach(a => fs.delete(new Path(a.file), false))
-          rerun = true
-        } else {
-          base = now
-          committed = log.tryCommit(base, actions)
-        }
-      }
-      done = committed
-    }
-  }
+      val adds = writeData(onRewrite(rewrite(snap, files)), snap)
+      val actions = files.map(Action(add = false, _, None)) ++ adds
+      if (actions.isEmpty && txn.isEmpty) None
+      else Some(Attempt(actions, Some(files.map(f => f -> inputDv(f))),
+        adds.map(_.file)))
+    }.isDefined
 
-  /** Test seam: runs after a commit's files are staged and before its
-    * first commit attempt — the window a concurrent writer races in.
-    * The spec injects a competing commit here to exercise both
-    * optimistic outcomes (recommit on disjoint files, full re-run on
-    * a file-level conflict) deterministically.
+  /** Test seam: runs in [[commitLoop]] after an attempt's files are
+    * staged and before its first commit try — the window a concurrent
+    * writer races in, for every writer, the metadata claims included.
+    * Specs inject a competing commit here to exercise each optimistic
+    * outcome (recommit, re-run, marker landed) deterministically, or
+    * throw to model a writer dying before it publishes.
     */
   protected def beforeCommit(): Unit = ()
 
@@ -1089,10 +1133,12 @@ class ManifestTableFormat(
     */
   def merge(rows: DataFrame): Unit = {
     requireUrlKey("keyed upsert (merge by document_url)")
-    // conform up-front (prunes pipeline working columns before the
-    // persist; null-fills evolved columns the caller doesn't carry),
-    // re-conform per attempt in case an ALTER lands mid-retry
-    val incoming = conform(rows, currentSchema).persist()
+    // conform up-front to the first attempt's snapshot (prunes pipeline
+    // working columns before the persist; null-fills evolved columns
+    // the caller doesn't carry), re-conform per attempt in case an
+    // ALTER lands mid-retry
+    val first = log.snapshot()
+    val incoming = conform(rows, first.tableSchema).persist()
     try {
       // the distinct urls are collected up front, at most cap + 1 of
       // them (no isEmpty pre-evaluation, the append() rule: an empty
@@ -1111,7 +1157,8 @@ class ManifestTableFormat(
       try commitCycle(
         snap => keyedFiles(snap, urls, probe),
         (snap, files) => survivors(snap, files, probe)
-          .unionByName(conform(incoming, snap.tableSchema)))
+          .unionByName(conform(incoming, snap.tableSchema)),
+        first = Some(first))
       finally probe.unpersist()
     } finally incoming.unpersist()
   }
@@ -1157,10 +1204,7 @@ class ManifestTableFormat(
   private def deleteKeyed(
       urls: DataFrame, onDriver: Option[Seq[String]]): Unit = {
     requireUrlKey("document-keyed delete")
-    if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
-      deleteDocumentsDv(urls)
-      return
-    }
+    if (dvWrites) { deleteDocumentsDv(urls); return }
     val probe = urls.select(col("document_url").cast("string")
       .as("document_url")).distinct().persist()
     // no isEmpty pre-evaluation (the append() rule): an empty probe
@@ -1517,10 +1561,7 @@ class ManifestTableFormat(
     * table) are rm'd without being read or rewritten.
     */
   def deleteWhere(condition: org.apache.spark.sql.Column): Unit = {
-    if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
-      deleteWhereDv(condition)
-      return
-    }
+    if (dvWrites) { deleteWhereDv(condition); return }
     var provable = Set.empty[String]
     commitCycle(
       snap => {
@@ -1564,7 +1605,7 @@ class ManifestTableFormat(
     dvDelete(
       snap => preScanCandidates(snap, condition),
       (snap, names) => fullMatchFiles(snap, names, condition),
-      (snap, scanned) => rawWithPos(snap, scanned)
+      (snap, scanned) => rawWithPos(scanned, snap.tableSchema)
         .filter(condition)
         .select(col("__name"), col("__pos")))
 
@@ -1587,76 +1628,18 @@ class ManifestTableFormat(
       dvDelete(
         snap => affectedFiles(snap, probe),
         (_, _) => Seq.empty,
-        (snap, scanned) => rawWithPos(snap, scanned)
+        (snap, scanned) => rawWithPos(scanned, snap.tableSchema)
           .join(broadcast(probe), Seq("document_url"), "left_semi")
           .select(col("__name"), col("__pos")))
     } finally probe.unpersist()
-  }
-
-  /** Raw (pre-deletion-vector) read of `files` under the snapshot's
-    * LOGICAL names plus (`__name`, `__pos`) parquet position columns
-    * — the DV write paths' hit-scan shape. Already-deleted rows may
-    * re-match; the position union downstream is idempotent.
-    */
-  private def rawWithPos(snap: Snapshot, files: Seq[String]): DataFrame = {
-    val s = snap.tableSchema
-    val phys = ManifestTableFormat.physicalSchema(s)
-    if (files.isEmpty)
-      return emptyFrame(StructType(
-        Seq(StructField("__name", org.apache.spark.sql.types.StringType),
-          StructField("__pos", org.apache.spark.sql.types.LongType)) ++
-          s.fields))
-    val logical = s.fields.toIndexedSeq.map(f =>
-      col(ManifestTableFormat.physicalName(f)).as(f.name))
-    spark.read.schema(phys).parquet(files: _*)
-      .select((Seq(
-        col("_metadata.file_name").as("__name"),
-        col("_metadata.row_index").as("__pos")) ++ logical): _*)
-  }
-
-  /** Commit `actions` under the (file, dv) PAIR conflict rule shared
-    * by every merge-on-read writer: true when committed; false when a
-    * racing commit changed an input pair — the `staged` artifact
-    * paths are deleted and the caller re-runs against a fresh
-    * snapshot. `bumpAttempt` shares the caller's retry budget.
-    */
-  private def commitPaired(
-      base: Snapshot,
-      readSet: Seq[(String, Option[ManifestTableFormat.DvRef])],
-      actions: Seq[Action],
-      staged: Seq[String],
-      bumpAttempt: () => Unit): Boolean = {
-    import spark.implicits._
-    var b = base
-    var committed = log.tryCommit(b, actions)
-    while (!committed) {
-      bumpAttempt()
-      val now = log.snapshot()
-      val mine = readSet
-        .map { case (f, d) => (f, d.map(_.path).orNull) }
-        .toDF("file", "dv")
-      val live = log.statsFrame(now)
-        .select(col("file").as("n_file"), col("dv_path").as("n_dv"))
-      val conflicted = mine.join(live,
-          mine("file") === live("n_file") &&
-            mine("dv") <=> live("n_dv"), "left_anti")
-        .limit(1).count() > 0
-      if (conflicted) {
-        staged.foreach(p => fs.delete(new Path(p), false))
-        return false
-      }
-      b = now
-      committed = log.tryCommit(b, actions)
-    }
-    true
   }
 
   /** The shared MERGE-ON-READ delete machine behind [[deleteWhereDv]]
     * and [[deleteDocumentsDv]]: `candidates` picks the files that MAY
     * hold a match (metadata only), `fullMatch` the subset PROVABLY
     * all-matching (rm'd with no read), `hits` the matched (name, pos)
-    * positions in the remaining candidates. Commits tombstones +
-    * re-adds under the (file, dv) pair conflict rule.
+    * positions in the remaining candidates. Commits [[tombstone]]'s
+    * actions with the candidates' (file, dv) pairs as conflict unit.
     */
   private def dvDelete(
       candidates: Snapshot => Seq[String],
@@ -1664,81 +1647,73 @@ class ManifestTableFormat(
       hitPositions: (Snapshot, Seq[String]) => DataFrame)
       : (Long, Long) = {
     import spark.implicits._
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"DV delete at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
+    var provable = Set.empty[String]
+    var result = (0L, 0L)
+    commitLoop("DV delete") { snap =>
       val names = candidates(snap)
-      if (names.isEmpty) { lastMetadataOnlyFiles = 0L; return (0L, 0L) }
-      val stats = log.statsOf(snap, names)
-      val provable = fullMatch(snap, names).toSet
-      val scanned = names.filterNot(provable)
-      val byBase = scanned.map(f => baseNameOf(f) -> f).toMap
-      val hits =
-        if (scanned.isEmpty)
-          spark.emptyDataset[(String, Long)].toDF("__name", "__pos")
-        else hitPositions(snap, scanned)
-      // carry the existing vectors forward: the new vector is the
-      // position UNION (keyed by the exact (file, dv) pair)
-      val olds = scanned.flatMap(f => stats(f).dv.map(d => (f, d)))
-      val oldPos =
-        if (olds.isEmpty)
-          spark.emptyDataset[(String, Long)].toDF("__name", "__pos")
-        else {
-          val refs = olds.map { case (f, d) =>
-            (baseNameOf(f), baseNameOf(d.path)) }.toDF("__name", "__dv")
-          spark.read.parquet(olds.map(_._2.path).distinct: _*)
-            .withColumn("__dv", col("_metadata.file_name"))
-            .join(broadcast(refs), Seq("__name", "__dv"), "left_semi")
-            .select("__name", "__pos")
-        }
-      val newDv = hits.unionByName(oldPos).distinct().persist()
-      try {
-        val counts = newDv.groupBy("__name").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val oldCard = scanned.map(f =>
-          f -> stats(f).dv.map(_.card).getOrElse(0L)).toMap
-        // fully dead: the vector covers every physical row
-        val fullyDead = scanned.filter(f =>
-          stats(f).rows.exists(_ == counts.getOrElse(baseNameOf(f), 0L)))
-        // newly touched: strictly more positions than before
-        val toDv = scanned.filterNot(fullyDead.toSet).filter(f =>
-          counts.getOrElse(baseNameOf(f), 0L) > oldCard(f))
-        if (provable.isEmpty && fullyDead.isEmpty && toDv.isEmpty) {
-          lastMetadataOnlyFiles = 0L
-          return (0L, 0L)
-        }
-        val dvPath =
-          if (toDv.isEmpty) None
-          else {
-            val keep = toDv.map(baseNameOf).toDF("__name")
-            Some(writeDvObject(
-              newDv.join(broadcast(keep), Seq("__name"), "left_semi")))
-          }
-        val actions =
-          (provable.toSeq ++ fullyDead).sorted
-            .map(Action(add = false, _, None)) ++
-          toDv.sorted.map { f =>
-            Action(add = true, f, Some(stats(f).copy(
-              dv = Some(ManifestTableFormat.DvRef(dvPath.get,
-                counts(baseNameOf(f)))))))
-          }
-        // conflict unit is the (file, dv) pair — same as commitCycle
-        val readSet = names.map(f => f -> stats.get(f).flatMap(_.dv))
-        if (commitPaired(snap, readSet, actions, dvPath.toSeq, () => {
-            attempt += 1
-            require(attempt <= maxCommitRetries,
-              s"DV delete at $path lost $maxCommitRetries commit races")
-          })) {
-          lastMetadataOnlyFiles = provable.size.toLong
-          return ((provable.size + fullyDead.size).toLong, toDv.size.toLong)
-        }
-      } finally newDv.unpersist()
-      // stale: loop re-runs against the new snapshot
+      provable = fullMatch(snap, names).toSet
+      result = (0L, 0L)
+      if (names.isEmpty) None
+      else {
+        val stats = log.statsOf(snap, names)
+        val scanned = names.filterNot(provable)
+        val hits =
+          if (scanned.isEmpty)
+            spark.emptyDataset[(String, Long)].toDF("__name", "__pos")
+          else hitPositions(snap, scanned)
+        val t = tombstone(stats, scanned, provable.toSeq, hits)
+        result = (t.removed, t.revectored)
+        if (t.actions.isEmpty) None
+        else Some(Attempt(t.actions,
+          Some(names.map(f => f -> stats.get(f).flatMap(_.dv))),
+          t.dvPath.toSeq))
+      }
     }
-    (0L, 0L) // unreachable
+    lastMetadataOnlyFiles = provable.size.toLong
+    result
+  }
+
+  /** What [[tombstone]] stages: the actions (empty when nothing
+    * changes), the new vector object, and the counts of files removed
+    * and of files re-added under the new vector.
+    */
+  private case class Tombstones(actions: Seq[Action],
+      dvPath: Option[String], removed: Long, revectored: Long)
+
+  /** The tombstone step both deletion-vector writers share: the new
+    * `hits` (`__name`, `__pos`) in `files` union the files' existing
+    * vectors (`stats` holds their refs). A file the union covers
+    * completely is removed, with the `dead` files already known dead;
+    * a file it grows is re-added under ONE new vector object, written
+    * here.
+    */
+  private def tombstone(stats: Map[String, FileStats], files: Seq[String],
+      dead: Seq[String], hits: DataFrame): Tombstones = {
+    import spark.implicits._
+    val newDv = hits.unionByName(dvPositions(
+      files.flatMap(f => stats(f).dv.map(f -> _)))).distinct().persist()
+    try {
+      val counts = newDv.groupBy("__name").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      def card(f: String) = counts.getOrElse(baseNameOf(f), 0L)
+      // fully dead: the vector covers every physical row
+      val fullyDead = files.filter(f => stats(f).rows.contains(card(f)))
+      // newly touched: strictly more positions than before
+      val toDv = files.filterNot(fullyDead.toSet).filter(f =>
+        card(f) > stats(f).dv.map(_.card).getOrElse(0L))
+      val dvPath =
+        if (toDv.isEmpty) None
+        else {
+          val keep = toDv.map(baseNameOf).toDF("__name")
+          Some(writeDvObject(
+            newDv.join(broadcast(keep), Seq("__name"), "left_semi")))
+        }
+      val removed = (dead ++ fullyDead).sorted
+      Tombstones(removed.map(Action(add = false, _, None)) ++
+        toDv.sorted.map(f => Action(add = true, f, Some(stats(f).copy(
+          dv = Some(ManifestTableFormat.DvRef(dvPath.get, card(f))))))),
+        dvPath, removed.size.toLong, toDv.size.toLong)
+    } finally newDv.unpersist()
   }
 
   /** Materialize every live deletion vector (the Delta
@@ -2179,18 +2154,15 @@ class ManifestTableFormat(
     * NULL-valued predicate leaves the row unchanged (SQL three-valued
     * WHERE semantics), then `rm`(affected) + `add`(new) commit in one
     * entry — readers stay snapshot-isolated throughout, and a lost
-    * race re-runs against the new snapshot via [[commitCycle]]'s
-    * file-level conflict check. `condition = None` (no WHERE) rewrites
+    * race re-runs against the new snapshot via [[commitLoop]]'s
+    * (file, dv) pair check. `condition = None` (no WHERE) rewrites
     * the whole live set — the full-table UPDATE SQL permits.
     */
   def update(
       condition: Option[org.apache.spark.sql.Column],
       set: Seq[(String, org.apache.spark.sql.Column)]): Unit = {
     validateUpdate(set)
-    if (spark.conf.get("spark.graft.deletionVectors", "false").toBoolean) {
-      updateDv(condition, set)
-      return
-    }
+    if (dvWrites) { updateDv(condition, set); return }
     val cond = condition.getOrElse(lit(true))
     commitCycle(
       snap => {
@@ -2245,100 +2217,47 @@ class ManifestTableFormat(
       condition: Option[org.apache.spark.sql.Column],
       set: Seq[(String, org.apache.spark.sql.Column)]): (Long, Long) = {
     validateUpdate(set)
-    import spark.implicits._
     val cond = condition.getOrElse(lit(true))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"DV update at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
+    var result = (0L, 0L)
+    commitLoop("DV update") { snap =>
       val names = condition.fold(log.liveNames(snap))(
         preScanCandidates(snap, _))
-      if (names.isEmpty) return (0L, 0L)
-      val stats = log.statsOf(snap, names)
-      val s = snap.tableSchema
-      val phys = ManifestTableFormat.physicalSchema(s)
-      val logical = s.fields.toIndexedSeq.map(f =>
-        col(ManifestTableFormat.physicalName(f)).as(f.name))
-      // the files' existing vectors (pair-keyed, as everywhere)
-      val olds = names.flatMap(f => stats(f).dv.map(d => (f, d)))
-      val oldPos =
-        if (olds.isEmpty)
-          spark.emptyDataset[(String, Long)].toDF("__name", "__pos")
-        else {
-          val refs = olds.map { case (f, d) =>
-            (baseNameOf(f), baseNameOf(d.path)) }.toDF("__name", "__dv")
-          spark.read.parquet(olds.map(_._2.path).distinct: _*)
-            .withColumn("__dv", col("_metadata.file_name"))
-            .join(broadcast(refs), Seq("__name", "__dv"), "left_semi")
-            .select("__name", "__pos")
-        }
-      // matched LIVE rows with their positions: raw scan + position,
-      // minus the already-deleted positions, then the predicate
-      val matched = spark.read.schema(phys).parquet(names: _*)
-        .select((Seq(
-          col("_metadata.file_name").as("__name"),
-          col("_metadata.row_index").as("__pos")) ++ logical): _*)
-        .join(broadcast(oldPos), Seq("__name", "__pos"), "left_anti")
-        .filter(cond)
-        .persist()
-      try {
-        // updated copies (appended): SQL three-valued WHERE already
-        // applied — only TRUE-matching rows are here
-        val updatedCols = s.fields.toIndexedSeq.map { f =>
-          set.find(_._1 == f.name) match {
-            case Some((_, v)) => v.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        val adds = writeData(matched.select(updatedCols: _*), s)
-        // tombstones: matched positions union the existing vectors
-        val newDv = matched.select("__name", "__pos")
-          .unionByName(oldPos).distinct().persist()
+      result = (0L, 0L)
+      if (names.isEmpty) None
+      else {
+        val stats = log.statsOf(snap, names)
+        // matched LIVE rows with their positions: raw scan + position,
+        // minus the already-deleted positions, then the predicate
+        val matched = rawWithPos(names, snap.tableSchema)
+          .join(broadcast(dvPositions(
+            names.flatMap(f => stats(f).dv.map(f -> _)))),
+            Seq("__name", "__pos"), "left_anti")
+          .filter(cond)
+          .persist()
         try {
-          val counts = newDv.groupBy("__name").count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          val oldCard = names.map(f =>
-            f -> stats(f).dv.map(_.card).getOrElse(0L)).toMap
-          val fullyDead = names.filter(f =>
-            stats(f).rows.exists(_ == counts.getOrElse(baseNameOf(f), 0L)))
-          val toDv = names.filterNot(fullyDead.toSet).filter(f =>
-            counts.getOrElse(baseNameOf(f), 0L) > oldCard(f))
-          if (fullyDead.isEmpty && toDv.isEmpty) {
-            // no live row matched: abandon any staged adds (there are
-            // none — an empty matched frame writes nothing)
-            adds.foreach(a => fs.delete(new Path(a.file), false))
-            return (0L, 0L)
-          }
-          val dvPath =
-            if (toDv.isEmpty) None
-            else {
-              val keep = toDv.map(baseNameOf).toDF("__name")
-              Some(writeDvObject(
-                newDv.join(broadcast(keep), Seq("__name"), "left_semi")))
+          // updated copies (appended): SQL three-valued WHERE already
+          // applied — only TRUE-matching rows are here
+          val updatedCols = snap.tableSchema.fields.toIndexedSeq.map { f =>
+            set.find(_._1 == f.name) match {
+              case Some((_, v)) => v.cast(f.dataType).as(f.name)
+              case None => col(f.name)
             }
-          val actions =
-            fullyDead.sorted.map(Action(add = false, _, None)) ++
-            toDv.sorted.map { f =>
-              Action(add = true, f, Some(stats(f).copy(
-                dv = Some(ManifestTableFormat.DvRef(dvPath.get,
-                  counts(baseNameOf(f)))))))
-            } ++ adds
-          val readSet = names.map(f => f -> stats.get(f).flatMap(_.dv))
-          if (commitPaired(snap, readSet, actions,
-              dvPath.toSeq ++ adds.map(_.file), () => {
-                attempt += 1
-                require(attempt <= maxCommitRetries,
-                  s"DV update at $path lost $maxCommitRetries commit races")
-              }))
-            return ((fullyDead.size + toDv.size).toLong,
-              adds.flatMap(_.stats.flatMap(_.rows)).sum)
-        } finally newDv.unpersist()
-      } finally matched.unpersist()
-      // stale: loop re-runs against the new snapshot
+          }
+          val adds = writeData(matched.select(updatedCols: _*), snap)
+          // tombstones: matched positions union the existing vectors;
+          // no live row matched leaves no actions (and no adds)
+          val t = tombstone(stats, names, Nil,
+            matched.select("__name", "__pos"))
+          result = (t.removed + t.revectored,
+            adds.flatMap(_.stats.flatMap(_.rows)).sum)
+          if (t.actions.isEmpty) None
+          else Some(Attempt(t.actions ++ adds,
+            Some(names.map(f => f -> stats.get(f).flatMap(_.dv))),
+            t.dvPath.toSeq ++ adds.map(_.file)))
+        } finally matched.unpersist()
+      }
     }
-    (0L, 0L) // unreachable
+    result
   }
 
   def compact(): Unit =
@@ -2549,7 +2468,8 @@ class ManifestTableFormat(
   }
 
   /** A18 append, log-committed: new files only, no removes — so a
-    * lost commit race can never conflict and simply recommits.
+    * lost commit race recommits (unless the winner moved the CHECK
+    * constraints: then the write re-runs and re-enforces).
     */
   def append(rows: DataFrame): Unit = {
     // no isEmpty precheck: it evaluated the incoming query once just
@@ -2583,41 +2503,38 @@ class ManifestTableFormat(
     * (files re-added, files removed).
     */
   def restore(asOf: Long): (Long, Long) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"RESTORE at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
-      if (snap.version == asOf) return (0L, 0L)
-      val wanted = log.liveStats(log.snapshot(Some(asOf)))
-      val currentDv = log.liveWithDv(snap).toMap
-      // re-add when not live now, OR live under a DIFFERENT deletion
-      // vector (a replay add replaces the pair — the restore must
-      // reset post-asOf DV drift, not just name churn)
-      val toAdd = wanted.filter { case (n, st) =>
-        currentDv.get(n) match {
-          case None => true
-          case Some(dv) => dv != st.dv
+    var result = (0L, 0L)
+    commitLoop("RESTORE") { snap =>
+      result = (0L, 0L)
+      if (snap.version == asOf) None
+      else {
+        val wanted = log.liveStats(log.snapshot(Some(asOf)))
+        val currentDv = log.liveWithDv(snap).toMap
+        // re-add when not live now, OR live under a DIFFERENT deletion
+        // vector (a replay add replaces the pair — the restore must
+        // reset post-asOf DV drift, not just name churn)
+        val toAdd = wanted.filter { case (n, st) =>
+          currentDv.get(n) match {
+            case None => true
+            case Some(dv) => dv != st.dv
+          }
         }
+        val toRm = currentDv.keys.filterNot(wanted.contains).toSeq.sorted
+        val gone = (toAdd.keys ++
+            toAdd.values.flatMap(_.dv.map(_.path)))
+          .filterNot(n => fs.exists(new Path(n))).toSeq.sorted
+        require(gone.isEmpty,
+          s"RESTORE to $asOf at $path: ${gone.size} data/deletion-vector " +
+            s"files were already vacuumed (first: ${
+              gone.headOption.getOrElse("")}) — that version's bytes are gone")
+        result = (toAdd.size.toLong, toRm.size.toLong)
+        if (toAdd.isEmpty && toRm.isEmpty) None
+        else Some(Attempt(toRm.map(Action(add = false, _, None)) ++
+          toAdd.toSeq.sortBy(_._1).map { case (n, st) =>
+            Action(add = true, n, Some(st)) }, None))
       }
-      val toRm = currentDv.keys.filterNot(wanted.contains).toSeq.sorted
-      val gone = (toAdd.keys ++
-          toAdd.values.flatMap(_.dv.map(_.path)))
-        .filterNot(n => fs.exists(new Path(n))).toSeq.sorted
-      require(gone.isEmpty,
-        s"RESTORE to $asOf at $path: ${gone.size} data/deletion-vector " +
-          s"files were already vacuumed (first: ${
-            gone.headOption.getOrElse("")}) — that version's bytes are gone")
-      if (toAdd.isEmpty && toRm.isEmpty) return (0L, 0L)
-      val actions = toRm.map(Action(add = false, _, None)) ++
-        toAdd.toSeq.sortBy(_._1).map { case (n, st) =>
-          Action(add = true, n, Some(st)) }
-      if (log.tryCommit(snap, actions))
-        return (toAdd.size.toLong, toRm.size.toLong)
-      // lost race: loop recomputes against the new snapshot
     }
-    (0L, 0L) // unreachable
+    result
   }
 
   /** SQL `INSERT OVERWRITE`: replace the whole live set with `rows`
@@ -2652,40 +2569,8 @@ class ManifestTableFormat(
   def appendStream(rows: DataFrame, appId: String, batchId: Long)
       : Boolean = {
     require(appId.nonEmpty, "appendStream needs a non-empty appId")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"streaming append at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
-      if (snap.txns.get(appId).exists(_ >= batchId)) return false
-      val adds = writeData(conform(rows, snap.tableSchema),
-        snap.tableSchema)
-      val actions = adds :+
-        Action(add = false, "", None, Some((appId, batchId)))
-      beforeCommit()
-      var base = snap
-      var committed = log.tryCommit(base, actions)
-      while (!committed) {
-        attempt += 1
-        require(attempt <= maxCommitRetries,
-          s"streaming append at $path lost $maxCommitRetries commit races")
-        val now = log.snapshot()
-        if (now.txns.get(appId).exists(_ >= batchId)) {
-          // someone else (a racing replay of this very batch)
-          // committed the marker: abandon our staged files — the
-          // batch IS in the table exactly once
-          adds.foreach(a => fs.delete(new Path(a.file), false))
-          return false
-        }
-        // append-only: no file-level conflict possible — recommit
-        // under the next version as-is
-        base = now
-        committed = log.tryCommit(base, actions)
-      }
-      return true
-    }
-    false // unreachable
+    commitCycle(_ => Seq.empty, (snap, _) => conform(rows, snap.tableSchema),
+      Some((appId, batchId)))
   }
 
   /** Where DSv2 streaming tasks stage their parquet files (under the
@@ -2723,43 +2608,23 @@ class ManifestTableFormat(
     val f = fs
     def dropStaged(): Unit =
       files.foreach(n => f.delete(new Path(n), false))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxCommitRetries,
-        s"streaming commit at $path lost $maxCommitRetries commit races")
-      val snap = log.snapshot()
-      if (snap.txns.get(appId).exists(_ >= batchId)) {
-        dropStaged(); return false
-      }
+    // the staged files are inputs, not an attempt's products: a
+    // re-run (the constraints moved) reads them again, so only a
+    // landed marker drops them
+    val txn = Some((appId, batchId))
+    val committed = commitLoop("streaming commit", txn) { snap =>
       val sPhys = ManifestTableFormat.physicalSchema(snap.tableSchema)
       val adds =
         if (files.isEmpty) Seq.empty
         else {
           val written = spark.read.schema(sPhys).parquet(files: _*)
-          enforceConstraints(written, snap.tableSchema, () => dropStaged())
+          enforceConstraints(written, snap, () => dropStaged())
           statsActionsFor(written, sPhys)
         }
-      val actions = adds :+
-        Action(add = false, "", None, Some((appId, batchId)))
-      beforeCommit()
-      var base = snap
-      var committed = log.tryCommit(base, actions)
-      while (!committed) {
-        attempt += 1
-        require(attempt <= maxCommitRetries,
-          s"streaming commit at $path lost $maxCommitRetries commit races")
-        val now = log.snapshot()
-        if (now.txns.get(appId).exists(_ >= batchId)) {
-          dropStaged(); return false
-        }
-        // append-only: no file-level conflict possible — recommit
-        base = now
-        committed = log.tryCommit(base, actions)
-      }
-      return true
-    }
-    false // unreachable
+      Some(Attempt(adds, Some(Nil)))
+    }.isDefined
+    if (!committed) dropStaged()
+    committed
   }
 
   def read(): DataFrame = {

@@ -397,6 +397,36 @@ class DeletionVectorSpec extends SparkSpec {
     assert(store.read().count() == 36)
   }
 
+  test("a DV update racing a DV delete on the same files re-runs: " +
+      "both effects land and no deleted row comes back") {
+    val path = freshPath()
+    val store = new ChunkStore(spark, path,
+      format = ManifestTableFormat.factory)
+    store.append(rows(0 until 40))
+    var raced = false
+    val mtf = new ManifestTableFormat(spark, path, store.schema) {
+      override protected def beforeCommit(): Unit =
+        if (!raced) {
+          raced = true
+          // page 3 dies on the files whose OLD vectors the staged
+          // update read
+          mtfOf(path).deleteWhereDv(col("page_number") === 3)
+        }
+    }
+    val (_, updated) = mtf.updateDv(
+      Some(col("page_number") === 3 || col("page_number") === 5),
+      Seq("chunk_text" -> concat(col("chunk_text"), lit("+u"))))
+    assert(raced)
+    // the re-run found only page 5 left to update
+    assert(updated == 4L, s"updated $updated rows")
+    val now = store.read()
+    assert(now.count() == 36)
+    assert(now.filter(col("page_number") === 3).isEmpty,
+      "a row the racing delete removed came back as an updated copy")
+    assert(urls(now.filter(col("chunk_text").endsWith("+u"))) ==
+      (0 until 40).filter(_ % 10 == 5).map(i => f"doc://$i%04d").toSet)
+  }
+
   private def launchProbe(wh: String, tag: String, batches: Int,
       rowsArg: Int, mode: String): (Process, java.io.File) = {
     val javaBin = s"${sys.props("java.home")}/bin/java"

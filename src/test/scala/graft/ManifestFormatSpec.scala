@@ -115,6 +115,63 @@ class ManifestFormatSpec extends SparkSpec {
     assert(state(store) == Set(("doc://a", 0, "v3-ours")))
   }
 
+  test("a CHECK constraint added in an append's race window refuses " +
+      "the append: the lost race re-runs the write and re-enforces") {
+    val path = freshPath()
+    val seed = new ChunkStore(spark, path,
+      format = ManifestTableFormat.factory)
+    seed.upsert(chunksOf("doc://ok", "fine"))
+    val other = new ManifestTableFormat(spark, path, seed.schema)
+    var raced = false
+    val mtf = new ManifestTableFormat(spark, path, seed.schema) {
+      override protected def beforeCommit(): Unit =
+        if (!raced) {
+          raced = true
+          // validates the live rows only: the staged, still
+          // unreferenced batch is not among them
+          other.addConstraint("short_text", "length(chunk_text) < 10")
+        }
+    }
+    val before = mtf.version
+    val e = intercept[IllegalArgumentException](
+      mtf.append(chunksOf("doc://bad", "far too long a text")))
+    assert(raced)
+    assert(e.getMessage.contains("violates a CHECK constraint"))
+    // only the constraint's claim landed, and no staged file survives
+    assert(mtf.version == before + 1)
+    assert(state(seed) == Set(("doc://ok", 0, "fine")))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(path, "data"), true)
+    var parts = 0
+    while (it.hasNext) if (it.next().getPath.getName.startsWith("part-")) parts += 1
+    assert(parts == mtf.liveFiles.size)
+  }
+
+  test("RESTORE racing an append re-runs: the appended file is removed " +
+      "and the table equals the restored version") {
+    val path = freshPath()
+    val seed = new ChunkStore(spark, path,
+      format = ManifestTableFormat.factory)
+    seed.upsert(chunksOf("doc://a", "a1"))
+    val mtf0 = new ManifestTableFormat(spark, path, seed.schema)
+    val v0 = mtf0.version
+    seed.upsert(chunksOf("doc://b", "b1"))
+    var raced = false
+    val mtf = new ManifestTableFormat(spark, path, seed.schema) {
+      override protected def beforeCommit(): Unit =
+        if (!raced) {
+          raced = true
+          seed.append(chunksOf("doc://c", "c1"))
+        }
+    }
+    // the re-run removes doc://b's file and the racing append's file
+    assert(mtf.restore(v0) == ((0L, 2L)))
+    assert(raced)
+    assert(state(seed) == Set(("doc://a", 0, "a1")))
+    assert(mtf.liveFiles == mtf.filesAtVersion(v0))
+  }
+
   test("vacuum dry run reports without deleting; the real vacuum then " +
       "reclaims exactly what was reported") {
     val path = freshPath()

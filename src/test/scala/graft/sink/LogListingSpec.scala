@@ -27,9 +27,9 @@ object LogListingCountingFileSystem {
 }
 
 /** The manifest log is read through one listing: the head replay,
-  * time travel and history each list the log directory once, and
-  * vacuum's census sorts every object kind the same way the per-kind
-  * listings it replaced did.
+  * time travel, history and each write attempt list the log directory
+  * once, and vacuum's census sorts every object kind the same way the
+  * per-kind listings it replaced did.
   */
 class LogListingSpec extends SparkSpec {
 
@@ -86,6 +86,23 @@ class LogListingSpec extends SparkSpec {
     assert(mtf.history().map(r => (r._1, r._5)) == Seq(
       0L -> "commit", 1L -> "commit", 2L -> "checkpoint", 2L -> "schema",
       3L -> "commit"))
+  }
+
+  test("a write lists the log directory once: an upsert, an append and " +
+      "a keyed delete, as a read and a point read do") {
+    val path = s"lscount:${Files.createTempDirectory("graft-lscount-w")}/t"
+    val store = new ChunkStore(spark, path,
+      format = ManifestTableFormat.factory)
+    store.upsert(docs("v1", "doc://a", "doc://b"))
+    // enforcement reads the attempt's snapshot's constraints
+    new ManifestTableFormat(spark, path, store.schema)
+      .addConstraint("page_ok", "page_number >= 0")
+    assert(listings(store.upsert(docs("v2", "doc://b", "doc://c"))) == 1)
+    assert(listings(store.append(docs("v3", "doc://d"))) == 1)
+    assert(listings(store.delete(Seq("doc://a"))) == 1)
+    assert(listings(store.read().count()) == 1)
+    assert(listings(store.readDocuments(Seq("doc://c")).count()) == 1)
+    assert(store.read().count() == 3L)
   }
 
   test("vacuum's dry run counts every kind of reclaimable log object " +
